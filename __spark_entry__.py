@@ -5339,7 +5339,8 @@ def _extract_points_single(docs_table):
 
     from opentopodata_spark import polyline_codec
 
-    pair_re = re.compile(_PAIR_REGEX)
+    # re.ASCII: Spark's Java regex and RE2 match only ASCII digits
+    pair_re = re.compile(_PAIR_REGEX, re.ASCII)
     poly_re = re.compile(r"^(enc:)?[\?-~]+$")
     rows = []
     doc_ids = docs_table.column("doc_id").to_pylist()
@@ -5348,7 +5349,7 @@ def _extract_points_single(docs_table):
         if not spans:
             continue
         for span_pos, span in enumerate(spans):
-            if span["kind"] != "text" or span["text"] is None:
+            if span is None or span["kind"] != "text" or span["text"] is None:
                 continue
             text = span["text"]
             if "," in text:

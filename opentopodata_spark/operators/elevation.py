@@ -10,7 +10,7 @@ exchange:
              coverage — false candidates never exist)
       -> A1  THE shuffle: repartition by (spatial cell, point-hash salt)
              via inline expressions, local sort by point_id
-      -> S1+S3+J1+S8+S5+J3 pick-sampler (mapInPandas): tile assignment
+      -> S1+S3+J1+S8+S5+J3 pick-sampler (mapInArrow): tile assignment
              (reproject + floor + broadcast-index searchsorted), windowed
              raster reads per tile, per-dataset nodata fill, priority
              pick — one output row per point, no second exchange
@@ -37,7 +37,7 @@ from __future__ import annotations
 import math
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import ByteType, DoubleType, IntegerType, StructField, StructType
@@ -57,10 +57,10 @@ def _pack_ij(iy, ix):
 
 
 # state: 0 = value, 1 = NODATA (NaN inside raster), 2 = out-of-coverage.
-# An explicit marker column is REQUIRED: pandas/Arrow coerce NaN to SQL
-# null at the UDF boundary, which would silently merge the NODATA and
-# out-of-coverage cases and break nodata_value semantics (SURVEY.md §7
-# hard part 3 — caught by the differential test).
+# An explicit marker column is REQUIRED: a pandas UDF boundary coerces
+# NaN to SQL null, so a NaN-vs-null convention would silently merge the
+# NODATA and out-of-coverage cases and break nodata_value semantics
+# (SURVEY.md §7 hard part 3 — caught by the differential test).
 _STATE_VALUE, _STATE_NODATA, _STATE_OOB = 0, 1, 2
 
 
@@ -95,19 +95,16 @@ def _assign_tiles(prio, lats, lons, meta) -> np.ndarray:
     return tile_id
 
 
-def _sample_candidate_arrays(pdf: pd.DataFrame, interpolation: str, meta, paths):
+def _sample_candidate_arrays(lats, lons, prio, interpolation: str, meta, paths):
     """Candidate-level tile assignment + raster sampling: one windowed
-    read per distinct tile id in the frame (the reference's per-file
+    read per distinct tile id in the batch (the reference's per-file
     batching, backend.py:188-203). Returns (z, state) arrays aligned to
-    pdf rows. tile_id -1 (missing tile / uncovered) stays OOB."""
+    the inputs. tile_id -1 (missing tile / uncovered) stays OOB."""
     from ..oracle import _open_cached
 
-    n = len(pdf)
+    n = len(lats)
     z = np.zeros(n, dtype=np.float64)
     state = np.full(n, _STATE_OOB, dtype=np.int8)
-    lats = pdf["lat"].to_numpy(dtype=np.float64)
-    lons = pdf["lon"].to_numpy(dtype=np.float64)
-    prio = pdf["priority"].to_numpy(dtype=np.float64)
     tile_id = _assign_tiles(prio, lats, lons, meta)
     order = np.argsort(tile_id, kind="stable")
     sorted_tids = tile_id[order]
@@ -139,18 +136,27 @@ def _sample_candidate_arrays(pdf: pd.DataFrame, interpolation: str, meta, paths)
 _OUT_VALUE, _OUT_NAN, _OUT_NULL = 0, 1, 2
 
 
+def _f64(col) -> np.ndarray:
+    """An Arrow numeric column as float64 numpy, nulls as NaN."""
+    return col.cast(pa.float64()).to_numpy(zero_copy_only=False)
+
+
 def _make_pick_sampler(
     interpolation: str, carry: tuple, nodata_value, meta_bc, paths_bc
 ):
-    """mapInPandas fn: sample ALL candidate rows, apply the per-dataset
+    """mapInArrow fn: sample ALL candidate rows, apply the per-dataset
     nodata fill (S5), and pick each point's winner (J3) — entirely inside
     the partition. Requires input sorted by point_id within the partition
     (a point's candidate rows are then contiguous; the trailing group of
-    each Arrow batch is held back and prepended to the next batch, so
-    batch boundaries never split a point).
+    each Arrow batch is held back as a slice and prepended to the next
+    batch, so batch boundaries never split a point).
+
+    Only point_id, lat, lon and priority become numpy arrays; the output
+    columns (carry columns included, e.g. string document keys) move by
+    ``take`` on the Arrow batch and never become Python objects.
 
     Emitting one row per point here removes the second wide exchange the
-    groupBy-pick needed: mapInPandas output has fresh attribute ids, so
+    groupBy-pick needed: mapInArrow output has fresh attribute ids, so
     Catalyst cannot reuse the repartition's hash partitioning for a
     downstream aggregate — the pick must happen before leaving Python.
     """
@@ -159,9 +165,11 @@ def _make_pick_sampler(
     nodata_is_nan = isinstance(nodata_value, float) and math.isnan(nodata_value)
     fill = None if (nodata_is_none or nodata_is_nan) else float(nodata_value)
 
-    def process(pdf: pd.DataFrame) -> pd.DataFrame:
+    def process(batch: pa.RecordBatch) -> pa.RecordBatch:
+        prio = _f64(batch.column("priority"))  # null -> nan, sorts last
         z, state = _sample_candidate_arrays(
-            pdf, interpolation, meta_bc.value, paths_bc.value
+            _f64(batch.column("lat")), _f64(batch.column("lon")), prio,
+            interpolation, meta_bc.value, paths_bc.value,
         )
         is_nod = state == _STATE_NODATA
         resolved = (state == _STATE_VALUE) | (is_nod & (not nodata_is_none))
@@ -170,8 +178,7 @@ def _make_pick_sampler(
             eff[is_nod] = fill
         elif nodata_is_nan:
             eff[is_nod] = np.nan
-        pid = pdf["point_id"].to_numpy()
-        prio = pdf["priority"].to_numpy(dtype=np.float64)  # null -> nan, last
+        pid = batch.column("point_id").to_numpy()
         order = np.lexsort((prio, ~resolved, pid))
         spid = pid[order]
         first = np.ones(len(spid), dtype=bool)
@@ -183,33 +190,34 @@ def _make_pick_sampler(
         out_state = np.where(
             ~w_res, _OUT_NULL, np.where(w_nan, _OUT_NAN, _OUT_VALUE)
         ).astype(np.int8)
-        out = {c: pdf[c].to_numpy()[win] for c in out_cols}
-        out["z"] = np.where(w_res & ~w_nan, w_eff, 0.0)
-        out["state"] = out_state
         w_prio = prio[win]  # winner dataset as its priority index
-        out["priority"] = np.where(
-            np.isnan(w_prio), -1, w_prio
-        ).astype(np.int32)
-        return pd.DataFrame(out)
+        taken = batch.select(out_cols).take(pa.array(win))
+        return pa.RecordBatch.from_arrays(
+            [
+                *taken.columns,
+                pa.array(np.where(w_res & ~w_nan, w_eff, 0.0)),
+                pa.array(out_state),
+                pa.array(np.where(np.isnan(w_prio), -1, w_prio).astype(np.int32)),
+            ],
+            names=[*out_cols, "z", "state", "priority"],
+        )
 
     def sample(batches):
         held = None
-        for pdf in batches:
-            pdf = pdf.reset_index(drop=True)
+        for batch in batches:
             if held is not None:
-                pdf = pd.concat([held, pdf], ignore_index=True)
-                held = None
-            if len(pdf) == 0:
+                batch = pa.Table.from_batches([held, batch]).combine_chunks(
+                ).to_batches()[0]
+            if batch.num_rows == 0:
                 continue
-            pid = pdf["point_id"].to_numpy()
+            pid = batch.column("point_id").to_numpy()
             not_last = (pid != pid[-1]).nonzero()[0]
             split = int(not_last[-1]) + 1 if len(not_last) else 0
-            held = pdf.iloc[split:]
-            head = pdf.iloc[:split].reset_index(drop=True)
-            if len(head):
-                yield process(head)
-        if held is not None and len(held):
-            yield process(held.reset_index(drop=True))
+            held = batch.slice(split)
+            if split:
+                yield process(batch.slice(0, split))
+        if held is not None and held.num_rows:
+            yield process(held)
 
     return sample
 
@@ -240,10 +248,9 @@ class ElevationResolver:
         # Integer-encode every string the wide shuffle would otherwise
         # carry: raster paths (~70 bytes each) become tile ids into a
         # broadcast list, dataset names become the priority index. This
-        # halves shuffle bytes AND skips the Arrow->pandas object-dtype
-        # conversion for millions of rows inside the sampler (strings are
-        # the dominant per-row cost there; decoded back to names in the
-        # final projection, a K-branch CASE).
+        # halves shuffle bytes AND keeps the sampler's per-row work on
+        # numeric Arrow columns (names are decoded back in the final
+        # projection, a K-branch CASE).
         #
         # Tile ASSIGNMENT (reproject + floor + index lookup, SURVEY.md
         # S1+S3+J1) happens inside the pick-sampler, not the plan: the
@@ -317,8 +324,8 @@ class ElevationResolver:
 
     # ~candidate rows per shuffle partition in auto sizing. At this size a
     # partition is ~10-20 MB of int-encoded rows and a reduce task runs a
-    # few seconds — big enough that per-task setup (sort, Arrow, raster
-    # LRU warm) is noise, small enough that tasks pack into waves.
+    # second or more — well above the fixed ~0.2 s every Python task pays
+    # before user code runs (docs/DATA_PIPELINE.md).
     _ROWS_PER_PARTITION = 200_000
 
     def _plan_partitions(self) -> int:
@@ -326,25 +333,23 @@ class ElevationResolver:
 
         Explicit sample_partitions wins. With a row estimate (installed
         by estimate_cell_salts(sample_fraction=...)): enough partitions
-        for ~_ROWS_PER_PARTITION rows each, capped at ~4 WAVES per
-        execution slot and floored at the session shuffle parallelism.
-        The wave cap matters measurably: with partitions == slots one
-        straggler idles a core for its whole duration (an 8-partition
-        reduce stage ran 5.7-11.4s tasks — a 2x spread salt/hash
-        quantization cannot flatten at that granularity, ~13% of stage
-        wall lost); finer partitions let the scheduler absorb the spread
-        as waves, which is exactly how a cluster job is sized. Without an
-        estimate (unit tests, ad-hoc calls) the session shuffle setting
-        is used unchanged — tiny inputs must not pay 4x-slots partition
-        overhead."""
+        for ~_ROWS_PER_PARTITION rows each, capped at 4 waves, then
+        rounded UP to whole waves — a multiple of defaultParallelism
+        (the execution slots), which is also the floor. Every sampler
+        task pays a fixed Python-worker start (~0.2 s on local[4]), so a
+        partial wave buys no parallelism and a wave per core of tiny
+        tasks costs that start again; the per-cell salts, not finer
+        partitions, keep the tasks of one wave even. Without an estimate
+        (unit tests, ad-hoc calls) the session shuffle setting is used
+        unchanged."""
         if self.sample_partitions:
             return self.sample_partitions
-        shuffle = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
         if self._est_rows is None:
-            return shuffle
-        waves = -(-int(self._est_rows * 1.1) // self._ROWS_PER_PARTITION)
-        return max(shuffle, min(4 * self.spark.sparkContext.defaultParallelism,
-                                max(waves, 1)))
+            return int(self.spark.conf.get("spark.sql.shuffle.partitions"))
+        slots = self.spark.sparkContext.defaultParallelism
+        want = -(-int(self._est_rows * 1.1) // self._ROWS_PER_PARTITION)
+        waves = -(-min(4 * slots, max(want, 1)) // slots)
+        return waves * slots
 
     def set_cell_salts(self, salts: dict[int, int]) -> None:
         """Install per-spatial-cell salt factors (estimate_cell_salts).
@@ -438,7 +443,7 @@ class ElevationResolver:
                 StructField("priority", IntegerType()),
             ]
         )
-        out = df.mapInPandas(
+        out = df.mapInArrow(
             _make_pick_sampler(
                 self.interpolation,
                 carry,
@@ -519,7 +524,7 @@ def estimate_cell_salts(
 
     At cluster scale this is one tiny pre-pass (0.1% of the data) that
     removes the hot-city straggler — the skew case AQE cannot fix for a
-    mapInPandas repartition (it is not a join).
+    mapInArrow repartition (it is not a join).
 
     Counts are taken over the sample's CANDIDATE rows (after the
     broadcast registry join), not its points: the shuffle being salted

@@ -1,32 +1,34 @@
 """Coordinate extraction from interleaved text+media documents (P1/P2).
 
-Input: documents(doc_id string, spans array<struct<kind,text,media_ref,offset>>)
+Input: documents(doc_id, spans array<struct<kind,text,media_ref,offset>>)
 — the BASELINE.json input_hint schema. Output: one row per extracted
 coordinate (doc_id, span_pos, point_pos, lat, lon, loc_error).
 
 The reference parses a request's ``locations`` argument as either
 "lat,lon|lat,lon" pipe lists or a Google polyline, dispatching on the
 presence of ',' (/root/reference/opentopodata/api.py:272-299). Here the
-same grammar is applied per text span, in ONE pass over the table:
+same grammar is applied per text span in ONE ``mapInArrow`` pass:
 
-* the scan happens once (doc_id + spans only — column pruning);
-* spans containing ',' are parsed with regexp_extract_all + transform
-  into an array of point structs (pure Catalyst, whole-stage codegen);
-* spans that look like polylines (optional ``enc:`` prefix, polyline
-  alphabet only) are decoded by an Arrow-batched pandas UDF into the
-  same struct array. Non-polyline rows enter the UDF as NULL (the UDF
-  is unconditionally evaluated per batch — masking its *input* keeps
-  the per-row cost at a null check);
-* one posexplode of the unified array yields the point rows.
+* the scan reads only ``doc_id``, ``spans.kind`` and ``spans.text``
+  (nested-column pruning; no Generate sits between the scan and the
+  projection, so ``media_ref`` and ``offset`` are never decoded);
+* each Arrow batch explodes its span lists with list offsets, keeps the
+  non-null text spans, and splits them on ',';
+* spans containing ',' are parsed with one RE2 rewrite
+  (``pyarrow.compute``): leftmost-first and ASCII ``\\d``, the same
+  matches Spark's Java ``regexp_extract_all`` finds, with ``(?s)`` so a
+  newline is just another non-matching character;
+* the other spans, when they look like polylines (optional ``enc:``
+  prefix, polyline alphabet only), are decoded together by
+  ``polyline_codec.decode_flat`` — one numpy pass over the batch.
 
-A naive implementation unions a CSV branch and a polyline branch — two
-full scans of a 100 TB table; this shape was chosen off the physical
-plan (.explain showed the double Scan parquet + a double UDF eval).
+No per-row Python runs: every step is a vectorized pass over the batch.
 
 Out-of-range lat/lon become ``loc_error`` rows — at 10^12-document scale
 errors are data, not exceptions (the reference raises 400s instead:
-api.py:389-397). Undecodable polylines yield no rows (the reference
-rejects the whole request; silently-empty is the scale analog).
+api.py:389-397). Undecodable polylines, and polylines with any
+out-of-range point, yield no rows (the reference rejects the whole
+request; silently-empty is the scale analog).
 
 The span-sequence invariant is trivially preserved: this operator only
 *derives* rows; the documents table is never rewritten. Results re-attach
@@ -35,12 +37,14 @@ by (doc_id, span_pos, point_pos).
 
 from __future__ import annotations
 
-import pandas as pd
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
-    ArrayType,
     DoubleType,
+    IntegerType,
     StringType,
     StructField,
     StructType,
@@ -52,116 +56,147 @@ LAT_MIN, LAT_MAX = -90.0, 90.0
 LON_MIN, LON_MAX = -180.0, 180.0
 
 _PAIR_REGEX = r"(-?\d+(?:\.\d+)?),(-?\d+(?:\.\d+)?)"
-# polyline alphabet: ASCII 63..126, no spaces/commas
-_POLYLINE_REGEX = r"^(enc:)?[\?-~]+$"
-
-_POINT_SCHEMA = ArrayType(
-    StructType(
-        [
-            StructField("lat", DoubleType()),
-            StructField("lon", DoubleType()),
-            StructField("err", StringType()),
-        ]
-    )
-)
+# Rewrites a span so that splitting it on '|' yields exactly the pair
+# matches, in order, among empty tokens: a pair becomes "<pair>|"; a run
+# of characters that cannot start a pair, or one character where no pair
+# starts, becomes "|". A pair never contains '|'.
+_PAIR_SCAN = rf"(?s)({_PAIR_REGEX})|[^-0-9]+|."
+# polyline alphabet: ASCII 63..126, no spaces/commas (after enc:)
+_POLYLINE_BODY = r"^[\?-~]+$"
 
 
-@F.pandas_udf(_POINT_SCHEMA)
-def _decode_polyline_udf(texts: pd.Series) -> pd.Series:
-    """P2: Google polyline -> point structs. Null in, null out (the
-    caller masks non-polyline rows to null, so this is a fast skip).
-    The whole Arrow batch decodes in one vectorized numpy pass
-    (polyline_codec.decode_batch) — no per-string varint loop."""
-    stripped = [
-        None if t is None else (t[4:] if t.startswith("enc:") else t)
-        for t in texts
-    ]
-    decoded = polyline_codec.decode_batch(stripped)
-    out = []
-    for pts in decoded:
-        if not pts or not all(
-            LAT_MIN <= la <= LAT_MAX and LON_MIN <= lo <= LON_MAX for la, lo in pts
-        ):
-            out.append(None)
-            continue
-        out.append(
-            [{"lat": float(la), "lon": float(lo), "err": None} for la, lo in pts]
+def _positions(parents: np.ndarray) -> np.ndarray:
+    """Index of each element within its run, for ascending ``parents``."""
+    return np.arange(len(parents)) - np.searchsorted(parents, parents, "left")
+
+
+def _in_range(lat: np.ndarray, lon: np.ndarray) -> np.ndarray:
+    return (lat >= LAT_MIN) & (lat <= LAT_MAX) & (lon >= LON_MIN) & (lon <= LON_MAX)
+
+
+def _string_bytes(strings: pa.Array) -> tuple[np.ndarray, np.ndarray]:
+    """A null-free string array as (uint8 bytes back to back, end offset
+    of each string)."""
+    strings = strings.cast(pa.large_string())
+    _validity, offsets, data = strings.buffers()
+    off = np.frombuffer(offsets, dtype=np.int64)[
+        strings.offset:strings.offset + len(strings) + 1]
+    raw = np.frombuffer(data, dtype=np.uint8)[off[0]:off[-1]]
+    return raw, off[1:] - off[0]
+
+
+def _pair_points(texts: pa.Array):
+    """P1: 'lat,lon|lat,lon' spans -> (span index, point_pos, lat, lon,
+    error token). Range-invalid pairs become error rows."""
+    tokens = pc.split_pattern(
+        pc.replace_substring_regex(texts, _PAIR_SCAN, r"\1|"), "|")
+    span = pc.list_parent_indices(tokens).to_numpy()
+    tokens = tokens.flatten()
+    keep = pc.greater(pc.binary_length(tokens), 0)
+    tokens = tokens.filter(keep)
+    span = span[keep.to_numpy(zero_copy_only=False)]
+    latlon = (pc.split_pattern(tokens, ",").flatten()
+              .cast(pa.float64()).to_numpy().reshape(-1, 2))
+    lat, lon = latlon[:, 0], latlon[:, 1]
+    bad = ~_in_range(lat, lon)
+    err = pc.if_else(pa.array(bad), tokens, pa.scalar(None, pa.string()))
+    return span, _positions(span), lat, lon, bad, err
+
+
+def _polyline_points(texts: pa.Array):
+    """P2: Google polylines -> (span index, point_pos, lat, lon). A span
+    that fails to decode or has any out-of-range point yields nothing."""
+    body = pc.if_else(pc.starts_with(texts, "enc:"),
+                      pc.utf8_slice_codeunits(texts, 4), texts)
+    is_poly = pc.match_substring_regex(body, _POLYLINE_BODY)
+    cand = np.flatnonzero(is_poly.to_numpy(zero_copy_only=False))
+    if len(cand) == 0:
+        empty = np.empty(0, dtype=np.int64)
+        return empty, empty, np.empty(0), np.empty(0)
+    raw, ends = _string_bytes(body.filter(is_poly))
+    lat, lon, counts = polyline_codec.decode_flat(raw, ends)
+    n_pts = np.maximum(counts, 0)
+    owner = np.repeat(np.arange(len(cand)), n_pts)
+    out = ~_in_range(lat, lon)
+    drop = np.bincount(owner[out], minlength=len(cand)) > 0
+    keep = ~drop[owner]
+    owner = owner[keep]
+    return cand[owner], _positions(owner), lat[keep], lon[keep]
+
+
+def _extract_batches(batches):
+    """mapInArrow fn over (doc_id, kind list, text list) batches."""
+    for batch in batches:
+        yield from _extract_batch(batch)
+
+
+def _extract_batch(batch: pa.RecordBatch):
+    """One Arrow batch of (doc_id, kind list, text list) -> point batches."""
+    kinds, texts = batch.column(1), batch.column(2)
+    doc_row = pc.list_parent_indices(texts).to_numpy()
+    span_pos = _positions(doc_row)
+    texts, kinds = texts.flatten(), kinds.flatten()
+    is_text = pc.and_(pc.equal(kinds, "text"), pc.is_valid(texts))
+    is_text = is_text.fill_null(False)
+    texts = texts.filter(is_text)
+    sel = is_text.to_numpy(zero_copy_only=False)
+    doc_row, span_pos = doc_row[sel], span_pos[sel]
+    if len(texts) == 0:
+        return
+
+    schema = pa.schema([
+        batch.schema.field(0),
+        pa.field("span_pos", pa.int32(), False),
+        pa.field("point_pos", pa.int32(), False),
+        pa.field("lat", pa.float64()),
+        pa.field("lon", pa.float64()),
+        pa.field("loc_error", pa.string()),
+    ])
+
+    def emit(span, point_pos, lat, lon, bad, err):
+        return pa.RecordBatch.from_arrays(
+            [
+                batch.column(0).take(doc_row[span]),
+                pa.array(span_pos[span], pa.int32()),
+                pa.array(point_pos, pa.int32()),
+                pa.array(lat, pa.float64(), mask=bad),
+                pa.array(lon, pa.float64(), mask=bad),
+                err,
+            ],
+            schema=schema,
         )
-    return pd.Series(out)
 
-
-def _csv_points(text):
-    """P1: 'lat,lon|lat,lon' grammar as a pure column expression.
-    Range-invalid pairs become err rows (errors are data).
-
-    Split once per pair in its own transform: higher-order-function
-    lambdas are interpreted (no whole-stage codegen, no subexpression
-    elimination), so every reference re-evaluates — binding the split
-    result via zip_with leaves only cheap array-index+cast
-    re-evaluations (measured ~2x faster than splitting inline)."""
-    pairs = F.regexp_extract_all(text, F.lit(_PAIR_REGEX), F.lit(0))
-
-    def parse(pair, s):
-        lat = s.getItem(0).cast("double")
-        lon = s.getItem(1).cast("double")
-        valid = lat.between(LAT_MIN, LAT_MAX) & lon.between(LON_MIN, LON_MAX)
-        return F.struct(
-            F.when(valid, lat).alias("lat"),
-            F.when(valid, lon).alias("lon"),
-            F.when(~valid, pair).alias("err"),
-        )
-
-    return F.zip_with(
-        pairs, F.transform(pairs, lambda p: F.split(p, ",")), parse
-    )
-
-
-def explode_text_spans(documents: DataFrame) -> DataFrame:
-    """documents -> (doc_id, span_pos, text) for text spans only.
-
-    Column pruning matters: only doc_id + spans are read from the scan.
-    The explicit size() predicate replaces InferFiltersFromGenerate
-    (excluded session-wide, see session.get_spark) so empty-span docs are
-    still dropped at the parquet scan."""
-    return (
-        documents.where(F.size("spans") > 0)
-        .select("doc_id", F.posexplode("spans").alias("span_pos", "span"))
-        .where(F.col("span.kind") == "text")
-        .select("doc_id", "span_pos", F.col("span.text").alias("text"))
-    )
+    comma = pc.match_substring(texts, ",").to_numpy(zero_copy_only=False)
+    pairs, rest = np.flatnonzero(comma), np.flatnonzero(~comma)
+    if len(pairs):
+        span, pos, lat, lon, bad, err = _pair_points(texts.take(pairs))
+        yield emit(pairs[span], pos, lat, lon, bad, err)
+    if len(rest):
+        span, pos, lat, lon = _polyline_points(texts.take(rest))
+        if len(span):
+            yield emit(rest[span], pos, lat, lon, None,
+                       pa.nulls(len(span), pa.string()))
 
 
 def extract_points(documents: DataFrame) -> DataFrame:
     """Full extraction: returns (doc_id, span_pos, point_pos, lat, lon,
     loc_error). loc_error is null for valid points; rows with a non-null
     loc_error carry the offending token instead of coordinates."""
-    spans = explode_text_spans(documents).where(F.col("text").isNotNull())
-
-    text = F.col("text")
-    is_pair = text.contains(",")
-    is_poly = (~is_pair) & text.rlike(_POLYLINE_REGEX)
-    pts = F.when(is_pair, _csv_points(text)).otherwise(
-        _decode_polyline_udf(F.when(is_poly, text))
+    out = StructType(
+        [
+            documents.schema["doc_id"],
+            StructField("span_pos", IntegerType(), False),
+            StructField("point_pos", IntegerType(), False),
+            StructField("lat", DoubleType()),
+            StructField("lon", DoubleType()),
+            StructField("loc_error", StringType()),
+        ]
     )
-
-    # NOTE: no null/empty filter on pts — posexplode already emits zero
-    # rows for null and empty arrays, and an explicit filter makes
-    # Catalyst push the predicate below the projection, evaluating the
-    # whole extraction expression (and the polyline UDF) TWICE per row
-    # (seen in .explain: duplicate ArrowEvalPython + the transform inside
-    # both Filter and Project).
-    return (
-        spans.select("doc_id", "span_pos", pts.alias("pts"))
-        .select("doc_id", "span_pos", F.posexplode("pts").alias("point_pos", "pt"))
-        .select(
-            "doc_id",
-            "span_pos",
-            "point_pos",
-            F.col("pt.lat").alias("lat"),
-            F.col("pt.lon").alias("lon"),
-            F.col("pt.err").alias("loc_error"),
-        )
-    )
+    return documents.select(
+        "doc_id",
+        F.col("spans.kind").alias("kind"),
+        F.col("spans.text").alias("text"),
+    ).mapInArrow(_extract_batches, out)
 
 
 def with_point_id(points: DataFrame) -> DataFrame:

@@ -4,9 +4,9 @@ The input documents interleave text and media spans (BASELINE.json
 input_hint: spans may carry ``media_ref`` instead of text). This module
 gives media spans the same first-class treatment text gets:
 
-* ``media_spans``: posexplode + filter — the media twin of
-  operators/extract.explode_text_spans, preserving (doc_id, span_pos)
-  so the span-sequence invariant survives.
+* ``media_spans``: posexplode + filter — the media twin of the text-span
+  explode in operators/extract, preserving (doc_id, span_pos) so the
+  span-sequence invariant survives.
 * ``fetch_media``: resolves media_ref -> binary payload. In production
   this reads an object store / an Iceberg binary column; here the
   fetcher is injectable and the default is a deterministic fake

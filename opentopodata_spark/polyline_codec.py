@@ -5,12 +5,13 @@ Google Maps ``enc:`` prefix (/root/reference/opentopodata/api.py:302-340,
 via the ``polyline`` package, which is unavailable here). Precision is 1e-5
 degrees, deltas are zigzag + base-32 varint encoded with an offset of 63.
 
-``decode`` is the scalar reference implementation; ``decode_batch`` is the
-vectorized hot path used inside Spark Arrow UDFs: one numpy pass over the
-concatenated batch (segmented varint reduceat + per-string delta cumsum),
-with per-string fallback to the scalar decoder only for varints long enough
-to overflow int64 (keeps Python's big-int semantics bit-exact). Parity is
-pinned by tests/test_utils_parity.py (random + adversarial strings).
+``decode`` is the scalar reference implementation; ``decode_flat`` is the
+vectorized hot path used by the Arrow extraction pass: one numpy pass over
+a batch of strings stored back to back (segmented varint reduceat +
+per-string delta cumsum), with per-string fallback to the scalar decoder
+only for varints long enough to overflow int64 (keeps Python's big-int
+semantics bit-exact). ``decode_batch`` wraps it for lists of strings.
+Parity is pinned by tests/test_polyline.py (random + adversarial strings).
 """
 
 from __future__ import annotations
@@ -50,24 +51,14 @@ def decode(expression: str, precision: int = 5) -> list[tuple[float, float]]:
 def _decode_or_none(s: str, precision: int) -> list[tuple[float, float]] | None:
     try:
         return decode(s, precision)
-    except ValueError:
+    except (ValueError, OverflowError):  # big-int deltas past float range
         return None
 
 
 def decode_batch(strings, precision: int = 5) -> list:
     """Decode many polyline strings at once; returns one entry per input:
     a list of (lat, lon) tuples, or None where ``decode`` would raise
-    (truncated varint, invalid character) or the input is None/empty.
-
-    Vectorization: all strings are concatenated into one byte array; varint
-    groups are delimited with reduceat (string boundaries force group
-    breaks so one string's garbage can never leak into the next); zigzag +
-    per-string segmented cumsum produce the coordinates. Strings containing
-    a varint longer than 12 chars (>60 bits — would overflow int64, while
-    the scalar path promotes to Python big ints) are decoded by the scalar
-    reference instead, so results are identical in every case.
-    """
-    factor = 10.0**precision
+    (truncated varint, invalid character) or the input is None/empty."""
     out: list = [None] * len(strings)
     ids = [i for i, s in enumerate(strings) if isinstance(s, str) and s]
     if not ids:
@@ -78,15 +69,39 @@ def decode_batch(strings, precision: int = 5) -> list:
         for i in ids:
             out[i] = _decode_or_none(strings[i], precision)
         return out
+    ends = np.cumsum([len(strings[i]) for i in ids])
+    lat, lon, counts = decode_flat(np.frombuffer(buf, dtype=np.uint8), ends,
+                                   precision)
+    offsets = np.concatenate([[0], np.cumsum(np.maximum(counts, 0))])
+    lat, lon = lat.tolist(), lon.tolist()
+    for k, i in enumerate(ids):
+        if counts[k] >= 0:
+            lo, hi = offsets[k], offsets[k + 1]
+            out[i] = list(zip(lat[lo:hi], lon[lo:hi]))
+    return out
 
-    raw = np.frombuffer(buf, dtype=np.uint8)
-    lens = np.fromiter(
-        (len(strings[i]) for i in ids), dtype=np.int64, count=len(ids)
-    )
-    ends = np.cumsum(lens)
+
+def decode_flat(raw: np.ndarray, ends: np.ndarray, precision: int = 5):
+    """Decode non-empty polylines stored back to back in one uint8 array.
+
+    ``ends[k]`` is the exclusive end offset of string k in ``raw``.
+    Returns ``(lat, lon, counts)``: the coordinates of every decodable
+    string, flat and in string order, and each string's point count,
+    -1 where ``decode`` would fail (those strings add no coordinates).
+
+    Vectorization: varint groups are delimited with reduceat (string
+    boundaries force group breaks so one string's garbage can never leak
+    into the next); zigzag + per-string segmented cumsum produce the
+    coordinates. Strings containing a varint longer than 12 chars (>60
+    bits — would overflow int64, while the scalar path promotes to
+    Python big ints) are decoded by the scalar reference instead, so
+    results are identical in every case.
+    """
+    factor = 10.0**precision
+    n_str = len(ends)
     n_chars = int(ends[-1])
 
-    bad = np.zeros(len(ids), dtype=bool)  # per-string: decode() would raise
+    bad = np.zeros(n_str, dtype=bool)  # per-string: decode() would raise
     if raw.min() < 63:
         # invalid character(s): map char positions -> string ids lazily
         bad[np.unique(np.searchsorted(ends, np.flatnonzero(raw < 63), "right"))] = True
@@ -119,7 +134,7 @@ def decode_batch(strings, precision: int = 5) -> list:
     deltas = np.where(vals & 1, ~(vals >> 1), vals >> 1)
 
     g_sid = np.searchsorted(ends, gstart, "right")
-    counts = np.bincount(g_sid, minlength=len(ids))
+    counts = np.bincount(g_sid, minlength=n_str)
     bad |= counts % 2 == 1  # odd varint count: lat without lon
 
     # per-string group position -> lat (even) / lon (odd) alternation
@@ -140,20 +155,28 @@ def decode_batch(strings, precision: int = 5) -> list:
         prefix = np.where(starts > 0, c[starts - 1], 0)
         return c - np.repeat(prefix, seg_lens)
 
-    lat_cum = segmented_cumsum(deltas[is_lat], g_sid[is_lat]) / factor
-    lon_cum = segmented_cumsum(deltas[is_lon], g_sid[is_lon]) / factor
-    lat_sid = g_sid[is_lat]
-    pair_counts = np.bincount(lat_sid, minlength=len(ids))
-    offsets = np.concatenate([[0], np.cumsum(pair_counts)])
+    lat = segmented_cumsum(deltas[is_lat], g_sid[is_lat]) / factor
+    lon = segmented_cumsum(deltas[is_lon], g_sid[is_lon]) / factor
+    counts = np.bincount(g_sid[is_lat], minlength=n_str)
+    counts[bad] = -1
+    over_strings = over_strings[~bad[over_strings]]
 
-    over_set = set(over_strings.tolist())
-    for k, i in enumerate(ids):
-        if k in over_set:
-            out[i] = _decode_or_none(strings[i], precision)
-        elif not bad[k]:
-            lo, hi = offsets[k], offsets[k + 1]
-            out[i] = list(zip(lat_cum[lo:hi].tolist(), lon_cum[lo:hi].tolist()))
-    return out
+    # overwrite the overflowing strings' points with the scalar decode
+    # (same varint groups, so the same point count, unless the big ints
+    # do not fit a float)
+    offsets = np.concatenate([[0], np.cumsum(np.maximum(counts, 0))])
+    keep = np.ones(len(lat), dtype=bool)
+    for k in over_strings:
+        lo, hi = offsets[k], offsets[k + 1]
+        start = ends[k - 1] if k else 0
+        pts = _decode_or_none(raw[start:ends[k]].tobytes().decode("latin-1"),
+                              precision)
+        if pts is None:
+            counts[k] = -1
+            keep[lo:hi] = False
+        else:
+            lat[lo:hi], lon[lo:hi] = zip(*pts)
+    return lat[keep], lon[keep], counts
 
 
 def encode(coords, precision: int = 5) -> str:

@@ -13,6 +13,7 @@ Defaults chosen for the 100 TB design point (and harmless locally):
 
 from __future__ import annotations
 
+import hashlib
 import os
 import tempfile
 import zipfile
@@ -22,7 +23,11 @@ from pyspark.sql import SparkSession
 
 def _package_zip() -> str:
     """Zip this package for shipment to Python workers (the local-mode
-    equivalent of ``spark-submit --py-files``). Cached per process."""
+    equivalent of ``spark-submit --py-files``).
+
+    The zip's name carries a hash of the package directory and of every
+    module's path and bytes, so each checkout and each edit gets its own
+    zip, and an existing zip is only ever reused for the same code."""
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
     if not os.path.isdir(pkg_dir):
         # The package was imported FROM an archive (spark-submit
@@ -43,24 +48,27 @@ def _package_zip() -> str:
             f"opentopodata_spark imported from '{pkg_dir}' but no package "
             "archive found on the path — cannot ship code to workers"
         )
+    root = os.path.dirname(pkg_dir)
+    sources = {}
+    for base, _dirs, files in os.walk(pkg_dir):
+        for fn in files:
+            if fn.endswith(".py"):
+                full = os.path.join(base, fn)
+                with open(full, "rb") as f:
+                    sources[os.path.relpath(full, root)] = f.read()
+    key = hashlib.sha256(pkg_dir.encode())
+    for rel in sorted(sources):
+        key.update(f"\0{rel}\0{len(sources[rel])}\0".encode())
+        key.update(sources[rel])
     out = os.path.join(
-        tempfile.gettempdir(), f"opentopodata_spark_pyfiles_{os.getuid()}.zip"
+        tempfile.gettempdir(),
+        f"opentopodata_spark_pyfiles_{os.getuid()}_{key.hexdigest()[:16]}.zip",
     )
-    newest = max(
-        os.path.getmtime(os.path.join(base, fn))
-        for base, _dirs, files in os.walk(pkg_dir)
-        for fn in files
-        if fn.endswith(".py")
-    )
-    if not os.path.exists(out) or os.path.getmtime(out) < newest:
-        tmp = out + ".tmp"
+    if not os.path.exists(out):
+        tmp = f"{out}.{os.getpid()}.tmp"
         with zipfile.ZipFile(tmp, "w") as zf:
-            for base, _dirs, files in os.walk(pkg_dir):
-                for fn in files:
-                    if fn.endswith(".py"):
-                        full = os.path.join(base, fn)
-                        rel = os.path.relpath(full, os.path.dirname(pkg_dir))
-                        zf.write(full, rel)
+            for rel in sorted(sources):
+                zf.writestr(rel, sources[rel])
         os.replace(tmp, out)
     return out
 
@@ -88,10 +96,12 @@ def get_spark(
         builder.config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         # InferFiltersFromGenerate clones the generator expression into a
         # pre-Generate filter. For explode-over-a-Python-UDF-result plans
-        # (coordinate extraction) that duplicates the whole ArrowEvalPython
-        # stage — measured 10x slower at local[32] on the extraction
-        # pipeline. Where the inference genuinely helps (pruning empty
-        # arrays at the scan) the operators carry explicit size() filters.
+        # that duplicates the whole ArrowEvalPython stage (measured 10x
+        # slower at local[32] on the old pandas-UDF coordinate extraction;
+        # extraction is now one mapInArrow pass with no Generate, but other
+        # operators still explode UDF results). Where the inference
+        # genuinely helps (pruning empty arrays at the scan) the operators
+        # carry explicit size() filters.
         .config(
             "spark.sql.optimizer.excludedRules",
             "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate",
@@ -107,14 +117,15 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
     )
     if master != "external":
-        # Scan stages need multiple task WAVES per core so a slow split
-        # doesn't idle its core for the whole stage (with file-packing at
-        # 128MB a 64-file input collapsed to cores-many splits — one wave,
-        # zero straggler tolerance; measured 1.7s idle tail on a 13s map
-        # stage). Real cluster inputs have thousands of splits; this makes
-        # local mode schedule the same way. minPartitionNum only splits
-        # finer than packing would — it never merges.
-        builder = builder.config("spark.sql.files.minPartitionNum", str(4 * cores))
+        # One scan task per slot, not several waves: every Python task
+        # pays a fixed ~0.2-0.3 s worker start before user code runs
+        # (PySpark re-reads every zip on the worker's sys.path per task;
+        # see docs/DATA_PIPELINE.md), so a 4x-cores split of a Python
+        # stage pays that start four times per slot. Inputs larger than
+        # cores x 128 MB still split finer by the normal file packing;
+        # minPartitionNum only splits finer than packing would — it
+        # never merges.
+        builder = builder.config("spark.sql.files.minPartitionNum", str(cores))
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

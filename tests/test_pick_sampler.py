@@ -1,0 +1,142 @@
+"""Metamorphic tests of the resolver's Arrow pick-sampler.
+
+The same points must resolve to the same rows whatever the Arrow batch
+size (7 splits most point groups and string carry columns across
+batches), the partition count, the salting and the input order. The
+points fall through several datasets and hit NODATA cells.
+"""
+
+from __future__ import annotations
+
+import math
+
+import numpy as np
+import pytest
+from pyspark.sql import functions as F
+
+from opentopodata_spark import config, oracle
+from opentopodata_spark.operators import elevation, extract
+
+CARRY = ("doc_id", "span_pos", "point_pos")
+BATCH_KEY = "spark.sql.execution.arrow.maxRecordsPerBatch"
+
+
+@pytest.fixture(scope="module")
+def multi(datasets):
+    # nodata (3x3 grid with NODATA cells) -> eudemsubset -> etopo1deg:
+    # every dataset is global, so each point has three candidate rows
+    return config.resolve_dataset_names("multi_eudem_etopo1", datasets)
+
+
+@pytest.fixture(scope="module")
+def points(spark):
+    rng = np.random.default_rng(3)
+    n = 1500
+    lats = np.concatenate([rng.uniform(-0.5, 2.5, n), rng.uniform(35, 60, n),
+                           rng.uniform(-89, 89, n)])
+    lons = np.concatenate([rng.uniform(-0.5, 2.5, n), rng.uniform(-10, 30, n),
+                           rng.uniform(-179, 179, n)])
+    # exact NODATA cells and valid cells of the nodata grid
+    lats[:6] = [0, 1, 2, 2, 1, 0]
+    lons[:6] = [2, 0.51, 0.5, 0, 0.5, 0]
+    rows = [(f"doc-{i // 4:05d}-ü", i % 4, i % 3, float(a), float(b))
+            for i, (a, b) in enumerate(zip(lats, lons))]
+    df = spark.createDataFrame(
+        rows, "doc_id string, span_pos int, point_pos int, lat double, lon double")
+    return extract.with_point_id(df).cache()
+
+
+def _rows(df) -> list:
+    return sorted(
+        tuple(v.hex() if isinstance(v, float) else v for v in r)
+        for r in df.collect()
+    )
+
+
+def _resolve(spark, multi, points, batch=65536, partitions=None, salt=1,
+             cell_salts=None, nodata_value=None):
+    old = spark.conf.get(BATCH_KEY)
+    spark.conf.set(BATCH_KEY, str(batch))
+    try:
+        r = elevation.ElevationResolver(
+            spark, multi, "bilinear", nodata_value,
+            sample_partitions=partitions, salt=salt)
+        if cell_salts:
+            r.set_cell_salts(cell_salts)
+        return _rows(r.resolve(points, carry=CARRY))
+    finally:
+        spark.conf.set(BATCH_KEY, old)
+
+
+@pytest.fixture(scope="module", params=[None, float("nan")], ids=["null", "nan"])
+def base(request, spark, multi, points):
+    return request.param, _resolve(spark, multi, points,
+                                   nodata_value=request.param)
+
+
+def test_base_matches_oracle(multi, points, base):
+    nodata_value, rows = base
+    assert len(rows) == points.count()
+    lats = [float.fromhex(r[1]) for r in rows]
+    lons = [float.fromhex(r[2]) for r in rows]
+    want_z, want_ds = oracle.get_elevation(lats, lons, multi, "bilinear",
+                                           nodata_value)
+    got_z = [None if r[6] is None else float.fromhex(r[6]) for r in rows]
+    for g, w in zip(got_z, want_z):
+        assert (g is None and w is None) or (
+            g is not None and w is not None
+            and (g == w or (math.isnan(g) and math.isnan(w))))
+    assert [r[7] for r in rows] == want_ds
+    # the corpus exercises every dataset, and NODATA either falls through
+    # (null fill) or resolves to NaN
+    assert {r[7] for r in rows} == {d.name for d in multi}
+    nodata_cell = next(r for r in rows if (r[1], r[2]) == ((0.0).hex(), (2.0).hex()))
+    if nodata_value is None:
+        assert nodata_cell[7] == "etopo1deg"
+    else:
+        assert math.isnan(float.fromhex(nodata_cell[6]))
+        assert nodata_cell[7] == "nodata"
+
+
+@pytest.mark.parametrize(
+    "variant",
+    [
+        {"batch": 7},
+        {"partitions": 1},
+        {"partitions": 13},
+        {"partitions": 13, "batch": 7},
+        {"salt": 8},
+        {"cell_salts": "hot"},
+    ],
+    ids=["batch7", "one_partition", "many_partitions",
+         "many_partitions_batch7", "uniform_salt", "cell_salts"],
+)
+def test_same_rows_under_metamorphic_changes(spark, multi, points, base,
+                                             variant):
+    nodata_value, want = base
+    variant = dict(variant)
+    if variant.get("cell_salts") == "hot":
+        r = elevation.ElevationResolver(spark, multi, "bilinear")
+        cells = r.candidates(points).select(r._cell_expr())
+        hot = cells.groupBy("_cell").count().orderBy(F.desc("count")).limit(5)
+        variant["cell_salts"] = {row["_cell"]: 6 for row in hot.collect()}
+    got = _resolve(spark, multi, points, nodata_value=nodata_value, **variant)
+    assert got == want
+
+
+def test_shuffled_input_order(spark, multi, points, base):
+    nodata_value, want = base
+    shuffled = points.orderBy(F.rand(seed=5)).repartition(3)
+    assert _resolve(spark, multi, shuffled, batch=7,
+                    nodata_value=nodata_value) == want
+
+
+def test_resolve_plan_is_one_exchange_one_arrow_pass(spark, multi, points):
+    res = elevation.ElevationResolver(spark, multi, "bilinear").resolve(
+        points, carry=CARRY)
+    plan = res._jdf.queryExecution().executedPlan().toString()
+    wide = [ln for ln in plan.splitlines()
+            if "Exchange" in ln and "BroadcastExchange" not in ln]
+    assert len(wide) == 1, plan
+    assert plan.count("MapInArrow") == 1, plan
+    assert "MapInPandas" not in plan, plan

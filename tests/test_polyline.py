@@ -25,7 +25,7 @@ except ImportError:  # pragma: no cover
 def scalar_or_none(s):
     try:
         return pc.decode(s)
-    except ValueError:
+    except (ValueError, OverflowError):
         return None
 
 
@@ -77,6 +77,24 @@ def test_batch_matches_scalar_adversarial():
     got = pc.decode_batch(strings)
     for s, g in zip(strings, got):
         assert g == scalar_or_none(s), repr(s)
+
+
+def test_batch_splices_scalar_decodes_between_vectorized_ones():
+    """Strings with a varint over 12 chars decode on the scalar path; their
+    points must land between their neighbours' in the flat output."""
+    a = pc.encode([(38.5, -120.2), (40.7, -120.95)])
+    b = pc.encode([(1.0, 2.0)])
+    strings = [a, "z" * 13 + "A" + "?", b, "z" * 20 + "A" + "?" + a, a]
+    got = pc.decode_batch(strings)
+    for s, g in zip(strings, got):
+        assert g is not None and g == scalar_or_none(s), repr(s)
+
+
+def test_varint_past_float_range_is_undecodable():
+    # a delta of ~2^1030 cannot become a float: no points, no exception
+    huge = "~" * 206 + "?" + "?"
+    assert scalar_or_none(huge) is None
+    assert pc.decode_batch([huge, "_p~iF~ps|U"]) == [None, [(38.5, -120.2)]]
 
 
 def test_batch_none_and_empty():
