@@ -511,6 +511,13 @@ class IcebergTable:
         _, manifests = read_ocf(snap["manifest-list"])
         for m in manifests:
             _, recs = read_ocf(m["manifest_path"])
+            # v2 delete files (merge-on-read) would be planned as data and
+            # resurrect deleted rows: refuse the table instead
+            if m.get("content", 0) != 0 or any(
+                    r["data_file"].get("content", 0) != 0 for r in recs):
+                raise ValueError(
+                    f"{self.location}: delete files in {m['manifest_path']} "
+                    "(merge-on-read deletes are not supported)")
             entries.extend(r for r in recs if r["status"] != 2)
         return entries
 

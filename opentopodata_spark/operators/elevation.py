@@ -1,35 +1,36 @@
 """The distributed elevation resolver — the engine's flagship pipeline.
 
-Replaces the reference's per-request loop (/root/reference/opentopodata/
-backend.py:224-288) with a one-shot Spark plan that has exactly ONE wide
-exchange:
+Runs the reference's per-request priority loop (opentopodata
+backend.py:224-288) as a one-shot Spark plan with exactly ONE wide
+exchange, one row per point from scan to output:
 
-    points (point_id, lat, lon, ...)
-      -> J2  candidate datasets: broadcast bbox join against the registry
-             (registry bounds = config bounds INTERSECT derived raster
-             coverage — false candidates never exist)
-      -> A1  THE shuffle: repartition by (spatial cell, point-hash salt)
-             via inline expressions, local sort by point_id
-      -> S1+S3+J1+S8+S5+J3 pick-sampler (mapInArrow): tile assignment
-             (reproject + floor + broadcast-index searchsorted), windowed
-             raster reads per tile, per-dataset nodata fill, priority
-             pick — one output row per point, no second exchange
-      -> J4  carry keys through (no join-back, no global sort)
+    points (point_id, lat, lon, *carry)
+      -> THE shuffle: repartition by (spatial cell, point-hash salt)
+         via inline expressions
+      -> sampler (mapInArrow), per Arrow batch in numpy: for each
+         dataset in priority order, the still-unresolved points inside
+         its coverage get tile assignment (reproject + floor + broadcast-
+         index searchsorted), windowed raster reads per tile and that
+         dataset's nodata fill; the batch's rows pass through with
+         ``elevation`` and ``dataset`` appended
 
 Semantics parity (verified differentially against oracle.get_elevation):
   * missing tile / out-of-raster-bounds -> null elevation
   * NODATA in kernel footprint -> NaN, then nodata_value fill PER dataset
     (null fill => falls through to next dataset; int/NaN fill => resolves)
-  * attribution = winning dataset, else LAST config-bbox-matching dataset
-    (static expression), else the final dataset name (backend.py:280-286)
+  * attribution = the LAST dataset whose config bbox held the point while
+    it was unresolved (so the winner, if any), else the final dataset
+    name (backend.py:280-286)
 
 Scale design notes:
-  * registry and tile index are broadcast — points never shuffle for joins
+  * registry boxes and tile index are broadcast metadata probed inside
+    the sampler — no join operator, and lower-priority rasters are
+    sampled only where the higher ones left points unresolved
   * the shuffle key is the point's spatial cell: tile locality (a task's
     points hit few rasters — the per-executor mmap LRU is the GDAL-block-
-    cache analog) AND pick locality (a point's candidates co-locate)
+    cache analog)
   * per-cell salts from a sampled pre-pass (estimate_cell_salts) split
-    Zipf-hot cells; every candidate row of a point shares its salt
+    Zipf-hot cells
 """
 
 from __future__ import annotations
@@ -40,7 +41,7 @@ import numpy as np
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import ByteType, DoubleType, IntegerType, StructField, StructType
+from pyspark.sql.types import DoubleType, StringType, StructField, StructType
 
 from .. import crs as _crs
 from .. import interpolate, tiles
@@ -56,84 +57,61 @@ def _pack_ij(iy, ix):
     )
 
 
-# state: 0 = value, 1 = NODATA (NaN inside raster), 2 = out-of-coverage.
-# An explicit marker column is REQUIRED: a pandas UDF boundary coerces
-# NaN to SQL null, so a NaN-vs-null convention would silently merge the
-# NODATA and out-of-coverage cases and break nodata_value semantics
-# (SURVEY.md §7 hard part 3 — caught by the differential test).
-_STATE_VALUE, _STATE_NODATA, _STATE_OOB = 0, 1, 2
-
-
-def _assign_tiles(prio, lats, lons, meta) -> np.ndarray:
-    """S1+S3+J1 fused: per dataset (priority group) reproject to the
-    filename CRS, floor to tile indices, and look up the tile id in the
-    sorted packed-key index. Vectorized per group; -1 = no tile.
+def _assign_tiles(lats, lons, d) -> np.ndarray:
+    """Tile id per point for ONE dataset: reproject to the filename CRS,
+    floor to tile indices, and look the packed key up in the dataset's
+    sorted index. Vectorized; -1 = no tile.
 
     Same arithmetic as the reference's TiledDataset.location_paths
-    (/root/reference/opentopodata/config.py:432-451): float64 projection
+    (opentopodata config.py:432-451): float64 projection
     then floor(coord / tile_size), matching decimal_base_floor which
     also divides in float (utils.py:60-65)."""
+    if d["single"] >= 0:
+        return np.full(len(lats), d["single"], dtype=np.int32)
     tile_id = np.full(len(lats), -1, dtype=np.int32)
-    valid = ~np.isnan(prio)
-    for p in np.unique(prio[valid]):
-        m = (prio == p).nonzero()[0]
-        d = meta[int(p)]
-        if d["single"] >= 0:
-            tile_id[m] = d["single"]
-            continue
-        if len(d["keys"]) == 0:
-            continue
-        xs, ys = _crs.reproject_latlons(lats[m], lons[m], epsg=d["epsg"])
-        size = d["tile_size"]
-        iy = np.floor(np.asarray(ys, dtype=np.float64) / size).astype(np.int64)
-        ix = np.floor(np.asarray(xs, dtype=np.float64) / size).astype(np.int64)
-        key = _pack_ij(iy, ix)
-        pos = np.searchsorted(d["keys"], key)
-        pos = np.clip(pos, 0, len(d["keys"]) - 1)
-        hit = d["keys"][pos] == key
-        tile_id[m[hit]] = d["tids"][pos[hit]]
+    if len(d["keys"]) == 0:
+        return tile_id
+    xs, ys = _crs.reproject_latlons(lats, lons, epsg=d["epsg"])
+    size = d["tile_size"]
+    iy = np.floor(np.asarray(ys, dtype=np.float64) / size).astype(np.int64)
+    ix = np.floor(np.asarray(xs, dtype=np.float64) / size).astype(np.int64)
+    key = _pack_ij(iy, ix)
+    pos = np.clip(np.searchsorted(d["keys"], key), 0, len(d["keys"]) - 1)
+    hit = d["keys"][pos] == key
+    tile_id[hit] = d["tids"][pos[hit]]
     return tile_id
 
 
-def _sample_candidate_arrays(lats, lons, prio, interpolation: str, meta, paths):
-    """Candidate-level tile assignment + raster sampling: one windowed
-    read per distinct tile id in the batch (the reference's per-file
-    batching, backend.py:188-203). Returns (z, state) arrays aligned to
-    the inputs. tile_id -1 (missing tile / uncovered) stays OOB."""
+def _sample_dataset(lats, lons, d, interpolation: str, paths):
+    """Sample ONE dataset at the given points: one windowed read per
+    distinct tile (the reference's per-file batching, backend.py:188-203).
+    Returns (z, found): z is NaN at NODATA, found is False for a missing
+    tile or a point outside its raster."""
     from ..oracle import _open_cached
 
     n = len(lats)
-    z = np.zeros(n, dtype=np.float64)
-    state = np.full(n, _STATE_OOB, dtype=np.int8)
-    tile_id = _assign_tiles(prio, lats, lons, meta)
+    z = np.full(n, np.nan)
+    found = np.zeros(n, dtype=bool)
+    tile_id = _assign_tiles(lats, lons, d)
     order = np.argsort(tile_id, kind="stable")
-    sorted_tids = tile_id[order]
     # group boundaries over the PRESENT tile ids only — O(batch log batch),
-    # independent of the total tile-index size (a batch touching 3 tiles
-    # of a 10^6-tile index does 3 slices, not a 10^6-wide searchsorted)
-    uniq, starts = np.unique(sorted_tids, return_index=True)
-    stops = np.append(starts[1:], len(sorted_tids))
+    # independent of the total tile-index size
+    uniq, starts = np.unique(tile_id[order], return_index=True)
+    stops = np.append(starts[1:], n)
     for tid, lo, hi in zip(uniq, starts, stops):
         if tid < 0:
             continue
         idx = order[lo:hi]
-        raster = _open_cached(paths[int(tid)])
-        vals, in_bounds = interpolate.sample_points_on_raster_arrays(
-            raster, lats[idx], lons[idx], interpolation
+        z[idx], found[idx] = interpolate.sample_points_on_raster_arrays(
+            _open_cached(paths[int(tid)]), lats[idx], lons[idx], interpolation
         )
-        st = np.where(
-            ~in_bounds,
-            _STATE_OOB,
-            np.where(np.isnan(vals), _STATE_NODATA, _STATE_VALUE),
-        )
-        z[idx] = np.where(in_bounds & np.isfinite(vals), vals, 0.0)
-        state[idx] = st
-    return z, state
+    return z, found
 
 
-# pick-sampler output states (point-level, after the per-dataset
-# nodata_value fill and the priority pick):
-_OUT_VALUE, _OUT_NAN, _OUT_NULL = 0, 1, 2
+def _in_box(lats, lons, box) -> np.ndarray:
+    """Inclusive bbox test (backend.py:254-266); NaN coordinates miss."""
+    left, bottom, right, top = box
+    return (lats >= bottom) & (lats <= top) & (lons >= left) & (lons <= right)
 
 
 def _f64(col) -> np.ndarray:
@@ -141,83 +119,51 @@ def _f64(col) -> np.ndarray:
     return col.cast(pa.float64()).to_numpy(zero_copy_only=False)
 
 
-def _make_pick_sampler(
-    interpolation: str, carry: tuple, nodata_value, meta_bc, paths_bc
-):
-    """mapInArrow fn: sample ALL candidate rows, apply the per-dataset
-    nodata fill (S5), and pick each point's winner (J3) — entirely inside
-    the partition. Requires input sorted by point_id within the partition
-    (a point's candidate rows are then contiguous; the trailing group of
-    each Arrow batch is held back as a slice and prepended to the next
-    batch, so batch boundaries never split a point).
+def _make_sampler(interpolation: str, nodata_value, names, meta_bc, paths_bc):
+    """mapInArrow fn running the reference's priority loop
+    (backend.py:224-288) on each Arrow batch, in numpy. For each dataset
+    in order, only the points still unresolved inside its coverage are
+    sampled; its nodata_value fill decides whether a NODATA hit resolves
+    (int/NaN fill) or falls through (null fill). Every dataset whose
+    config bbox holds a still-unresolved point stamps its name on it, so
+    the name is the winner, else the last dataset that tried, else the
+    last dataset.
 
-    Only point_id, lat, lon and priority become numpy arrays; the output
-    columns (carry columns included, e.g. string document keys) move by
-    ``take`` on the Arrow batch and never become Python objects.
-
-    Emitting one row per point here removes the second wide exchange the
-    groupBy-pick needed: mapInArrow output has fresh attribute ids, so
-    Catalyst cannot reuse the repartition's hash partitioning for a
-    downstream aggregate — the pick must happen before leaving Python.
-    """
-    out_cols = ["point_id", "lat", "lon", *carry]
-    nodata_is_none = nodata_value is None
-    nodata_is_nan = isinstance(nodata_value, float) and math.isnan(nodata_value)
-    fill = None if (nodata_is_none or nodata_is_nan) else float(nodata_value)
-
-    def process(batch: pa.RecordBatch) -> pa.RecordBatch:
-        prio = _f64(batch.column("priority"))  # null -> nan, sorts last
-        z, state = _sample_candidate_arrays(
-            _f64(batch.column("lat")), _f64(batch.column("lon")), prio,
-            interpolation, meta_bc.value, paths_bc.value,
-        )
-        is_nod = state == _STATE_NODATA
-        resolved = (state == _STATE_VALUE) | (is_nod & (not nodata_is_none))
-        eff = z.copy()
-        if fill is not None:
-            eff[is_nod] = fill
-        elif nodata_is_nan:
-            eff[is_nod] = np.nan
-        pid = batch.column("point_id").to_numpy()
-        order = np.lexsort((prio, ~resolved, pid))
-        spid = pid[order]
-        first = np.ones(len(spid), dtype=bool)
-        first[1:] = spid[1:] != spid[:-1]
-        win = order[first]
-        w_res = resolved[win]
-        w_eff = eff[win]
-        w_nan = np.isnan(w_eff)
-        out_state = np.where(
-            ~w_res, _OUT_NULL, np.where(w_nan, _OUT_NAN, _OUT_VALUE)
-        ).astype(np.int8)
-        w_prio = prio[win]  # winner dataset as its priority index
-        taken = batch.select(out_cols).take(pa.array(win))
-        return pa.RecordBatch.from_arrays(
-            [
-                *taken.columns,
-                pa.array(np.where(w_res & ~w_nan, w_eff, 0.0)),
-                pa.array(out_state),
-                pa.array(np.where(np.isnan(w_prio), -1, w_prio).astype(np.int32)),
-            ],
-            names=[*out_cols, "z", "state", "priority"],
-        )
+    Input rows pass through untouched (carry columns never become Python
+    objects); ``elevation`` (null = unresolved, NaN kept) and ``dataset``
+    are appended."""
+    nan_fill = isinstance(nodata_value, float) and math.isnan(nodata_value)
+    fill = None if nodata_value is None or nan_fill else float(nodata_value)
+    names = pa.array(names, pa.string())
 
     def sample(batches):
-        held = None
+        meta, paths = meta_bc.value, paths_bc.value
         for batch in batches:
-            if held is not None:
-                batch = pa.Table.from_batches([held, batch]).combine_chunks(
-                ).to_batches()[0]
-            if batch.num_rows == 0:
-                continue
-            pid = batch.column("point_id").to_numpy()
-            not_last = (pid != pid[-1]).nonzero()[0]
-            split = int(not_last[-1]) + 1 if len(not_last) else 0
-            held = batch.slice(split)
-            if split:
-                yield process(batch.slice(0, split))
-        if held is not None and held.num_rows:
-            yield process(held)
+            lats, lons = _f64(batch.column("lat")), _f64(batch.column("lon"))
+            n = batch.num_rows
+            elev = np.zeros(n)
+            unresolved = np.ones(n, dtype=bool)
+            attrib = np.full(n, len(meta) - 1, dtype=np.int32)
+            for k, d in enumerate(meta):
+                attrib[unresolved & _in_box(lats, lons, d["config_box"])] = k
+                m = (unresolved & _in_box(lats, lons, d["box"])).nonzero()[0]
+                if len(m) == 0:
+                    continue
+                z, found = _sample_dataset(lats[m], lons[m], d, interpolation, paths)
+                nodata = found & np.isnan(z)
+                if fill is not None:
+                    z[nodata] = fill
+                ok = found & ~nodata if nodata_value is None else found
+                elev[m[ok]] = z[ok]
+                unresolved[m[ok]] = False
+            yield pa.RecordBatch.from_arrays(
+                [
+                    *batch.columns,
+                    pa.array(elev, mask=unresolved),
+                    names.take(pa.array(attrib)),
+                ],
+                names=[*batch.schema.names, "elevation", "dataset"],
+            )
 
     return sample
 
@@ -245,19 +191,12 @@ class ElevationResolver:
         # with sample_fraction), else spark.sql.shuffle.partitions.
         self.sample_partitions = sample_partitions
         self._est_rows: float | None = None
-        # Integer-encode every string the wide shuffle would otherwise
-        # carry: raster paths (~70 bytes each) become tile ids into a
-        # broadcast list, dataset names become the priority index. This
-        # halves shuffle bytes AND keeps the sampler's per-row work on
-        # numeric Arrow columns (names are decoded back in the final
-        # projection, a K-branch CASE).
-        #
-        # Tile ASSIGNMENT (reproject + floor + index lookup, SURVEY.md
-        # S1+S3+J1) happens inside the pick-sampler, not the plan: the
-        # tile index is broadcast metadata either way, and doing it in
-        # Python saves a whole ArrowEvalPython round trip of the
-        # candidate stream plus a broadcast join. The lookup is a packed
-        # (iy, ix) -> searchsorted over a sorted int64 array — O(log n)
+        # The sampler's metadata, broadcast once: per dataset its
+        # registry box (config bounds INTERSECT derived raster coverage —
+        # points outside it could only sample null), its config box (for
+        # attribution), and either one raster or a tile index. Raster
+        # paths are ids into one broadcast list. Tile assignment is a
+        # packed (iy, ix) -> searchsorted over a sorted uint64 array —
         # vectorized, no per-row Python.
         paths: list[str] = []
         ds_meta = []
@@ -268,49 +207,44 @@ class ElevationResolver:
             prio = next(i for i, d in enumerate(datasets) if d.name == name)
             tiled[prio].append((iy, ix, len(paths)))
             paths.append(path)
-        reg_rows = []
         for (
             _name, priority, kind, left, bottom, right, top, epsg, tsize, spath
-        ) in tiles.dataset_registry_rows(datasets):
-            stid = -1
-            if spath is not None:
-                stid = len(paths)
-                paths.append(spath)
-            reg_rows.append((priority, left, bottom, right, top))
+        ), ds in zip(tiles.dataset_registry_rows(datasets), datasets):
+            b = ds.wgs84_bounds
+            d = {
+                "box": (left, bottom, right, top),
+                "config_box": tuple(
+                    float(v) for v in (b.left, b.bottom, b.right, b.top)
+                ),
+                "single": -1,
+            }
             if kind == "tiled":
                 entries = sorted(
                     (_pack_ij(iy, ix), tid) for iy, ix, tid in tiled[priority]
                 )
-                keys = np.array([k for k, _t in entries], dtype=np.uint64)
-                tids = np.array([t for _k, t in entries], dtype=np.int32)
-                ds_meta.append(
-                    {"epsg": int(epsg), "tile_size": float(tsize),
-                     "keys": keys, "tids": tids, "single": -1}
-                )
+                d["keys"] = np.array([k for k, _t in entries], dtype=np.uint64)
+                d["tids"] = np.array([t for _k, t in entries], dtype=np.int32)
+                d["epsg"], d["tile_size"] = int(epsg), float(tsize)
             else:
-                ds_meta.append({"single": stid})
+                d["single"] = len(paths)
+                paths.append(spath)
+            ds_meta.append(d)
         self.registry = spark.createDataFrame(
-            reg_rows,
+            [(k, *d["box"]) for k, d in enumerate(ds_meta)],
             "priority int, left double, bottom double, right double, top double",
         )
         self._meta_bc = spark.sparkContext.broadcast(ds_meta)
         self._paths_bc = spark.sparkContext.broadcast(paths)
-        self.fallback_name = datasets[-1].name
         # Uniform point-hash salt for the spatial-cell shuffle. salt=0 =
         # auto: 1 when per-cell salts are installed (set_cell_salts — the
         # intended path, they split exactly the hot cells), else a mild 4
         # so a corpus concentrated in a handful of cells still spreads.
-        # A point's candidate rows always share a salt value (hashed on
-        # point_id), so the in-sampler pick stays partition-local.
         self._salt_arg = salt
         self._cell_salts: dict[int, int] = {}
         self.cell_deg = 1.0
 
-    def candidates(self, points: DataFrame, carry: tuple = ()) -> DataFrame:
-        """J2: broadcast bbox coverage join (inclusive bounds, parity with
-        backend.py:254-266). LEFT join so uncovered points survive as a
-        single null-dataset row — the pipeline stays one linear flow with
-        no re-scan of the input subtree."""
+    def candidates(self, points: DataFrame) -> DataFrame:
+        """(point, covering dataset) rows, kept only for perfbench's trace."""
         reg = F.broadcast(self.registry)
         cond = (
             (points["lat"] >= reg["bottom"])
@@ -318,12 +252,12 @@ class ElevationResolver:
             & (points["lon"] >= reg["left"])
             & (points["lon"] <= reg["right"])
         )
-        return points.select("point_id", "lat", "lon", *carry).join(
+        return points.select("point_id", "lat", "lon").join(
             reg, cond, "left"
-        ).select("point_id", "lat", "lon", "priority", *carry)
+        ).select("point_id", "lat", "lon", "priority")
 
-    # ~candidate rows per shuffle partition in auto sizing. At this size a
-    # partition is ~10-20 MB of int-encoded rows and a reduce task runs a
+    # ~points per shuffle partition in auto sizing. At this size a
+    # partition is ~10-20 MB of point rows and a reduce task runs a
     # second or more — well above the fixed ~0.2 s every Python task pays
     # before user code runs (docs/DATA_PIPELINE.md).
     _ROWS_PER_PARTITION = 200_000
@@ -364,9 +298,7 @@ class ElevationResolver:
     def _cell_expr(self):
         """Dataset-independent spatial cell of the point (packed long).
         The sampling shuffle keys on this: points of one area co-locate
-        (their rasters too — tile locality for the per-executor LRU), and
-        ALL candidate rows of a point share the key, so the winner pick
-        can happen inside the sampler with no second exchange."""
+        (their rasters too — tile locality for the per-executor LRU)."""
         iy = F.floor(F.col("lat") / F.lit(self.cell_deg)).cast("long")
         ix = F.floor(F.col("lon") / F.lit(self.cell_deg)).cast("long")
         width = int(360.0 / self.cell_deg) + 4
@@ -377,7 +309,7 @@ class ElevationResolver:
     # back to a broadcast join
     _SALT_LITERAL_LIMIT = 512
 
-    def _partition_exprs(self, cand_paths: DataFrame):
+    def _partition_exprs(self, df: DataFrame):
         """Partitioning expressions for THE shuffle: (spatial cell,
         point-hash salt). Returned as inline expressions (and an optional
         pre-joined frame) so the shuffle rows don't carry them — at 10^10
@@ -388,14 +320,14 @@ class ElevationResolver:
             factor = F.lit(1)
             for c, s in salts.items():
                 factor = F.when(cell == F.lit(c), F.lit(s)).otherwise(factor)
-            return cand_paths, [cell, F.pmod(F.xxhash64("point_id"), factor)]
+            return df, [cell, F.pmod(F.xxhash64("point_id"), factor)]
         if salts:
             salt_df = F.broadcast(
                 self.spark.createDataFrame(
                     list(salts.items()), "_scell long, _sfactor int"
                 )
             )
-            df = cand_paths.withColumn("_cell", cell).join(
+            df = df.withColumn("_cell", cell).join(
                 salt_df, F.col("_cell") == salt_df["_scell"], "left"
             )
             return df.drop("_scell"), [
@@ -406,96 +338,36 @@ class ElevationResolver:
                 ),
             ]
         salt = self._salt_arg if self._salt_arg >= 1 else 4
-        return cand_paths, [cell, F.pmod(F.xxhash64("point_id"), F.lit(salt))]
+        return df, [cell, F.pmod(F.xxhash64("point_id"), F.lit(salt))]
 
     def resolve(self, points: DataFrame, carry: tuple = ()) -> DataFrame:
         """Full pipeline: one linear plan, ONE wide shuffle, one scan.
 
         Input needs (point_id, lat, lon). Output: (point_id, lat, lon,
-        elevation, dataset), exactly one row per input point_id. ``carry``
-        names extra input columns to thread through the pipeline — at
-        scale this is strictly cheaper than ``attach``'s join, which
-        would shuffle both sides AND recompute the extraction subtree.
+        *carry, elevation, dataset), exactly one row per input row —
+        rows sharing a point_id stay separate. ``carry`` names extra
+        input columns (e.g. document keys) to thread through.
 
-        Shape: candidates + tile paths are narrow (broadcast joins); the
-        single exchange repartitions by (spatial cell, point-hash salt);
-        a partition-local sort by point_id makes each point's candidate
-        rows contiguous; the pick-sampler emits one row per point; the
-        final projection maps (z, state) to elevation and applies the
-        static config-bounds attribution for unresolved points (the
-        reference stamps dataset_name on every config-bbox-matched query
-        even when it returns None, backend.py:280-286 — config bounds may
-        be wider than the derived raster coverage the candidate join
-        uses, so this must not come from a candidate row)."""
-        carry = tuple(carry)
-        cand = self.candidates(points, carry)
-        df, part_exprs = self._partition_exprs(cand)
-        df = df.repartition(self._plan_partitions(), *part_exprs)
-        df = df.sortWithinPartitions("point_id")
-        df = df.drop("_cell", "_sfactor")
-
+        Shape: the single exchange repartitions the points by (spatial
+        cell, point-hash salt); one mapInArrow sampler then runs the
+        priority loop per Arrow batch and emits the final columns."""
+        cols = ("point_id", "lat", "lon", *carry)
+        df, part_exprs = self._partition_exprs(points.select(*cols))
+        df = df.repartition(self._plan_partitions(), *part_exprs).select(*cols)
         schema = StructType(
-            [df.schema[c] for c in ("point_id", "lat", "lon")]
-            + [df.schema[c] for c in carry]
-            + [
-                StructField("z", DoubleType()),
-                StructField("state", ByteType()),
-                StructField("priority", IntegerType()),
-            ]
+            [*df.schema.fields,
+             StructField("elevation", DoubleType()),
+             StructField("dataset", StringType())]
         )
-        out = df.mapInArrow(
-            _make_pick_sampler(
+        return df.mapInArrow(
+            _make_sampler(
                 self.interpolation,
-                carry,
                 self.nodata_value,
+                [d.name for d in self.datasets],
                 self._meta_bc,
                 self._paths_bc,
             ),
             schema,
-        )
-
-        attrib = F.coalesce(
-            *[
-                F.when(
-                    (F.col("lat") >= float(ds.wgs84_bounds.bottom))
-                    & (F.col("lat") <= float(ds.wgs84_bounds.top))
-                    & (F.col("lon") >= float(ds.wgs84_bounds.left))
-                    & (F.col("lon") <= float(ds.wgs84_bounds.right)),
-                    F.lit(ds.name),
-                )
-                for ds in reversed(self.datasets)
-            ],
-            F.lit(self.fallback_name),
-        )
-        # decode winner priority -> dataset name (K-branch CASE; strings
-        # re-enter the plan only here, after the per-point collapse)
-        winner_name = F.coalesce(
-            *[
-                F.when(F.col("priority") == i, F.lit(ds.name))
-                for i, ds in enumerate(self.datasets)
-            ],
-            F.lit(None).cast("string"),
-        )
-        return out.select(
-            "point_id",
-            "lat",
-            "lon",
-            *carry,
-            F.when(F.col("state") == _OUT_VALUE, F.col("z"))
-            .when(F.col("state") == _OUT_NAN, F.lit(float("nan")))
-            .otherwise(F.lit(None).cast("double"))
-            .alias("elevation"),
-            F.when(F.col("state") != _OUT_NULL, winner_name)
-            .otherwise(attrib)
-            .alias("dataset"),
-        )
-
-    @staticmethod
-    def attach(points: DataFrame, resolved: DataFrame) -> DataFrame:
-        """J4: re-attach resolver output to the full input rows by key
-        (no global sort — order is identity, not position)."""
-        return points.join(
-            resolved.select("point_id", "elevation", "dataset"), "point_id", "left"
         )
 
 
@@ -510,13 +382,13 @@ def estimate_cell_salts(
     (e.g. ``documents.sample(0.02)`` upstream — sampling documents, not
     the extracted points, keeps the estimation job's UDF work
     proportional to the sample). The returned dict maps each cell id to
-    ceil(its share of rows x partitions): a cell that would fill
+    ceil(its share of points x partitions): a cell that would fill
     k partitions is split into ~k point-hash salt buckets; cold cells
     stay at salt 1 and keep their tile locality. Shares are scale-free,
     so the sampling fraction needs no correction for the SALTS. Feed the
     result to ``resolver.set_cell_salts``.
 
-    ``sample_fraction`` (when given) additionally installs a total-row
+    ``sample_fraction`` (when given) additionally installs a total-point
     estimate (total/fraction) on the resolver — the sampling-driven input
     to ``_plan_partitions``: the same pre-pass that finds the hot cells
     sizes the shuffle. Salts are then computed against the partition
@@ -524,14 +396,8 @@ def estimate_cell_salts(
 
     At cluster scale this is one tiny pre-pass (0.1% of the data) that
     removes the hot-city straggler — the skew case AQE cannot fix for a
-    mapInArrow repartition (it is not a join).
-
-    Counts are taken over the sample's CANDIDATE rows (after the
-    broadcast registry join), not its points: the shuffle being salted
-    and sized carries one row per (point, matching dataset), so a region
-    covered by two datasets genuinely weighs twice — sizing on points
-    would undershoot partitions by the dataset-multiplicity factor."""
-    cells = resolver.candidates(points_sample).select(resolver._cell_expr())
+    mapInArrow repartition (it is not a join)."""
+    cells = points_sample.select(resolver._cell_expr())
     rows = cells.groupBy("_cell").agg(F.count(F.lit(1)).alias("cnt")).collect()
     total = sum(r.cnt for r in rows)
     if total == 0:

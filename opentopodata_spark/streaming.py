@@ -11,10 +11,9 @@ streaming checkpoint (a re-run with no new files writes nothing).
 Design notes for scale:
 
 * ``foreachBatch`` (not a continuous streaming plan) because the resolver
-  is a repartition + sortWithinPartitions + mapInPandas pipeline — batch
-  operators. Inside foreachBatch the full Catalyst batch planner applies,
-  so the micro-batch runs the identical single-shuffle plan the batch job
-  runs, including broadcast joins and the pick-sampler.
+  is a repartition + mapInArrow pipeline — batch operators. Inside
+  foreachBatch the full Catalyst batch planner applies, so the
+  micro-batch runs the identical single-shuffle plan the batch job runs.
 * ``maxFilesPerTrigger`` bounds micro-batch size: ingest latency trades
   against shuffle efficiency explicitly, not implicitly.
 * the events rollup shows the genuinely-streaming path (watermark +

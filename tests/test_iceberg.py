@@ -195,6 +195,22 @@ def test_refusals(spark, docs_df, tmp_path):
         t._snapshot(12345)
     with pytest.raises(ValueError, match="empty table"):
         t.delete_partition(0)
+    # merge-on-read delete files: a delete manifest in the manifest list,
+    # or a delete file inside a data manifest, is refused, never scanned
+    t.append_files([iceberg.DataFileInfo(str(tmp_path / "f.parquet"), 0, 3, 9)])
+    ml_path = t._snapshot(None)["manifest-list"]
+    ml_schema, manifests = iceberg.read_ocf(ml_path)
+    m_path = manifests[0]["manifest_path"]
+    m_schema, entries = iceberg.read_ocf(m_path)
+    assert t.record_count() == 3
+    iceberg.write_ocf(ml_path, ml_schema, [{**manifests[0], "content": 1}])
+    with pytest.raises(ValueError, match="delete files"):
+        t.live_entries()
+    iceberg.write_ocf(ml_path, ml_schema, manifests)
+    iceberg.write_ocf(m_path, m_schema, [
+        {**entries[0], "data_file": {**entries[0]["data_file"], "content": 2}}])
+    with pytest.raises(ValueError, match="delete files"):
+        t.record_count()
 
 
 # ---------------------------------------------------------------------------

@@ -1,9 +1,9 @@
-"""Metamorphic tests of the resolver's Arrow pick-sampler.
+"""Metamorphic tests of the resolver's Arrow sampler.
 
 The same points must resolve to the same rows whatever the Arrow batch
-size (7 splits most point groups and string carry columns across
-batches), the partition count, the salting and the input order. The
-points fall through several datasets and hit NODATA cells.
+size (7 splits string carry columns across many batches), the partition
+count, the salting and the input order. The points fall through several
+datasets and hit NODATA cells.
 """
 
 from __future__ import annotations
@@ -132,11 +132,39 @@ def test_shuffled_input_order(spark, multi, points, base):
 
 
 def test_resolve_plan_is_one_exchange_one_arrow_pass(spark, multi, points):
-    res = elevation.ElevationResolver(spark, multi, "bilinear").resolve(
-        points, carry=CARRY)
-    plan = res._jdf.queryExecution().executedPlan().toString()
-    wide = [ln for ln in plan.splitlines()
-            if "Exchange" in ln and "BroadcastExchange" not in ln]
-    assert len(wide) == 1, plan
-    assert plan.count("MapInArrow") == 1, plan
-    assert "MapInPandas" not in plan, plan
+    # default auto salt, no salt, and per-cell salts few enough for the
+    # literal CASE: the points shuffle once, straight into one sampler
+    no_salt = elevation.ElevationResolver(spark, multi, "bilinear", salt=1)
+    cell_salted = elevation.ElevationResolver(spark, multi, "bilinear")
+    cell_salted.set_cell_salts({0: 3, 1: 5})
+    for r in (elevation.ElevationResolver(spark, multi, "bilinear"), no_salt,
+              cell_salted):
+        res = r.resolve(points, carry=CARRY)
+        plan = res._jdf.queryExecution().executedPlan().toString()
+        wide = [ln for ln in plan.splitlines()
+                if "Exchange" in ln and "BroadcastExchange" not in ln]
+        assert len(wide) == 1, plan
+        assert plan.count("MapInArrow") == 1, plan
+        for node in ("MapInPandas", "Sort", "BroadcastNestedLoopJoin",
+                     "BroadcastHashJoin"):
+            assert node not in plan, plan
+
+
+def test_duplicate_point_id_keeps_every_row(spark, multi):
+    # two input rows share point_id 7 at different coordinates of one
+    # spatial cell (so they shuffle to the same partition): each must come
+    # out as its own row with its own elevation and carry key
+    rows = [("doc-a", 0, 0, 7, 0.5, 0.5), ("doc-b", 1, 2, 7, 0.25, 0.75),
+            ("doc-c", 0, 1, 9, 47.0, 8.0)]
+    pts = spark.createDataFrame(
+        rows, "doc_id string, span_pos int, point_pos int, point_id long, "
+        "lat double, lon double")
+    got = sorted(tuple(r) for r in elevation.ElevationResolver(
+        spark, multi, "bilinear").resolve(pts, carry=CARRY).collect())
+    assert len(got) == 3
+    want_z, want_ds = oracle.get_elevation(
+        [r[4] for r in rows], [r[5] for r in rows], multi, "bilinear")
+    assert want_z[0] != want_z[1]
+    assert got == sorted((pid, lat, lon, doc, sp, pp, z, ds)
+                         for (doc, sp, pp, pid, lat, lon), z, ds
+                         in zip(rows, want_z, want_ds))
