@@ -1,13 +1,14 @@
-"""Driver contract for the spark-graft builder (PySpark target).
+"""Query contract of the engine (PySpark target).
 
 ``entry(spark)`` runs the flagship distributed elevation pipeline
-(documents -> coordinate extraction -> tile-join -> raster interpolation
--> priority coalesce) on deterministic synthetic fixtures at sf0.001
-scale. ``queries()``/``oracle_sql()`` cover the SQL-expressible operator
-inventory (SURVEY.md §2 + the training-data extras) over the driver's
-testdata tables; every aggregate/computed column is aliased identically
-on both sides, and all float expressions are written so Spark and DuckDB
-evaluate the exact same double-precision operation sequence.
+(documents -> coordinate extraction -> tile assignment -> raster
+interpolation -> priority coalesce) on deterministic synthetic fixtures
+at sf0.001 scale. ``queries()``/``oracle_sql()`` cover the engine's
+operator inventory (SURVEY.md §2 plus the geospatial, raster and event
+operators) over the testdata tables; every aggregate/computed column
+is aliased identically on both sides, and all float expressions are
+written so Spark and DuckDB evaluate the exact same double-precision
+operation sequence.
 """
 
 from __future__ import annotations
@@ -24,12 +25,10 @@ if _REPO not in sys.path:
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from opentopodata_spark.operators import dedup, embeddings as emb, events as ev
-from opentopodata_spark.operators import knn, sampling, textops
+from opentopodata_spark.operators import events as ev
+from opentopodata_spark.operators import knn
 
 _PAIR_REGEX = r"(-?\d+(?:\.\d+)?),(-?\d+(?:\.\d+)?)"
-N_MINHASH = 8
-EMB_DIM = 64
 
 
 def _ship_package(spark: SparkSession) -> None:
@@ -104,15 +103,6 @@ _DATASETS_SQL = (
     " r_regionkey * 25.0 - 90.0 AS lat_min,"
     " r_regionkey * 25.0 - 90.0 + 120.0 AS lat_max"
     " FROM region"
-)
-
-_TOKENS_SQL = "list_filter(string_split(text, ' '), x -> x <> '')"
-_SHINGLES_CTE = (
-    "tok AS (SELECT doc_id, "
-    f"{_TOKENS_SQL} AS toks FROM documents), "
-    "sh AS (SELECT doc_id, unnest(list_distinct("
-    "[concat_ws(' ', toks[i], toks[i+1]) for i in "
-    "generate_series(1, greatest(len(toks)-1, 1))])) AS shingle FROM tok)"
 )
 
 
@@ -363,1806 +353,8 @@ FROM parsed
 
 
 # ---------------------------------------------------------------------------
-# queries — training-data pipeline extras (dedup / text / embeddings / events)
+# queries — event analytics and interval / as-of joins
 # ---------------------------------------------------------------------------
-
-def q_exact_dedup(spark, sf_dir):
-    return dedup.exact_duplicates(_t(spark, sf_dir, "documents"))
-
-
-_Q_EXACT_DEDUP_SQL = (
-    "SELECT md5(text) AS text_hash, min(doc_id) AS canonical_id,"
-    " count(*) AS n_docs FROM documents GROUP BY md5(text)"
-)
-
-
-def q_minhash(spark, sf_dir):
-    return dedup.minhash_signatures(
-        _t(spark, sf_dir, "documents"), num_hashes=N_MINHASH
-    )
-
-
-_MINHASH_SELECT = (
-    "SELECT doc_id, "
-    + ", ".join(f"min(md5(shingle || '#{i}')) AS h{i}" for i in range(N_MINHASH))
-    + " FROM sh WHERE shingle <> '' GROUP BY doc_id"
-)
-
-
-def _minhash_sql() -> str:
-    return f"WITH {_SHINGLES_CTE} {_MINHASH_SELECT}"
-
-
-def q_lsh_pairs(spark, sf_dir):
-    sigs = dedup.minhash_signatures(
-        _t(spark, sf_dir, "documents"), num_hashes=N_MINHASH
-    )
-    return dedup.lsh_candidate_pairs(sigs, band_size=2)
-
-
-def _lsh_pairs_sql() -> str:
-    bands = " UNION ALL ".join(
-        f"SELECT doc_id, {b} AS band, concat_ws('|', h{2*b}, h{2*b+1}) AS value FROM sig"
-        for b in range(N_MINHASH // 2)
-    )
-    return (
-        f"WITH {_SHINGLES_CTE}, sig AS ({_MINHASH_SELECT}), "
-        f"buckets AS ({bands}) "
-        "SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b "
-        "FROM buckets a JOIN buckets b "
-        "ON a.band = b.band AND a.value = b.value AND a.doc_id < b.doc_id"
-    )
-
-
-def q_jaccard(spark, sf_dir):
-    return dedup.jaccard_pairs(_t(spark, sf_dir, "documents"), threshold=0.3)
-
-
-_Q_JACCARD_SQL = f"""
-WITH {_SHINGLES_CTE},
-sizes AS (SELECT doc_id, count(*) AS sz FROM sh WHERE shingle <> '' GROUP BY doc_id),
-inter AS (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS inter
-  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-  WHERE a.shingle <> ''
-  GROUP BY a.doc_id, b.doc_id)
-SELECT doc_a, doc_b, inter, sa.sz AS size_a, sb.sz AS size_b,
-       round(inter / (sa.sz + sb.sz - inter), 6) AS jaccard
-FROM inter JOIN sizes sa ON sa.doc_id = doc_a JOIN sizes sb ON sb.doc_id = doc_b
-WHERE round(inter / (sa.sz + sb.sz - inter), 6) >= 0.3
-"""
-
-
-def q_near_dup_verified(spark, sf_dir):
-    """The scale-correct near-dup shape: LSH candidates -> exact Jaccard
-    verification on candidates only, with stop-shingle (max_df) removal."""
-    return dedup.verified_near_duplicates(
-        _t(spark, sf_dir, "documents"), threshold=0.3, max_df=200
-    )
-
-
-# CTE chain shared by the near_dup_verified oracle and the dedup
-# cluster/corpus oracles (which extend it with a recursive closure)
-_NEAR_DUP_CTES = f"""{_SHINGLES_CTE},
-sig AS ({_MINHASH_SELECT}),
-buckets AS (
-  SELECT doc_id, 0 AS band, concat_ws('|', h0, h1) AS value FROM sig
-  UNION ALL SELECT doc_id, 1, concat_ws('|', h2, h3) FROM sig
-  UNION ALL SELECT doc_id, 2, concat_ws('|', h4, h5) FROM sig
-  UNION ALL SELECT doc_id, 3, concat_ws('|', h6, h7) FROM sig),
-cands AS (
-  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-  FROM buckets a JOIN buckets b
-    ON a.band = b.band AND a.value = b.value AND a.doc_id < b.doc_id),
-shf AS (
-  SELECT doc_id, shingle FROM sh
-  WHERE shingle <> '' AND shingle NOT IN (
-    SELECT shingle FROM sh WHERE shingle <> ''
-    GROUP BY shingle HAVING count(*) > 200)),
-sizes AS (SELECT doc_id, count(*) AS sz FROM shf GROUP BY doc_id),
-inter AS (
-  SELECT c.doc_a, c.doc_b, count(*) AS inter
-  FROM cands c
-  JOIN shf a ON a.doc_id = c.doc_a
-  JOIN shf b ON b.doc_id = c.doc_b AND b.shingle = a.shingle
-  GROUP BY c.doc_a, c.doc_b)"""
-
-_NEAR_DUP_SELECT = """
-SELECT doc_a, doc_b, inter, sa.sz AS size_a, sb.sz AS size_b,
-       round(inter / (sa.sz + sb.sz - inter), 6) AS jaccard
-FROM inter JOIN sizes sa ON sa.doc_id = doc_a JOIN sizes sb ON sb.doc_id = doc_b
-WHERE round(inter / (sa.sz + sb.sz - inter), 6) >= 0.3"""
-
-_Q_NEAR_DUP_SQL = f"WITH {_NEAR_DUP_CTES} {_NEAR_DUP_SELECT}"
-
-
-def _plant_pii(doc_id_col, text_col):
-    """Deterministic PII planted per doc (the synthetic corpus has none):
-    built with the IDENTICAL expression in Spark and the SQL oracle."""
-    return F.concat(
-        text_col,
-        F.lit(" contact user"),
-        doc_id_col.cast("string"),
-        F.lit("@example.com from 10.0."),
-        (doc_id_col % 256).cast("string"),
-        F.lit(".7"),
-        F.when(doc_id_col % 3 == 0, F.lit(" call +1 555-0001234")).otherwise(
-            F.lit("")
-        ),
-    )
-
-
-def q_pii_scrub(spark, sf_dir):
-    """PII redaction (operators/textops.scrub_pii): emails / IPv4 / phone
-    runs replaced by typed tokens, per-category counts. Narrow codegen'd
-    regex chain — zero shuffles."""
-    d = _t(spark, sf_dir, "documents")
-    planted = d.select(
-        "doc_id", _plant_pii(F.col("doc_id"), F.col("text")).alias("text")
-    )
-    return textops.scrub_pii(planted)
-
-
-def _pii_scrub_sql() -> str:
-    from opentopodata_spark.operators.textops import PII_PATTERNS
-
-    pats = dict(PII_PATTERNS)
-    email, ipv4, phone = pats["email"], pats["ipv4"], pats["phone"]
-    # the chain mirrors scrub_pii exactly: each count is taken on the text
-    # as redacted by the PREVIOUS stages
-    t0 = "text"
-    t1 = f"regexp_replace({t0}, '{email}', '<EMAIL>', 'g')"
-    t2 = f"regexp_replace({t1}, '{ipv4}', '<IPV4>', 'g')"
-    t3 = f"regexp_replace({t2}, '{phone}', '<PHONE>', 'g')"
-    return f"""
-WITH planted AS (
-  SELECT doc_id,
-         text || ' contact user' || CAST(doc_id AS VARCHAR)
-              || '@example.com from 10.0.'
-              || CAST(doc_id % 256 AS VARCHAR) || '.7'
-              || CASE WHEN doc_id % 3 = 0 THEN ' call +1 555-0001234'
-                      ELSE '' END AS text
-  FROM documents)
-SELECT doc_id,
-       {t3} AS clean,
-       len(regexp_extract_all({t0}, '{email}')) AS n_email,
-       len(regexp_extract_all({t1}, '{ipv4}')) AS n_ipv4,
-       len(regexp_extract_all({t2}, '{phone}')) AS n_phone
-FROM planted
-"""
-
-
-def q_text_normalize(spark, sf_dir):
-    """Whitespace/case/control-char normalization
-    (operators/textops.normalize_text) — the pre-hash canonicalization
-    pass for noise-insensitive exact dedup."""
-    d = _t(spark, sf_dir, "documents")
-    noisy = d.select(
-        "doc_id",
-        F.concat(F.lit("  \t"), F.col("text"), F.lit("  X\x01Y  ")).alias("text"),
-    )
-    return textops.normalize_text(noisy)
-
-
-_Q_TEXT_NORMALIZE_SQL = r"""
-SELECT doc_id,
-       trim(regexp_replace(regexp_replace(
-           lower('  ' || chr(9) || text || '  X' || chr(1) || 'Y  '),
-           '[\x00-\x1F\x7F]', ' ', 'g'), '  +', ' ', 'g')) AS norm
-FROM documents
-"""
-
-
-def q_html_extract(spark, sf_dir):
-    """HTML -> text extraction (operators/textops.html_to_text): strip
-    container elements / comments / tags, block closers -> newlines,
-    fixed entity decode, whitespace discipline. The synthetic corpus is
-    plain text, so each doc is first wrapped in a deterministic HTML
-    shell (same expression in the SQL oracle) including a <script>, a
-    <style>-bearing <head>, entities, and nav-ish <li> noise. Pure
-    codegen'd regexp projection — zero shuffles, scan-speed at 100 TB."""
-    d = _t(spark, sf_dir, "documents")
-    planted = d.select(
-        "doc_id",
-        F.concat(
-            F.lit("<html><head><title>doc</title><style>p{color:red}"
-                  "</style></head><body><h1>"),
-            F.substring(F.col("text"), 1, 40),
-            F.lit("</h1><script>if(a<b){track()}</script><p>"),
-            F.col("text"),
-            F.lit("</p><ul><li>nav&nbsp;home</li><li>x</li></ul>"
-                  "<div>tail &amp; fin &#39;q&#39;</div></body></html>"),
-        ).alias("html"),
-    )
-    return textops.html_to_text(planted)
-
-
-def _html_extract_sql() -> str:
-    from opentopodata_spark.operators.textops import html_text_sql
-
-    frag = html_text_sql("html")
-    return f"""
-WITH planted AS (
-  SELECT doc_id,
-         '<html><head><title>doc</title><style>p{{color:red}}</style>'
-         || '</head><body><h1>' || substr(text, 1, 40)
-         || '</h1><script>if(a<b){{track()}}</script><p>' || text
-         || '</p><ul><li>nav&nbsp;home</li><li>x</li></ul>'
-         || '<div>tail &amp; fin &#39;q&#39;</div></body></html>' AS html
-  FROM documents),
-extracted AS (SELECT doc_id, {frag} AS text FROM planted)
-SELECT doc_id, text,
-       CASE WHEN text = '' THEN 0
-            ELSE len(string_split(text, chr(10))) END AS n_lines,
-       length(text) AS n_chars
-FROM extracted
-"""
-
-
-def q_crawl_pipeline(spark, sf_dir):
-    """Capstone composition — the crawl front half as ONE Catalyst plan:
-    deterministic HTML wrap -> html_to_text -> min-token filter ->
-    exact dedup (min doc_id per md5 of the EXTRACTED text) ->
-    deterministic 50% sample. Every stage reuses an operator whose
-    oracle is already green; this query pins that they compose (column
-    flow, null discipline, one shuffle for the dedup window)."""
-    from opentopodata_spark.operators.exprutil import tokens
-
-    d = _t(spark, sf_dir, "documents")
-    planted = d.select(
-        "doc_id", "lang",
-        F.concat(
-            F.lit("<html><head><title>doc</title><style>p{color:red}"
-                  "</style></head><body><h1>"),
-            F.substring(F.col("text"), 1, 40),
-            F.lit("</h1><script>if(a<b){track()}</script><p>"),
-            F.col("text"),
-            F.lit("</p><ul><li>nav&nbsp;home</li><li>x</li></ul>"
-                  "<div>tail &amp; fin &#39;q&#39;</div></body></html>"),
-        ).alias("html"),
-    )
-    extracted = planted.select(
-        "doc_id", "lang",
-        textops.html_text_expr("html").alias("text"),
-    )
-    filtered = extracted.withColumn(
-        "n_tokens", F.size(tokens("text")).cast("long")
-    ).where(F.col("n_tokens") >= 10)
-    from pyspark.sql import Window
-
-    w = Window.partitionBy(F.md5("text")).orderBy("doc_id")
-    deduped = (
-        filtered.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") == 1).drop("rn")
-    )
-    out = deduped.withColumn(
-        "sample_key", sampling.sample_key("doc_id", "pipe")
-    ).where(F.col("sample_key") < F.lit(sampling.rate_threshold(0.5)))
-    return out.select("doc_id", "lang", "n_tokens", "sample_key")
-
-
-def _crawl_pipeline_sql() -> str:
-    from opentopodata_spark.operators.textops import html_text_sql
-
-    frag = html_text_sql("html")
-    thr = sampling.rate_threshold(0.5)
-    return f"""
-WITH planted AS (
-  SELECT doc_id, lang,
-         '<html><head><title>doc</title><style>p{{color:red}}</style>'
-         || '</head><body><h1>' || substr(text, 1, 40)
-         || '</h1><script>if(a<b){{track()}}</script><p>' || text
-         || '</p><ul><li>nav&nbsp;home</li><li>x</li></ul>'
-         || '<div>tail &amp; fin &#39;q&#39;</div></body></html>' AS html
-  FROM documents),
-extracted AS (SELECT doc_id, lang, {frag} AS text FROM planted),
-filtered AS (
-  SELECT doc_id, lang, text,
-         len(list_filter(string_split(text, ' '), x -> x <> ''))
-           AS n_tokens
-  FROM extracted
-  WHERE len(list_filter(string_split(text, ' '), x -> x <> '')) >= 10),
-deduped AS (
-  SELECT *, row_number() OVER (PARTITION BY md5(text)
-                               ORDER BY doc_id) AS rn
-  FROM filtered)
-SELECT doc_id, lang, n_tokens,
-       substr(md5('pipe#' || CAST(doc_id AS VARCHAR)), 1, 6) AS sample_key
-FROM deduped
-WHERE rn = 1
-  AND substr(md5('pipe#' || CAST(doc_id AS VARCHAR)), 1, 6) < '{thr}'
-"""
-
-
-_CHUNK_TOKENS, _CHUNK_STRIDE = 32, 24
-
-
-def q_chunk_documents(spark, sf_dir):
-    """Fixed-token-window chunking with overlap (textops.chunk_documents):
-    the sequence-prep step before tokenizer packing — fully narrow, one
-    posexplode, zero shuffles."""
-    return textops.chunk_documents(
-        _t(spark, sf_dir, "documents"),
-        chunk_tokens=_CHUNK_TOKENS,
-        stride=_CHUNK_STRIDE,
-    )
-
-
-# merge budget deliberately SMALLER than the synthetic vocabulary needs
-# to fuse every word, so rarer words split into genuine subword pieces
-# and the BPE chunks differ from whitespace chunks (otherwise the oracle
-# would only re-check whitespace chunking under another name)
-_BPE_MERGES, _BPE_TOP_N = 25, 100_000
-_BPE_TOK_CACHE: dict = {}
-
-
-def _bpe_tokenizer_for(sf_dir: str, spark=None):
-    """Deterministic tokenizer for an sf_dir: Spark-side distributed word
-    count when a session is given, pure-Python count otherwise — both
-    feed the same deterministic train_bpe, so the merges are identical
-    (asserted implicitly by the chunk oracle hash)."""
-    key = os.path.abspath(sf_dir)
-    tok = _BPE_TOK_CACHE.get(key)
-    if tok is not None:
-        return tok
-    from opentopodata_spark import bpe
-
-    if spark is not None:
-        merges = bpe.train_bpe_spark(
-            _t(spark, sf_dir, "documents"),
-            num_merges=_BPE_MERGES,
-            top_n=_BPE_TOP_N,
-        )
-    else:
-        from collections import Counter
-
-        counts: Counter = Counter()
-        for text in _read_pq(sf_dir, "documents").column("text").to_pylist():
-            if text:
-                counts.update(text.split())
-        top = dict(
-            sorted(counts.items(), key=lambda kv: (-kv[1], kv[0]))[:_BPE_TOP_N]
-        )
-        merges = bpe.train_bpe(top, num_merges=_BPE_MERGES)
-    tok = bpe.BPETokenizer(merges)
-    _BPE_TOK_CACHE[key] = tok
-    return tok
-
-
-def q_chunk_documents_bpe(spark, sf_dir):
-    """Subword (BPE) chunking: a vocabulary is trained distributed (one
-    word-count groupBy, driver-side merge learning — how production
-    tokenizers are built), then windows of 32 BPE pieces with stride 24
-    are cut and detokenized, Arrow-batched piece UDF + Catalyst
-    windowing. Oracle = an independent pure-Python replay (word count ->
-    same deterministic trainer -> encode -> window)."""
-    return textops.chunk_documents(
-        _t(spark, sf_dir, "documents"),
-        chunk_tokens=_CHUNK_TOKENS,
-        stride=_CHUNK_STRIDE,
-        tokenizer=_bpe_tokenizer_for(sf_dir, spark),
-    )
-
-
-def _build_bpe_chunk_oracle(sf_dir: str):
-    import pyarrow as pa
-
-    from opentopodata_spark.bpe import BPETokenizer
-
-    tok = _bpe_tokenizer_for(sf_dir)  # pure-Python side
-    docs = _read_pq(sf_dir, "documents")
-    doc_ids, idxs, chunks, ntoks = [], [], [], []
-    for doc_id, text in zip(
-        docs.column("doc_id").to_pylist(), docs.column("text").to_pylist()
-    ):
-        pieces = tok.encode(text or "")
-        start, k = 0, 0
-        while start < len(pieces):
-            window = pieces[start : start + _CHUNK_TOKENS]
-            doc_ids.append(doc_id)
-            idxs.append(k)
-            chunks.append(BPETokenizer.detokenize(window))
-            ntoks.append(len(window))
-            k += 1
-            start += _CHUNK_STRIDE
-    return pa.table(
-        {
-            "doc_id": pa.array(doc_ids, type=docs.column("doc_id").type),
-            "chunk_idx": pa.array(idxs, type=pa.int64()),
-            "chunk": pa.array(chunks, type=pa.string()),
-            "n_tokens": pa.array(ntoks, type=pa.int64()),
-        }
-    )
-
-
-_Q_CHUNK_SQL = f"""
-WITH tok AS (SELECT doc_id, {_TOKENS_SQL} AS toks FROM documents),
-w AS (SELECT doc_id, toks,
-        unnest(generate_series(1,
-          CASE WHEN len(toks) = 0 THEN 0
-               ELSE (len(toks) - 1) // {_CHUNK_STRIDE} + 1 END)) AS k
-      FROM tok)
-SELECT doc_id,
-       CAST(k - 1 AS BIGINT) AS chunk_idx,
-       array_to_string(
-         toks[(k - 1) * {_CHUNK_STRIDE} + 1
-              : (k - 1) * {_CHUNK_STRIDE} + {_CHUNK_TOKENS}], ' ') AS chunk,
-       CAST(least({_CHUNK_TOKENS},
-                  len(toks) - (k - 1) * {_CHUNK_STRIDE}) AS BIGINT) AS n_tokens
-FROM w
-"""
-
-
-def q_corpus_stats(spark, sf_dir):
-    """Per-language corpus length profile (textops.corpus_stats): doc
-    counts, token totals, mean and exact interpolated p50/p95/p99 token
-    counts — one grouped aggregate, group count = languages."""
-    return textops.corpus_stats(_t(spark, sf_dir, "documents"), by="lang")
-
-
-_Q_CORPUS_STATS_SQL = f"""
-WITH t AS (SELECT lang, len({_TOKENS_SQL}) AS n_tok FROM documents)
-SELECT lang,
-       count(*) AS n_docs,
-       CAST(sum(n_tok) AS BIGINT) AS total_tokens,
-       round(avg(n_tok), 6) AS mean_tokens,
-       round(quantile_cont(n_tok, 0.5), 6) AS p50_tokens,
-       round(quantile_cont(n_tok, 0.95), 6) AS p95_tokens,
-       round(quantile_cont(n_tok, 0.99), 6) AS p99_tokens
-FROM t GROUP BY lang
-"""
-
-
-def q_corpus_stats_approx(spark, sf_dir):
-    """The 10^12-doc path of corpus_stats: approx_percentile (mergeable
-    KLL-style sketch, bounded memory per group) instead of the exact
-    buffered percentile. At accuracy >= group size the sketch holds every
-    value, so it returns the exact discrete quantile (nearest actual
-    value at rank round(p*(n-1))+1) — which DuckDB's quantile_disc
-    reproduces; the approximation trade only appears past the accuracy
-    bound, where no small-scale oracle exists by construction."""
-    return textops.corpus_stats(
-        _t(spark, sf_dir, "documents"), by="lang", approx=True
-    )
-
-
-_Q_CORPUS_STATS_APPROX_SQL = f"""
-WITH t AS (SELECT lang, len({_TOKENS_SQL}) AS n_tok FROM documents)
-SELECT lang,
-       count(*) AS n_docs,
-       CAST(sum(n_tok) AS BIGINT) AS total_tokens,
-       round(avg(n_tok), 6) AS mean_tokens,
-       round(CAST(quantile_disc(n_tok, 0.5) AS DOUBLE), 6) AS p50_tokens,
-       round(CAST(quantile_disc(n_tok, 0.95) AS DOUBLE), 6) AS p95_tokens,
-       round(CAST(quantile_disc(n_tok, 0.99) AS DOUBLE), 6) AS p99_tokens
-FROM t GROUP BY lang
-"""
-
-
-# BM25 search fixture queries — terms drawn from the synthetic corpus
-# vocabulary; shared verbatim by the Spark query and the SQL oracle
-_BM25_QUERIES = [
-    (1, "spark window agg"),
-    (2, "customer query join"),
-    (3, "vector hash table"),
-]
-_BM25_K, _BM25_K1, _BM25_B = 10, 1.2, 0.75
-
-
-def q_bm25_search(spark, sf_dir):
-    """Okapi BM25 top-k retrieval over the documents corpus (inverted-
-    index shape: postings pruned by a broadcast query-term dictionary
-    BEFORE their one shuffle). operators/search.bm25_topk."""
-    from opentopodata_spark.operators import search
-
-    docs = _t(spark, sf_dir, "documents")
-    queries = spark.createDataFrame(_BM25_QUERIES, "query_id long, query string")
-    return search.bm25_topk(
-        docs, queries, k=_BM25_K, k1=_BM25_K1, b=_BM25_B
-    )
-
-
-def _bm25_sql() -> str:
-    values = ", ".join(f"({i}, '{q}')" for i, q in _BM25_QUERIES)
-    k1, b = _BM25_K1, _BM25_B
-    qtoks = "list_filter(string_split(query, ' '), x -> x <> '')"
-    return f"""
-WITH q(query_id, query) AS (VALUES {values}),
-qt AS (SELECT DISTINCT query_id, unnest({qtoks}) AS term FROM q),
-stats AS (SELECT count(*) AS n_docs, avg(len({_TOKENS_SQL})) AS avgdl
-          FROM documents),
-occ AS (SELECT doc_id, len({_TOKENS_SQL}) AS dl, unnest({_TOKENS_SQL}) AS term
-        FROM documents),
-tf AS (SELECT doc_id, term, count(*) AS tf, min(dl) AS dl FROM occ
-       WHERE term IN (SELECT term FROM qt) GROUP BY doc_id, term),
-dfreq AS (SELECT term, count(*) AS df FROM tf GROUP BY term),
-scored AS (
-  SELECT qt.query_id, tf.doc_id,
-         round(sum(ln(1 + (s.n_docs - dfreq.df + 0.5) / (dfreq.df + 0.5))
-                   * tf.tf * ({k1} + 1)
-                   / (tf.tf + {k1} * (1 - {b} + {b} * tf.dl / s.avgdl))), 6)
-           AS score
-  FROM tf JOIN dfreq USING (term) JOIN qt USING (term) CROSS JOIN stats s
-  GROUP BY qt.query_id, tf.doc_id),
-r AS (SELECT *, row_number() OVER (PARTITION BY query_id
-                                   ORDER BY score DESC, doc_id) AS rank
-      FROM scored)
-SELECT query_id, doc_id, CAST(rank AS INT) AS rank, score
-FROM r WHERE rank <= {_BM25_K}
-"""
-
-
-# Contamination composite (operators/contamination): benchmark set
-# derived deterministically FROM the documents table (no external data) —
-# every 997th doc contributes tokens 3..17 as a benchmark item, so real
-# verbatim contamination (the source doc, coverage 1.0) and incidental
-# gram collisions both occur.
-_CONTAM_N, _CONTAM_K, _CONTAM_MOD = 5, 10, 23
-
-
-def _contam_bench(spark, sf_dir):
-    from opentopodata_spark.operators.exprutil import tokens
-
-    docs = _t(spark, sf_dir, "documents")
-    return (
-        docs.where(F.col("doc_id") % _CONTAM_MOD == 0)
-        .select(
-            F.col("doc_id").alias("bench_id"),
-            F.concat_ws(" ", F.slice(tokens("text"), 3, 15)).alias("text"),
-        )
-        .where(F.col("text") != "")
-    )
-
-
-def q_contamination_check(spark, sf_dir):
-    """Benchmark-contamination composite: exact 5-gram collisions
-    (broadcast bench gram dictionary pruning the corpus gram stream)
-    full-outer BM25 top-k with benchmark items as queries
-    (operators/contamination.contamination_check, VERDICT r02 #8)."""
-    from opentopodata_spark.operators import contamination
-
-    docs = _t(spark, sf_dir, "documents")
-    return contamination.contamination_check(
-        docs, _contam_bench(spark, sf_dir), n=_CONTAM_N, k=_CONTAM_K
-    )
-
-
-def _contamination_sql() -> str:
-    n, k, k1, b = _CONTAM_N, _CONTAM_K, _BM25_K1, _BM25_B
-    gram = f"array_to_string(toks[i:i + {n - 1}], ' ')"
-    series = f"generate_series(1, greatest(len(toks) - {n}, 0) + 1)"
-    return f"""
-WITH tok AS (SELECT doc_id, {_TOKENS_SQL} AS toks FROM documents),
-bench AS (SELECT doc_id AS bench_id,
-                 array_to_string(toks[3:17], ' ') AS btext
-          FROM tok WHERE doc_id % {_CONTAM_MOD} = 0
-            AND array_to_string(toks[3:17], ' ') <> ''),
-btok AS (SELECT bench_id, {_TOKENS_SQL.replace("text", "btext")} AS toks
-         FROM bench),
-bgr AS (SELECT bench_id, unnest(list_distinct([{gram} for i in {series}]))
-          AS gram FROM btok),
-bsz AS (SELECT bench_id, count(*) AS bench_n FROM bgr WHERE gram <> ''
-        GROUP BY bench_id),
-dgr AS (SELECT doc_id, unnest(list_distinct([{gram} for i in {series}]))
-          AS gram FROM tok),
-ov AS (SELECT b.bench_id, d.doc_id, CAST(count(*) AS BIGINT) AS n_shared
-       FROM dgr d JOIN bgr b USING (gram) WHERE gram <> ''
-       GROUP BY b.bench_id, d.doc_id),
-ovc AS (SELECT bench_id, doc_id, n_shared,
-               round(n_shared / bench_n, 6) AS coverage
-        FROM ov JOIN bsz USING (bench_id)),
-qt AS (SELECT DISTINCT bench_id AS query_id, unnest(toks) AS term FROM btok
-       WHERE len(toks) > 0),
-stats AS (SELECT count(*) AS n_docs, avg(len(toks)) AS avgdl FROM tok),
-occ AS (SELECT doc_id, len(toks) AS dl, unnest(toks) AS term FROM tok),
-tf AS (SELECT doc_id, term, count(*) AS tf, min(dl) AS dl FROM occ
-       WHERE term IN (SELECT term FROM qt) GROUP BY doc_id, term),
-dfreq AS (SELECT term, count(*) AS df FROM tf GROUP BY term),
-scored AS (
-  SELECT qt.query_id, tf.doc_id,
-         round(sum(ln(1 + (s.n_docs - dfreq.df + 0.5) / (dfreq.df + 0.5))
-                   * tf.tf * ({k1} + 1)
-                   / (tf.tf + {k1} * (1 - {b} + {b} * tf.dl / s.avgdl))), 6)
-           AS score
-  FROM tf JOIN dfreq USING (term) JOIN qt USING (term) CROSS JOIN stats s
-  GROUP BY qt.query_id, tf.doc_id),
-r AS (SELECT * FROM (
-        SELECT *, row_number() OVER (PARTITION BY query_id
-                                     ORDER BY score DESC, doc_id) AS rank
-        FROM scored) WHERE rank <= {k})
-SELECT coalesce(o.bench_id, r.query_id) AS bench_id,
-       coalesce(o.doc_id, r.doc_id) AS doc_id,
-       coalesce(o.n_shared, 0) AS n_shared_grams,
-       coalesce(o.coverage, 0.0) AS gram_coverage,
-       CAST(r.rank AS INT) AS bm25_rank,
-       r.score AS bm25_score
-FROM ovc o FULL OUTER JOIN r
-  ON o.bench_id = r.query_id AND o.doc_id = r.doc_id
-"""
-
-
-def q_dedup_clusters(spark, sf_dir):
-    """Near-dup components: pairwise verified verdicts -> disjoint
-    clusters via alternating large-star/small-star connected components
-    (operators/dedup.connected_components); every document gets the min
-    doc_id of its component (itself when singleton). The oracle replays
-    the pair SQL and closes it with a recursive CTE — transitive closure
-    is fine at oracle scale, only the Spark side needs the O(log² n)
-    algorithm."""
-    docs = _t(spark, sf_dir, "documents")
-    pairs = dedup.verified_near_duplicates(docs, threshold=0.3, max_df=200)
-    return dedup.dedup_clusters(docs, pairs)
-
-
-# closure over the verified pairs: reach(u, v) = v is in u's component;
-# cluster = min(self, reachable)
-_DEDUP_CLOSURE_CTES = f"""{_NEAR_DUP_CTES},
-pairs AS (SELECT doc_a, doc_b FROM ({_NEAR_DUP_SELECT}) verified),
-edges AS (
-  SELECT doc_a AS u, doc_b AS v FROM pairs
-  UNION SELECT doc_b, doc_a FROM pairs),
-reach(u, v) AS (
-  SELECT u, v FROM edges
-  UNION
-  SELECT r.u, e.v FROM reach r JOIN edges e ON r.v = e.u),
-comp AS (
-  SELECT u AS doc_id, least(u, min(v)) AS cluster_id FROM reach GROUP BY u)"""
-
-_Q_DEDUP_CLUSTERS_SQL = f"""
-WITH RECURSIVE {_DEDUP_CLOSURE_CTES}
-SELECT d.doc_id, coalesce(c.cluster_id, d.doc_id) AS cluster_id
-FROM documents d LEFT JOIN comp c ON c.doc_id = d.doc_id
-"""
-
-
-def q_dedup_corpus(spark, sf_dir):
-    """The deduplicated corpus: one representative (min doc_id) per
-    near-dup cluster plus every singleton — the end-to-end output a
-    training run actually consumes (shingle -> MinHash -> LSH -> verify
-    -> components -> keep-one)."""
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "lang", "source")
-    pairs = dedup.verified_near_duplicates(
-        _t(spark, sf_dir, "documents"), threshold=0.3, max_df=200
-    )
-    return dedup.dedup_corpus(docs, pairs)
-
-
-_Q_DEDUP_CORPUS_SQL = f"""
-WITH RECURSIVE {_DEDUP_CLOSURE_CTES}
-SELECT d.doc_id, d.lang, d.source
-FROM documents d LEFT JOIN comp c ON c.doc_id = d.doc_id
-WHERE c.doc_id IS NULL OR c.cluster_id = d.doc_id
-"""
-
-
-def q_simhash(spark, sf_dir):
-    return dedup.simhash(_t(spark, sf_dir, "documents"), bits=16)
-
-
-def _simhash_sql(bits: int = 16) -> str:
-    votes = ", ".join(
-        f"sum(CASE WHEN ((h >> {b}) & 1) = 1 THEN 1 ELSE -1 END) AS v{b}"
-        for b in range(bits)
-    )
-    recompose = " + ".join(
-        f"CASE WHEN v{b} > 0 THEN {1 << b} ELSE 0 END" for b in range(bits)
-    )
-    return f"""
-WITH tok AS (SELECT doc_id, unnest({_TOKENS_SQL}) AS tok FROM documents),
-hashed AS (SELECT doc_id, ('0x' || substr(md5(tok), 1, 15))::BIGINT AS h FROM tok),
-votes AS (SELECT doc_id, {votes} FROM hashed GROUP BY doc_id)
-SELECT doc_id, CAST({recompose} AS BIGINT) AS simhash FROM votes
-"""
-
-
-def _synth_urls(spark, sf_dir):
-    """Deterministic messy URLs from doc_id: mixed case, www, default and
-    explicit ports, tracking params, trailing slashes, fragments, and
-    two-level public suffixes — every normalize_url path."""
-    d = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    k = F.col("doc_id")
-    scheme = F.when(k % 3 == 0, F.lit("HTTPS")).otherwise(F.lit("http"))
-    host = (
-        F.when(k % 6 == 0, F.lit("Example.COM"))
-        .when(k % 6 == 1, F.lit("www.news.co.uk"))
-        .when(k % 6 == 2, F.lit("blog.example.com"))
-        .when(k % 6 == 3, F.lit("spam.bad-site.net"))
-        .when(k % 6 == 4, F.lit("shop.example.com.au"))
-        .otherwise(F.lit("cdn.example.com"))
-    )
-    port = (
-        F.when(k % 4 == 0, F.when(k % 3 == 0, F.lit(":443")).otherwise(F.lit(":80")))
-        .when(k % 7 == 0, F.lit(":8080"))
-        .otherwise(F.lit(""))
-    )
-    path = (
-        F.when(k % 5 == 0, F.lit(""))
-        .when(k % 5 == 1, F.lit("/a"))
-        .when(k % 5 == 2, F.lit("/a/b"))
-        .when(k % 5 == 3, F.lit("/a/b/"))
-        .otherwise(F.lit("/Path/X"))
-    )
-    query = (
-        F.when(k % 4 == 0, F.concat(F.lit("?utm_source=tw&z=1&a="), (k % 9).cast("string")))
-        .when(k % 4 == 1, F.lit("?z=1&a=2"))
-        .when(k % 4 == 2, F.lit("?utm_campaign=x"))
-        .otherwise(F.lit(""))
-    )
-    frag = F.when(k % 2 == 0, F.lit("#sec")).otherwise(F.lit(""))
-    return d.select(
-        "doc_id",
-        "text",
-        F.concat(scheme, F.lit("://"), host, port, path, query, frag).alias("url"),
-    )
-
-
-_URL_SYNTH_SQL = """
-SELECT doc_id, text,
-  (CASE WHEN doc_id % 3 = 0 THEN 'HTTPS' ELSE 'http' END) || '://'
-  || (CASE doc_id % 6 WHEN 0 THEN 'Example.COM' WHEN 1 THEN 'www.news.co.uk'
-        WHEN 2 THEN 'blog.example.com' WHEN 3 THEN 'spam.bad-site.net'
-        WHEN 4 THEN 'shop.example.com.au' ELSE 'cdn.example.com' END)
-  || (CASE WHEN doc_id % 4 = 0
-           THEN (CASE WHEN doc_id % 3 = 0 THEN ':443' ELSE ':80' END)
-        WHEN doc_id % 7 = 0 THEN ':8080' ELSE '' END)
-  || (CASE doc_id % 5 WHEN 0 THEN '' WHEN 1 THEN '/a' WHEN 2 THEN '/a/b'
-        WHEN 3 THEN '/a/b/' ELSE '/Path/X' END)
-  || (CASE doc_id % 4 WHEN 0 THEN '?utm_source=tw&z=1&a=' || CAST(doc_id % 9 AS VARCHAR)
-        WHEN 1 THEN '?z=1&a=2' WHEN 2 THEN '?utm_campaign=x' ELSE '' END)
-  || (CASE WHEN doc_id % 2 = 0 THEN '#sec' ELSE '' END) AS url
-FROM documents
-"""
-
-# DuckDB replay of urlops.normalize_url / registrable_domain (same regex
-# vocabulary; list_slice is end-index based where Spark's slice is
-# length-based, hence the differing third arguments)
-_URL_NORM_SQL_BODY = """
-parts AS (
-  SELECT doc_id, text, url,
-    lower(regexp_extract(url, '^([a-zA-Z][a-zA-Z0-9+.-]*)://', 1)) AS scheme,
-    lower(regexp_extract(regexp_extract(url,
-        '^(?:[a-zA-Z][a-zA-Z0-9+.-]*://)?([^/?#]*)', 1), '([^@]*)$', 1)) AS hostport,
-    regexp_extract(url, '^(?:[a-zA-Z][a-zA-Z0-9+.-]*://)?[^/?#]*([^?#]*)', 1) AS path0,
-    coalesce(regexp_extract(url, '\\?([^#]*)', 1), '') AS query0
-  FROM urls),
-hp AS (
-  SELECT *,
-    CASE WHEN hostport LIKE '[%' THEN hostport
-         ELSE regexp_extract(hostport, '^([^:]*)', 1) END AS rawhost,
-    CASE WHEN hostport LIKE '[%' THEN ''
-         ELSE coalesce(regexp_extract(hostport, ':([0-9]+)$', 1), '') END AS port
-  FROM parts),
-norm AS (
-  SELECT doc_id, text, scheme,
-    regexp_replace(rawhost, '^www\\.', '') AS host,
-    CASE WHEN port = '' OR (scheme = 'http' AND port = '80')
-              OR (scheme = 'https' AND port = '443')
-         THEN '' ELSE ':' || port END AS portpart,
-    CASE WHEN regexp_replace(path0, '/+$', '') = '' THEN '/'
-         ELSE regexp_replace(path0, '/+$', '') END AS path,
-    coalesce(array_to_string(list_sort(list_filter(string_split(query0, '&'),
-      x -> x <> '' AND NOT regexp_matches(x,
-        '^(utm_[a-z]*|fbclid|gclid|msclkid|mc_eid|igshid|ref_src)='))), '&'), '') AS q
-  FROM hp),
-built AS (
-  SELECT doc_id, text, host,
-    scheme || '://' || host || portpart || path
-      || CASE WHEN q = '' THEN '' ELSE '?' || q END AS url_norm,
-    string_split(host, '.') AS ls
-  FROM norm),
-named AS (
-  SELECT doc_id, text, host, url_norm,
-    CASE WHEN len(ls) >= 3 AND array_to_string(
-            list_slice(ls, len(ls) - 1, len(ls)), '.') IN
-            ('co.uk','org.uk','ac.uk','gov.uk','com.au','net.au','org.au',
-             'co.jp','ne.jp','or.jp','com.br','com.cn','com.mx','co.in',
-             'co.kr','co.za','com.tr')
-         THEN array_to_string(list_slice(ls, len(ls) - 2, len(ls)), '.')
-         ELSE array_to_string(list_slice(ls, greatest(len(ls) - 1, 1), len(ls)), '.')
-    END AS domain
-  FROM built)
-"""
-
-
-def q_url_normalize(spark, sf_dir):
-    """operators/urlops: canonical URL + registrable domain per doc —
-    pure regexp/array column expressions, zero Python, zero shuffles."""
-    from opentopodata_spark.operators import urlops
-
-    u = _synth_urls(spark, sf_dir)
-    host = urlops.url_parts(F.col("url"))["host"]
-    return u.select(
-        "doc_id",
-        urlops.normalize_url(F.col("url")).alias("url_norm"),
-        F.regexp_replace(host, "^www\\.", "").alias("host"),
-        urlops.registrable_domain(F.regexp_replace(host, "^www\\.", "")).alias(
-            "domain"
-        ),
-    )
-
-
-_Q_URL_NORM_SQL = f"""
-WITH urls AS ({_URL_SYNTH_SQL}),
-{_URL_NORM_SQL_BODY}
-SELECT doc_id, url_norm, host, domain FROM named
-"""
-
-
-def q_domain_stats(spark, sf_dir):
-    """operators/urlops: blocklist anti-join then one per-domain hash
-    aggregation; n_urls counts DISTINCT NORMALIZED urls so tracking
-    params don't inflate page counts."""
-    from opentopodata_spark.operators import urlops
-
-    u = _synth_urls(spark, sf_dir)
-    kept = urlops.blocklist_filter(u, ["bad-site.net"])
-    return urlops.domain_stats(kept)
-
-
-_Q_DOMAIN_STATS_SQL = f"""
-WITH urls AS ({_URL_SYNTH_SQL}),
-{_URL_NORM_SQL_BODY}
-SELECT domain,
-       CAST(count(*) AS BIGINT) AS n_docs,
-       CAST(count(DISTINCT url_norm) AS BIGINT) AS n_urls,
-       CAST(sum(length(text)) AS BIGINT) AS total_chars
-FROM named
-WHERE domain <> 'bad-site.net'
-GROUP BY domain
-"""
-
-
-def q_ngram_lm_ppl(spark, sf_dir):
-    """operators/lm: bigram LM trained on the documents table, every
-    document scored against it (self-perplexity — the CCNet-style
-    quality signal). Exact, deterministic, fully SQL-replayable."""
-    from opentopodata_spark.operators import lm
-
-    docs = _t(spark, sf_dir, "documents")
-    return lm.perplexity(docs, lm.train_bigram_lm(docs))
-
-
-_Q_LM_SQL = f"""
-WITH toks AS (
-  SELECT doc_id,
-         list_concat(list_concat(['<s>'], {_TOKENS_SQL}), ['</s>']) AS f
-  FROM documents),
-bg AS (
-  SELECT doc_id, f[i] AS w1, f[i + 1] AS w2
-  FROM toks, UNNEST(generate_series(1, len(f) - 1)) AS g(i)),
-model AS (SELECT w1, w2, count(*) AS c FROM bg GROUP BY w1, w2),
-ctx AS (SELECT w1, sum(c) AS ctx_c FROM model GROUP BY w1),
-voc AS (SELECT count(DISTINCT w2) AS v FROM model),
-lp AS (
-  SELECT b.doc_id,
-         ln((coalesce(m.c, 0) + 0.1) / (coalesce(x.ctx_c, 0) + 0.1 * voc.v)) AS lp
-  FROM bg b
-  LEFT JOIN model m ON b.w1 = m.w1 AND b.w2 = m.w2
-  LEFT JOIN ctx x ON b.w1 = x.w1
-  CROSS JOIN voc)
-SELECT doc_id,
-       CAST(count(*) AS BIGINT) AS n_bigrams,
-       round(sum(lp), 4) AS logprob,
-       round(exp(-sum(lp) / count(*)), 4) AS ppl
-FROM lp GROUP BY doc_id
-"""
-
-
-def q_pack_sequences(spark, sf_dir):
-    """operators/packing: deterministic contiguous sequence packing via a
-    distributed two-level prefix sum (per-bucket partials + broadcast
-    bases — no single-task global window)."""
-    from opentopodata_spark.operators import packing
-
-    return packing.pack_sequences(
-        _t(spark, sf_dir, "documents"), seq_len=128, bucket_shift=5
-    )
-
-
-_Q_PACK_SQL = f"""
-WITH d AS (
-  SELECT doc_id, CAST(len({_TOKENS_SQL}) AS BIGINT) AS n_tok FROM documents),
-nz AS (SELECT * FROM d WHERE n_tok > 0),
-off AS (
-  SELECT doc_id, n_tok,
-         CAST(sum(n_tok) OVER (ORDER BY doc_id
-              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - n_tok
-              AS BIGINT) AS o
-  FROM nz),
-ex AS (
-  SELECT doc_id, n_tok, o, s.seq_id
-  FROM off, UNNEST(generate_series(o // 128, (o + n_tok - 1) // 128)) AS s(seq_id))
-SELECT CAST(seq_id AS BIGINT) AS seq_id, doc_id,
-       CAST(greatest(seq_id * 128 - o, 0) AS BIGINT) AS doc_from,
-       CAST(least(seq_id * 128 + 127 - o, n_tok - 1) AS BIGINT) AS doc_to,
-       CAST(greatest(o - seq_id * 128, 0) AS BIGINT) AS seq_from
-FROM ex
-"""
-
-
-def q_collocations(spark, sf_dir):
-    """operators/lm.collocations: top-100 word pairs by PMI (min count
-    5) — one (w1,w2) aggregation, marginals as windows over that small
-    stream, deterministic (pmi desc, w1, w2) cut."""
-    from opentopodata_spark.operators import lm
-
-    return lm.collocations(_t(spark, sf_dir, "documents"), min_count=5, k=100)
-
-
-_Q_COLLOC_SQL = f"""
-WITH toks AS (SELECT doc_id, {_TOKENS_SQL} AS f FROM documents),
-bg AS (SELECT f[i] AS w1, f[i + 1] AS w2
-       FROM toks, UNNEST(generate_series(1, len(f) - 1)) AS g(i)),
-pairs AS (SELECT w1, w2, count(*) AS c FROM bg GROUP BY w1, w2),
-m AS (SELECT *,
-        sum(c) OVER (PARTITION BY w1) AS c1,
-        sum(c) OVER (PARTITION BY w2) AS c2,
-        sum(c) OVER () AS n FROM pairs)
-SELECT w1, w2, CAST(c AS BIGINT) AS c,
-       round(ln(c * 1.0 * n / (c1 * 1.0 * c2)), 6) AS pmi
-FROM m WHERE c >= 5
-ORDER BY pmi DESC, w1, w2 LIMIT 100
-"""
-
-
-_DSIR_KW = dict(n_buckets=4096, smoothing=1.0, seed="dsir")
-_DSIR_K = 60
-
-
-def q_dsir_select(spark, sf_dir):
-    """DSIR importance resampling (arXiv:2302.03169): the documents
-    table md5-split into a ~1/16 'target' slice and the raw rest;
-    hashed unigram+bigram bucket log-ratios (integer micro-units, so
-    the per-doc reduction is an exact order-independent sum) score
-    every raw doc, and Gumbel-top-k (md5 uniforms) selects 60. Two
-    corpus scans + one broadcast-join shuffle; oracle is full ANSI SQL
-    over the same parquet."""
-    from opentopodata_spark.operators import dsir
-
-    docs = _t(spark, sf_dir, "documents").select(
-        F.col("doc_id").cast("string").alias("doc_id"), "text"
-    )
-    split = F.substring(F.md5(F.col("doc_id")), 1, 1)
-    return dsir.dsir_sample(
-        docs.where(split >= F.lit("1")),
-        docs.where(split < F.lit("1")),
-        _DSIR_K, **_DSIR_KW,
-    )
-
-
-def _dsir_sql() -> str:
-    B = _DSIR_KW["n_buckets"]
-    s = _DSIR_KW["smoothing"]
-    seed = _DSIR_KW["seed"]
-    from opentopodata_spark.operators.dsir import HASH_MOD
-
-    grams = """
-  SELECT doc_id, unnest(toks || CASE WHEN len(toks) >= 2 THEN
-           [toks[i] || ' ' || toks[i+1] FOR i IN range(1, len(toks))]
-         ELSE [] END) AS gram
-  FROM (SELECT doc_id, list_filter(string_split(trim(regexp_replace(
-          regexp_replace(lower(coalesce(text, '')), '[^a-z0-9 ]', ' ',
-          'g'), ' +', ' ', 'g')), ' '), x -> x <> '') AS toks
-        FROM {src})
-"""
-    return f"""
-WITH raw_docs AS (
-  SELECT CAST(doc_id AS VARCHAR) AS doc_id, text FROM documents
-  WHERE substring(md5(CAST(doc_id AS VARCHAR)), 1, 1) >= '1'
-), tgt_docs AS (
-  SELECT CAST(doc_id AS VARCHAR) AS doc_id, text FROM documents
-  WHERE substring(md5(CAST(doc_id AS VARCHAR)), 1, 1) < '1'
-), raw_grams0 AS ({grams.format(src='raw_docs')}),
-tgt_grams0 AS ({grams.format(src='tgt_docs')}),
-raw_grams AS (
-  SELECT doc_id, list_reduce(
-    [CAST(0 AS BIGINT)] || list_transform(
-      range(1, length(gram) + 1),
-      i -> CAST(ord(substring(gram, i::INT, 1)) AS BIGINT)),
-    (a, b) -> (a * 31 + b) % {HASH_MOD}) % {B} AS bucket
-  FROM raw_grams0 WHERE gram <> ''
-), tgt_grams AS (
-  SELECT doc_id, list_reduce(
-    [CAST(0 AS BIGINT)] || list_transform(
-      range(1, length(gram) + 1),
-      i -> CAST(ord(substring(gram, i::INT, 1)) AS BIGINT)),
-    (a, b) -> (a * 31 + b) % {HASH_MOD}) % {B} AS bucket
-  FROM tgt_grams0 WHERE gram <> ''
-), rc AS (SELECT bucket, count(*) AS n FROM raw_grams GROUP BY bucket),
-tc AS (SELECT bucket, count(*) AS n FROM tgt_grams GROUP BY bucket),
-tot AS (SELECT (SELECT coalesce(sum(n), 0) FROM rc) AS tr,
-               (SELECT coalesce(sum(n), 0) FROM tc) AS tt),
-lr AS (
-  SELECT b.range AS bucket,
-    CAST(round((ln((coalesce(tc.n, 0) + {s}) / (tot.tt + {s} * {B}))
-              - ln((coalesce(rc.n, 0) + {s}) / (tot.tr + {s} * {B})))
-             * 1e6) AS BIGINT) AS lr_micro
-  FROM range({B}) b
-  CROSS JOIN tot
-  LEFT JOIN rc ON rc.bucket = b.range
-  LEFT JOIN tc ON tc.bucket = b.range
-), scored AS (
-  SELECT g.doc_id, count(*) AS n_grams, sum(lr.lr_micro) AS w_micro
-  FROM raw_grams g JOIN lr ON lr.bucket = g.bucket
-  GROUP BY g.doc_id
-), keyed AS (
-  SELECT d.doc_id,
-    CAST(coalesce(s.n_grams, 0) AS BIGINT) AS n_grams,
-    coalesce(s.w_micro, 0) / 1000000.0 AS log_weight,
-    round(coalesce(s.w_micro, 0) / 1000000.0
-      - ln(-ln((('0x' || substring(md5('{seed}#' || d.doc_id), 1, 6))
-                ::BIGINT + 0.5) / 16777216.0)), 6) AS gumbel_key
-  FROM (SELECT DISTINCT doc_id FROM raw_docs) d
-  LEFT JOIN scored s ON s.doc_id = d.doc_id
-)
-SELECT doc_id, n_grams, log_weight, gumbel_key,
-  (row_number() OVER (ORDER BY gumbel_key DESC, doc_id))
-    <= {_DSIR_K} AS selected
-FROM keyed
-"""
-
-
-_PAGERANK_M = 101  # host universe (prime, so the affine edge maps mix)
-_PAGERANK_T = 4  # power-iteration rounds
-_PAGERANK_D = 85  # damping percentage (integer contract)
-
-
-def _synth_host_edges(spark, sf_dir):
-    """Deterministic host link graph from doc_id: host u = doc_id % M;
-    hosts with u % 11 == 0 publish no links (dangling-mass path); the
-    rest link via three affine maps gated on doc parity/mod-3 so
-    out-degrees vary 1..3 and duplicates exercise the DISTINCT."""
-    m = _PAGERANK_M
-    d = _t(spark, sf_dir, "documents").select("doc_id")
-    u = F.col("doc_id") % m
-    live = (u % 11) != 0
-    e1 = d.where(live).select(u.alias("src"), ((u * 7 + 1) % m).alias("dst"))
-    e2 = d.where(live & (F.col("doc_id") % 2 == 0)).select(
-        u.alias("src"), ((u * 13 + 5) % m).alias("dst")
-    )
-    e3 = d.where(live & (F.col("doc_id") % 3 == 0)).select(
-        u.alias("src"), ((u * 29 + 17) % m).alias("dst")
-    )
-    return e1.union(e2).union(e3)
-
-
-def q_host_pagerank(spark, sf_dir):
-    """operators/graph: damped PageRank power iteration in exact BIGINT
-    micro-units (rank // outdeg shares, dangling mass // n, integer
-    damping) — order-independent integer sums make Spark, DuckDB, and
-    the pure-Python twin bit-identical. Edges dedupe + hash-partition
-    by src ONCE; each of the 4 rounds ships only the 1-row-per-node
-    rank table (one join shuffle + one groupBy(dst) partial-agg), with
-    localCheckpoint lineage truncation per round."""
-    from opentopodata_spark.operators import graph
-
-    edges = _synth_host_edges(spark, sf_dir)
-    nodes = spark.range(_PAGERANK_M).select(F.col("id").alias("node"))
-    r = graph.pagerank(
-        edges, nodes=nodes, iterations=_PAGERANK_T, damping_pct=_PAGERANK_D
-    )
-    return r.select(
-        F.concat(F.lit("h"), F.col("node").cast("string")).alias("host"),
-        F.col("rank_units"),
-    )
-
-
-def _pagerank_sql() -> str:
-    from opentopodata_spark.operators.graph import UNIT
-
-    m, d, t = _PAGERANK_M, _PAGERANK_D, _PAGERANK_T
-    base = UNIT // m
-    hold = (100 - d) * base // 100
-    iter_tpl = """
-d{t} AS (SELECT coalesce(sum(r.rank), 0) AS dang
-         FROM r{p} r JOIN deg g ON r.node = g.node WHERE g.outdeg = 0),
-c{t} AS (SELECT e.v AS node, sum(r.rank // g.outdeg) AS c
-         FROM edges e JOIN r{p} r ON e.u = r.node
-                      JOIN deg g ON e.u = g.node
-         GROUP BY e.v),
-r{t} AS (SELECT n.node,
-                {hold} + {d} * (coalesce(c.c, 0)
-                                + (SELECT dang FROM d{t}) // {m}) // 100 AS rank
-         FROM nodes n LEFT JOIN c{t} c ON n.node = c.node)"""
-    iters = ",".join(
-        iter_tpl.format(t=i, p=i - 1, hold=hold, d=d, m=m)
-        for i in range(1, t + 1)
-    )
-    return f"""
-WITH raw AS (
-  SELECT doc_id % {m} AS u, ((doc_id % {m}) * 7 + 1) % {m} AS v
-  FROM documents WHERE (doc_id % {m}) % 11 <> 0
-  UNION ALL
-  SELECT doc_id % {m}, ((doc_id % {m}) * 13 + 5) % {m}
-  FROM documents WHERE (doc_id % {m}) % 11 <> 0 AND doc_id % 2 = 0
-  UNION ALL
-  SELECT doc_id % {m}, ((doc_id % {m}) * 29 + 17) % {m}
-  FROM documents WHERE (doc_id % {m}) % 11 <> 0 AND doc_id % 3 = 0
-),
-edges AS (SELECT DISTINCT u, v FROM raw WHERE u <> v),
-nodes AS (SELECT node FROM range({m}) t(node)),
-deg AS (SELECT n.node, coalesce(dd.c, 0) AS outdeg
-        FROM nodes n LEFT JOIN (SELECT u, count(*) AS c FROM edges
-                                GROUP BY u) dd ON n.node = dd.u),
-r0 AS (SELECT node, {base} AS rank FROM nodes),
-{iters}
-SELECT 'h' || CAST(node AS VARCHAR) AS host, CAST(rank AS BIGINT) AS rank_units
-FROM r{t}
-"""
-
-
-def q_token_stats(spark, sf_dir):
-    return textops.token_stats(_t(spark, sf_dir, "documents"))
-
-
-_Q_TOKEN_SQL = f"""
-WITH tok AS (SELECT doc_id, text, {_TOKENS_SQL} AS toks FROM documents)
-SELECT doc_id,
-  CAST(length(text) AS BIGINT) AS n_chars,
-  CAST(len(toks) AS BIGINT) AS n_ws_tokens,
-  CAST(len(regexp_extract_all(text, '{textops.BPE_REGEX}', 0)) AS BIGINT) AS n_bpe_tokens,
-  round(list_sum([CAST(length(t) AS BIGINT) for t in toks])
-        / greatest(len(toks), 1), 6) AS avg_token_len
-FROM tok
-"""
-
-
-def q_quality(spark, sf_dir):
-    return textops.quality_score(_t(spark, sf_dir, "documents"))
-
-
-def _quality_sql() -> str:
-    stop = ", ".join(f"'{w}'" for w in textops.STOPWORDS["en"])
-    return f"""
-WITH tok AS (SELECT doc_id, text, {_TOKENS_SQL} AS toks FROM documents),
-c AS (
-  SELECT doc_id,
-    CAST(len(toks) AS BIGINT) AS n_tokens,
-    CAST(len(list_filter(toks, x -> list_contains([{stop}], x))) AS BIGINT) AS n_stop,
-    CAST(len(regexp_extract_all(text, '[^A-Za-z0-9 ]', 0)) AS BIGINT) AS n_punct
-  FROM tok)
-SELECT doc_id, n_tokens, n_stop, n_punct,
-  round(0.4 * least(n_tokens / 64.0, 1.0)
-      + 0.3 * least(n_stop / greatest(n_tokens, 1) * 8.0, 1.0)
-      + 0.3 * (1.0 - least(n_punct / greatest(n_tokens, 1) * 10.0, 1.0)), 6) AS score
-FROM c
-"""
-
-
-def q_lang_id(spark, sf_dir):
-    return textops.lang_id(_t(spark, sf_dir, "documents"))
-
-
-def _lang_id_sql() -> str:
-    langs = list(textops.STOPWORDS)
-    counts = ", ".join(
-        "CAST(len(list_filter(toks, x -> list_contains(["
-        + ", ".join(f"'{w}'" for w in textops.STOPWORDS[lang])
-        + f"], x))) AS BIGINT) AS votes_{lang}"
-        for lang in langs
-    )
-    best = "greatest(" + ", ".join(f"votes_{lang}" for lang in langs) + ")"
-    pred = "CASE WHEN " + best + " = 0 THEN 'und' " + " ".join(
-        f"WHEN votes_{lang} = {best} THEN '{lang}'" for lang in langs
-    ) + " END"
-    cols = ", ".join(f"votes_{lang}" for lang in langs)
-    return f"""
-WITH tok AS (SELECT doc_id, {_TOKENS_SQL} AS toks FROM documents),
-v AS (SELECT doc_id, {counts} FROM tok)
-SELECT doc_id, {cols}, {pred} AS pred_lang FROM v
-"""
-
-
-def q_fingerprint(spark, sf_dir):
-    return textops.fingerprint(_t(spark, sf_dir, "documents"), k=8)
-
-
-_Q_FINGERPRINT_SQL = """
-SELECT doc_id,
-  list_aggregate([md5(substr(text, i, 8))
-                  for i in generate_series(1, greatest(length(text) - 7, 1))],
-                 'min') AS fp,
-  CAST(greatest(length(text) - 7, 1) AS BIGINT) AS n_grams
-FROM documents
-"""
-
-
-def q_repetition_stats(spark, sf_dir):
-    return textops.repetition_stats(_t(spark, sf_dir, "documents"))
-
-
-# Oracle computes the same per-doc repetition profile by unnest+groupBy
-# (independent of the Spark sort-fold); LEFT JOIN restores gram-less docs
-# with zero counts, matching the fold's zero state.
-_Q_REPETITION_SQL = f"""
-WITH tok AS (SELECT doc_id, {_TOKENS_SQL} AS toks FROM documents),
-b AS (SELECT doc_id, unnest([toks[i] || ' ' || toks[i+1]
-                             for i in generate_series(1, len(toks) - 1)]) AS gram
-      FROM tok),
-bc AS (SELECT doc_id, gram, count(*) AS c FROM b GROUP BY doc_id, gram),
-bs AS (SELECT doc_id, sum(c) AS n, max(c) AS top, count(*) AS nd
-       FROM bc GROUP BY doc_id),
-t AS (SELECT doc_id, unnest([toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2]
-                             for i in generate_series(1, len(toks) - 2)]) AS gram
-      FROM tok),
-tc AS (SELECT doc_id, gram, count(*) AS c FROM t GROUP BY doc_id, gram),
-ts AS (SELECT doc_id, sum(c) AS n, max(c) AS top, count(*) AS nd
-       FROM tc GROUP BY doc_id)
-SELECT d.doc_id,
-  CAST(coalesce(bs.n, 0) AS BIGINT) AS n_bigrams,
-  round(coalesce(bs.top, 0) / greatest(coalesce(bs.n, 0), 1), 6) AS top_bigram_frac,
-  round((coalesce(bs.n, 0) - coalesce(bs.nd, 0))
-        / greatest(coalesce(bs.n, 0), 1), 6) AS dup_bigram_frac,
-  CAST(coalesce(ts.n, 0) AS BIGINT) AS n_trigrams,
-  round(coalesce(ts.top, 0) / greatest(coalesce(ts.n, 0), 1), 6) AS top_trigram_frac,
-  round((coalesce(ts.n, 0) - coalesce(ts.nd, 0))
-        / greatest(coalesce(ts.n, 0), 1), 6) AS dup_trigram_frac
-FROM documents d LEFT JOIN bs ON d.doc_id = bs.doc_id
-                 LEFT JOIN ts ON d.doc_id = ts.doc_id
-"""
-
-_REPEATED_N = 5
-_REPEATED_MIN = 2
-
-
-def q_repeated_ngrams(spark, sf_dir):
-    return dedup.repeated_ngrams(
-        _t(spark, sf_dir, "documents"), n=_REPEATED_N, min_count=_REPEATED_MIN
-    )
-
-
-# Same gram convention as the Spark side: greatest(len-n, 0)+1 start
-# positions, slice clamped (a doc shorter than n tokens contributes its
-# whole text as one partial gram), '' filtered. The expression and the
-# start-position series are shared verbatim with the span_dedup oracle.
-_GRAM_EXPR_SQL = f"array_to_string(toks[i:i + {_REPEATED_N - 1}], ' ')"
-_GRAM_SERIES_SQL = (
-    f"generate_series(1, greatest(len(toks) - {_REPEATED_N}, 0) + 1)"
-)
-
-_Q_REPEATED_SQL = f"""
-WITH tok AS (SELECT doc_id, {_TOKENS_SQL} AS toks FROM documents),
-g AS (SELECT doc_id,
-        unnest([{_GRAM_EXPR_SQL}
-                for i in {_GRAM_SERIES_SQL}]) AS gram
-      FROM tok)
-SELECT gram,
-  CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs,
-  CAST(count(*) AS BIGINT) AS n_occ
-FROM g WHERE gram <> ''
-GROUP BY gram HAVING count(*) >= {_REPEATED_MIN}
-"""
-
-_EXACT_SUBSTR_L = 5
-
-_Q_EXACT_SUBSTR_SQL = f"""
-WITH tok AS (SELECT doc_id, {_TOKENS_SQL} AS toks FROM documents),
-pos AS (SELECT doc_id, toks,
-          unnest(generate_series(1, len(toks) - {_EXACT_SUBSTR_L} + 1))
-            AS p
-        FROM tok WHERE len(toks) >= {_EXACT_SUBSTR_L}),
-g AS (SELECT doc_id, p,
-        array_to_string(toks[p:p + {_EXACT_SUBSTR_L - 1}], ' ') AS gram
-      FROM pos),
-rep AS (SELECT gram FROM g GROUP BY gram HAVING count(*) >= 2),
-st AS (SELECT doc_id, p - 1 AS s FROM g
-       WHERE gram IN (SELECT gram FROM rep)),
-m AS (SELECT doc_id, s,
-        CASE WHEN lag(s) OVER (PARTITION BY doc_id ORDER BY s) IS NULL
-               OR s > lag(s) OVER (PARTITION BY doc_id ORDER BY s)
-                    + {_EXACT_SUBSTR_L}
-             THEN 1 ELSE 0 END AS new
-      FROM st),
-i AS (SELECT doc_id, s,
-        sum(new) OVER (PARTITION BY doc_id ORDER BY s
-                       ROWS UNBOUNDED PRECEDING) AS isl
-      FROM m)
-SELECT doc_id, min(s) AS span_start,
-       max(s) + {_EXACT_SUBSTR_L} AS span_end
-FROM i GROUP BY doc_id, isl
-"""
-
-
-def q_exact_substr(spark, sf_dir):
-    """TRUE ExactSubstr (Lee et al. 2021) as a CONTRACT query: maximal
-    token spans covered by a >= L-token substring repeated anywhere in
-    the corpus, found by suffix-array prefix-doubling equivalence
-    classes (dedup.exact_substr_spans — O(log L) distributed rounds,
-    no gram explosion). The oracle replays the DEFINITION in SQL:
-    repeated L-gram starts + a gaps-and-islands merge."""
-    docs = _t(spark, sf_dir, "documents")
-    return dedup.exact_substr_spans(
-        docs, min_len=_EXACT_SUBSTR_L
-    ).select(
-        "doc_id",
-        F.col("start").cast("long").alias("span_start"),
-        F.col("end").cast("long").alias("span_end"),
-    )
-
-
-def q_span_dedup(spark, sf_dir):
-    """The APPLY step of span-level dedup: strip every occurrence of the
-    corpus-repeated n-grams repeated_ngrams flags
-    (dedup.remove_repeated_spans) — (doc_id, clean, n_spans_removed)."""
-    docs = _t(spark, sf_dir, "documents")
-    removal = dedup.repeated_ngrams(
-        docs, n=_REPEATED_N, min_count=_REPEATED_MIN
-    )
-    return dedup.remove_repeated_spans(docs, removal, n=_REPEATED_N)
-
-
-# token i (1-based here; the Spark side is 0-based internally — only the
-# rebuilt text is compared) survives iff no flagged start s covers it
-_Q_SPAN_DEDUP_SQL = f"""
-WITH tok AS (SELECT doc_id, text, {_TOKENS_SQL} AS toks FROM documents),
-g AS (SELECT doc_id,
-        unnest([{{'i': i, 'gram': {_GRAM_EXPR_SQL}}}
-                for i in {_GRAM_SERIES_SQL}]) AS u
-      FROM tok),
-occ AS (SELECT doc_id, u.i AS pos, u.gram AS gram FROM g WHERE u.gram <> ''),
-rem AS (SELECT gram FROM occ GROUP BY gram HAVING count(*) >= {_REPEATED_MIN}),
-hits AS (SELECT occ.doc_id, occ.pos FROM occ JOIN rem USING (gram)),
-starts AS (SELECT doc_id, list_sort(list(pos)) AS ss FROM hits GROUP BY doc_id)
-SELECT t.doc_id,
-       CASE WHEN s.ss IS NULL THEN t.text
-            ELSE coalesce(array_to_string(
-              [t.toks[i] for i in generate_series(1, len(t.toks))
-               if len(list_filter(s.ss, x -> x <= i AND i < x + {_REPEATED_N})) = 0],
-              ' '), '')
-       END AS clean,
-       CAST(coalesce(len(s.ss), 0) AS BIGINT) AS n_spans_removed
-FROM tok t LEFT JOIN starts s ON s.doc_id = t.doc_id
-"""
-
-_SAMPLE_RATES = {"en": 0.5, "de": 0.25, "fr": 1.0, "zh": 0.0}
-_SAMPLE_DEFAULT = 0.125
-_SAMPLE_SEED = "s1"
-
-
-def q_corpus_sample(spark, sf_dir):
-    out = sampling.stratified_sample(
-        _t(spark, sf_dir, "documents"),
-        rates=_SAMPLE_RATES,
-        strata_col="lang",
-        id_col="doc_id",
-        seed=_SAMPLE_SEED,
-        default_rate=_SAMPLE_DEFAULT,
-    )
-    return out.select("doc_id", "lang", "source", "sample_key")
-
-
-def _corpus_sample_sql() -> str:
-    cases = " ".join(
-        f"WHEN '{k}' THEN '{sampling.rate_threshold(v)}'"
-        for k, v in sorted(_SAMPLE_RATES.items())
-    )
-    default = sampling.rate_threshold(_SAMPLE_DEFAULT)
-    return f"""
-WITH k AS (SELECT doc_id, lang, source,
-             substr(md5('{_SAMPLE_SEED}#' || CAST(doc_id AS VARCHAR)), 1, 6)
-               AS sample_key
-           FROM documents)
-SELECT doc_id, lang, source, sample_key FROM k
-WHERE sample_key < CASE lang {cases} ELSE '{default}' END
-"""
-
-
-_HH_K, _HH_CAP = 10, 500
-
-
-def q_heavy_hitters(spark, sf_dir):
-    """Bounded-memory exact top-k (operators/sketch.heavy_hitters):
-    per-partition Misra-Gries summaries -> broadcast candidate recount
-    -> deterministic cut, with a per-row provability flag (cnt >
-    N/(capacity+1)). Two scans; only candidate keys ever shuffle. The
-    oracle is the plain exact SQL top-k — they must agree whenever the
-    candidates cover the vocabulary, which capacity=500 guarantees on
-    this corpus."""
-    from opentopodata_spark.operators import sketch
-    from opentopodata_spark.operators.exprutil import tokens
-
-    d = _t(spark, sf_dir, "documents")
-    toks = d.select(F.explode(tokens("text")).alias("tok"))
-    return sketch.heavy_hitters(toks, "tok", k=_HH_K, capacity=_HH_CAP)
-
-
-_Q_HEAVY_HITTERS_SQL = f"""
-WITH toks AS (
-  SELECT t.tok
-  FROM documents,
-       unnest(list_filter(string_split(text, ' '), x -> x <> '')) AS t(tok)),
-tot AS (SELECT COUNT(*) AS n FROM toks),
-cnts AS (SELECT tok AS key, COUNT(*) AS cnt FROM toks GROUP BY tok)
-SELECT key, cnt,
-       cnt > (SELECT CAST(n AS DOUBLE) FROM tot) / {_HH_CAP + 1}.0
-         AS guaranteed
-FROM cnts ORDER BY cnt DESC, key ASC LIMIT {_HH_K}
-"""
-
-
-_HLL_PS = (8, 12)
-
-
-def q_hll_distinct(spark, sf_dir):
-    """Mergeable HyperLogLog distinct-order estimate per return flag
-    (operators/sketch.hll_distinct over lineitem.l_orderkey — ~14.7k
-    distinct orders at sf0.01) at p=8 and p=12. The register math is
-    md5 -> 60-bit integer -> shift/bitlength — pure codegen column
-    expressions both engines replay bit-for-bit — and the harmonic sums
-    are INTEGER-exact (s_num = sum 2^(61-p-rho) as BIGINT), so every
-    output column including the rounded estimate is deterministic. The
-    two p values exercise both estimator branches on this corpus: p=8
-    (m=256, thousands of distincts per flag) takes the raw-HLL path,
-    p=12 (m=4096) the linear-counting path.
-    """
-    from opentopodata_spark.operators import sketch
-
-    li = _t(spark, sf_dir, "lineitem")
-    src = li.select(
-        F.col("l_returnflag").alias("bucket"),
-        F.col("l_orderkey").alias("val"),
-    )
-    out = None
-    for p in _HLL_PS:
-        est = sketch.hll_distinct(src, "val", p=p, group_cols=("bucket",))
-        out = est if out is None else out.unionByName(est)
-    return out
-
-
-_Q_HLL_SQL = f"""
-WITH h AS (
-  SELECT l_returnflag AS bucket,
-         ('0x' || substr(md5(CAST(l_orderkey AS VARCHAR)), 1, 15))::BIGINT
-           AS h
-  FROM lineitem),
-pr AS (
-  SELECT p.p, bucket,
-         h >> (60 - p.p) AS register,
-         h & ((1::BIGINT << (60 - p.p)) - 1) AS w
-  FROM h, (SELECT unnest([{", ".join(str(p) for p in _HLL_PS)}]) AS p) p),
-regs AS (
-  SELECT p, bucket, register,
-         max(CASE WHEN w = 0 THEN 60 - p + 1
-                  ELSE 60 - p + 1 - length(bin(w)) END) AS rho
-  FROM pr GROUP BY p, bucket, register),
-agg AS (
-  SELECT p, bucket,
-         CAST(count(*) AS BIGINT) AS n_registers,
-         CAST(max(rho) AS INTEGER) AS r_max,
-         CAST(sum(1::BIGINT << (61 - p - rho)) AS BIGINT) AS s_num
-  FROM regs GROUP BY p, bucket),
-est AS (
-  SELECT bucket, CAST(p AS INTEGER) AS hll_p,
-         (1::BIGINT << p) AS m, n_registers,
-         (1::BIGINT << p) - n_registers AS v_zero, r_max, s_num,
-         (0.7213 / (1.0 + 1.079 / CAST(1::BIGINT << p AS DOUBLE)))
-           * CAST(1::BIGINT << p AS DOUBLE)
-           * CAST(1::BIGINT << p AS DOUBLE)
-           * CAST(1::BIGINT << (61 - p) AS DOUBLE)
-           / CAST(s_num + ((1::BIGINT << p) - n_registers)
-                          * (1::BIGINT << (61 - p)) AS DOUBLE) AS est_raw
-  FROM agg)
-SELECT bucket, hll_p, m, n_registers, v_zero, r_max, s_num,
-       CAST(round(CASE WHEN est_raw <= 2.5 * CAST(m AS DOUBLE)
-                        AND v_zero > 0
-                       THEN CAST(m AS DOUBLE)
-                            * ln(CAST(m AS DOUBLE) / CAST(v_zero AS DOUBLE))
-                       ELSE est_raw END) AS BIGINT) AS est_distinct
-FROM est
-"""
-
-
-def q_streaming_hll(spark, sf_dir):
-    """Streaming twin (streaming.run_hll_stream): the same lineitem rows
-    arrive in three l_linenumber%3 waves; each micro-batch's registers
-    max-merge into the latest state partition only. HLL merge is
-    LOSSLESS, so the streamed state is register-identical to the
-    one-shot batch sketch — the oracle is the identical SQL replay as
-    `hll_distinct` restricted to p=12 (the streamed p)."""
-    import shutil
-    import tempfile
-
-    from opentopodata_spark import streaming as stx
-
-    work = tempfile.mkdtemp(prefix="otds_hll_stream_q_")
-    try:
-        li = _t(spark, sf_dir, "lineitem").select(
-            "l_orderkey", "l_linenumber", "l_returnflag"
-        )
-        for wave in range(3):
-            li.where(F.pmod(F.col("l_linenumber"), F.lit(3)) == wave).coalesce(
-                1
-            ).write.mode("overwrite").parquet(f"{work}/in/wave{wave}")
-            stream = (
-                spark.readStream.schema(
-                    "l_orderkey long, l_linenumber long, l_returnflag string"
-                )
-                .parquet(f"{work}/in/*")
-                .select(
-                    F.col("l_returnflag").alias("bucket"),
-                    F.col("l_orderkey").alias("value"),
-                )
-            )
-            q = stx.run_hll_stream(
-                stream, f"{work}/state", f"{work}/ckpt",
-                p=12, group_cols=("bucket",),
-            )
-            q.awaitTermination()
-        out = stx.hll_state_estimate(
-            spark, f"{work}/state", group_cols=("bucket",)
-        )
-        # materialize before the temp state dir disappears
-        rows = out.collect()
-        return spark.createDataFrame(rows, out.schema)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
-
-
-_Q_STREAMING_HLL_SQL = _Q_HLL_SQL.replace(
-    "(SELECT unnest([{}]) AS p) p".format(
-        ", ".join(str(p) for p in _HLL_PS)
-    ),
-    "(SELECT unnest([12]) AS p) p",
-)
-
-
-def q_streaming_heavy_hitters(spark, sf_dir):
-    """Streaming heavy hitters (streaming.run_heavy_hitters_stream):
-    document tokens arrive in three waves; each micro-batch is counted
-    exactly, strictly MG-trimmed, and merged into a bounded summary
-    (capacity keys + exact error bookkeeping), with per-batch
-    retry-idempotent state partitions. Capacity 100 exceeds this
-    corpus's vocabulary, so no trim fires and the estimates are EXACT —
-    the oracle is the plain SQL top-k with est_hi = est; the trim path
-    is pinned by tests/test_streaming.py against a sequential replay."""
-    import shutil
-    import tempfile
-
-    from opentopodata_spark import streaming as stx
-    from opentopodata_spark.operators.exprutil import tokens
-
-    work = tempfile.mkdtemp(prefix="otds_hh_stream_q_")
-    try:
-        docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-        for wave in range(3):
-            docs.where(F.pmod(F.col("doc_id"), F.lit(3)) == wave).coalesce(
-                1
-            ).write.mode("overwrite").parquet(f"{work}/in/wave{wave}")
-            stream = (
-                spark.readStream.schema("doc_id long, text string")
-                .parquet(f"{work}/in/*")
-                .select(F.explode(tokens("text")).alias("key"))
-            )
-            q = stx.run_heavy_hitters_stream(
-                stream, f"{work}/state", f"{work}/ckpt", capacity=100,
-            )
-            q.awaitTermination()
-        out = stx.heavy_hitters_state_topk(spark, f"{work}/state", k=_HH_K)
-        out = out.cache()
-        out.count()
-        return out
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
-
-
-_Q_STREAMING_HH_SQL = f"""
-WITH toks AS (
-  SELECT t.tok
-  FROM documents,
-       unnest(list_filter(string_split(text, ' '), x -> x <> '')) AS t(tok)),
-tot AS (SELECT COUNT(*) AS n FROM toks),
-cnts AS (SELECT tok AS key, COUNT(*) AS est FROM toks GROUP BY tok)
-SELECT key, est, est AS est_hi, (SELECT n FROM tot) AS n_total
-FROM cnts ORDER BY est DESC, key ASC LIMIT {_HH_K}
-"""
-
-
-def q_mixture_sample(spark, sf_dir):
-    """Temperature-based data mixing (sampling.temperature_mixture,
-    alpha=0 = equal expected characters per language): one tiny
-    per-stratum aggregate decides the rates, then the same deterministic
-    md5-threshold predicate as corpus_sample. The alpha=0 rate is the
-    single double division n_min/n_i, so the DuckDB oracle reproduces
-    every threshold bit-exactly — floor(rate * 2^24) scales by a power
-    of two (exact) and no libm pow is involved."""
-    docs = _t(spark, sf_dir, "documents")
-    out, _rates = sampling.temperature_mixture(
-        docs, strata_col="lang", alpha=0.0, weight_col="n_chars",
-        id_col="doc_id", seed="mix1",
-    )
-    return out.select("doc_id", "lang", "n_chars", "sample_key")
-
-
-_Q_MIXTURE_SQL = """
-WITH totals AS (
-  SELECT lang, CAST(SUM(n_chars) AS DOUBLE) AS n FROM documents GROUP BY lang),
-mn AS (SELECT MIN(n) AS nmin FROM totals),
-thr AS (
-  SELECT lang,
-         CASE WHEN n = (SELECT nmin FROM mn) THEN 'g'
-              ELSE printf('%06x', CAST(floor(((SELECT nmin FROM mn) / n)
-                                             * 16777216.0) AS BIGINT))
-         END AS t
-  FROM totals),
-k AS (SELECT doc_id, lang, n_chars,
-             substr(md5('mix1#' || CAST(doc_id AS VARCHAR)), 1, 6)
-               AS sample_key
-      FROM documents)
-SELECT k.doc_id, k.lang, k.n_chars, k.sample_key
-FROM k JOIN thr ON thr.lang = k.lang
-WHERE k.sample_key < thr.t
-"""
-
-
-def q_stratified_take(spark, sf_dir):
-    """Exactly-k-per-language deterministic sample
-    (sampling.stratified_take): rank by md5 sample key within stratum,
-    keep the k smallest — layout-independent, auditable, exact output
-    size. One stratum-partitioned window; the prefilter_rate seam is the
-    documented scale path for huge strata."""
-    d = _t(spark, sf_dir, "documents")
-    return sampling.stratified_take(
-        d.select("doc_id", "lang"), k=12, strata_col="lang",
-        id_col="doc_id", seed="take1",
-    )
-
-
-_Q_STRATIFIED_TAKE_SQL = """
-WITH keyed AS (
-  SELECT doc_id, lang,
-         substr(md5('take1#' || CAST(doc_id AS VARCHAR)), 1, 6)
-           AS sample_key
-  FROM documents),
-r AS (
-  SELECT *, row_number() OVER (PARTITION BY lang
-                               ORDER BY sample_key, doc_id) AS rk
-  FROM keyed)
-SELECT doc_id, lang, sample_key FROM r WHERE rk <= 12
-"""
-
-
-_TEXT_EMBED_DIM, _TEXT_EMBED_NGRAM = 64, 3
-
-
-def q_quality_classifier(spark, sf_dir):
-    """operators/classifier: distributed full-batch logreg over hashed
-    char-3-gram features (text_embed), labels = (lang == 'en'); inference
-    is a pure Catalyst dot product. Oracle: the repo's single-process
-    numpy twin (identical embedding integers, identical GD schedule);
-    probabilities rounded to 3 decimals absorb distributed-sum ulps."""
-    from opentopodata_spark.operators import classifier
-
-    docs = _t(spark, sf_dir, "documents")
-    labeled = docs.select(
-        "doc_id", "text", (F.col("lang") == "en").cast("long").alias("label")
-    )
-    feats = emb.text_embed(
-        labeled, dim=32, partitions=spark.sparkContext.defaultParallelism
-    ).join(
-        labeled.select("doc_id", "label"), "doc_id"
-    )
-    model = classifier.train_logreg(feats, n_iter=20, lr=1.0)
-    scored = classifier.predict_proba(feats, model)
-    return scored.select(
-        "doc_id",
-        "label",
-        F.round(F.col("prob"), 3).alias("prob"),
-        (F.col("prob") > 0.5).cast("long").alias("pred"),
-    )
-
-
-def q_text_embed(spark, sf_dir):
-    """Hashing-trick char-n-gram text embedding (embeddings.text_embed)
-    in its exact integer form: the dense vector is computed by the fully
-    narrow Catalyst plan (zero shuffle, zero Python), then exploded to
-    the sparse (doc_id, bucket, weight) rows the SQL oracle reproduces
-    from md5 arithmetic — signed counts, so the compare is exact."""
-    dense = emb.text_embed(
-        _t(spark, sf_dir, "documents"),
-        dim=_TEXT_EMBED_DIM,
-        ngram=_TEXT_EMBED_NGRAM,
-        normalize=False,
-        partitions=spark.sparkContext.defaultParallelism,
-    )
-    return (
-        dense.select(
-            "doc_id", F.posexplode("embedding").alias("bucket", "w")
-        )
-        .where(F.col("w") != 0)
-        .select(
-            "doc_id",
-            F.col("bucket").cast("int").alias("bucket"),
-            F.col("w").cast("long").alias("weight"),
-        )
-    )
-
-
-_Q_TEXT_EMBED_SQL = f"""
-WITH g AS (
-  SELECT doc_id, substr(text, i, {_TEXT_EMBED_NGRAM}) AS gram
-  FROM documents,
-       LATERAL unnest(generate_series(
-         1, greatest(len(text) - {_TEXT_EMBED_NGRAM - 1}, 0))) AS t(i)
-),
-h AS (SELECT doc_id, ('0x' || substr(md5(gram), 1, 15))::BIGINT AS h FROM g)
-SELECT doc_id,
-       CAST(h % {_TEXT_EMBED_DIM} AS INTEGER) AS bucket,
-       CAST(sum(CASE WHEN ((h >> 55) & 1) = 1 THEN 1 ELSE -1 END) AS BIGINT)
-         AS weight
-FROM h
-GROUP BY doc_id, h % {_TEXT_EMBED_DIM}
-HAVING sum(CASE WHEN ((h >> 55) & 1) = 1 THEN 1 ELSE -1 END) != 0
-"""
-
-
-def q_embedding_topk(spark, sf_dir):
-    e = _t(spark, sf_dir, "embeddings")
-    return emb.cosine_topk(e, e.where(F.col("vec_id") % 100 == 0), k=5)
-
-
-def _dot_sql(a: str, b: str) -> str:
-    return (
-        f"list_sum([{a}[i]::DOUBLE * {b}[i]::DOUBLE "
-        f"for i in generate_series(1, {EMB_DIM})])"
-    )
-
-
-_Q_EMB_TOPK_SQL = f"""
-WITH q AS (SELECT vec_id AS query_id, embedding AS qvec FROM embeddings
-           WHERE vec_id % 100 = 0),
-scored AS (
-  SELECT q.query_id, v.vec_id AS neighbor_id,
-    round({_dot_sql('qvec', 'embedding')}
-          / (sqrt({_dot_sql('qvec', 'qvec')})
-             * sqrt({_dot_sql('embedding', 'embedding')})), 6) AS cos_sim
-  FROM embeddings v CROSS JOIN q WHERE v.vec_id <> q.query_id),
-ranked AS (
-  SELECT *, row_number() OVER (
-    PARTITION BY query_id ORDER BY cos_sim DESC, neighbor_id ASC) AS "rank"
-  FROM scored)
-SELECT query_id, neighbor_id, "rank", cos_sim FROM ranked WHERE "rank" <= 5
-"""
-
-
-def q_emb_lsh_buckets(spark, sf_dir):
-    b = emb.hyperplane_lsh_buckets(_t(spark, sf_dir, "embeddings"), n_planes=8)
-    return b.groupBy("bucket").agg(
-        F.count(F.lit(1)).alias("n_vecs"), F.min("vec_id").alias("min_vec_id")
-    )
-
-
-def _emb_lsh_sql(n_planes: int = 8) -> str:
-    bits = " + ".join(
-        f"CASE WHEN embedding[{b + 1}]::DOUBLE > 0 THEN {1 << b} ELSE 0 END"
-        for b in range(n_planes)
-    )
-    return f"""
-WITH b AS (SELECT vec_id, CAST({bits} AS BIGINT) AS bucket FROM embeddings)
-SELECT bucket, count(*) AS n_vecs, min(vec_id) AS min_vec_id FROM b GROUP BY bucket
-"""
-
-
-def q_emb_near_dups(spark, sf_dir):
-    return emb.near_duplicate_pairs(
-        _t(spark, sf_dir, "embeddings"), threshold=0.25, n_planes=8
-    )
-
-
-def _emb_near_dups_sql(n_planes: int = 8) -> str:
-    bits = " + ".join(
-        f"CASE WHEN embedding[{b + 1}]::DOUBLE > 0 THEN {1 << b} ELSE 0 END"
-        for b in range(n_planes)
-    )
-    return f"""
-WITH b AS (SELECT vec_id, embedding, CAST({bits} AS BIGINT) AS bucket FROM embeddings),
-pairs AS (
-  SELECT a.vec_id AS vec_a, b2.vec_id AS vec_b,
-    round({_dot_sql('a.embedding', 'b2.embedding')}
-          / (sqrt({_dot_sql('a.embedding', 'a.embedding')})
-             * sqrt({_dot_sql('b2.embedding', 'b2.embedding')})), 6) AS cos_sim
-  FROM b a JOIN b b2 ON a.bucket = b2.bucket AND a.vec_id < b2.vec_id)
-SELECT vec_a, vec_b, cos_sim FROM pairs WHERE cos_sim >= 0.25
-"""
 
 
 def q_events_rollup(spark, sf_dir):
@@ -2396,45 +588,6 @@ SELECT strftime(date_trunc('hour', p.ts), '%Y-%m-%d %H:%M:%S') AS window_start,
        count(DISTINCT p.user_id) AS n_users
 FROM inside i JOIN pts p ON i.point_id = p.pid
 GROUP BY 1, 2
-"""
-
-
-_QUANT_QS = [0.0, 0.25, 0.5, 0.75, 0.9, 0.99, 1.0]
-
-
-def q_exact_quantiles(spark, sf_dir):
-    """Exact distributed quantiles (operators/quantiles.exact_quantiles)
-    of l_extendedprice per return flag — distributed selection via
-    iterative observed-bound histograms instead of a global sort or
-    Spark's state-buffering `percentile`. local_threshold=2000 forces
-    at least one histogram round on this data (~20k rows/flag) before
-    the bounded final collect, so the driver row checks the narrowing
-    logic, not just the numpy fast path. Oracle: the literal ANSI
-    definition — ORDER BY value OFFSET floor(q*(n-1)) via row_number."""
-    from opentopodata_spark.operators.quantiles import exact_quantiles
-
-    _ship_package(spark)
-    li = _t(spark, sf_dir, "lineitem")
-    return exact_quantiles(
-        li, "l_extendedprice", _QUANT_QS, group_cols=("l_returnflag",),
-        buckets=64, local_threshold=2000,
-    )
-
-
-def _quantiles_sql() -> str:
-    qvals = ", ".join(f"({q!r})" for q in _QUANT_QS)
-    return f"""
-WITH qs(q) AS (VALUES {qvals}),
-s AS (
-  SELECT l_returnflag AS g, l_extendedprice AS v,
-         row_number() OVER (PARTITION BY l_returnflag
-                            ORDER BY l_extendedprice) AS rn,
-         count(*) OVER (PARTITION BY l_returnflag) AS n
-  FROM lineitem)
-SELECT s.g AS l_returnflag, q.q, CAST(s.n AS BIGINT) AS n,
-       CAST(s.v AS DOUBLE) AS value
-FROM s JOIN qs q
-  ON s.rn = CAST(floor(q.q * (s.n - 1)) AS BIGINT) + 1
 """
 
 
@@ -2776,196 +929,6 @@ HAVING date_trunc('hour', ts) + INTERVAL 1 HOUR
 """
 
 
-def q_streaming_dedup(spark, sf_dir):
-    """Streaming incremental exact dedup: the documents corpus arrives in
-    three waves (wave = doc_id % 3, drained strictly in order), and each
-    wave is folded against the accumulated hash index — a doc is admitted
-    iff its text hash was never admitted before; within a wave the min
-    doc_id wins. Deterministic, so the oracle is plain SQL: keep the row
-    with the smallest (wave, doc_id) per md5(text)."""
-    from opentopodata_spark import streaming as stx
-
-    return _drain_corpus_waves(
-        spark, sf_dir,
-        lambda s, work: stx.run_dedup_stream(
-            s, f"{work}/corpus", f"{work}/ckpt", f"{work}/index"
-        ),
-        ("doc_id", "lang", "source", "text_hash"),
-    )
-
-
-_Q_STREAMING_DEDUP_SQL = """
-WITH h AS (
-  SELECT doc_id, lang, source, md5(text) AS text_hash, doc_id % 3 AS wave
-  FROM documents),
-r AS (
-  SELECT *, row_number() OVER (PARTITION BY text_hash
-                               ORDER BY wave, doc_id) AS rn
-  FROM h)
-SELECT doc_id, lang, source, text_hash FROM r WHERE rn = 1
-"""
-
-
-_NEAR_DUP_STREAM_T = 0.5
-
-
-def _drain_corpus_waves(spark, sf_dir, start_stream, out_cols):
-    """Shared scaffold for the incremental-dedup streaming queries: split
-    the documents corpus into three waves (doc_id % 3), drain them
-    strictly in order through ``start_stream(stream_df, work)``, and
-    return the accumulated output corpus projected to ``out_cols``
-    (cached + materialized before the temp dir goes away)."""
-    import shutil
-    import tempfile
-
-    from opentopodata_spark import streaming as stx
-
-    work = tempfile.mkdtemp(prefix="otds_waves_q_")
-    try:
-        docs = _t(spark, sf_dir, "documents").select(
-            "doc_id", "text", "lang", "source"
-        )
-        for wave in range(3):
-            docs.where(F.pmod(F.col("doc_id"), F.lit(3)) == wave).coalesce(
-                1
-            ).write.mode("overwrite").parquet(f"{work}/in/wave{wave}")
-            q = start_stream(stx.stream_corpus(spark, f"{work}/in/*"), work)
-            q.awaitTermination()
-        out = spark.read.parquet(f"{work}/corpus").select(*out_cols)
-        out = out.cache()
-        out.count()  # materialize before the temp dir goes away
-        return out
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
-
-
-def q_streaming_near_dup(spark, sf_dir):
-    """Streaming incremental NEAR-dup dedup (streaming.run_near_dup_stream):
-    three waves (doc_id % 3, drained in order); each wave deduplicates
-    within itself (verified pairs -> components -> keep min) and is then
-    LSH-probed + Jaccard-verified against the accumulated ADMITTED corpus.
-    Deterministic (md5 minhash banding + exact shingle Jaccard), so the
-    oracle is a single-process sequential replay."""
-    from opentopodata_spark import streaming as stx
-
-    return _drain_corpus_waves(
-        spark, sf_dir,
-        lambda s, work: stx.run_near_dup_stream(
-            s, f"{work}/corpus", f"{work}/ckpt", f"{work}/index",
-            threshold=_NEAR_DUP_STREAM_T,
-        ),
-        ("doc_id", "lang", "source"),
-    )
-
-
-def _build_near_dup_stream_oracle(sf_dir: str):
-    """Sequential replay of q_streaming_near_dup: same md5 minhash family,
-    same banding, same distinct-shingle Jaccard with half-up rounding,
-    same keep-min-per-component within a wave, same admitted-only index."""
-    import hashlib
-    import pyarrow as pa
-
-    def h(s: str) -> str:
-        return hashlib.md5(s.encode()).hexdigest()
-
-    def shingles(text: str) -> frozenset:
-        toks = [t for t in (text or "").split(" ") if t]
-        if not toks:
-            return frozenset()
-        n = 2
-        if len(toks) < n:
-            grams = [" ".join(toks)]
-        else:
-            grams = [" ".join(toks[i:i + n]) for i in range(len(toks) - n + 1)]
-        return frozenset(g for g in grams if g)
-
-    def buckets(sh: frozenset) -> frozenset:
-        if not sh:
-            return frozenset()
-        sig = [min(h(f"{s}#{i}") for s in sh) for i in range(8)]
-        return frozenset(
-            (b, f"{sig[2 * b]}|{sig[2 * b + 1]}") for b in range(4)
-        )
-
-    def jacc_ok(a: frozenset, b: frozenset) -> bool:
-        inter = len(a & b)
-        if not inter:
-            return False
-        j = _round_half_up(inter / (len(a) + len(b) - inter), 6)
-        return j >= _NEAR_DUP_STREAM_T
-
-    t = _read_pq(sf_dir, "documents")
-    recs = list(
-        zip(
-            t.column("doc_id").to_pylist(),
-            t.column("text").to_pylist(),
-            t.column("lang").to_pylist(),
-            t.column("source").to_pylist(),
-        )
-    )
-    admitted: list[tuple] = []  # (doc_id, shingles, buckets, lang, source)
-    adm_by_bucket: dict = {}  # bucket -> [admitted indices]
-    for wave in range(3):
-        wd = sorted(
-            (r for r in recs if r[0] % 3 == wave), key=lambda r: r[0]
-        )
-        info = {r[0]: (shingles(r[1]), r[2], r[3]) for r in wd}
-        bks = {d: buckets(s) for d, (s, _, _) in info.items()}
-        ids = sorted(info)
-        # within-wave: candidate pairs indexed by bucket (the banding the
-        # LSH replays — near-linear, not all-pairs) -> verified edges ->
-        # components
-        by_bucket: dict = {}
-        for d in ids:
-            for bk in bks[d]:
-                by_bucket.setdefault(bk, []).append(d)
-        cands = set()
-        for members in by_bucket.values():
-            for i, a in enumerate(members):
-                for b in members[i + 1:]:
-                    cands.add((min(a, b), max(a, b)))
-        parent = {d: d for d in ids}
-
-        def find(x):
-            while parent[x] != x:
-                parent[x] = parent[parent[x]]
-                x = parent[x]
-            return x
-
-        for a, b in sorted(cands):
-            if jacc_ok(info[a][0], info[b][0]):
-                ra, rb = find(a), find(b)
-                if ra != rb:
-                    parent[max(ra, rb)] = min(ra, rb)
-        canon = [d for d in ids if find(d) == d]
-        # cross-wave: reject on a bucket collision + verified Jaccard
-        # against docs admitted in PREVIOUS waves (the operator's index
-        # read excludes the current batch; same-wave canon docs are in
-        # distinct components so they can never verify anyway)
-        new_admits = []
-        for d in canon:
-            sh_d, lang, source = info[d]
-            old_idxs = {
-                i for bk in bks[d] for i in adm_by_bucket.get(bk, ())
-            }
-            hit = any(jacc_ok(sh_d, admitted[i][1]) for i in sorted(old_idxs))
-            if not hit:
-                new_admits.append((d, sh_d, bks[d], lang, source))
-        for rec in new_admits:
-            admitted.append(rec)
-            i = len(admitted) - 1
-            for bk in rec[2]:
-                adm_by_bucket.setdefault(bk, []).append(i)
-    admitted.sort(key=lambda r: r[0])
-    return pa.table(
-        {
-            "doc_id": pa.array([r[0] for r in admitted], type=pa.int64()),
-            "lang": pa.array([r[3] for r in admitted], type=pa.string()),
-            "source": pa.array([r[4] for r in admitted], type=pa.string()),
-        }
-    )
-
-
 def q_streaming_sessionize(spark, sf_dir):
     """Custom stateful streaming operator (applyInPandasWithState):
     gap-based sessionization over the events stream. Deterministic for a
@@ -3073,7 +1036,7 @@ FROM per_session GROUP BY user_id
 
 
 # ---------------------------------------------------------------------------
-# rows-only queries (not SQL-expressible: rasters / geodesics / media)
+# rows-only queries (not SQL-expressible: rasters / geodesics)
 # ---------------------------------------------------------------------------
 
 def _fixture_root() -> str:
@@ -3402,90 +1365,6 @@ def _build_viewshed_oracle(sf_dir: str):
             "visible_frac": pa.array(cols["visible_frac"],
                                      type=pa.float64()),
         }
-    )
-
-
-def q_multimodal_features(spark, sf_dir):
-    """Media spans -> fetch -> REAL decode/featurize over a MIXED
-    PNG+JPEG+WAV+Y4M corpus: all four codecs decode through the
-    pure-numpy codecs (png.py / jpeg.py / wav.py / y4m.py); payloads
-    with no in-container decoder degrade to 'unsupported'. Checked
-    against a single-process oracle that decodes the same payloads
-    without Spark."""
-    from opentopodata_spark.operators import multimodal
-
-    _ship_package(spark)
-    _, docs_path = _prepare_elevation_inputs(n_docs=1000)
-    documents = spark.read.parquet(docs_path)
-    spans = multimodal.media_spans(documents)
-    feats = multimodal.decode_and_featurize(
-        multimodal.fetch_media(spans, fetcher=multimodal.synthetic_media_payload),
-        decoder="real",
-    )
-    return feats.select(
-        "doc_id", "span_pos", "media_ref", "media_kind", "n_bytes", "width", "height"
-    )
-
-
-def q_ivf_topk(spark, sf_dir):
-    """IVF approximate nearest neighbors (scale path). Rows-only."""
-    e = _t(spark, sf_dir, "embeddings")
-    centroids = e.where(F.col("vec_id") % 50 == 0).select(
-        F.col("vec_id").alias("cell_id"), F.col("embedding").alias("centroid")
-    )
-    return emb.ivf_topk(
-        e, e.where(F.col("vec_id") % 100 == 0), centroids,
-        k=_ANN_K, n_probe=_ANN_NPROBE,
-    )
-
-
-_PQ_M, _PQ_DSUB, _PQ_KSUB = 4, 16, 16
-# shared by the ivf/ivfpq Spark queries AND their numpy oracle replays —
-# a tuning change must hit both sides or the driver compare mismatches
-_ANN_K, _ANN_NPROBE = 5, 2
-
-
-def _pq_codebooks(e):
-    """Deterministic data-sampled PQ codebooks (vec_id % 37, first 16 by
-    id): the driver query avoids distributed k-means so the single-process
-    oracle replays the exact floats; production trains with
-    emb.train_pq_codebooks."""
-    w = Window.orderBy("vec_id")
-    ranked = (
-        e.where(F.col("vec_id") % 37 == 0)
-        .orderBy("vec_id")
-        .limit(_PQ_KSUB)
-        .withColumn("code_id", (F.row_number().over(w) - 1).cast("int"))
-    )
-    parts = [
-        ranked.select(
-            F.lit(s).alias("sub_id"),
-            "code_id",
-            F.slice("embedding", s * _PQ_DSUB + 1, _PQ_DSUB).alias("codeword"),
-        )
-        for s in range(_PQ_M)
-    ]
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
-
-
-def q_ivfpq_topk(spark, sf_dir):
-    """IVF-PQ approximate nearest neighbors (the 100 TB ANN path: coarse
-    cells + m-int product-quantization codes, ADC scoring — raw vectors
-    never shuffle). Oracle: single-process numpy replay."""
-    e = _t(spark, sf_dir, "embeddings")
-    centroids = e.where(F.col("vec_id") % 50 == 0).select(
-        F.col("vec_id").alias("cell_id"), F.col("embedding").alias("centroid")
-    )
-    return emb.ivfpq_topk(
-        e,
-        e.where(F.col("vec_id") % 100 == 0),
-        centroids,
-        _pq_codebooks(e),
-        k=_ANN_K,
-        n_probe=_ANN_NPROBE,
     )
 
 
@@ -4765,104 +2644,6 @@ def _build_polygon_burn_oracle(sf_dir: str):
     })
 
 
-_SEMDEDUP_EPS = 0.10
-# exact-rational perturbation — identical doubles in Spark SQL and numpy
-_SEMDEDUP_FACTOR_SQL = (
-    "1.0D + 0.001D * (CAST((vec_id + i) % 7 AS DOUBLE) - 3.0D) / 3.0D"
-)
-
-
-def q_semantic_dedup(spark, sf_dir):
-    """SemDeDup (arXiv:2303.09540) over the embeddings table plus
-    synthesized near-duplicates (every 4th vector perturbed by an
-    exact-rational factor and re-id'd +100000): max-cosine assignment
-    to 20 fixed centroids (vec_id %% 25 == 0), then a farthest-from-
-    centroid-first greedy sweep per cluster dropping items within
-    cos > 1-eps of a kept member. One narrow assignment pass + ONE
-    groupBy(cell_id) shuffle; every cosine rounded to 6dp before any
-    comparison, so the independent per-pair numpy twin reproduces all
-    625 rows exactly."""
-    from opentopodata_spark.operators import embeddings as emb
-
-    _ship_package(spark)
-    base = _t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    pert = base.where(F.col("vec_id") % 4 == 0).select(
-        (F.col("vec_id") + 100000).alias("vec_id"),
-        F.expr(
-            "transform(embedding, (x, i) -> CAST(CAST(x AS DOUBLE) * "
-            f"({_SEMDEDUP_FACTOR_SQL}) AS FLOAT))"
-        ).alias("embedding"),
-    )
-    cents = base.where(F.col("vec_id") % 25 == 0).select(
-        (F.col("vec_id") / 25).cast("long").alias("cell_id"),
-        F.col("embedding").cast("array<double>").alias("centroid"),
-    )
-    return emb.semantic_dedup(
-        base.unionByName(pert), cents, eps=_SEMDEDUP_EPS
-    )
-
-
-def _build_semantic_dedup_oracle(sf_dir: str):
-    import numpy as np
-    import pyarrow as pa
-
-    t = _read_pq(sf_dir, "embeddings")
-    vid = t.column("vec_id").to_numpy()
-    V32 = np.asarray(t.column("embedding").to_pylist(),
-                     dtype=np.float32)
-    order = np.argsort(vid, kind="stable")
-    vid, V32 = vid[order], V32[order]
-    ids = [int(v) for v in vid]
-    vecs = [V32[i] for i in range(len(ids))]
-    for i, v in enumerate(vid):
-        if v % 4 == 0:
-            idx = np.arange(V32.shape[1], dtype=np.float64)
-            fac = 1.0 + 0.001 * ((float(v) + idx) % 7 - 3.0) / 3.0
-            ids.append(int(v) + 100000)
-            vecs.append(
-                (V32[i].astype(np.float64) * fac).astype(np.float32)
-            )
-    cmask = vid % 25 == 0
-    C = V32[cmask].astype(np.float64)
-    U = C / np.linalg.norm(C, axis=1, keepdims=True)
-    cent_ids = (vid[cmask] // 25).astype(np.int64)
-
-    items = []
-    for i, v_id in enumerate(ids):
-        v = vecs[i].astype(np.float64)
-        nv = float(np.sqrt(np.dot(v, v)))
-        cos = np.round(
-            np.array([float(np.dot(v, U[j])) for j in range(len(U))])
-            / max(nv, 1e-300), 6,
-        )
-        best = int(np.argmax(cos))
-        items.append((v_id, int(cent_ids[best]), float(cos[best]),
-                      v, nv))
-    thr = 1.0 - _SEMDEDUP_EPS
-    out = []
-    for cell in sorted({it[1] for it in items}):
-        mem = sorted((it for it in items if it[1] == cell),
-                     key=lambda it: (it[2], it[0]))
-        kept = []
-        for v_id, c, ccos, v, nv in mem:
-            dup = any(
-                float(np.round(np.dot(v, kv)
-                               / max(nv * knv, 1e-300), 6)) > thr
-                for kv, knv in kept
-            )
-            if not dup:
-                kept.append((v, nv))
-            out.append((v_id, c, ccos, not dup))
-    out.sort()
-    return pa.table({
-        "vec_id": pa.array([r[0] for r in out], type=pa.int64()),
-        "cell_id": pa.array([r[1] for r in out], type=pa.int64()),
-        "centroid_cos": pa.array([r[2] for r in out],
-                                 type=pa.float64()),
-        "keep": pa.array([r[3] for r in out], type=pa.bool_()),
-    })
-
-
 def _polyvec_tile_rows() -> list[tuple[int, int, str]]:
     """Deterministic 2x3 mosaic for the vector-polygonize contract:
     smooth banded terrain (low noise -> a few hundred regions, many
@@ -5178,7 +2959,7 @@ def _zonal_oracle_entry() -> dict[str, str]:
 # ---------------------------------------------------------------------------
 # precomputed single-process oracles for the non-SQL-expressible queries
 #
-# DuckDB cannot compute rasters / Karney geodesics / S2 Hilbert ids / IVF,
+# DuckDB cannot compute rasters / Karney geodesics / S2 Hilbert ids,
 # so for these the oracle is the repo's own SINGLE-PROCESS reference
 # implementation (numpy, no Spark): expected outputs are recomputed fresh
 # into a parquet at oracle_sql() time and the SQL just reads that file.
@@ -5404,258 +3185,6 @@ def _build_elevation_oracle(sf_dir: str):
                 type=pa.float64(),
             ),
             "dataset": pa.array(names, type=pa.string()),
-        }
-    )
-
-
-def _build_multimodal_oracle(sf_dir: str):
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from opentopodata_spark import jpeg, png, wav, y4m
-    from opentopodata_spark.operators.multimodal import synthetic_media_payload
-
-    _, docs_path = _prepare_elevation_inputs(n_docs=1000)
-    docs = pq.read_table(docs_path)
-    out = {k: [] for k in (
-        "doc_id", "span_pos", "media_ref", "media_kind", "n_bytes", "width",
-        "height",
-    )}
-    for doc_id, spans in zip(
-        docs.column("doc_id").to_pylist(), docs.column("spans").to_pylist()
-    ):
-        if not spans:
-            continue
-        for span_pos, span in enumerate(spans):
-            if span["kind"] != "media":
-                continue
-            ref = span["media_ref"]
-            b = synthetic_media_payload(ref)
-            # independent re-derivation of the decode result (no
-            # mapInPandas, no _decode_real): sniff + decode + shape
-            if png.is_png(b):
-                arr = png.decode_png(b)
-                kind, w, h = "image", arr.shape[1], arr.shape[0]
-            elif jpeg.is_jpeg(b):
-                arr = jpeg.decode_jpeg(b)
-                kind, w, h = "image", arr.shape[1], arr.shape[0]
-            elif wav.is_wav(b):
-                wav.decode_wav(b)  # must parse — audio decodes for real
-                kind, w, h = "audio", None, None
-            elif y4m.is_y4m(b):
-                _y, _u, _v, meta = y4m.decode_y4m(b)  # video decodes for real
-                kind, w, h = "video", meta.width, meta.height
-            else:
-                kind, w, h = "unsupported", None, None
-            out["doc_id"].append(doc_id)
-            out["span_pos"].append(span_pos)
-            out["media_ref"].append(ref)
-            out["media_kind"].append(kind)
-            out["n_bytes"].append(len(b))
-            out["width"].append(w)
-            out["height"].append(h)
-    return pa.table(
-        {
-            "doc_id": pa.array(out["doc_id"], type=pa.string()),
-            "span_pos": pa.array(out["span_pos"], type=pa.int32()),
-            "media_ref": pa.array(out["media_ref"], type=pa.string()),
-            "media_kind": pa.array(out["media_kind"], type=pa.string()),
-            "n_bytes": pa.array(out["n_bytes"], type=pa.int64()),
-            "width": pa.array(out["width"], type=pa.int32()),
-            "height": pa.array(out["height"], type=pa.int32()),
-        }
-    )
-
-
-def _fold_dot(a, b) -> float:
-    """Left-to-right double fold — the exact summation order of the Spark
-    aggregate(zip_with(...)) expression in operators/embeddings.dot."""
-    acc = 0.0
-    for x, y in zip(a, b):
-        acc += float(x) * float(y)
-    return acc
-
-
-def _round_half_up(x: float, digits: int) -> float:
-    import math
-
-    scale = 10.0**digits
-    return math.copysign(math.floor(abs(x) * scale + 0.5), x) / scale
-
-
-def _build_ivf_oracle(sf_dir: str):
-    import math
-
-    import numpy as np
-    import pyarrow as pa
-
-    t = _read_pq(sf_dir, "embeddings")
-    vec_id = t.column("vec_id").to_numpy()
-    embs = t.column("embedding").to_pylist()
-    V = np.asarray(embs, dtype=np.float64)
-    cent_mask = vec_id % 50 == 0
-    cent_ids = vec_id[cent_mask]
-    order = np.argsort(cent_ids, kind="stable")
-    cent_ids = cent_ids[order]
-    C = V[cent_mask][order]
-    unit = C / np.linalg.norm(C, axis=1, keepdims=True)
-
-    assign = cent_ids[np.argmax(V @ unit.T, axis=1)]
-    probe = np.argsort(-(V @ unit.T), axis=1, kind="stable")[:, :_ANN_NPROBE]
-
-    by_cell: dict[int, list[int]] = {}
-    for i, c in enumerate(assign):
-        by_cell.setdefault(int(c), []).append(i)
-
-    norms = [math.sqrt(_fold_dot(e, e)) for e in embs]
-    rows = []
-    for qi in np.nonzero(vec_id % 100 == 0)[0]:
-        qid = int(vec_id[qi])
-        cands = []
-        for cell in cent_ids[probe[qi]]:
-            for ci in by_cell.get(int(cell), []):
-                nid = int(vec_id[ci])
-                if nid == qid:
-                    continue
-                cos = _fold_dot(embs[qi], embs[ci]) / (norms[qi] * norms[ci])
-                cands.append((nid, _round_half_up(cos, 6)))
-        cands.sort(key=lambda t: (-t[1], t[0]))
-        for rank, (nid, cos) in enumerate(cands[:_ANN_K], start=1):
-            rows.append((qid, nid, rank, cos))
-    return pa.table(
-        {
-            "query_id": pa.array([r[0] for r in rows], type=pa.int64()),
-            "neighbor_id": pa.array([r[1] for r in rows], type=pa.int64()),
-            "rank": pa.array([r[2] for r in rows], type=pa.int32()),
-            "cos_sim": pa.array([r[3] for r in rows], type=pa.float64()),
-        }
-    )
-
-
-def _build_ivfpq_oracle(sf_dir: str):
-    """Single-process replay of q_ivfpq_topk with the IDENTICAL numpy
-    expressions (einsum over the contiguous dsub axis, argmin/argmax
-    first-wins ties) so doubles match bitwise before the final round."""
-    import numpy as np
-    import pyarrow as pa
-
-    m, dsub, ksub = _PQ_M, _PQ_DSUB, _PQ_KSUB
-    t = _read_pq(sf_dir, "embeddings")
-    vec_id = t.column("vec_id").to_numpy()
-    V = np.ascontiguousarray(
-        np.asarray(t.column("embedding").to_pylist(), dtype=np.float64)
-    )
-
-    cent_mask = vec_id % 50 == 0
-    cent_ids = vec_id[cent_mask]
-    order = np.argsort(cent_ids, kind="stable")
-    cent_ids = cent_ids[order]
-    C = V[cent_mask][order]
-    unit = C / np.linalg.norm(C, axis=1, keepdims=True)
-
-    cb_rows = np.sort(vec_id[vec_id % 37 == 0])[:ksub]
-    ksub_eff = len(cb_rows)
-    idx_of = {int(v): i for i, v in enumerate(vec_id)}
-    cb = np.ascontiguousarray(
-        np.stack(
-            [
-                np.stack([V[idx_of[int(r)]][s * dsub:(s + 1) * dsub]
-                          for r in cb_rows])
-                for s in range(m)
-            ]
-        )
-    )  # (m, ksub_eff, dsub)
-    cw_sq = (cb**2).sum(axis=2)
-
-    assign = cent_ids[np.argmax(V @ unit.T, axis=1)]
-    Vs = V.reshape(len(V), m, dsub)
-    d2 = cw_sq[None, :, :] - 2.0 * np.einsum("bmd,mkd->bmk", Vs, cb)
-    codes = np.argmin(d2, axis=2).astype(np.int64)  # (n, m)
-
-    probe = np.argsort(-(V @ unit.T), axis=1, kind="stable")[:, :_ANN_NPROBE]
-    by_cell: dict[int, list[int]] = {}
-    for i, c in enumerate(assign):
-        by_cell.setdefault(int(c), []).append(i)
-
-    rows = []
-    for qi in np.nonzero(vec_id % 100 == 0)[0]:
-        qid = int(vec_id[qi])
-        qv = Vs[qi:qi + 1]  # (1, m, dsub)
-        lut = np.einsum("bmd,mkd->bmk", qv, cb)[0]  # (m, ksub_eff)
-        cands = []
-        for cell in cent_ids[probe[qi]]:
-            for ci in by_cell.get(int(cell), []):
-                nid = int(vec_id[ci])
-                if nid == qid:
-                    continue
-                sim = float(
-                    np.take_along_axis(
-                        lut[None], codes[ci][None, :, None], axis=2
-                    )[0, :, 0].sum()
-                )
-                cands.append((nid, _round_half_up(sim, 6)))
-        cands.sort(key=lambda t: (-t[1], t[0]))
-        for rank, (nid, sim) in enumerate(cands[:_ANN_K], start=1):
-            rows.append((qid, nid, rank, sim))
-    return pa.table(
-        {
-            "query_id": pa.array([r[0] for r in rows], type=pa.int64()),
-            "neighbor_id": pa.array([r[1] for r in rows], type=pa.int64()),
-            "rank": pa.array([r[2] for r in rows], type=pa.int32()),
-            "approx_sim": pa.array([r[3] for r in rows], type=pa.float64()),
-        }
-    )
-
-
-def _build_quality_classifier_oracle(sf_dir: str):
-    """Single-process twin of q_quality_classifier: identical text_embed
-    integers (md5 15-hex prefix, sign bit 55, mod-dim bucket, exact-int
-    L2 norm, float32 cast), identical GD schedule (zeros init, 20 full-
-    batch iters, lr 1.0). Distributed-vs-single sum order differs only
-    in ulps, absorbed by the 3-decimal rounding both sides apply."""
-    import hashlib
-    import math
-    from decimal import ROUND_HALF_UP, Decimal
-
-    import numpy as np
-    import pyarrow as pa
-
-    tbl = _read_pq(sf_dir, "documents")
-    ids = tbl.column("doc_id").to_pylist()
-    texts = tbl.column("text").to_pylist()
-    langs = tbl.column("lang").to_pylist()
-    dim = 32
-    X = np.zeros((len(ids), dim), dtype=np.float64)
-    for row, t in enumerate(texts):
-        t = t or ""
-        w = np.zeros(dim, dtype=np.int64)
-        for i in range(max(len(t) - 2, 0)):
-            h = int(hashlib.md5(t[i : i + 3].encode("utf-8")).hexdigest()[:15], 16)
-            w[h % dim] += 1 if (h >> 55) & 1 else -1
-        ss = math.sqrt(float((w.astype(np.float64) ** 2).sum()))  # exact ints
-        if ss > 0:
-            X[row] = (w / ss).astype(np.float32).astype(np.float64)
-    y = np.array([1.0 if l == "en" else 0.0 for l in langs])
-    wgt = np.zeros(dim, dtype=np.float64)
-    b = 0.0
-    for _ in range(20):
-        p = 1.0 / (1.0 + np.exp(-(X @ wgt + b)))
-        r = p - y
-        wgt = wgt - (r @ X) / len(y)
-        b = b - r.sum() / len(y)
-    p = 1.0 / (1.0 + np.exp(-(X @ wgt + b)))
-    # Spark round() = shortest-repr BigDecimal HALF_UP (scala BigDecimal
-    # valueOf): python repr() is the same shortest round-trip string
-    prob = [
-        float(Decimal(repr(v)).quantize(Decimal("0.001"), ROUND_HALF_UP))
-        for v in p
-    ]
-    return pa.table(
-        {
-            "doc_id": pa.array([int(i) for i in ids], type=pa.int64()),
-            "label": pa.array([int(v) for v in y], type=pa.int64()),
-            "prob": pa.array(prob, type=pa.float64()),
-            "pred": pa.array([int(v > 0.5) for v in p], type=pa.int64()),
         }
     )
 
@@ -6174,340 +3703,6 @@ def _build_proj4_elevation_oracle(sf_dir: str):
     })
 
 
-def _imagehash_fixture() -> str:
-    """Planted perceptual near-dup corpus: 18 base images, each with a
-    lightly-perturbed twin (re-encode/edit simulation), plus 24
-    unrelated images — PNG payloads plus SEQUENTIAL-twin pHash values
-    (operators/imagehash.{p,d}hash_sequential: per-coefficient cosine
-    loops, per-cell resize loops — different bookkeeping from the
-    distributed vectorized path on purpose)."""
-    import numpy as np
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from opentopodata_spark import png as _png
-    from opentopodata_spark.operators import imagehash as _ih
-
-    root = os.path.join(_fixture_root(), "imagehash_r5")
-    out = os.path.join(root, "images.parquet")
-    if os.path.exists(out):
-        return out
-    os.makedirs(root, exist_ok=True)
-    rng = np.random.RandomState(29)
-    refs, payloads, pseq, dseq = [], [], [], []
-
-    def add(ref, img):
-        refs.append(ref)
-        payloads.append(_png.encode_png(img))
-        pseq.append(_ih._to_signed(_ih.phash_sequential(img)))
-        dseq.append(_ih._to_signed(_ih.dhash_sequential(img)))
-
-    yy, xx = np.mgrid[0:36, 0:48]
-    for i in range(18):
-        base = (
-            120.0 + 60.0 * np.sin(xx / (3.0 + i) + i)
-            + 40.0 * np.cos(yy / (2.0 + 0.5 * i))
-            + rng.uniform(-6, 6, (36, 48))
-        )
-        img = np.clip(base, 0, 255).astype(np.uint8)
-        add(f"img{i:03d}", img)
-        # re-encode-style twin: +-1 noise on a quarter of the pixels
-        mask = rng.rand(36, 48) < 0.25
-        twin = np.clip(
-            img.astype(np.int32)
-            + mask * rng.choice([-1, 1], (36, 48)), 0, 255
-        ).astype(np.uint8)
-        add(f"img{i:03d}t", twin)
-    for i in range(24):
-        img = np.clip(
-            rng.uniform(0, 255, (36, 48))
-            + 80 * np.sin(xx * (0.1 + 0.05 * i)), 0, 255
-        ).astype(np.uint8)
-        add(f"rnd{i:03d}", img)
-    tmp = out + ".tmp"
-    pq.write_table(pa.table({
-        "media_ref": pa.array(refs),
-        "payload": pa.array(payloads, type=pa.binary()),
-        "phash_seq": pa.array(pseq, type=pa.int64()),
-        "dhash_seq": pa.array(dseq, type=pa.int64()),
-    }), tmp)
-    os.replace(tmp, out)
-    return out
-
-
-def q_image_near_dups(spark, sf_dir):
-    """Perceptual image near-dup as a CONTRACT query: decode the
-    planted PNG corpus with the pure-numpy codecs, compute pHash in
-    the vectorized Arrow path, find all pairs within Hamming 6 via the
-    EXACT pigeonhole band join. The oracle brute-forces the same pairs
-    in SQL from the fixture's sequential-twin hashes — a hash match
-    proves (a) vectorized pHash == loop-built pHash bit-for-bit and
-    (b) the banded join is exact, not approximate."""
-    from opentopodata_spark.operators import imagehash as _ih
-
-    _ship_package(spark)
-    imgs = spark.read.parquet(_imagehash_fixture())
-    hashed = _ih.hash_images(imgs, id_col="media_ref")
-    return _ih.near_dup_pairs(
-        hashed, id_col="media_ref", hash_col="phash",
-        max_distance=7, n_bands=8,
-    )
-
-
-def _image_near_dups_sql() -> str:
-    path = _imagehash_fixture()
-    return f"""
-SELECT a.media_ref AS id_a, b.media_ref AS id_b,
-       CAST(bit_count(xor(a.phash_seq, b.phash_seq)) AS BIGINT)
-         AS distance
-FROM read_parquet('{path}') a
-JOIN read_parquet('{path}') b ON a.media_ref < b.media_ref
-WHERE bit_count(xor(a.phash_seq, b.phash_seq)) <= 7
-"""
-
-
-def _audiohash_fixture() -> str:
-    """Planted perceptual audio near-dup corpus: 14 base clips, each
-    with a lightly-noised twin (re-encode simulation), plus 12
-    unrelated clips — 16-bit PCM WAV payloads plus SEQUENTIAL-twin
-    fingerprints (audiohash_sequential: DFT-matrix spectra, per-bit
-    loops — different bookkeeping from the distributed rFFT path)."""
-    import numpy as np
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from opentopodata_spark import wav as _wav
-    from opentopodata_spark.operators import audiohash as _ah
-    from opentopodata_spark.operators.imagehash import _to_signed
-
-    root = os.path.join(_fixture_root(), "audiohash_r5")
-    out = os.path.join(root, "clips.parquet")
-    if os.path.exists(out):
-        return out
-    os.makedirs(root, exist_ok=True)
-    rng = np.random.RandomState(41)
-    t = np.arange(8000) / 8000.0
-    refs, payloads, seqs = [], [], []
-
-    def add(ref, clip):
-        payload = _wav.encode_wav(clip, 8000)
-        # fingerprint what the READER will see (16-bit quantization)
-        decoded, _rate = _wav.decode_wav(payload)
-        refs.append(ref)
-        payloads.append(payload)
-        seqs.append(_to_signed(_ah.audiohash_sequential(decoded)))
-
-    for i in range(14):
-        clip = (0.5 * np.sin(2 * np.pi * (180 + 73 * i) * t)
-                + 0.3 * np.sin(2 * np.pi * (850 + 141 * i) * t + i)
-                + 0.05 * rng.randn(8000))
-        add(f"clip{i:02d}", clip)
-        add(f"clip{i:02d}t",
-            (clip + 0.005 * rng.randn(8000)) * 0.7)  # noise + gain
-    for i in range(12):
-        add(f"noise{i:02d}",
-            0.4 * np.sin(2 * np.pi * (150 + 97 * i) * t)
-            + 0.2 * np.sin(2 * np.pi * (1100 + 211 * i) * t)
-            + 0.08 * rng.randn(8000))
-    tmp = out + ".tmp"
-    pq.write_table(pa.table({
-        "media_ref": pa.array(refs),
-        "payload": pa.array(payloads, type=pa.binary()),
-        "ahash_seq": pa.array(seqs, type=pa.int64()),
-    }), tmp)
-    os.replace(tmp, out)
-    return out
-
-
-def q_audio_near_dups(spark, sf_dir):
-    """Perceptual AUDIO near-dup as a CONTRACT query: decode the
-    planted WAV corpus with the pure-numpy PCM reader, compute the
-    spectral-band fingerprint in the vectorized rFFT path, find all
-    pairs within Hamming 7 via the exact pigeonhole band join. The
-    oracle brute-forces the same pairs in SQL from the fixture's
-    DFT-matrix sequential-twin fingerprints — a hash match proves
-    rFFT bits == DFT-matrix bits AND join exactness."""
-    from opentopodata_spark.operators import audiohash as _ah
-
-    _ship_package(spark)
-    clips = spark.read.parquet(_audiohash_fixture())
-    hashed = _ah.hash_audio(clips, id_col="media_ref")
-    return _ah.audio_near_dup_pairs(hashed, max_distance=7, n_bands=8)
-
-
-def _audio_near_dups_sql() -> str:
-    path = _audiohash_fixture()
-    return f"""
-SELECT a.media_ref AS id_a, b.media_ref AS id_b,
-       CAST(bit_count(xor(a.ahash_seq, b.ahash_seq)) AS BIGINT)
-         AS distance
-FROM read_parquet('{path}') a
-JOIN read_parquet('{path}') b ON a.media_ref < b.media_ref
-WHERE bit_count(xor(a.ahash_seq, b.ahash_seq)) <= 7
-"""
-
-
-def _videohash_fixture() -> str:
-    """Planted perceptual video near-dup corpus: 10 base clips with
-    lightly-noised twins + 10 unrelated clips — Y4M payloads plus
-    SEQUENTIAL-twin fingerprints (videohash_sequential: frame-loop
-    accumulation + loop-built pHash)."""
-    import numpy as np
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from opentopodata_spark import y4m as _y4m
-    from opentopodata_spark.operators import videohash as _vh
-    from opentopodata_spark.operators.imagehash import _to_signed
-
-    root = os.path.join(_fixture_root(), "videohash_r5")
-    out = os.path.join(root, "clips.parquet")
-    if os.path.exists(out):
-        return out
-    os.makedirs(root, exist_ok=True)
-    yy, xx = np.mgrid[0:36, 0:48]
-    refs, payloads, seqs = [], [], []
-
-    def add(ref, frames):
-        refs.append(ref)
-        payloads.append(_y4m.encode_y4m(frames))
-        seqs.append(_to_signed(_vh.videohash_sequential(frames)))
-
-    def clip(i, seed):
-        r = np.random.RandomState(500 + seed)
-        frames = []
-        for f in range(8):
-            img = (120 + 60 * np.sin(xx / (3.0 + i) + i + 0.3 * f)
-                   + 40 * np.cos(yy / (2.0 + 0.5 * i) - 0.2 * f)
-                   + 5.0 * r.randn(36, 48))
-            frames.append(np.clip(img, 0, 255))
-        return np.array(frames).astype(np.uint8)
-
-    rng = np.random.RandomState(77)
-    for i in range(10):
-        c = clip(i, seed=i)
-        add(f"vid{i:02d}", c)
-        tw = np.clip(
-            c.astype(np.int32) + rng.choice([-1, 0, 1], c.shape),
-            0, 255).astype(np.uint8)
-        add(f"vid{i:02d}t", tw)
-    for i in range(10):
-        add(f"other{i:02d}", clip(i + 20, seed=i + 40))
-    tmp = out + ".tmp"
-    pq.write_table(pa.table({
-        "media_ref": pa.array(refs),
-        "payload": pa.array(payloads, type=pa.binary()),
-        "vhash_seq": pa.array(seqs, type=pa.int64()),
-    }), tmp)
-    os.replace(tmp, out)
-    return out
-
-
-def q_video_near_dups(spark, sf_dir):
-    """Perceptual VIDEO near-dup as a CONTRACT query: decode the
-    planted Y4M corpus with the pure-numpy reader, fingerprint the
-    temporal-mean luma frame in the vectorized path, find all pairs
-    within Hamming 7 via the exact pigeonhole band join; the oracle
-    brute-forces the sequential-twin fingerprints in SQL."""
-    from opentopodata_spark.operators import videohash as _vh
-
-    _ship_package(spark)
-    clips = spark.read.parquet(_videohash_fixture())
-    hashed = _vh.hash_video(clips, id_col="media_ref")
-    return _vh.video_near_dup_pairs(hashed, max_distance=7, n_bands=8)
-
-
-def _video_near_dups_sql() -> str:
-    path = _videohash_fixture()
-    return f"""
-SELECT a.media_ref AS id_a, b.media_ref AS id_b,
-       CAST(bit_count(xor(a.vhash_seq, b.vhash_seq)) AS BIGINT)
-         AS distance
-FROM read_parquet('{path}') a
-JOIN read_parquet('{path}') b ON a.media_ref < b.media_ref
-WHERE bit_count(xor(a.vhash_seq, b.vhash_seq)) <= 7
-"""
-
-
-_IMG_WAVE_SQL = (
-    "CASE WHEN substr(md5(media_ref),1,1) < '6' THEN 0 "
-    "WHEN substr(md5(media_ref),1,1) < 'b' THEN 1 ELSE 2 END"
-)
-
-
-def q_streaming_image_near_dup(spark, sf_dir):
-    """Streaming incremental PERCEPTUAL image dedup
-    (streaming.run_image_near_dup_stream): the planted PNG corpus
-    arrives in three md5-split waves, each decoded + pHashed,
-    deduplicated within itself (band pairs -> components -> keep min),
-    then Hamming-probed against the accumulated admitted band index —
-    verification is pure integer metadata (the index carries the
-    hashes), no payload re-read. The fixture's twin geometry makes
-    every near-dup cluster a PAIR (inter-base distance > 2x the
-    threshold), so the oracle replays the whole admission recursion in
-    layered SQL over the sequential-twin hashes."""
-    import shutil
-    import tempfile
-
-    from opentopodata_spark import streaming as stx
-
-    _ship_package(spark)
-    imgs = spark.read.parquet(_imagehash_fixture()).select(
-        "media_ref", "payload",
-        F.expr(_IMG_WAVE_SQL).cast("int").alias("_w"),
-    )
-    work = tempfile.mkdtemp(prefix="otds_imgstream_q_")
-    try:
-        for wave in range(3):
-            imgs.where(F.col("_w") == wave).drop("_w").coalesce(
-                1
-            ).write.mode("overwrite").parquet(f"{work}/in/wave{wave}")
-            q = stx.run_image_near_dup_stream(
-                stx.stream_media(spark, f"{work}/in/*"),
-                f"{work}/out", f"{work}/ckpt", f"{work}/index",
-                max_distance=7, n_bands=8,
-            )
-            q.awaitTermination()
-        out = spark.read.parquet(f"{work}/out").select(
-            "media_ref", "phash")
-        out = out.cache()
-        out.count()  # materialize before the temp dir goes away
-        return out
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
-
-
-def _streaming_image_near_dup_sql() -> str:
-    path = _imagehash_fixture()
-    d = 7
-    return f"""
-WITH imgs AS (
-  SELECT media_ref, phash_seq AS h, {_IMG_WAVE_SQL} AS w
-  FROM read_parquet('{path}')),
-c0 AS (SELECT * FROM imgs a WHERE a.w = 0 AND NOT EXISTS (
-         SELECT 1 FROM imgs b WHERE b.w = 0
-           AND b.media_ref < a.media_ref
-           AND bit_count(xor(a.h, b.h)) <= {d})),
-a0 AS (SELECT * FROM c0),
-c1 AS (SELECT * FROM imgs a WHERE a.w = 1 AND NOT EXISTS (
-         SELECT 1 FROM imgs b WHERE b.w = 1
-           AND b.media_ref < a.media_ref
-           AND bit_count(xor(a.h, b.h)) <= {d})),
-a1 AS (SELECT * FROM c1 x WHERE NOT EXISTS (
-         SELECT 1 FROM a0 o WHERE bit_count(xor(x.h, o.h)) <= {d})),
-c2 AS (SELECT * FROM imgs a WHERE a.w = 2 AND NOT EXISTS (
-         SELECT 1 FROM imgs b WHERE b.w = 2
-           AND b.media_ref < a.media_ref
-           AND bit_count(xor(a.h, b.h)) <= {d})),
-a2 AS (SELECT * FROM c2 x WHERE NOT EXISTS (
-         SELECT 1 FROM (SELECT h FROM a0 UNION ALL SELECT h FROM a1) o
-         WHERE bit_count(xor(x.h, o.h)) <= {d}))
-SELECT media_ref, h AS phash FROM a0
-UNION ALL SELECT media_ref, h FROM a1
-UNION ALL SELECT media_ref, h FROM a2
-"""
-
-
 # UTM 33N spelled as WKT2 (ISO 19162) — the fourth CRS spelling the
 # reference accepts (pyproj.CRS.from_user_input at
 # /root/reference/opentopodata/utils.py:39-46 takes WKT2 the same as
@@ -6693,16 +3888,12 @@ _PRECOMPUTED_BUILDERS = {
     "remote_elevation": _build_remote_elevation_oracle,
     "proj4_elevation": _build_proj4_elevation_oracle,
     "wkt2_elevation": _build_wkt2_elevation_oracle,
-    "quality_classifier": _build_quality_classifier_oracle,
     "s2_cells": _build_s2_oracle,
     "geodesic_paths": _build_geodesic_oracle,
     "elevation_e2e": _build_elevation_oracle,
     "elevation_profile": _build_profile_oracle,
     "line_of_sight": _build_los_oracle,
     "viewshed": _build_viewshed_oracle,
-    "multimodal_features": _build_multimodal_oracle,
-    "ivf_topk": _build_ivf_oracle,
-    "ivfpq_topk": _build_ivfpq_oracle,
     "terrain_slope": _build_terrain_oracle,
     "flow_accumulation": _build_flow_acc_oracle,
     "overview_tiles": _build_overview_oracle,
@@ -6716,12 +3907,9 @@ _PRECOMPUTED_BUILDERS = {
     "raster_colorrelief": _build_raster_colorrelief_oracle,
     "raster_grid": _build_raster_grid_oracle,
     "polygon_burn": _build_polygon_burn_oracle,
-    "semantic_dedup": _build_semantic_dedup_oracle,
     "region_polygons": _build_region_polygons_oracle,
     "contour_lines": _build_contour_oracle,
     "raster_diff": _build_raster_diff_oracle,
-    "streaming_near_dup": _build_near_dup_stream_oracle,
-    "chunk_documents_bpe": _build_bpe_chunk_oracle,
 }
 
 
@@ -7339,11 +4527,14 @@ ed AS (
         OR ((b.x-a.x)*(p.y-a.y)-(b.y-a.y)*(p.x-a.x) = 0
             AND NOT (p.x BETWEEN least(a.x,b.x) AND greatest(a.x,b.x)
                  AND p.y BETWEEN least(a.y,b.y) AND greatest(a.y,b.y)))))),
-agg AS (SELECT grp, count(*) AS hull_n, SUM(ax*byy - bx*ay) AS area2
-        FROM ed GROUP BY grp)
+v AS (SELECT DISTINCT grp, ax, ay FROM ed),
+-- hull_n counts vertices, not directed edges: an all-collinear group
+-- has both directions of every edge
+n AS (SELECT grp, count(*) AS hull_n FROM v GROUP BY grp),
+agg AS (SELECT grp, SUM(ax*byy - bx*ay) AS area2 FROM ed GROUP BY grp)
 SELECT e.grp, CAST(e.ax AS DOUBLE) AS x, CAST(e.ay AS DOUBLE) AS y,
-       CAST(g.hull_n AS INT) AS hull_n, CAST(g.area2 AS DOUBLE) AS hull_area2
-FROM (SELECT DISTINCT grp, ax, ay FROM ed) e JOIN agg g USING (grp)
+       CAST(n.hull_n AS INT) AS hull_n, CAST(g.area2 AS DOUBLE) AS hull_area2
+FROM v e JOIN n USING (grp) JOIN agg g USING (grp)
 """
 
 
@@ -7502,35 +4693,27 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    # Registration order matters: the round driver verifies roughly the
-    # FIRST 50 entries against their oracles each round. Discipline:
-    #   1. queries never driver-checked (or changed this round) go first,
-    #   2. then queries whose last green row is a round old (stale),
-    #   3. then the most recently re-verified ones, which rotate out.
+    # Registration order matters: a checker that verifies only the first
+    # ~50 entries against their oracles reaches these first. Discipline:
+    #   1. queries never checked (or whose module changed) go first,
+    #   2. then queries whose last green check is a round old (stale),
+    #   3. then the most recently re-verified ones.
     return {
         # -- new in r5 (inserted here as they land) --
         "iceberg_documents": q_iceberg_documents,
-        "image_near_dups": q_image_near_dups,
-        "audio_near_dups": q_audio_near_dups,
-        "video_near_dups": q_video_near_dups,
-        "streaming_image_near_dup": q_streaming_image_near_dup,
-        "exact_substr": q_exact_substr,
         "wkt2_elevation": q_wkt2_elevation,
         # -- modules CHANGED in r5 (ADVICE fixes: topk null groups/ties,
-        #    quantiles null-safe probe, dissolve cancelled-key row, knn
-        #    broadcast cap) — re-verify even though green in r4 --
+        #    dissolve cancelled-key row, knn broadcast cap) — re-verify
+        #    even though green in r4 --
         "topk_per_group": q_topk_per_group,
-        "exact_quantiles": q_exact_quantiles,
         "dissolve_regions": q_dissolve_regions,
         "knn_topk": q_knn_topk,
         "range_join": q_range_join,
-        # -- last green in r2 (VERDICT r4 Next #1): the 14 stale rows,
-        #    streaming_* first (streaming.py changed in r4 after their
-        #    last driver check) --
+        # -- last green in r2 (VERDICT r4 Next #1): the stale rows,
+        #    streaming_* first (streaming.py changed after their last
+        #    check) --
         "streaming_rollup": q_streaming_rollup,
         "streaming_sessionize": q_streaming_sessionize,
-        "streaming_dedup": q_streaming_dedup,
-        "streaming_near_dup": q_streaming_near_dup,
         "streaming_overview": q_streaming_overview,
         "terrain_slope": q_terrain_slope,
         "zonal_stats": q_zonal_stats,
@@ -7546,55 +4729,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "tile_floor_keys": q_tile_floor_keys,
         "bbox_coverage": q_bbox_coverage,
         "priority_coalesce": q_priority_coalesce,
-        "exact_dedup": q_exact_dedup,
-        "minhash_signatures": q_minhash,
-        "lsh_candidate_pairs": q_lsh_pairs,
-        "ngram_jaccard": q_jaccard,
-        "near_dup_verified": q_near_dup_verified,
-        "dedup_clusters": q_dedup_clusters,
-        "dedup_corpus": q_dedup_corpus,
-        "bm25_search": q_bm25_search,
-        "contamination_check": q_contamination_check,
-        "pii_scrub": q_pii_scrub,
-        "html_extract": q_html_extract,
-        "crawl_pipeline": q_crawl_pipeline,
-        "text_normalize": q_text_normalize,
-        "corpus_stats": q_corpus_stats,
-        "corpus_stats_approx": q_corpus_stats_approx,
-        "chunk_documents": q_chunk_documents,
-        "chunk_documents_bpe": q_chunk_documents_bpe,
-        "pack_sequences": q_pack_sequences,
-        "simhash": q_simhash,
-        "token_stats": q_token_stats,
-        "ngram_lm_ppl": q_ngram_lm_ppl,
-        "collocations": q_collocations,
-        "url_normalize": q_url_normalize,
-        "domain_stats": q_domain_stats,
-        "quality_score": q_quality,
-        "lang_id": q_lang_id,
-        "fingerprint": q_fingerprint,
-        "repetition_stats": q_repetition_stats,
-        "repeated_ngrams": q_repeated_ngrams,
-        "span_dedup": q_span_dedup,
-        # -- ~here the ~50-query driver window runs out; r3 cohort
-        #    continues (these rotate to the head next round) --
-        "corpus_sample": q_corpus_sample,
-        "mixture_sample": q_mixture_sample,
-        "stratified_take": q_stratified_take,
+        # -- r3 cohort continues --
         "slippy_tiles": q_slippy_tiles,
         "tile_pyramid": q_tile_pyramid,
-        "heavy_hitters": q_heavy_hitters,
-        "streaming_heavy_hitters": q_streaming_heavy_hitters,
-        "text_embed": q_text_embed,
-        "quality_classifier": q_quality_classifier,
-        "embedding_topk": q_embedding_topk,
-        "embedding_lsh_buckets": q_emb_lsh_buckets,
-        "embedding_near_dups": q_emb_near_dups,
         "events_rollup": q_events_rollup,
         "asof_join": q_asof_join,
         # -- green in CORRECTNESS_r04; rotated out of the window --
-        "hll_distinct": q_hll_distinct,
-        "streaming_hll": q_streaming_hll,
         "buffer_pip": q_buffer_pip,
         "raster_stats": q_raster_stats,
         "interval_coverage": q_interval_coverage,
@@ -7609,11 +4749,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "line_simplify": q_line_simplify,
         "vector_ingest": q_vector_ingest,
         "interval_join": q_interval_join,
-        "host_pagerank": q_host_pagerank,
         "raster_grid": q_raster_grid,
         "polygon_burn": q_polygon_burn,
-        "semantic_dedup": q_semantic_dedup,
-        "dsir_select": q_dsir_select,
         "raster_polygonize": q_raster_polygonize,
         "raster_sieve": q_raster_sieve,
         "raster_fillnodata": q_raster_fillnodata,
@@ -7636,48 +4773,20 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "viewshed": q_viewshed,
         "flow_accumulation": q_flow_accumulation,
         "elevation_e2e": q_elevation_e2e,
-        "multimodal_features": q_multimodal_features,
         "geodesic_paths": q_geodesic_paths,
-        "ivf_topk": q_ivf_topk,
-        "ivfpq_topk": q_ivfpq_topk,
     }
 
 
 def oracle_sql() -> dict[str, str]:
     return {
         "iceberg_documents": _Q_ICEBERG_DOCS_SQL,
-        "image_near_dups": _image_near_dups_sql(),
-        "audio_near_dups": _audio_near_dups_sql(),
-        "video_near_dups": _video_near_dups_sql(),
-        "streaming_image_near_dup": _streaming_image_near_dup_sql(),
-        "exact_substr": _Q_EXACT_SUBSTR_SQL,
         "tile_floor_keys": _Q_TILE_FLOOR_SQL,
         "bbox_coverage": _Q_BBOX_SQL,
         "priority_coalesce": _Q_PRIORITY_SQL,
         "knn_topk": _Q_KNN_SQL,
         "range_join": _Q_RANGE_SQL,
         "coord_extract": _Q_COORD_SQL,
-        "exact_dedup": _Q_EXACT_DEDUP_SQL,
-        "minhash_signatures": _minhash_sql(),
-        "lsh_candidate_pairs": _lsh_pairs_sql(),
-        "ngram_jaccard": _Q_JACCARD_SQL,
         "pip_coverage": _pip_sql(),
-        "near_dup_verified": _Q_NEAR_DUP_SQL,
-        "dedup_clusters": _Q_DEDUP_CLUSTERS_SQL,
-        "dedup_corpus": _Q_DEDUP_CORPUS_SQL,
-        "bm25_search": _bm25_sql(),
-        "contamination_check": _contamination_sql(),
-        "pii_scrub": _pii_scrub_sql(),
-        "html_extract": _html_extract_sql(),
-        "crawl_pipeline": _crawl_pipeline_sql(),
-        "text_normalize": _Q_TEXT_NORMALIZE_SQL,
-        "corpus_stats": _Q_CORPUS_STATS_SQL,
-        "corpus_stats_approx": _Q_CORPUS_STATS_APPROX_SQL,
-        "chunk_documents": _Q_CHUNK_SQL,
-        "pack_sequences": _Q_PACK_SQL,
-        "simhash": _simhash_sql(),
-        "token_stats": _Q_TOKEN_SQL,
-        "dsir_select": _dsir_sql(),
         "overlay_join": _Q_OVERLAY_SQL,
         "line_overlay_join": _Q_LINE_OVERLAY_SQL,
         "sphere_metrics": _Q_SPHERE_METRICS_SQL,
@@ -7687,40 +4796,17 @@ def oracle_sql() -> dict[str, str]:
         "convex_hull": _Q_HULL_SQL,
         "line_simplify": _Q_SIMPLIFY_SQL,
         "vector_ingest": _vector_ingest_sql(),
-        "host_pagerank": _pagerank_sql(),
         "interval_join": _Q_INTERVAL_SQL,
-        "ngram_lm_ppl": _Q_LM_SQL,
-        "collocations": _Q_COLLOC_SQL,
-        "url_normalize": _Q_URL_NORM_SQL,
-        "domain_stats": _Q_DOMAIN_STATS_SQL,
-        "quality_score": _quality_sql(),
-        "lang_id": _lang_id_sql(),
-        "fingerprint": _Q_FINGERPRINT_SQL,
-        "repetition_stats": _Q_REPETITION_SQL,
-        "repeated_ngrams": _Q_REPEATED_SQL,
-        "span_dedup": _Q_SPAN_DEDUP_SQL,
-        "corpus_sample": _corpus_sample_sql(),
-        "mixture_sample": _Q_MIXTURE_SQL,
-        "stratified_take": _Q_STRATIFIED_TAKE_SQL,
         "slippy_tiles": _slippy_sql(),
         "tile_pyramid": _tile_pyramid_sql(),
-        "heavy_hitters": _Q_HEAVY_HITTERS_SQL,
-        "streaming_heavy_hitters": _Q_STREAMING_HH_SQL,
-        "hll_distinct": _Q_HLL_SQL,
-        "streaming_hll": _Q_STREAMING_HLL_SQL,
         "buffer_pip": _buffer_pip_sql(),
         "dissolve_regions": _dissolve_sql(),
-        "exact_quantiles": _quantiles_sql(),
         # raster_stats shares the zonal pixel-table build; degrade to the
         # rows-only check rather than failing the whole registry
         **_raster_stats_oracle_entry(),
         "interval_coverage": _Q_INTERVAL_COVERAGE_SQL,
         "topk_per_group": _Q_TOPK_SQL,
         **_zonal_majority_oracle_entry(),
-        "text_embed": _Q_TEXT_EMBED_SQL,
-        "embedding_topk": _Q_EMB_TOPK_SQL,
-        "embedding_lsh_buckets": _emb_lsh_sql(),
-        "embedding_near_dups": _emb_near_dups_sql(),
         "events_rollup": _Q_EVENTS_SQL,
         "asof_join": _Q_ASOF_SQL,
         "funnel": _Q_FUNNEL_SQL,
@@ -7729,12 +4815,11 @@ def oracle_sql() -> dict[str, str]:
         "geofence_transitions": _geofence_transitions_sql(),
         "streaming_rollup": _Q_STREAMING_ROLLUP_SQL,
         "streaming_sessionize": _Q_STREAMING_SESSIONIZE_SQL,
-        "streaming_dedup": _Q_STREAMING_DEDUP_SQL,
         "sessionize": _Q_SESSIONIZE_SQL,
         "rasterize_grid": _Q_RASTERIZE_SQL,
-        # elevation_e2e / geodesic_paths / multimodal_features / ivf_topk /
-        # s2_cells are genuinely non-SQL (rasters, Karney geodesics, binary
-        # media, IVF, S2 Hilbert ids): their oracles are the repo's own
+        # elevation_e2e / geodesic_paths / s2_cells and the raster queries
+        # are genuinely non-SQL (rasters, Karney geodesics, S2 Hilbert
+        # ids): their oracles are the repo's own
         # single-process reference implementations, recomputed fresh into a
         # parquet that the SQL reads (see _precomputed_oracles above).
         **_precomputed_oracles(),

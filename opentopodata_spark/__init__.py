@@ -1,15 +1,15 @@
 """opentopodata_spark — a PySpark-native batch elevation + spatial-join engine.
 
 Re-expresses the computation semantics of ajnisbet/opentopodata (a Flask
-point-elevation REST server; reference read-only at /root/reference) as a
-Spark DataFrame / Arrow-vectorized dataflow over tables of interleaved
-text+media documents.
+point-elevation REST server) as a Spark DataFrame / Arrow-vectorized
+dataflow over tables of documents that carry coordinates.
 
 This is NOT a port: the reference's per-request Python loops become
-declarative DataFrame plans (broadcast tile joins, window-function priority
-coalescing, mapInPandas raster sampling), designed for 1000-executor /
-100 TB scale while matching the reference's elevation values and tile
-assignments bit-for-bit (see tests/).
+declarative DataFrame plans (one shuffle of points by spatial cell, then
+one mapInArrow sampler that runs the reference's dataset-priority loop
+per Arrow batch), designed for 1000-executor / 100 TB scale while
+matching the reference's elevation values and tile assignments
+bit-for-bit (see tests/).
 
 Subpackages / modules
 ---------------------
@@ -21,8 +21,9 @@ interpolate    GDAL-parity nearest/bilinear/cubic samplers w/ NODATA rules
 config         YAML config loading + dataset registry (driver-side)
 tiles          tile-index build (filename -> corner) + tile-key column math
 oracle         single-process reference-semantics implementation (test oracle)
-operators.*    the Spark operators (extract, tile join, elevation, coalesce,
-               knn, geocell, dedup, similarity, text, multimodal)
+operators.*    the Spark operators (extract, elevation resolve, paths, knn
+               and range joins, events, spatial joins and overlay, and the
+               raster operators: terrain, zonal, polygonize, warp, tiles)
 lineage        per-partition lineage checkpoint + anti-join resume
 session        SparkSession builder helpers
 """

@@ -393,6 +393,36 @@ def table_exists(location: str) -> bool:
         os.path.join(location, "metadata", "version-hint.text"))
 
 
+def _publish_metadata(meta_dir: str, version: int, meta: dict) -> None:
+    """Commit ``meta`` as ``v<version>.metadata.json``, then point
+    ``version-hint.text`` at it.
+
+    The metadata file is written under a unique temp name and published
+    with ``os.link``, which refuses to replace an existing file -- the
+    create-if-absent step of HadoopCatalog. Of two writers that both
+    read v<version - 1>, one commits and the other gets FileExistsError
+    instead of silently overwriting the first one's snapshot. The link
+    is the commit point; the hint only tells readers where to start
+    looking (``IcebergTable`` also probes past it)."""
+    path = os.path.join(meta_dir, f"v{version}.metadata.json")
+    tmp = f"{path}.{uuid.uuid4().hex}.tmp"
+    with open(tmp, "w") as f:
+        json.dump(meta, f, indent=1)
+    try:
+        os.link(tmp, path)
+    except FileExistsError:
+        raise FileExistsError(
+            f"{meta_dir}: v{version}.metadata.json already exists -- a "
+            "concurrent commit won; reopen the table and retry") from None
+    finally:
+        os.remove(tmp)
+    hint = os.path.join(meta_dir, "version-hint.text")
+    tmp = f"{hint}.{uuid.uuid4().hex}.tmp"
+    with open(tmp, "w") as f:
+        f.write(str(version))
+    os.replace(tmp, hint)
+
+
 class IcebergTable:
     """One Iceberg v2 table on a local/posix filesystem, HadoopCatalog
     layout. All state lives in the metadata files — this object is a
@@ -407,6 +437,11 @@ class IcebergTable:
                 f"{location}: not an Iceberg table (no version-hint.text)")
         with open(hint) as f:
             self.version = int(f.read().strip())
+        # a writer that stopped between its commit and the hint bump
+        # leaves a newer committed version behind the hint
+        while os.path.exists(os.path.join(
+                self.meta_dir, f"v{self.version + 1}.metadata.json")):
+            self.version += 1
         with open(os.path.join(
                 self.meta_dir, f"v{self.version}.metadata.json")) as f:
             self.meta = json.load(f)
@@ -456,14 +491,7 @@ class IcebergTable:
             "snapshot-log": [],
             "metadata-log": [],
         }
-        path = os.path.join(meta_dir, "v1.metadata.json")
-        with open(path + ".tmp", "w") as f:
-            json.dump(meta, f, indent=1)
-        os.replace(path + ".tmp", path)
-        hint = os.path.join(meta_dir, "version-hint.text")
-        with open(hint + ".tmp", "w") as f:
-            f.write("1")
-        os.replace(hint + ".tmp", hint)
+        _publish_metadata(meta_dir, 1, meta)
         return IcebergTable(location)
 
     # -- introspection -----------------------------------------------------
@@ -657,16 +685,8 @@ class IcebergTable:
             "metadata-file": os.path.join(
                 self.meta_dir, f"v{self.version}.metadata.json"),
         }]
-        new_version = self.version + 1
-        path = os.path.join(self.meta_dir, f"v{new_version}.metadata.json")
-        with open(path + ".tmp", "w") as f:
-            json.dump(meta, f, indent=1)
-        os.replace(path + ".tmp", path)
-        hint = os.path.join(self.meta_dir, "version-hint.text")
-        with open(hint + ".tmp", "w") as f:
-            f.write(str(new_version))
-        os.replace(hint + ".tmp", hint)  # the atomic commit point
-        self.version = new_version
+        _publish_metadata(self.meta_dir, self.version + 1, meta)
+        self.version += 1
         self.meta = meta
 
     def append_files(self, files: list[DataFileInfo]) -> int:
@@ -816,7 +836,7 @@ def rewrite_data_files(spark, table: IcebergTable,
     'replace' snapshot — new files added, every prior live entry marked
     deleted. Readers of older snapshots are unaffected (their files
     stay on disk until expire_snapshots collects them); a crash before
-    the version-hint swap leaves only unreferenced staging files.
+    the metadata commit leaves only unreferenced staging files.
 
     Returns {files_before, files_after, rows} (row equality in/out is
     ASSERTED before the commit — a compaction that loses rows must fail
@@ -926,16 +946,8 @@ def rollback_to_snapshot(table: IcebergTable, snapshot_id: int) -> None:
     meta["last-updated-ms"] = now
     meta["snapshot-log"] = table.meta["snapshot-log"] + [
         {"timestamp-ms": now, "snapshot-id": target["snapshot-id"]}]
-    new_version = table.version + 1
-    path = os.path.join(table.meta_dir, f"v{new_version}.metadata.json")
-    with open(path + ".tmp", "w") as f:
-        json.dump(meta, f, indent=1)
-    os.replace(path + ".tmp", path)
-    hint = os.path.join(table.meta_dir, "version-hint.text")
-    with open(hint + ".tmp", "w") as f:
-        f.write(str(new_version))
-    os.replace(hint + ".tmp", hint)
-    table.version = new_version
+    _publish_metadata(table.meta_dir, table.version + 1, meta)
+    table.version += 1
     table.meta = meta
 
 
@@ -998,16 +1010,8 @@ def expire_snapshots(table: IcebergTable, keep_last: int = 1,
         e for e in table.meta["snapshot-log"]
         if e["snapshot-id"] in keep]
     meta["last-updated-ms"] = now
-    new_version = table.version + 1
-    path = os.path.join(table.meta_dir, f"v{new_version}.metadata.json")
-    with open(path + ".tmp", "w") as f:
-        json.dump(meta, f, indent=1)
-    os.replace(path + ".tmp", path)
-    hint = os.path.join(table.meta_dir, "version-hint.text")
-    with open(hint + ".tmp", "w") as f:
-        f.write(str(new_version))
-    os.replace(hint + ".tmp", hint)
-    table.version = new_version
+    _publish_metadata(table.meta_dir, table.version + 1, meta)
+    table.version += 1
     table.meta = meta
 
     deleted_data = 0
@@ -1053,8 +1057,11 @@ def read_table(spark, location: str, snapshot_id: int | None = None,
     if not files:
         # schema-faithful empty frame (flat columns; nested cols are
         # not needed by any empty-table caller here)
+        current = next(
+            sc for sc in table.meta["schemas"]
+            if sc["schema-id"] == table.meta["current-schema-id"])
         fields = []
-        for f in table.meta["schemas"][0]["fields"]:
+        for f in current["fields"]:
             t = f["type"]
             spark_t = {
                 "string": "string", "long": "long", "int": "int",

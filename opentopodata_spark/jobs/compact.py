@@ -1,7 +1,7 @@
 """Parquet compaction job: bin the small-file problem away.
 
 A long-lived incremental pipeline (per-batch streaming sinks, daily
-dataprep runs, per-tile raster manifests) accretes thousands of
+elevation runs, per-tile raster manifests) accretes thousands of
 kilobyte-scale parquet files; at 10^12-row scale the NameNode/object
 listing and per-file open costs start to dominate scans. This job
 rewrites a dataset into ~``--target-mb`` files:

@@ -1,8 +1,7 @@
 """Iceberg table operations CLI over the pure-Python metadata layer.
 
 Operational front door for the Iceberg v2 tables this engine writes
-(lineage checkpoints via ``table_format='iceberg'``, dataprep corpora
-via ``--corpus-format iceberg``, or any table
+(lineage checkpoints via ``table_format='iceberg'``, or any table
 ``opentopodata_spark.iceberg`` created):
 
     python -m opentopodata_spark.jobs.iceberg info    --table <loc>

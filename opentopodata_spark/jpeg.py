@@ -1,8 +1,8 @@
 """Minimal pure-numpy baseline JPEG codec (decode + encode).
 
-JPEG is the dominant media type in any web crawl, so the multimodal
-``decoder='real'`` path must handle it — but this container has no
-PIL/libjpeg/ffmpeg. Like png.py, the codec is implemented from the
+GeoTIFF's JPEG compression (and the JPEG-in-TIFF rasters it reads)
+needs a JPEG codec, and the engine depends on no PIL/libjpeg. Like
+png.py, the codec is implemented from the
 public specification (ITU-T T.81 / ISO 10918-1): marker segment
 parsing, canonical Huffman entropy coding, 8x8 DCT-II with the standard
 zigzag scan, YCbCr <-> RGB (JFIF/BT.601 full-range), and 4:4:4 / 4:2:2 /

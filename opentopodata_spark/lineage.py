@@ -242,18 +242,18 @@ class IcebergTables:
 class PyIcebergTables:
     """The table pair as two REAL Iceberg v2 tables written by the
     pure-Python metadata layer (opentopodata_spark.iceberg): snapshots,
-    Avro manifest lists/manifests, version-hint commits — no jars, no
-    catalog service (HadoopCatalog file layout). This is the route
-    ``table_format='iceberg'`` takes when no JVM Iceberg catalog is
-    configured; with one configured, IcebergTables (catalog
+    Avro manifest lists/manifests, create-if-absent metadata commits —
+    no jars, no catalog service (HadoopCatalog file layout). This is the
+    route ``table_format='iceberg'`` takes when no JVM Iceberg catalog
+    is configured; with one configured, IcebergTables (catalog
     identifiers) is used instead.
 
     Scale notes: ``data_buckets`` and ``drop_bucket`` are METADATA
     operations — partition values come from manifest entries, never
     from scanning data (the distinct-scan the parquet layout can't
     avoid); a bucket drop is a copy-on-write manifest rewrite plus one
-    atomic version-hint swap, crash-safe at any point (an unreferenced
-    manifest is garbage, not corruption)."""
+    create-if-absent metadata commit, crash-safe at any point (an
+    unreferenced manifest is garbage, not corruption)."""
 
     def __init__(self, out_dir: str):
         from opentopodata_spark import iceberg as _ice

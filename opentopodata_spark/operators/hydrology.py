@@ -23,7 +23,7 @@ hydrology literature uses (TauDEM-style), reshaped for Spark:
       graph. Strict descent makes it a DAG: a driver-side Kahn peel
       under ``local_threshold`` rows, otherwise iterative small joins
       (rounds = tile-hop diameter of the longest path, the same shape as
-      the connected-components loop in operators/dedup.py).
+      the connected-components loop in operators/polygonize.py).
   phase C (per tile, mapInPandas): re-peel with loads 1 + inflow at the
       entry cells, add inflow(e) at the entries themselves, write
       GeoTIFF tiles + manifest (atomic rename, lineage checksums).

@@ -31,7 +31,7 @@ interval span. ``max_bins`` (executor-side ``assert_true``, zero extra
 passes) refuses an interval that would explode into pathological bin
 counts; ``max_bucket`` (one extra aggregate, opt-in) refuses a hot
 ``(key, bin)`` bucket before it goes quadratic — the same loud-refusal
-discipline as the LSH ``max_bucket`` cap in operators/dedup.py. Skewed
+discipline as overlay's ``max_bucket`` cap. Skewed
 hot keys respond to the usual salting: replicate one side across S
 salts on the bin key; not built in because the cap makes the need
 visible first.

@@ -248,10 +248,10 @@ def range_join(
     ix0 = _ix_raw(F.col("lon"))
     # Ring via two generator explodes — no transform() lambdas at all
     # (a `lambda d, dy=dy:` default-arg capture inside transform() is the
-    # binary (element, INDEX) form and silently binds dy to the index;
-    # see exprutil.py:33). The lon probe count is capped at the full
-    # ring (K cells), with the start shifted so each wrapped residue
-    # appears exactly once — no duplicate pairs, no dedup needed.
+    # binary (element, INDEX) form and silently binds dy to the index).
+    # The lon probe count is capped at the full ring (K cells), with the
+    # start shifted so each wrapped residue appears exactly once — no
+    # duplicate pairs, no dedup needed.
     lon_steps = F.least(F.lit(2) * nx, F.lit(k_lon - 1))
     p = (
         points.select(F.col(point_id).alias("point_id"), "lat", "lon")

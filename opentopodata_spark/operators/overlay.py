@@ -360,10 +360,9 @@ def polygon_join(
     ``max_bucket`` (opt-in, one extra aggregate per side): refuse a hot
     grid cell holding more than this many polygons on EITHER side
     before the per-cell candidate product goes quadratic — the same
-    loud-refusal discipline as interval_join's ``max_bucket`` and the
-    LSH cap in operators/dedup.py.  A refused cell means cell_size is
-    too coarse for that region's polygon density; shrink it (or salt
-    the dense region upstream).
+    loud-refusal discipline as interval_join's ``max_bucket``.  A
+    refused cell means cell_size is too coarse for that region's
+    polygon density; shrink it (or salt the dense region upstream).
     """
     for k in (left_kind, right_kind):
         if k not in ("polygon", "line"):

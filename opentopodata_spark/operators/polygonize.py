@@ -21,7 +21,7 @@ tiles, so naive per-cell labeling can't work at catalog scale):
      edges. Border rows are O(perimeter x tiles) — tiny next to the
      raster — and the groupBy is the stage's only wide exchange.
   C. global merge: the engine's alternating-star connected components
-     (operators/dedup.connected_components — O(log² n) rounds, or one
+     (connected_components below — O(log² n) rounds, or one
      in-task union-find below its local_threshold) over the region
      graph, which is orders smaller than the cell grid.
   D. one grouped aggregation -> (region_id, value, n_cells, n_tiles),
@@ -46,7 +46,10 @@ from pyspark.sql import functions as F
 
 from ..oracle import _open_cached
 
-__all__ = ["label_regions", "label_regions_sequential", "classify_array"]
+__all__ = [
+    "label_regions", "label_regions_sequential", "classify_array",
+    "connected_components",
+]
 
 BORDER_SCHEMA = (
     "pair_lo long, pair_hi long, cell long, klass long, region long"
@@ -315,6 +318,166 @@ def _grid_geometry(tiles):
     return th, tw, (max_ix + 1) * tw
 
 
+def _min_star(e: DataFrame, large: bool) -> DataFrame:
+    """One large-star (large=True) or small-star half-round over an edge
+    frame (u, v). Both are a groupBy-min plus a SAME-KEY equi-join — the
+    skew-safe formulation: a hub node's neighborhood is never collected
+    into one task's memory (no collect_list), it only flows through a
+    map-side-combined min and a hash join on u."""
+    if large:
+        # full neighborhood: both orientations; m = min(Γ(u) ∪ {u});
+        # connect every strictly-larger neighbor to m
+        und = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
+        mins = (
+            und.groupBy("u")
+            .agg(F.min("v").alias("mn"))
+            .select("u", F.least("mn", "u").alias("m"))
+        )
+        out = (
+            und.join(mins, "u")
+            .where(F.col("v") > F.col("u"))
+            .select(F.col("v").alias("u"), F.col("m").alias("v"))
+        )
+    else:
+        # orient u = max endpoint; m = min of the ≤-neighborhood (v < u
+        # strictly, so m = min(v)); connect every small neighbor AND u to m
+        o = e.select(
+            F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
+        )
+        mins = o.groupBy("u").agg(F.min("v").alias("m"))
+        out = (
+            o.join(mins, "u")
+            .select(F.col("v").alias("u"), F.col("m").alias("v"))
+            .union(mins.select(F.col("u"), F.col("m").alias("v")))
+        )
+    return out.where(F.col("u") != F.col("v")).distinct()
+
+
+def _local_components(e: DataFrame) -> DataFrame:
+    """Single-task union-find over a small edge frame: all edges fold
+    through ONE executor task (repartition(1) + mapInPandas accumulating
+    across Arrow batches) — still distributed execution, nothing collects
+    to the driver. Union-by-min + path compression; output is the same
+    (node, component=min of component) set the iterative algorithm
+    produces, independent of edge order."""
+
+    def fold(batches):
+        parent: dict = {}
+
+        def find(x):
+            r = x
+            while parent.get(r, r) != r:
+                r = parent[r]
+            while parent.get(x, x) != x:
+                parent[x], x = r, parent[x]
+            return r
+
+        seen = False
+        for pdf in batches:
+            seen = True
+            for a, b in zip(pdf["u"].to_numpy(), pdf["v"].to_numpy()):
+                ra, rb = find(int(a)), find(int(b))
+                if ra != rb:
+                    if ra < rb:
+                        parent[rb] = ra
+                    else:
+                        parent[ra] = rb
+        if not seen and not parent:
+            return
+        nodes = list(parent.keys())
+        comps = [find(x) for x in nodes]
+        roots = sorted(set(comps))
+        yield pd.DataFrame(
+            {"node": nodes + roots, "component": comps + roots}
+        ).astype("int64")
+
+    return e.repartition(1).mapInPandas(fold, "node long, component long")
+
+
+def connected_components(
+    edges: DataFrame,
+    src: str = "doc_a",
+    dst: str = "doc_b",
+    max_rounds: int = 50,
+    local_threshold: int = 2_000_000,
+) -> DataFrame:
+    """(node, component) for every node in the edge list; component = the
+    MIN node id of its connected component — the deterministic canonical
+    representative a dedup pass keeps.
+
+    Two regimes, same output:
+
+    * ``|edges| <= local_threshold``: single-task union-find
+      (_local_components). Even a 10^12-document corpus with a sane dup
+      rate yields a pair graph orders smaller than the corpus, and one
+      in-memory union-find beats ~6 shuffle stages × O(log² n) rounds of
+      scheduler latency by an order of magnitude (measured 7.7s → ~2s on
+      the sf0.1 bench). 2M edges ≈ tens of MB of dict — one task, not
+      the driver.
+    * bigger: alternating large-star / small-star (Kiveris et al. 2014,
+      "Connected Components in MapReduce and Beyond" — public), which
+      converges to depth-1 stars rooted at each component's min in
+      O(log² n) rounds regardless of component diameter — never an
+      O(diameter) label-propagation loop and never a per-node adjacency
+      list in memory (the skew-safe groupBy-min + join formulation).
+
+    The iterative loop materializes each round with ``localCheckpoint`` —
+    NOT ``persist``: persist caches data but keeps the full logical
+    lineage, so round N's plan contains every prior round and Catalyst
+    re-analysis grows superlinearly (measured: a 3-round toy graph spent
+    12s in round 3's planning alone). Checkpointing truncates the plan to
+    a leaf per round, keeping per-round cost constant. (On a real cluster
+    use ``spark.sparkContext.setCheckpointDir`` + ``.checkpoint()`` if
+    executor loss during the loop must be survivable.) Convergence test:
+    the edge set is a fixpoint iff its size and order-insensitive
+    xxhash64 checksum both stop changing; each round's shuffle is bounded
+    by the current edge count, which only shrinks."""
+    e = (
+        edges.select(
+            F.col(src).cast("long").alias("u"), F.col(dst).cast("long").alias("v")
+        )
+        .where(F.col("u") != F.col("v"))
+        .distinct()
+        .localCheckpoint()
+    )
+
+    def _sig(df: DataFrame):
+        # decimal(38,0) sum: a long sum of xxhash64 values overflows (and
+        # ANSI mode rightly raises) at row two; decimal is exact at any
+        # edge count
+        row = df.select(
+            F.count(F.lit(1)).alias("n"),
+            F.sum(
+                F.xxhash64(F.col("u"), F.col("v")).cast("decimal(38,0)")
+            ).alias("h"),
+        ).collect()[0]
+        return row["n"], row["h"]
+
+    sig = _sig(e)
+    if sig[0] <= local_threshold:
+        return _local_components(e)
+    for _ in range(max_rounds):
+        nxt = _min_star(_min_star(e, large=True), large=False).localCheckpoint()
+        nsig = _sig(nxt)
+        e.unpersist()
+        e = nxt
+        if nsig == sig:
+            break
+        sig = nsig
+    else:
+        raise RuntimeError(
+            f"connected_components did not converge in {max_rounds} rounds"
+        )
+    # fixpoint = depth-1 stars: u -> component root v; roots appear only
+    # on the v side and are their own component (the outer distinct
+    # already dedups the root rows)
+    return e.select(
+        F.col("u").alias("node"), F.col("v").alias("component")
+    ).union(
+        e.select(F.col("v").alias("node"), F.col("v").alias("component"))
+    ).distinct()
+
+
 def label_regions(
     spark: SparkSession,
     tiles: list[tuple[int, int, str]],
@@ -444,9 +607,7 @@ def label_regions(
         .select("ra", "rb")
         .dropDuplicates()
     )
-    from . import dedup as _dedup
-
-    comp = _dedup.connected_components(pairs, src="ra", dst="rb")
+    comp = connected_components(pairs, src="ra", dst="rb")
     merged = (
         regions.join(
             comp.withColumnRenamed("node", "region"), "region", "left"

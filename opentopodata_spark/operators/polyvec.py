@@ -40,12 +40,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..oracle import _open_cached
-from . import dedup as _dedup
 from .polygonize import (
     _grid_geometry,
     _label_tile,
     _normalize_grid,
     classify_array,
+    connected_components,
 )
 
 __all__ = ["region_polygons", "region_boundary_stats_sequential"]
@@ -363,7 +363,7 @@ def region_polygons(
         drop_pairs = seam.where(
             F.col("k_min") == F.col("k_max")
         ).select("pair_lo", "pair_hi")
-        comp = _dedup.connected_components(same, src="ra", dst="rb")
+        comp = connected_components(same, src="ra", dst="rb")
         mapping = comp.withColumnRenamed("node", "region")
         cand = raw.where(F.col("k") == "t").select(
             F.col("a").alias("pair_lo"), F.col("b").alias("pair_hi"),

@@ -45,12 +45,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..oracle import _open_cached
-from . import dedup as _dedup
 from .polygonize import (
     _grid_geometry,
     _label_tile,
     _normalize_grid,
     classify_array,
+    connected_components,
 )
 
 __all__ = ["sieve_regions", "sieve_tiles", "sieve_sequential"]
@@ -150,7 +150,7 @@ def _region_graph(spark, tiles, bands, num_partitions):
     cross = seam.where(F.col("k_min") != F.col("k_max")).select(
         F.col("ra").alias("ea"), F.col("rb").alias("eb")
     )
-    comp = _dedup.connected_components(same, src="ra", dst="rb")
+    comp = connected_components(same, src="ra", dst="rb")
     # rid = min member gid: connected_components' component IS the min
     # node id; un-merged regions keep their own (min-gid) id
     m_map = comp.withColumnRenamed("node", "local_region")
@@ -278,7 +278,7 @@ def _merge_rounds_distributed(spark, regions, edges, threshold,
         ).select(F.col("a").alias("src"), F.col("best.b").alias("dst"))
         if picks.isEmpty():
             break
-        comp = _dedup.connected_components(picks, src="src", dst="dst")
+        comp = connected_components(picks, src="src", dst="dst")
         # target per component: largest member, ties smallest id
         msize = R.select(F.col("rid").alias("node"), "size", "klass")
         cm = comp.join(msize, "node")

@@ -6,7 +6,7 @@ The textbook Spark top-k-per-group —
 and SORTS every row of the table; at 10^12 rows with millions of
 groups, the sort dominates the job even though all but k rows per
 group are discarded. This operator does the heavy-hitters-style
-decomposition instead (same shape as operators/sketch and convex_hull):
+decomposition instead (same shape as convex_hull):
 
   phase 1  per Arrow batch, a vectorized pandas prune keeps at most k
            rows per (group present in the batch): any row in the GLOBAL

@@ -1,10 +1,9 @@
-"""Minimal pure-numpy PNG codec (decode + encode) for media featurization.
+"""Minimal pure-numpy PNG codec (decode + encode) for raster tiles.
 
-The sandbox has no PIL/ffmpeg, but PNG needs only ``zlib`` (stdlib) plus
+The engine depends on no PIL, and PNG needs only ``zlib`` (stdlib) plus
 the scanline unfiltering arithmetic — the same inflate+predictor shape as
-the GeoTIFF codec in geotiff.py. This makes the multimodal ``decoder='real'``
-path genuinely decode image bytes instead of stubbing: real width/height,
-real pixel statistics, over the real distributed plumbing.
+the GeoTIFF codec in geotiff.py. It backs the terrain-tile export and the
+GeoPackage / MBTiles tile readers.
 
 Scope (deliberately the common web subset):
 
@@ -15,8 +14,7 @@ Scope (deliberately the common web subset):
 The decoder is written for correctness and batch (many small images) use:
 rows unfilter in a numpy loop over rows with vectorized lanes where the
 filter allows (Up is one add; Sub is a per-byte-lane cumsum), and a
-per-pixel column walk only for Average/Paeth rows. JPEG/video stay behind
-the NotImplementedError seam in operators/multimodal.py.
+per-pixel column walk only for Average/Paeth rows.
 
 Reference: the PNG spec (RFC 2083 / W3C PNG, public); no reference-repo
 analog (opentopodata has no media path).

@@ -1,14 +1,14 @@
 """SparkSession builder with the engine's scale-oriented defaults.
 
 Defaults chosen for the 100 TB design point (and harmless locally):
-- AQE on, with skew-join splitting (hot raster tiles are the known skew
-  source — the reference's single-node design has no answer to this;
-  SURVEY.md §4);
-- Arrow enabled with bounded batch sizes (the raster-sampling UDFs hold
-  one Arrow batch + one memory-mapped tile window at a time);
-- broadcast threshold generous enough for tile indexes (tens of thousands
-  of rows — the reference's in-memory dict lookup, config.py:367-373,
-  becomes a broadcast hash join).
+- AQE on, with skew-join splitting for the join-shaped operators
+  (spatial, interval and overlay joins); the elevation resolver has no
+  join and spreads hot spatial cells by salting its one shuffle
+  (SURVEY.md §4);
+- Arrow enabled with bounded batch sizes (the mapInArrow raster sampler
+  holds one Arrow batch + one memory-mapped tile window at a time);
+- a broadcast threshold generous enough for the small side of those
+  joins (anchor sets, polygon layers).
 """
 
 from __future__ import annotations

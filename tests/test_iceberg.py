@@ -312,7 +312,7 @@ def test_iceberg_crash_recovery_and_oneshot_equality(
 
 
 # ---------------------------------------------------------------------------
-# CLI (jobs/iceberg.py) + dataprep --corpus-format iceberg
+# CLI (jobs/iceberg.py)
 # ---------------------------------------------------------------------------
 
 def test_cli_info_history_files_export(spark, docs_df, tmp_path):
@@ -346,47 +346,6 @@ def test_cli_info_history_files_export(spark, docs_df, tmp_path):
          "--snapshot", str(s1), "--cores", "4"]))
     assert exp["rows"] == 40  # time-traveled to before the delete
     assert spark.read.parquet(out).count() == 40
-
-
-def test_dataprep_iceberg_corpus(spark, tmp_path):
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from opentopodata_spark.jobs import dataprep
-
-    docs = str(tmp_path / "docs.parquet")
-    rows = {
-        "doc_id": [f"d{i}" for i in range(30)],
-        "text": [
-            ("the quick brown fox jumps over the lazy dog number %d ok"
-             % (i % 10))
-            for i in range(30)
-        ],
-    }
-    pq.write_table(pa.table(rows), docs)
-    out = str(tmp_path / "clean")
-    ns = dataprep.build_parser().parse_args([
-        "--documents", docs, "--out", out,
-        "--corpus-format", "iceberg", "--chunk-tokens", "6",
-    ])
-    stats = dataprep.run(ns, spark=spark)
-    # exact dedup keeps one per distinct text
-    assert stats["output_docs"] == 10
-    t = iceberg.IcebergTable(os.path.join(out, "corpus"))
-    assert t.record_count() == 10
-    assert t.current_snapshot_id() is not None
-    got = iceberg.read_table(spark, os.path.join(out, "corpus"))
-    assert got.count() == 10
-    # chunks stage read the corpus back through the metadata scan
-    assert stats["output_chunks"] > 0
-    # --resume: the iceberg corpus counts as done, nothing recomputed
-    ns2 = dataprep.build_parser().parse_args([
-        "--documents", docs, "--out", out,
-        "--corpus-format", "iceberg", "--chunk-tokens", "6", "--resume",
-    ])
-    stats2 = dataprep.run(ns2, spark=spark)
-    assert stats2.get("resumed_corpus") is True
-    assert stats2["output_docs"] == 10
 
 
 def test_compact_and_expire(spark, docs_df, tmp_path):
@@ -464,6 +423,22 @@ def test_rollback_and_partition_pruned_read(spark, docs_df, tmp_path):
         iceberg.rollback_to_snapshot(t, 424242)
 
 
+def test_concurrent_commit_second_writer_raises(spark, docs_df, tmp_path):
+    """Two handles opened at the same version both append: the second
+    commit must refuse instead of replacing the first one's snapshot."""
+    loc = str(tmp_path / "tbl")
+    iceberg.IcebergTable.create(loc, docs_df.schema, partition_col="pb")
+    first = iceberg.IcebergTable(loc)
+    second = iceberg.IcebergTable(loc)
+    s1 = iceberg.append_dataframe(first, docs_df)
+    with pytest.raises(FileExistsError, match="concurrent commit"):
+        iceberg.append_dataframe(second, docs_df)
+    t = iceberg.IcebergTable(loc)
+    assert [s["snapshot-id"] for s in t.snapshots()] == [s1]
+    assert t.current_snapshot_id() == s1
+    assert iceberg.read_table(spark, loc).count() == 40
+
+
 def test_schema_evolution_add_column(spark, docs_df, tmp_path):
     loc = str(tmp_path / "tbl")
     t = iceberg.IcebergTable.create(loc, docs_df.schema, partition_col="pb")
@@ -492,6 +467,9 @@ def test_schema_evolution_add_column(spark, docs_df, tmp_path):
     assert set(got.columns) == set(names)
     assert got.where(F.col("lang").isNull()).count() == 40
     assert got.where(F.col("score").isNotNull()).count() == 40
+    # an empty read takes the CURRENT schema, not the first one
+    empty = iceberg.read_table(spark, loc, partition_value=99)
+    assert empty.count() == 0 and empty.columns == names
 
     # refusals: dropped column / changed type
     with pytest.raises(ValueError, match="lacks columns"):

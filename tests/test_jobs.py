@@ -3,6 +3,7 @@ and client-arg validation (args.py, reference api.py:153-269 parity)."""
 
 from __future__ import annotations
 
+import ast
 import json
 import math
 import os
@@ -70,6 +71,81 @@ def test_package_zip_contains_modules(tmp_path):
     names = zipfile.ZipFile(path).namelist()
     assert "opentopodata_spark/operators/elevation.py" in names
     assert "opentopodata_spark/jobs/elevation.py" in names
+
+
+def _module_file(dotted: str):
+    """The file a dotted ``opentopodata_spark...`` module name maps to,
+    or None."""
+    base = os.path.join(REPO, *dotted.split("."))
+    for cand in (base + ".py", os.path.join(base, "__init__.py")):
+        if os.path.isfile(cand):
+            return cand
+    return None
+
+
+def _top_level_names(path: str) -> set:
+    names = set()
+    for node in ast.parse(open(path).read()).body:
+        if isinstance(node, (ast.FunctionDef, ast.ClassDef)):
+            names.add(node.name)
+        elif isinstance(node, (ast.Import, ast.ImportFrom)):
+            names.update((a.asname or a.name).split(".")[0] for a in node.names)
+        else:
+            names.update(
+                n.id for n in ast.walk(node)
+                if isinstance(n, ast.Name) and isinstance(n.ctx, ast.Store)
+            )
+    return names
+
+
+def test_no_dangling_package_imports(monkeypatch):
+    """Every ``opentopodata_spark`` import in the package and in
+    ``__spark_entry__.py`` -- including the lazy ones inside functions,
+    which no import-time check sees -- names a module file, and every
+    imported name exists in it. ``oracle_sql()`` checks only queries
+    that ``queries()`` registers."""
+    pkg = os.path.join(REPO, "opentopodata_spark")
+    files = [os.path.join(REPO, "__spark_entry__.py")] + [
+        os.path.join(base, fn)
+        for base, _dirs, fns in os.walk(pkg)
+        for fn in fns if fn.endswith(".py")
+    ]
+    dangling = []
+    for path in files:
+        rel = os.path.relpath(path, REPO)
+        package = os.path.dirname(rel).split(os.sep)  # where "." points
+        for node in ast.walk(ast.parse(open(path).read())):
+            if isinstance(node, ast.Import):
+                targets = [(a.name, None) for a in node.names]
+            elif isinstance(node, ast.ImportFrom):
+                mod = node.module or ""
+                if node.level:
+                    base = package[:len(package) - node.level + 1]
+                    mod = ".".join(base + ([mod] if mod else []))
+                targets = [(mod, [a.name for a in node.names])]
+            else:
+                continue
+            for mod, names in targets:
+                if mod.split(".")[0] != "opentopodata_spark":
+                    continue
+                target = _module_file(mod)
+                if target is None:
+                    dangling.append(f"{rel}:{node.lineno} {mod}")
+                    continue
+                for name in names or ():
+                    if _module_file(f"{mod}.{name}") is None and (
+                        name not in _top_level_names(target)
+                    ):
+                        dangling.append(f"{rel}:{node.lineno} {mod}.{name}")
+    assert dangling == []
+
+    import __spark_entry__ as contract
+
+    # keys only: skip building the precomputed oracle tables
+    monkeypatch.setattr(contract, "_oracle_parquet", lambda name, b: name)
+    for name in ("_zonal_sql", "_raster_stats_sql", "_zonal_majority_sql"):
+        monkeypatch.setattr(contract, name, lambda: "SELECT 1")
+    assert set(contract.oracle_sql()) <= set(contract.queries())
 
 
 # ------------------------------------------------------------- elevation job

@@ -237,21 +237,3 @@ def test_dqt_16bit_tables_read():
     dec = jpeg.decode_jpeg(patched)
     ref = jpeg.decode_jpeg(bytes(data))
     np.testing.assert_array_equal(dec, ref)
-
-
-def test_mixed_media_decode_path():
-    """The multimodal sniffer routes PNG and JPEG payloads to their
-    decoders and leaves unknown bytes 'unsupported'."""
-    from opentopodata_spark.operators import multimodal
-
-    kinds = {}
-    for i in range(60):
-        b = multimodal.synthetic_media_payload(f"ref-{i}")
-        kind, w, h, fv = multimodal._decode_real(b)
-        kinds.setdefault(kind, 0)
-        kinds[kind] += 1
-        if kind == "image":
-            assert w and h and fv is not None and len(fv) == multimodal.FEATURE_DIM
-    assert kinds.get("image", 0) > 20
-    assert kinds.get("unsupported", 0) > 5
-    assert "corrupt" not in kinds

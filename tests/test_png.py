@@ -1,9 +1,10 @@
 """Pure-numpy PNG codec: round-trips, filter coverage, malformed inputs.
 
 No reference analog (opentopodata has no media path); the spec is the
-public W3C PNG standard. The decoder backs the multimodal 'real' decode
-path, so the contract here is exactness: decode(encode(x)) == x for every
-supported shape/filter, and clean PngError (never a misparse) elsewhere.
+public W3C PNG standard. The decoder backs the terrain-tile and
+GeoPackage/MBTiles readers, so the contract here is exactness:
+decode(encode(x)) == x for every supported shape/filter, and clean
+PngError (never a misparse) elsewhere.
 """
 
 import struct
@@ -39,7 +40,7 @@ def test_2d_input_becomes_grayscale():
 
 def test_mixed_exercises_all_filters():
     """'mixed' must emit every filter type so decoders hit all five
-    unfilter paths (this is what the multimodal fixtures rely on)."""
+    unfilter paths."""
     arr = _img((10, 8, 3), seed=9)
     data = png.encode_png(arr, filter_type="mixed")
     # IDAT payload: find the chunk and decompress to read filter bytes

@@ -153,3 +153,64 @@ class TestKeyOrientation:
         got_up = _collect(spark, up)
         assert got_down == got_up
         assert got_down == polygonize.label_regions_sequential(up)
+
+
+class TestConnectedComponents:
+    def test_connected_components_chain_and_triangle(self, spark):
+        """A 4-node chain (worst case for naive propagation: diameter 3),
+        a triangle, an isolated edge — components = min node id."""
+        edges = spark.createDataFrame(
+            [(1, 2), (2, 3), (3, 4),          # chain
+             (10, 11), (11, 12), (10, 12),    # triangle
+             (20, 21)],                        # pair
+            "doc_a long, doc_b long",
+        )
+        got = {
+            r.node: r.component
+            for r in polygonize.connected_components(edges).collect()
+        }
+        assert got == {1: 1, 2: 1, 3: 1, 4: 1,
+                       10: 10, 11: 10, 12: 10,
+                       20: 20, 21: 20}
+
+    def test_connected_components_long_chain_distributed(self, spark):
+        """A 64-node chain converges well inside max_rounds (the
+        alternating algorithm is O(log^2 n), not O(diameter)).
+        local_threshold=0 forces the iterative star-contraction path."""
+        edges = spark.createDataFrame(
+            [(i, i + 1) for i in range(64)], "doc_a long, doc_b long"
+        )
+        got = polygonize.connected_components(
+            edges, max_rounds=15, local_threshold=0
+        ).collect()
+        assert {r.node for r in got} == set(range(65))
+        assert {r.component for r in got} == {0}
+
+    def test_connected_components_local_matches_distributed(self, spark):
+        """The single-task union-find fast path and the iterative
+        star-contraction path produce the identical (node, component)
+        set on a seeded random graph."""
+        import random
+
+        rng = random.Random(42)
+        edges = [(rng.randrange(200), rng.randrange(200)) for _ in range(150)]
+        df = spark.createDataFrame(edges, "doc_a long, doc_b long")
+        local = {
+            (r.node, r.component)
+            for r in polygonize.connected_components(df).collect()
+        }
+        dist = {
+            (r.node, r.component)
+            for r in polygonize.connected_components(df, local_threshold=0).collect()
+        }
+        assert local == dist and local
+
+    def test_connected_components_empty_and_duplicate_edges(self, spark):
+        empty = spark.createDataFrame([], "doc_a long, doc_b long")
+        assert polygonize.connected_components(empty).collect() == []
+        dup = spark.createDataFrame(
+            [(2, 1), (1, 2), (2, 2)], "doc_a long, doc_b long"
+        )
+        got = {r.node: r.component
+               for r in polygonize.connected_components(dup).collect()}
+        assert got == {1: 1, 2: 1}

@@ -213,45 +213,6 @@ def test_pip_mask_convex_polygon_center(lat, lon, n, r, seed):
 
 
 # ---------------------------------------------------------------------------
-# WAV codec (round 3)
-# ---------------------------------------------------------------------------
-
-@settings(max_examples=40, deadline=None)
-@given(
-    n=st.integers(1, 2000),
-    channels=st.integers(1, 4),
-    rate=st.sampled_from([8000, 16000, 22050, 44100, 48000]),
-    bits=st.sampled_from([8, 16]),
-    seed=st.integers(0, 2**31 - 1),
-)
-def test_wav_round_trip_property(n, channels, rate, bits, seed):
-    from opentopodata_spark import wav
-
-    s = np.random.default_rng(seed).uniform(-1, 1, (n, channels))
-    got, got_rate = wav.decode_wav(wav.encode_wav(s, rate, bits=bits))
-    assert got_rate == rate and got.shape == s.shape
-    tol = 1.0 / 100 if bits == 8 else 1.0 / 32000
-    assert np.abs(got - s).max() < tol
-
-
-@settings(max_examples=40, deadline=None)
-@given(
-    n=st.integers(1, 4000),
-    channels=st.integers(1, 8),
-    rate=st.sampled_from([8000, 44100, 96000]),
-    seed=st.integers(0, 2**31 - 1),
-)
-def test_audio_features_bounded(n, channels, rate, seed):
-    from opentopodata_spark.operators.multimodal import FEATURE_DIM, audio_features
-
-    s = np.random.default_rng(seed).uniform(-1, 1, (n, channels))
-    f = audio_features(s, rate)
-    assert f.shape == (FEATURE_DIM,) and f.dtype == np.float32
-    assert np.all(f >= 0.0) and np.all(f <= 1.0)
-    assert np.all(np.isfinite(f))
-
-
-# ---------------------------------------------------------------------------
 # QM/MQ arithmetic coders and the JPEG2000 lossless chain
 # ---------------------------------------------------------------------------
 

@@ -364,109 +364,6 @@ def test_overview_stream_idempotent(spark, raster_root, tmp_path):
     assert all(r["error"] is None and r["n_valid"] > 0 for r in rows.values())
 
 
-def test_dedup_stream_incremental(spark, tmp_path):
-    """Streaming exact dedup folds each arriving wave against the
-    accumulated hash index: within-wave dups collapse to the min doc_id,
-    cross-wave dups are rejected, and a restart with no new files admits
-    nothing new."""
-    from opentopodata_spark import streaming as st
-
-    in_dir = tmp_path / "in"
-    in_dir.mkdir()
-    out_dir = str(tmp_path / "corpus")
-    idx_dir = str(tmp_path / "index")
-    ckpt = str(tmp_path / "ckpt")
-
-    def emit(name, rows):
-        spark.createDataFrame(rows, st.CORPUS_DDL).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(str(in_dir / name))
-
-    def drain():
-        q = st.run_dedup_stream(
-            st.stream_corpus(spark, str(in_dir) + "/*"),
-            out_dir, ckpt, idx_dir,
-        )
-        q.awaitTermination()
-        return {r.doc_id for r in spark.read.parquet(out_dir).collect()}
-
-    emit("wave1", [(1, "aaa", "en", "s0"), (2, "bbb", "en", "s0"),
-                   (4, "aaa", "en", "s1")])
-    assert drain() == {1, 2}  # 4 is a within-wave dup of 1
-
-    emit("wave2", [(3, "aaa", "de", "s2"),   # cross-wave dup of 1
-                   (6, "ccc", "en", "s0"),   # within-wave dup pair:
-                   (5, "ccc", "en", "s0")])  # min id 5 wins
-    assert drain() == {1, 2, 5}
-
-    assert drain() == {1, 2, 5}  # restart, no new files: admits nothing
-
-    # the index holds exactly one hash per admitted doc
-    idx = spark.read.parquet(idx_dir)
-    assert idx.count() == 3 and idx.select("text_hash").distinct().count() == 3
-
-    # NULL text: md5(NULL) is NULL — the NULL-hash group must behave like
-    # any other hash (min doc_id admitted once, later NULLs rejected), not
-    # vanish through a null-blind join.
-    emit("wave3", [(9, None, "en", "s0"), (8, None, "en", "s1")])
-    assert drain() == {1, 2, 5, 8}
-    emit("wave4", [(10, None, "en", "s0")])  # cross-wave dup of the NULL group
-    assert drain() == {1, 2, 5, 8}
-
-
-def test_near_dup_stream_incremental(spark, tmp_path):
-    """Streaming near-dup dedup: within-wave clusters keep their min,
-    later waves' docs are LSH-probed + Jaccard-verified against the
-    accumulated ADMITTED corpus and rejected on a match; rejected docs
-    never poison the index; a drain with no new files admits nothing."""
-    from opentopodata_spark import streaming as st
-
-    in_dir = tmp_path / "in"
-    in_dir.mkdir()
-    out_dir = str(tmp_path / "corpus")
-    idx_dir = str(tmp_path / "index")
-    ckpt = str(tmp_path / "ckpt")
-
-    def emit(name, rows):
-        spark.createDataFrame(rows, st.CORPUS_DDL).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(str(in_dir / name))
-
-    def drain():
-        q = st.run_near_dup_stream(
-            st.stream_corpus(spark, str(in_dir) + "/*"),
-            out_dir, ckpt, idx_dir, threshold=0.5,
-        )
-        q.awaitTermination()
-        return {r.doc_id for r in spark.read.parquet(out_dir).collect()}
-
-    base = "a b c d e f g h"            # admitted in wave 0
-    other = "z y x w v u t s"           # unrelated, admitted in wave 0
-    near_base = "a b c d e f g h i"     # near-dup of base (j = 7/9 ≈ 0.78)
-    emit("wave0", [(1, base, "en", "s0"), (2, other, "en", "s0")])
-    assert drain() == {1, 2}
-
-    # wave 1: 3 near-dups the ADMITTED doc 1 -> rejected; 4 and 5 are a
-    # within-wave near-dup pair (j = 1.0) unrelated to the corpus -> 4 kept
-    emit("wave1", [(3, near_base, "en", "s1"),
-                   (5, "p q r s2 t2 u2 v2 w2", "en", "s1"),
-                   (4, "p q r s2 t2 u2 v2 w2", "en", "s1")])
-    assert drain() == {1, 2, 4}
-
-    assert drain() == {1, 2, 4}  # restart without new files: no-op
-
-    # wave 2: 6 carries the REJECTED doc 3's text — still a near-dup of
-    # admitted doc 1, so it must be rejected via doc 1 (3 never entered
-    # the index); 7 is fresh and admitted
-    emit("wave2", [(6, near_base, "en", "s2"),
-                   (7, "k l m n o k2 l2 m2", "en", "s2")])
-    assert drain() == {1, 2, 4, 7}
-
-    # the bucket index holds rows ONLY for admitted docs
-    idx = spark.read.parquet(idx_dir)
-    assert {r.doc_id for r in idx.collect()} == {1, 2, 4, 7}
-
-
 def test_geofence_stream_matches_batch(spark, tmp_path):
     """streaming_geofence_rollup over an availableNow drain produces the
     same (window, polygon) event counts as the batch geofence_rollup
@@ -528,52 +425,6 @@ def test_geofence_stream_matches_batch(spark, tmp_path):
     for k, (n_events, n_users) in finalized.items():
         assert got[k][0] == n_events            # counts exact
         assert abs(got[k][1] - n_users) <= max(2, int(0.15 * n_users))  # HLL
-
-
-def test_dedup_stream_url_key(spark, tmp_path):
-    """run_dedup_stream with key=normalize_url: the second crawl drop's
-    re-fetch of the same page (tracking params, www, default port) is
-    rejected by the accumulated URL index; genuinely new pages admit."""
-    from opentopodata_spark import streaming
-    from opentopodata_spark.operators import urlops
-
-    inbox = str(tmp_path / "u_in")
-    os.makedirs(inbox)
-    schema = "doc_id long, text string, url string"
-    drop1 = [(1, "page one", "http://www.example.com/a?utm_source=x"),
-             (2, "page two", "http://example.com/b")]
-    drop2 = [(3, "page one refetched", "https://example.com/a"),   # dup of 1... scheme!
-             (4, "page three", "http://example.com/c")]
-    spark.createDataFrame(drop1, schema).coalesce(1).write.mode("append").parquet(inbox)
-
-    out = str(tmp_path / "u_out")
-    ckpt = str(tmp_path / "u_ckpt")
-    idx = str(tmp_path / "u_idx")
-    key = urlops.normalize_url(F.col("url"))
-
-    def drain():
-        q = streaming.run_dedup_stream(
-            spark.readStream.schema(schema).parquet(inbox),
-            out, ckpt, idx, key=key,
-        )
-        q.awaitTermination()
-
-    drain()
-    assert {r.doc_id for r in spark.read.parquet(out).collect()} == {1, 2}
-
-    spark.createDataFrame(drop2, schema).coalesce(1).write.mode("append").parquet(inbox)
-    drain()
-    kept = {r.doc_id for r in spark.read.parquet(out).collect()}
-    # doc 3's canonical URL differs from doc 1's only by scheme — that IS
-    # a different canonical URL (https vs http), so it admits; the true
-    # test of the index is a same-scheme refetch:
-    assert kept == {1, 2, 3, 4}
-
-    drop3 = [(5, "page one third fetch", "http://Example.COM:80/a?fbclid=zz")]
-    spark.createDataFrame(drop3, schema).coalesce(1).write.mode("append").parquet(inbox)
-    drain()
-    kept = {r.doc_id for r in spark.read.parquet(out).collect()}
-    assert kept == {1, 2, 3, 4}  # doc 5 normalizes to doc 1's URL: rejected
 
 
 def test_geofence_transitions_batch(spark):
@@ -847,182 +698,3 @@ def test_retention_cohorts(spark):
     assert got[("2024-01-02", 1)] == (1, 1)
     assert got[("2024-01-02", 2)] == (1, 0)
     assert len(got) == 8  # dense grid: 2 cohorts x 4 periods
-
-
-class TestStreamingHeavyHitters:
-    def _run(self, spark, tmp_path, waves, capacity):
-        import opentopodata_spark.streaming as st
-
-        in_dir = tmp_path / "hh_in"
-        work = str(tmp_path / "hh")
-        for i, keys in enumerate(waves):
-            spark.createDataFrame(
-                [(j, k, "en", "s") for j, k in enumerate(keys)],
-                "doc_id long, text string, lang string, source string",
-            ).coalesce(1).write.mode("overwrite").parquet(
-                f"{in_dir}/wave{i}"
-            )
-            q = st.run_heavy_hitters_stream(
-                st.stream_corpus(spark, str(in_dir) + "/*").select(
-                    F.col("text").alias("key")
-                ),
-                f"{work}/state", f"{work}/ckpt", capacity=capacity,
-            )
-            q.awaitTermination()
-        return st._read_hh_state(spark, f"{work}/state", exclude_batch=2**62)
-
-    def test_matches_sequential_replay_and_bounds(self, spark, tmp_path):
-        from opentopodata_spark.operators.sketch import mg_trim
-
-        rng = __import__("random").Random(7)
-        waves = []
-        for _ in range(3):
-            w = (["alpha"] * 120 + ["beta"] * 60 + ["gamma"] * 30
-                 + [f"n{rng.randrange(200)}" for _ in range(300)])
-            rng.shuffle(w)
-            waves.append(w)
-        cap = 8
-        counts, n_total, delta = self._run(spark, tmp_path, waves, cap)
-        # sequential replay: exact wave counts -> trim -> merge -> trim
-        import pandas as pd
-
-        rc, rn, rd = {}, 0, 0
-        for w in waves:
-            vc = pd.Series(w).value_counts()
-            bc = {k: int(v) for k, v in vc.items()}
-            # the stream only ever sees the top cap+1 of the batch
-            top = sorted(bc.items(), key=lambda kv: (-kv[1], kv[0]))[:cap + 1]
-            bs, cut1 = mg_trim(dict(top), cap)
-            for k, v in bs.items():
-                rc[k] = rc.get(k, 0) + v
-            rc, cut2 = mg_trim(rc, cap)
-            rn += len(w)
-            rd += cut1 + cut2
-        assert counts == rc and n_total == rn and delta == rd
-        # MG bound vs exact truth, for every key (present or not)
-        exact: dict = {}
-        for w in waves:
-            for k in w:
-                exact[k] = exact.get(k, 0) + 1
-        for k, true in exact.items():
-            est = counts.get(k, 0)
-            assert est <= true <= est + delta, (k, est, true, delta)
-        # the real heavy hitter surfaces on top
-        top1 = max(counts.items(), key=lambda kv: kv[1])
-        assert top1[0] == "alpha"
-
-    def test_state_read_touches_exactly_one_partition(self, spark, tmp_path):
-        """_read_hh_state must read ONLY the latest eligible partition.
-
-        Pin it structurally: plant a corrupt (non-parquet) file inside
-        an OLDER partition — any implementation that scans historical
-        partitions throws; the listing-based one never opens it. Also
-        pin that after batch N commits, partitions older than N-1 are
-        pruned (N-1 survives for batch-N retries)."""
-        import opentopodata_spark.streaming as st
-
-        state = str(tmp_path / "state")
-        for b, rows in [
-            (0, [("x", 1, 0, 0), (None, 0, 1, 0)]),
-            (3, [("a", 7, 0, 0), (None, 0, 9, 2)]),
-        ]:
-            spark.createDataFrame(rows, st._HH_STATE_SCHEMA).coalesce(
-                1
-            ).write.parquet(f"{state}/ingest_batch={b}")
-        # corrupt the old partition: full-history readers choke here
-        with open(f"{state}/ingest_batch=0/garbage.parquet", "wb") as f:
-            f.write(b"not a parquet file")
-        counts, n_total, delta = st._read_hh_state(
-            spark, state, exclude_batch=2**62
-        )
-        assert counts == {"a": 7} and n_total == 9 and delta == 2
-        # exclude the newest -> fall back to the older (valid rows only
-        # can't be read past the garbage; prune first like the stream
-        # would have). Just check batch listing + prune discipline:
-        assert st._list_hh_batches(spark, state) == [0, 3]
-        st._prune_hh_state(spark, state, current_batch=5)
-        assert st._list_hh_batches(spark, state) == [3]
-        # empty/missing dir stays a clean zero-state
-        assert st._read_hh_state(spark, str(tmp_path / "nope"), 2**62) == (
-            {}, 0, 0)
-
-    def test_stream_prunes_old_state_partitions(self, spark, tmp_path):
-        import opentopodata_spark.streaming as st
-
-        waves = [["a"] * 3, ["b"] * 2, ["a"] * 1, ["c"] * 4]
-        self._run(spark, tmp_path, waves, capacity=10)
-        state = str(tmp_path / "hh" / "state")
-        # 4 batches ran; only the last one and its merge input remain
-        assert st._list_hh_batches(spark, state) == [2, 3]
-        counts, n_total, delta = st._read_hh_state(spark, state, 2**62)
-        assert counts == {"a": 4, "b": 2, "c": 4} and n_total == 10
-        assert delta == 0
-
-    def test_topk_view_and_exact_when_capacity_covers(self, spark, tmp_path):
-        import opentopodata_spark.streaming as st
-
-        waves = [["a"] * 5 + ["b"] * 3, ["a"] * 2 + ["c"] * 4]
-        self._run(spark, tmp_path, waves, capacity=10)
-        top = st.heavy_hitters_state_topk(
-            spark, str(tmp_path / "hh" / "state"), k=2
-        ).collect()
-        # no trims fired (distinct <= capacity): estimates are exact
-        assert [(r.key, r.est, r.est_hi) for r in top] == [
-            ("a", 7, 7), ("c", 4, 4)]
-        assert top[0].n_total == 14
-
-
-def test_image_near_dup_stream(spark, tmp_path):
-    """Incremental perceptual image dedup: wave-1 twin of an admitted
-    wave-0 image is rejected via the hash-carrying band index (no
-    payload re-read), within-wave pairs drop the larger id, undecodable
-    payloads are admitted unindexed."""
-    import numpy as np
-
-    from opentopodata_spark import png as _png
-    from opentopodata_spark import streaming as stx
-    from opentopodata_spark.operators import imagehash as ih
-
-    rng = np.random.RandomState(13)
-    yy, xx = np.mgrid[0:36, 0:48]
-
-    def img(i):
-        base = (110.0 + 70.0 * np.sin(xx / (2.5 + i) + i)
-                + 35.0 * np.cos(yy / (2.0 + 0.3 * i))
-                + rng.uniform(-5, 5, (36, 48)))
-        return np.clip(base, 0, 255).astype(np.uint8)
-
-    def twin(a):
-        mask = rng.rand(36, 48) < 0.25
-        return np.clip(a.astype(np.int32)
-                       + mask * rng.choice([-1, 1], (36, 48)),
-                       0, 255).astype(np.uint8)
-
-    a, b, c = img(0), img(3), img(7)
-    wave0 = [("w0a", _png.encode_png(a)),
-             ("w0a_t", _png.encode_png(twin(a))),   # within-wave pair
-             ("w0b", _png.encode_png(b)),
-             ("w0bad", b"not an image at all")]
-    wave1 = [("w1a_t", _png.encode_png(twin(a))),   # cross-wave twin
-             ("w1c", _png.encode_png(c))]
-    work = str(tmp_path / "imgstream")
-    for i, rows in enumerate((wave0, wave1)):
-        spark.createDataFrame(
-            rows, "media_ref string, payload binary"
-        ).coalesce(1).write.mode("overwrite").parquet(f"{work}/in/w{i}")
-        q = stx.run_image_near_dup_stream(
-            stx.stream_media(spark, f"{work}/in/*"),
-            f"{work}/out", f"{work}/ckpt", f"{work}/index",
-            max_distance=7, n_bands=8,
-        )
-        q.awaitTermination()
-    got = {r.media_ref: r for r in
-           spark.read.parquet(f"{work}/out").collect()}
-    assert set(got) == {"w0a", "w0b", "w0bad", "w1c"}
-    assert got["w0bad"].phash is None        # admitted, undecodable
-    assert got["w0a"].phash == ih._to_signed(ih.phash_bits(a))
-    # index holds hashes for admitted decodable images only
-    idx = spark.read.parquet(f"{work}/index")
-    assert set(r.media_ref for r in idx.collect()) == {
-        "w0a", "w0b", "w1c"}
-    assert idx.where(idx.phash.isNull()).count() == 0

@@ -24,7 +24,7 @@ sys.path.insert(0, REPO)
 
 TABLES = (
     "region nation customer supplier part orders lineitem events "
-    "documents embeddings"
+    "documents"
 ).split()
 
 
