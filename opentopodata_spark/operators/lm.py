@@ -102,7 +102,7 @@ def perplexity(
 
     logprob = sum ln p(w2|w1) over the doc's framed bigrams (rounded to
     ``round_to`` decimals), ppl = exp(-logprob / n_bigrams). Lower ppl =
-    more like the training corpus; the dataprep filter thresholds on it.
+    more like the training corpus.
 
     The model frame feeds THREE consumers (the bigram join, the context
     sums, the vocab size) — without a persist Spark recomputes the

@@ -11,7 +11,7 @@ Each metric family is built by an expression-builder (``_*_exprs``) and
 exposed two ways: a per-family operator (token_stats / quality_score /
 lang_id — the driver-query surface) and ``document_metrics``, which
 selects EVERY family in one projection — one scan, zero joins — for
-consumers like jobs/dataprep that need all metrics per document (three
+consumers that need all metrics per document (three
 metric joins at 10^12 docs would be three shuffles of the whole corpus).
 
 Determinism: every score uses only integer counts and single double
