@@ -24,9 +24,6 @@ oracle         single-process reference-semantics implementation (test oracle)
 operators.*    the Spark operators (extract, elevation resolve, paths, knn
                and range joins, events, spatial joins and overlay, and the
                raster operators: terrain, zonal, polygonize, warp, tiles)
-operators.{textops,dedup,lm,dsir,packing,search,contamination,urlops,
-           graph,quantiles,sampling}, bpe
-               text operators outside the engine (slated for deletion)
 lineage        per-partition lineage checkpoint + anti-join resume
 session        SparkSession builder helpers
 """

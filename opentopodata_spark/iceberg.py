@@ -467,6 +467,14 @@ class IcebergTable:
             if src is None:
                 raise ValueError(
                     f"partition column {partition_col!r} not in schema")
+            # partition values are Avro ints in the manifests and parsed
+            # with int() from the partition directories on append
+            dt = spark_schema[partition_col].dataType
+            if dt.typeName() not in ("integer", "short", "byte"):
+                raise ValueError(
+                    f"partition column {partition_col!r} has type "
+                    f"{dt.simpleString()}; only int, smallint and tinyint "
+                    "columns can partition a table")
             spec_fields.append({
                 "name": partition_col, "transform": "identity",
                 "source-id": src, "field-id": 1000,

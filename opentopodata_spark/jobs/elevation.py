@@ -82,7 +82,7 @@ def run(argv: list[str] | None = None) -> dict:
     t0 = time.time()
     docs = spark.read.parquet(ns.documents)
     points = _extract.with_point_id(_extract.extract_points(docs))
-    good = points.where(F.col("loc_error").isNull())
+    good = points.where(F.col("loc_error").isNull()).drop("loc_error")
 
     resolver = _elevation.ElevationResolver(
         spark, ordered, interpolation, nodata_value=nodata_value, salt=ns.salt
@@ -104,7 +104,8 @@ def run(argv: list[str] | None = None) -> dict:
         stats.update(res)
         resolved = spark.read.parquet(res["output"]).drop("_bucket")
     else:
-        resolved = resolver.resolve(good)
+        carry = tuple(c for c in good.columns if c not in ("point_id", "lat", "lon"))
+        resolved = resolver.resolve(good, carry)
 
     # row count via an Observation on the write itself — no second scan
     from pyspark.sql import Observation

@@ -331,9 +331,12 @@ def resumable_resolve(
 ) -> dict:
     """Resolve elevations with bucket-granular checkpoint/resume.
 
-    points must carry (point_id, lat, lon). Returns stats:
-    {completed_before, orphans_dropped, processed, output}. Calling it
-    again after a crash (or after completion) does only missing work.
+    points must carry (point_id, lat, lon); every other input column
+    (e.g. the document key) is carried through to the output, which
+    holds exactly one row per input row, as with ``resolver.resolve``.
+    Returns stats: {completed_before, orphans_dropped, processed,
+    output}. Calling it again after a crash (or after completion) does
+    only missing work.
 
     table_format: 'parquet' | 'iceberg' | a TableFormat instance
     (ParquetTables / IcebergTables / a test double) — every read and
@@ -362,7 +365,11 @@ def resumable_resolve(
 
     processed = 0
     if not todo.isEmpty():
-        resolved = resolver.resolve(todo.drop("_bucket")).withColumn(
+        carry = tuple(
+            c for c in points.columns
+            if c not in ("point_id", "lat", "lon", "_bucket")
+        )
+        resolved = resolver.resolve(todo.drop("_bucket"), carry).withColumn(
             "_bucket", bucket_col(n_buckets=n_buckets)
         )
         tables.append_data(resolved)

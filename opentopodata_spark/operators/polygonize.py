@@ -51,11 +51,6 @@ __all__ = [
     "connected_components",
 ]
 
-BORDER_SCHEMA = (
-    "pair_lo long, pair_hi long, cell long, klass long, region long"
-)
-REGION_SCHEMA = "region long, klass long, n_cells long"
-
 
 def classify_array(arr: np.ndarray, bands=None) -> np.ndarray:
     """Cell class array (int64; -1 = hole). Float rasters need ``bands``

@@ -145,16 +145,6 @@ def tile_rect_for_bounds(bounds, zoom: int, bbox=None):
     return (x0, x1, y0, y1)
 
 
-def tile_keys_for_bounds(bounds, zoom: int, bbox=None) -> list:
-    """Materialized (x, y) key list for a bounds object — the
-    sequential-twin form of :func:`tile_rect_for_bounds`."""
-    rect = tile_rect_for_bounds(bounds, zoom, bbox=bbox)
-    if rect is None:
-        return []
-    x0, x1, y0, y1 = rect
-    return [(x, y) for y in range(y0, y1 + 1) for x in range(x0, x1 + 1)]
-
-
 def _dataset_tile_rects(datasets, zoom: int, bbox) -> list:
     """Per-dataset bounding tile rectangles: config bounds tightened by
     the DERIVED raster coverage (tiles.derived_wgs84_bounds) — a

@@ -543,23 +543,3 @@ def polygon_cover_cells(poly_lats, poly_lons, level: int) -> tuple[np.ndarray, n
     uniq = np.ones(len(ids), dtype=bool)
     uniq[1:] = ids[1:] != ids[:-1]
     return ids[uniq], interior[uniq]
-
-
-def neighbor_seeds(lats, lons, level: int) -> np.ndarray:
-    """Cell ids of the 3x3 ring around each point, BY SAMPLING offset
-    points one cell-diagonal away (join-cover expansion for kNN / PIP
-    candidate generation). Sampling dodges cross-face ij arithmetic; the
-    ring it returns covers at least the point's edge-adjacent cells away
-    from face corners, and callers treat it as a candidate OVER-cover
-    (dedup + exact refinement downstream). Returns shape (n, 9)."""
-    lats = np.asarray(lats, dtype=np.float64)
-    lons = np.asarray(lons, dtype=np.float64)
-    # cell angular size at this level (~sqrt of 4pi/6 sr per face / 4^L)
-    step_deg = 90.0 / float(1 << level)
-    cols = []
-    for dy in (-1.0, 0.0, 1.0):
-        for dx in (-1.0, 0.0, 1.0):
-            la = np.clip(lats + dy * step_deg, -89.9999999, 89.9999999)
-            lo = ((lons + dx * step_deg + 180.0) % 360.0) - 180.0
-            cols.append(cell_ids(la, lo, level))
-    return np.stack(cols, axis=1)

@@ -1,4 +1,4 @@
-"""Tile index + dataset registry as (broadcastable) DataFrames.
+"""Tile index + dataset registry as (broadcastable) rows.
 
 The reference keeps an in-memory dict {(northing, easting) -> path} per
 dataset (/root/reference/opentopodata/config.py:367-373) and floors query
@@ -22,32 +22,9 @@ scale and exactly equal on both sides.
 
 from __future__ import annotations
 
-from dataclasses import dataclass
 from decimal import Decimal
 
 from .config import Dataset, MultiDataset, SingleFileDataset, TiledDataset
-
-REGISTRY_SCHEMA = (
-    "dataset string, priority int, kind string, "
-    "left double, bottom double, right double, top double, "
-    "filename_epsg int, tile_size double, single_path string"
-)
-
-TILE_INDEX_SCHEMA = "dataset string, iy long, ix long, path string"
-
-
-@dataclass(frozen=True)
-class RegistryRow:
-    dataset: str
-    priority: int
-    kind: str
-    left: float
-    bottom: float
-    right: float
-    top: float
-    filename_epsg: int | None
-    tile_size: float | None
-    single_path: str | None
 
 
 def _wgs84_cover_of_projected_box(
@@ -199,12 +176,3 @@ def tile_index_rows(datasets: list[Dataset]) -> list[tuple]:
                 continue
             rows.append((ds.name, iy, ix, path))
     return rows
-
-
-def registry_df(spark, datasets: list[Dataset]):
-    return spark.createDataFrame(dataset_registry_rows(datasets), REGISTRY_SCHEMA)
-
-
-def tile_index_df(spark, datasets: list[Dataset]):
-    rows = tile_index_rows(datasets)
-    return spark.createDataFrame(rows, TILE_INDEX_SCHEMA)

@@ -191,6 +191,9 @@ def test_refusals(spark, docs_df, tmp_path):
     with pytest.raises(ValueError, match="not in schema"):
         iceberg.IcebergTable.create(
             str(tmp_path / "t2"), docs_df.schema, partition_col="nope")
+    with pytest.raises(ValueError, match="'doc_id' has type string"):
+        iceberg.IcebergTable.create(
+            str(tmp_path / "t3"), docs_df.schema, partition_col="doc_id")
     with pytest.raises(ValueError, match="no snapshot"):
         t._snapshot(12345)
     with pytest.raises(ValueError, match="empty table"):

@@ -98,45 +98,56 @@ def _top_level_names(path: str) -> set:
     return names
 
 
-def test_no_dangling_package_imports(monkeypatch):
-    """Every ``opentopodata_spark`` import in the package and in
-    ``__spark_entry__.py`` -- including the lazy ones inside functions,
-    which no import-time check sees -- names a module file, and every
-    imported name exists in it. ``oracle_sql()`` checks only queries
-    that ``queries()`` registers."""
+def _package_imports(path: str):
+    """(lineno, module, imported names or None) for every
+    ``opentopodata_spark`` import in ``path`` -- including the lazy ones
+    inside functions, which no import-time check sees -- with relative
+    imports resolved."""
+    rel = os.path.relpath(path, REPO)
+    package = os.path.dirname(rel).split(os.sep)  # where "." points
+    for node in ast.walk(ast.parse(open(path).read())):
+        if isinstance(node, ast.Import):
+            targets = [(a.name, None) for a in node.names]
+        elif isinstance(node, ast.ImportFrom):
+            mod = node.module or ""
+            if node.level:
+                base = package[:len(package) - node.level + 1]
+                mod = ".".join(base + ([mod] if mod else []))
+            targets = [(mod, [a.name for a in node.names])]
+        else:
+            continue
+        for mod, names in targets:
+            if mod.split(".")[0] == "opentopodata_spark":
+                yield node.lineno, mod, names
+
+
+def _package_files() -> list:
     pkg = os.path.join(REPO, "opentopodata_spark")
-    files = [os.path.join(REPO, "__spark_entry__.py")] + [
+    return [
         os.path.join(base, fn)
         for base, _dirs, fns in os.walk(pkg)
         for fn in fns if fn.endswith(".py")
     ]
+
+
+def test_no_dangling_package_imports(monkeypatch):
+    """Every ``opentopodata_spark`` import in the package and in
+    ``__spark_entry__.py``, the lazy ones included, names a module file,
+    and every imported name exists in it. ``oracle_sql()`` checks only
+    queries that ``queries()`` registers."""
     dangling = []
-    for path in files:
+    for path in [os.path.join(REPO, "__spark_entry__.py")] + _package_files():
         rel = os.path.relpath(path, REPO)
-        package = os.path.dirname(rel).split(os.sep)  # where "." points
-        for node in ast.walk(ast.parse(open(path).read())):
-            if isinstance(node, ast.Import):
-                targets = [(a.name, None) for a in node.names]
-            elif isinstance(node, ast.ImportFrom):
-                mod = node.module or ""
-                if node.level:
-                    base = package[:len(package) - node.level + 1]
-                    mod = ".".join(base + ([mod] if mod else []))
-                targets = [(mod, [a.name for a in node.names])]
-            else:
+        for lineno, mod, names in _package_imports(path):
+            target = _module_file(mod)
+            if target is None:
+                dangling.append(f"{rel}:{lineno} {mod}")
                 continue
-            for mod, names in targets:
-                if mod.split(".")[0] != "opentopodata_spark":
-                    continue
-                target = _module_file(mod)
-                if target is None:
-                    dangling.append(f"{rel}:{node.lineno} {mod}")
-                    continue
-                for name in names or ():
-                    if _module_file(f"{mod}.{name}") is None and (
-                        name not in _top_level_names(target)
-                    ):
-                        dangling.append(f"{rel}:{node.lineno} {mod}.{name}")
+            for name in names or ():
+                if _module_file(f"{mod}.{name}") is None and (
+                    name not in _top_level_names(target)
+                ):
+                    dangling.append(f"{rel}:{lineno} {mod}.{name}")
     assert dangling == []
 
     import __spark_entry__ as contract
@@ -146,6 +157,34 @@ def test_no_dangling_package_imports(monkeypatch):
     for name in ("_zonal_sql", "_raster_stats_sql", "_zonal_majority_sql"):
         monkeypatch.setattr(contract, name, lambda: "SELECT 1")
     assert set(contract.oracle_sql()) <= set(contract.queries())
+
+
+def test_no_orphan_package_modules():
+    """Every package module is reachable by imports, the lazy ones
+    included, from an entry point: the jobs, the driver contract,
+    ``tools/`` and ``perfbench/``. A module that only tests import ships
+    to every worker and does no work there."""
+    roots = [os.path.join(REPO, "__spark_entry__.py")] + [
+        os.path.join(REPO, d, fn)
+        for d in ("opentopodata_spark/jobs", "tools", "perfbench")
+        for fn in os.listdir(os.path.join(REPO, d)) if fn.endswith(".py")
+    ]
+    reached, todo = set(), roots
+    while todo:
+        path = todo.pop()
+        if path in reached:
+            continue
+        reached.add(path)
+        for _lineno, mod, names in _package_imports(path):
+            parts = mod.split(".")
+            # importing a submodule runs every package __init__ above it
+            dotted = [".".join(parts[:i]) for i in range(1, len(parts) + 1)]
+            dotted += [f"{mod}.{name}" for name in names or ()]
+            todo += [f for f in map(_module_file, dotted) if f is not None]
+    orphans = sorted(
+        os.path.relpath(f, REPO) for f in _package_files() if f not in reached
+    )
+    assert orphans == []
 
 
 # ------------------------------------------------------------- elevation job
@@ -165,6 +204,14 @@ def test_elevation_job_bad_args_fail_fast(tmp_path, raster_root, documents_path)
         ]
     )
     assert rc == 2
+
+
+def _assert_document_keyed(res, rows):
+    """Each result row carries its document key, one row per point: the
+    output re-attaches to its document without the point_id hash."""
+    key = ("doc_id", "span_pos", "point_pos")
+    assert set(key) <= set(res.columns)
+    assert res.select(*key).distinct().count() == rows
 
 
 def test_elevation_job_end_to_end(tmp_path, raster_root, documents_path, spark, capsys):
@@ -190,6 +237,7 @@ def test_elevation_job_end_to_end(tmp_path, raster_root, documents_path, spark, 
 
     res = spark.read.parquet(f"{out}/results")
     assert {"point_id", "lat", "lon", "elevation", "dataset"} <= set(res.columns)
+    _assert_document_keyed(res, stats["rows"])
 
     # resume: everything checkpointed, nothing reprocessed
     assert job.main(argv) == 0
@@ -243,3 +291,4 @@ def test_elevation_job_via_spark_submit(tmp_path, raster_root, documents_path, s
     res = spark.read.parquet(f"{out}/results")
     assert res.count() == stats["rows"]
     assert res.where("elevation IS NOT NULL").count() > 0
+    _assert_document_keyed(res, stats["rows"])

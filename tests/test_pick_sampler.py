@@ -107,19 +107,26 @@ def test_base_matches_oracle(multi, points, base):
         {"partitions": 13, "batch": 7},
         {"salt": 8},
         {"cell_salts": "hot"},
+        {"cell_salts": "hot_and_filler"},
     ],
     ids=["batch7", "one_partition", "many_partitions",
-         "many_partitions_batch7", "uniform_salt", "cell_salts"],
+         "many_partitions_batch7", "uniform_salt", "cell_salts",
+         "cell_salts_broadcast"],
 )
 def test_same_rows_under_metamorphic_changes(spark, multi, points, base,
                                              variant):
     nodata_value, want = base
     variant = dict(variant)
-    if variant.get("cell_salts") == "hot":
+    if variant.get("cell_salts") in ("hot", "hot_and_filler"):
         r = elevation.ElevationResolver(spark, multi, "bilinear")
-        cells = r.candidates(points).select(r._cell_expr())
+        cells = points.select(r._cell_expr())
         hot = cells.groupBy("_cell").count().orderBy(F.desc("count")).limit(5)
-        variant["cell_salts"] = {row["_cell"]: 6 for row in hot.collect()}
+        salts = {row["_cell"]: 6 for row in hot.collect()}
+        if variant["cell_salts"] == "hot_and_filler":
+            # past the literal CASE limit: salts join in by broadcast
+            salts = {**dict.fromkeys(range(600), 3), **salts}
+            assert len(salts) > r._SALT_LITERAL_LIMIT
+        variant["cell_salts"] = salts
     got = _resolve(spark, multi, points, nodata_value=nodata_value, **variant)
     assert got == want
 
