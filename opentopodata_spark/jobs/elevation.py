@@ -53,7 +53,6 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument("--nodata-value", default=None, help="'null', 'nan', or an integer")
     p.add_argument("--format", dest="out_format", default="parquet", help="parquet|json|geojson")
     p.add_argument("--resume-dir", default=None, help="lineage checkpoint dir; rerun after a crash does only missing work")
-    p.add_argument("--salt", type=int, default=0, help="uniform point-hash salt (0 = auto: per-cell salts from a sampled skew pre-pass)")
     p.add_argument("--keep-errors", action="store_true", help="also write rows whose location text failed to parse")
     p.add_argument("--cores", type=int, default=None, help="local[] cores (ignored with --master external)")
     p.add_argument("--shuffle-partitions", type=int, default=None)
@@ -85,18 +84,17 @@ def run(argv: list[str] | None = None) -> dict:
     good = points.where(F.col("loc_error").isNull()).drop("loc_error")
 
     resolver = _elevation.ElevationResolver(
-        spark, ordered, interpolation, nodata_value=nodata_value, salt=ns.salt
+        spark, ordered, interpolation, nodata_value=nodata_value
     )
-    if ns.salt == 0:
-        # skew + sizing pre-pass on a document sample: per-spatial-cell
-        # salt factors (a Zipf-hot cell otherwise serializes the sampling
-        # stage) and the total-row estimate that sizes the wide shuffle
-        sample_pts = _extract.with_point_id(
-            _extract.extract_points(docs.sample(0.02, seed=7))
-        ).where(F.col("loc_error").isNull())
-        resolver.set_cell_salts(
-            _elevation.estimate_cell_salts(resolver, sample_pts, sample_fraction=0.02)
-        )
+    # skew + sizing pre-pass on a document sample: per-spatial-cell salt
+    # factors (a Zipf-hot cell otherwise serializes the sampling stage)
+    # and the total-row estimate that sizes the wide shuffle
+    sample_pts = _extract.with_point_id(
+        _extract.extract_points(docs.sample(0.02, seed=7))
+    ).where(F.col("loc_error").isNull())
+    resolver.set_cell_salts(
+        _elevation.estimate_cell_salts(resolver, sample_pts, sample_fraction=0.02)
+    )
 
     stats: dict = {"job": "elevation", "datasets": [d.name for d in ordered]}
     if ns.resume_dir:

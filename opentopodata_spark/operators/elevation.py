@@ -30,7 +30,7 @@ Scale design notes:
     points hit few rasters — the per-executor mmap LRU is the GDAL-block-
     cache analog)
   * per-cell salts from a sampled pre-pass (estimate_cell_salts) split
-    Zipf-hot cells
+    Zipf-hot cells; every other cell keeps salt 1 (one task per cell)
 """
 
 from __future__ import annotations
@@ -46,6 +46,10 @@ from pyspark.sql.types import DoubleType, StringType, StructField, StructType
 from .. import crs as _crs
 from .. import interpolate, tiles
 from ..config import Dataset
+
+# Edge of the shuffle's spatial cell, in degrees: one SRTM-style 1° tile.
+CELL_DEG = 1.0
+
 
 def _pack_ij(iy, ix):
     """(iy, ix) tile indices -> one sortable uint64 key (offset-binary so
@@ -169,7 +173,9 @@ def _make_sampler(interpolation: str, nodata_value, names, meta_bc, paths_bc):
 
 
 class ElevationResolver:
-    """Resolves elevations for a points DataFrame against ordered datasets."""
+    """Resolves elevations for a points DataFrame against ordered datasets.
+    A cell's shuffle salt is its entry in the plan set_cell_salts installed,
+    else 1; only a resolver that never had a plan salts every cell by 4."""
 
     def __init__(
         self,
@@ -177,8 +183,6 @@ class ElevationResolver:
         datasets: list[Dataset],
         interpolation: str = "bilinear",
         nodata_value=None,
-        sample_partitions: int | None = None,
-        salt: int = 0,
     ):
         if interpolation not in interpolate.INTERPOLATION_METHODS:
             raise ValueError(f"Invalid interpolation method '{interpolation}'.")
@@ -186,10 +190,7 @@ class ElevationResolver:
         self.datasets = datasets
         self.interpolation = interpolation
         self.nodata_value = nodata_value
-        # None = auto: sized at resolve() time by _plan_partitions() —
-        # sampling-driven when an estimate exists (estimate_cell_salts
-        # with sample_fraction), else spark.sql.shuffle.partitions.
-        self.sample_partitions = sample_partitions
+        # pre-pass total-point estimate; sizes the shuffle (_plan_partitions)
         self._est_rows: float | None = None
         # The sampler's metadata, broadcast once: per dataset its
         # registry box (config bounds INTERSECT derived raster coverage —
@@ -235,13 +236,10 @@ class ElevationResolver:
         )
         self._meta_bc = spark.sparkContext.broadcast(ds_meta)
         self._paths_bc = spark.sparkContext.broadcast(paths)
-        # Uniform point-hash salt for the spatial-cell shuffle. salt=0 =
-        # auto: 1 when per-cell salts are installed (set_cell_salts — the
-        # intended path, they split exactly the hot cells), else a mild 4
+        # The per-cell salt plan (set_cell_salts). None = no plan was
+        # ever installed (no pre-pass ran): every cell takes a mild salt 4
         # so a corpus concentrated in a handful of cells still spreads.
-        self._salt_arg = salt
-        self._cell_salts: dict[int, int] = {}
-        self.cell_deg = 1.0
+        self._cell_salts: dict[int, int] | None = None
 
     def candidates(self, points: DataFrame) -> DataFrame:
         """(point, covering dataset) rows, kept only for perfbench's trace."""
@@ -263,21 +261,18 @@ class ElevationResolver:
     _ROWS_PER_PARTITION = 200_000
 
     def _plan_partitions(self) -> int:
-        """Partition count for THE shuffle.
+        """Partition count for THE shuffle, by one of two rules.
 
-        Explicit sample_partitions wins. With a row estimate (installed
-        by estimate_cell_salts(sample_fraction=...)): enough partitions
-        for ~_ROWS_PER_PARTITION rows each, capped at 4 waves, then
-        rounded UP to whole waves — a multiple of defaultParallelism
-        (the execution slots), which is also the floor. Every sampler
-        task pays a fixed Python-worker start (~0.2 s on local[4]), so a
-        partial wave buys no parallelism and a wave per core of tiny
-        tasks costs that start again; the per-cell salts, not finer
-        partitions, keep the tasks of one wave even. Without an estimate
-        (unit tests, ad-hoc calls) the session shuffle setting is used
-        unchanged."""
-        if self.sample_partitions:
-            return self.sample_partitions
+        With a row estimate (installed by estimate_cell_salts with
+        sample_fraction): enough partitions for ~_ROWS_PER_PARTITION rows
+        each, capped at 4 waves, then rounded UP to whole waves — a
+        multiple of defaultParallelism (the execution slots), which is
+        also the floor. Every sampler task pays a fixed Python-worker
+        start (~0.2 s on local[4]), so a partial wave buys no parallelism
+        and a wave per core of tiny tasks costs that start again; the
+        per-cell salts, not finer partitions, keep the tasks of one wave
+        even. Without an estimate (unit tests, ad-hoc calls):
+        spark.sql.shuffle.partitions, unchanged."""
         if self._est_rows is None:
             return int(self.spark.conf.get("spark.sql.shuffle.partitions"))
         slots = self.spark.sparkContext.defaultParallelism
@@ -292,16 +287,17 @@ class ElevationResolver:
         large share of points while most cells hold a handful. A uniform
         salt either under-splits the hot cell or shatters every cold
         cell's tile locality. Per-cell salts split exactly the hot cells
-        across ~their fair share of partitions."""
+        across ~their fair share of partitions; every other cell (all of
+        them, for an empty plan) keeps salt 1."""
         self._cell_salts = {int(c): int(s) for c, s in salts.items() if s > 1}
 
     def _cell_expr(self):
         """Dataset-independent spatial cell of the point (packed long).
         The sampling shuffle keys on this: points of one area co-locate
         (their rasters too — tile locality for the per-executor LRU)."""
-        iy = F.floor(F.col("lat") / F.lit(self.cell_deg)).cast("long")
-        ix = F.floor(F.col("lon") / F.lit(self.cell_deg)).cast("long")
-        width = int(360.0 / self.cell_deg) + 4
+        iy = F.floor(F.col("lat") / F.lit(CELL_DEG)).cast("long")
+        ix = F.floor(F.col("lon") / F.lit(CELL_DEG)).cast("long")
+        width = int(360.0 / CELL_DEG) + 4
         return (iy * F.lit(width) + ix).alias("_cell")
 
     # hot cells are by definition FEW (share > 1/(4*partitions) each);
@@ -311,34 +307,29 @@ class ElevationResolver:
 
     def _partition_exprs(self, df: DataFrame):
         """Partitioning expressions for THE shuffle: (spatial cell,
-        point-hash salt). Returned as inline expressions (and an optional
-        pre-joined frame) so the shuffle rows don't carry them — at 10^10
-        rows two extra longs are real bytes."""
+        point-hash salt). A cell's salt is its plan entry, else 1 with a
+        plan installed and 4 without — a literal CASE, or a broadcast join
+        past _SALT_LITERAL_LIMIT entries. Inline expressions (and the
+        possibly pre-joined frame) keep them off the shuffle rows — at
+        10^10 rows two extra longs are real bytes."""
         cell = self._cell_expr()
-        salts = self._cell_salts
-        if salts and len(salts) <= self._SALT_LITERAL_LIMIT:
-            factor = F.lit(1)
+        salts = self._cell_salts or {}
+        default = F.lit(4 if self._cell_salts is None else 1)
+        if len(salts) <= self._SALT_LITERAL_LIMIT:
+            factor = default
             for c, s in salts.items():
                 factor = F.when(cell == F.lit(c), F.lit(s)).otherwise(factor)
             return df, [cell, F.pmod(F.xxhash64("point_id"), factor)]
-        if salts:
-            salt_df = F.broadcast(
-                self.spark.createDataFrame(
-                    list(salts.items()), "_scell long, _sfactor int"
-                )
-            )
-            df = df.withColumn("_cell", cell).join(
-                salt_df, F.col("_cell") == salt_df["_scell"], "left"
-            )
-            return df.drop("_scell"), [
-                F.col("_cell"),
-                F.pmod(
-                    F.xxhash64("point_id"),
-                    F.coalesce(F.col("_sfactor"), F.lit(1)),
-                ),
-            ]
-        salt = self._salt_arg if self._salt_arg >= 1 else 4
-        return df, [cell, F.pmod(F.xxhash64("point_id"), F.lit(salt))]
+        salt_df = F.broadcast(
+            self.spark.createDataFrame(list(salts.items()), "_scell long, _sfactor int")
+        )
+        df = df.withColumn("_cell", cell).join(
+            salt_df, F.col("_cell") == salt_df["_scell"], "left"
+        )
+        return df.drop("_scell"), [
+            F.col("_cell"),
+            F.pmod(F.xxhash64("point_id"), F.coalesce(F.col("_sfactor"), default)),
+        ]
 
     def resolve(self, points: DataFrame, carry: tuple = ()) -> DataFrame:
         """Full pipeline: one linear plan, ONE wide shuffle, one scan.
@@ -394,9 +385,9 @@ def estimate_cell_salts(
     sizes the shuffle. Salts are then computed against the partition
     count the resolve will actually use.
 
-    At cluster scale this is one tiny pre-pass (0.1% of the data) that
-    removes the hot-city straggler — the skew case AQE cannot fix for a
-    mapInArrow repartition (it is not a join)."""
+    At cluster scale this is one small pre-pass (every caller samples 2%
+    of the documents) that removes the hot-city straggler — the skew case
+    AQE cannot fix for a mapInArrow repartition (it is not a join)."""
     cells = points_sample.select(resolver._cell_expr())
     rows = cells.groupBy("_cell").agg(F.count(F.lit(1)).alias("cnt")).collect()
     total = sum(r.cnt for r in rows)

@@ -19,6 +19,7 @@ from opentopodata_spark.operators import elevation, extract
 
 CARRY = ("doc_id", "span_pos", "point_pos")
 BATCH_KEY = "spark.sql.execution.arrow.maxRecordsPerBatch"
+PARTITIONS_KEY = "spark.sql.shuffle.partitions"
 
 
 @pytest.fixture(scope="module")
@@ -53,19 +54,23 @@ def _rows(df) -> list:
     )
 
 
-def _resolve(spark, multi, points, batch=65536, partitions=None, salt=1,
-             cell_salts=None, nodata_value=None):
-    old = spark.conf.get(BATCH_KEY)
+def _resolve(spark, multi, points, batch=65536, partitions=None,
+             cell_salts=None, no_plan=False, nodata_value=None):
+    """Resolve under one variant. A salt plan (cell_salts, else empty) is
+    installed unless no_plan, which leaves the uniform salt 4 of a
+    resolver that never ran a pre-pass."""
+    old = {k: spark.conf.get(k) for k in (BATCH_KEY, PARTITIONS_KEY)}
     spark.conf.set(BATCH_KEY, str(batch))
+    if partitions:
+        spark.conf.set(PARTITIONS_KEY, str(partitions))
     try:
-        r = elevation.ElevationResolver(
-            spark, multi, "bilinear", nodata_value,
-            sample_partitions=partitions, salt=salt)
-        if cell_salts:
-            r.set_cell_salts(cell_salts)
+        r = elevation.ElevationResolver(spark, multi, "bilinear", nodata_value)
+        if not no_plan:
+            r.set_cell_salts(cell_salts or {})
         return _rows(r.resolve(points, carry=CARRY))
     finally:
-        spark.conf.set(BATCH_KEY, old)
+        for k, v in old.items():
+            spark.conf.set(k, v)
 
 
 @pytest.fixture(scope="module", params=[None, float("nan")], ids=["null", "nan"])
@@ -105,12 +110,12 @@ def test_base_matches_oracle(multi, points, base):
         {"partitions": 1},
         {"partitions": 13},
         {"partitions": 13, "batch": 7},
-        {"salt": 8},
+        {"no_plan": True},
         {"cell_salts": "hot"},
         {"cell_salts": "hot_and_filler"},
     ],
     ids=["batch7", "one_partition", "many_partitions",
-         "many_partitions_batch7", "uniform_salt", "cell_salts",
+         "many_partitions_batch7", "no_plan", "cell_salts",
          "cell_salts_broadcast"],
 )
 def test_same_rows_under_metamorphic_changes(spark, multi, points, base,
@@ -139,12 +144,14 @@ def test_shuffled_input_order(spark, multi, points, base):
 
 
 def test_resolve_plan_is_one_exchange_one_arrow_pass(spark, multi, points):
-    # default auto salt, no salt, and per-cell salts few enough for the
-    # literal CASE: the points shuffle once, straight into one sampler
-    no_salt = elevation.ElevationResolver(spark, multi, "bilinear", salt=1)
+    # no plan (uniform salt 4), an empty plan, and per-cell salts few
+    # enough for the literal CASE: the points shuffle once, straight into
+    # one sampler
+    empty_plan = elevation.ElevationResolver(spark, multi, "bilinear")
+    empty_plan.set_cell_salts({})
     cell_salted = elevation.ElevationResolver(spark, multi, "bilinear")
     cell_salted.set_cell_salts({0: 3, 1: 5})
-    for r in (elevation.ElevationResolver(spark, multi, "bilinear"), no_salt,
+    for r in (elevation.ElevationResolver(spark, multi, "bilinear"), empty_plan,
               cell_salted):
         res = r.resolve(points, carry=CARRY)
         plan = res._jdf.queryExecution().executedPlan().toString()
@@ -155,6 +162,25 @@ def test_resolve_plan_is_one_exchange_one_arrow_pass(spark, multi, points):
         for node in ("MapInPandas", "Sort", "BroadcastNestedLoopJoin",
                      "BroadcastHashJoin"):
             assert node not in plan, plan
+
+
+def test_installed_plan_keeps_unsalted_cells_on_one_partition(spark, multi,
+                                                             points):
+    # with a plan installed -- even an empty one, as the pre-pass returns
+    # when no cell is hot -- a cell the plan does not salt keeps salt 1:
+    # all its points land in one partition, so one task reads its tiles
+    for plan in ({}, {0: 3}):
+        r = elevation.ElevationResolver(spark, multi, "bilinear")
+        r.set_cell_salts(plan)
+        parts = (
+            r.resolve(points, carry=CARRY)
+            .select(r._cell_expr(), F.spark_partition_id().alias("part"))
+            .where(~F.col("_cell").isin(list(plan)))
+            .groupBy("_cell").agg(F.countDistinct("part").alias("n_parts"))
+        )
+        spread = parts.where(F.col("n_parts") > 1).count()
+        assert spread == 0, (
+            f"plan {plan}: {spread} cells span more than one partition")
 
 
 def test_duplicate_point_id_keeps_every_row(spark, multi):

@@ -124,10 +124,13 @@ class TestDifferential:
 
     def test_salted_repartition_same_result(self, spark, points, datasets):
         ds = [datasets["srtm90subset"], datasets["etopo1deg"]]
-        r1 = elevation.ElevationResolver(spark, ds, "bilinear", salt=1).resolve(points)
-        r8 = elevation.ElevationResolver(spark, ds, "bilinear", salt=8).resolve(points)
+        # an installed empty plan (salt 1) vs no plan (uniform salt 4)
+        planned = elevation.ElevationResolver(spark, ds, "bilinear")
+        planned.set_cell_salts({})
+        r1 = planned.resolve(points)
+        r4 = elevation.ElevationResolver(spark, ds, "bilinear").resolve(points)
         a = {r.point_id: (r.elevation, r.dataset) for r in r1.collect()}
-        b = {r.point_id: (r.elevation, r.dataset) for r in r8.collect()}
+        b = {r.point_id: (r.elevation, r.dataset) for r in r4.collect()}
         assert set(a) == set(b)
         for k in a:
             assert _same(a[k][0], b[k][0]) and a[k][1] == b[k][1]
