@@ -4,7 +4,7 @@
 (documents -> coordinate extraction -> tile assignment -> raster
 interpolation -> priority coalesce) on deterministic synthetic fixtures
 at sf0.001 scale. ``queries()``/``oracle_sql()`` cover the engine's
-operator inventory (SURVEY.md §2 plus the geospatial, raster and event
+operator inventory (SURVEY.md §2 plus the geospatial and raster
 operators) over the testdata tables; every aggregate/computed column
 is aliased identically on both sides, and all float expressions are
 written so Spark and DuckDB evaluate the exact same double-precision
@@ -25,7 +25,6 @@ if _REPO not in sys.path:
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from opentopodata_spark.operators import events as ev
 from opentopodata_spark.operators import knn
 
 _PAIR_REGEX = r"(-?\d+(?:\.\d+)?),(-?\d+(?:\.\d+)?)"
@@ -353,242 +352,8 @@ FROM parsed
 
 
 # ---------------------------------------------------------------------------
-# queries — event analytics and interval / as-of joins
+# queries — polygon dissolve and geodesic buffers
 # ---------------------------------------------------------------------------
-
-
-def q_events_rollup(spark, sf_dir):
-    r = ev.tumbling_rollup(_t(spark, sf_dir, "events"))
-    return r.select(
-        F.date_format("window_start", "yyyy-MM-dd HH:mm:ss").alias("window_start"),
-        "event_type",
-        "n_events",
-        F.round("sum_value", 6).alias("sum_value"),
-        "n_users",
-    )
-
-
-_Q_EVENTS_SQL = """
-SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S') AS window_start,
-       event_type,
-       count(*) AS n_events,
-       round(CAST(sum(value::DECIMAL(28,6)) AS DOUBLE), 6) AS sum_value,
-       count(DISTINCT user_id) AS n_users
-FROM events GROUP BY 1, 2
-"""
-
-
-def q_funnel(spark, sf_dir):
-    """operators/events.funnel: view -> click -> purchase ordered
-    conversion counts (greedy earliest chain, k-1 join+min rounds over
-    per-user step minima — no per-user event arrays)."""
-    return ev.funnel(
-        _t(spark, sf_dir, "events"), ["view", "click", "purchase"]
-    )
-
-
-_Q_FUNNEL_SQL = """
-WITH s0 AS (SELECT user_id, min(ts) AS t0 FROM events
-            WHERE event_type = 'view' GROUP BY user_id),
-s1 AS (SELECT e.user_id, min(e.ts) AS t1
-       FROM events e JOIN s0 ON e.user_id = s0.user_id AND e.ts >= s0.t0
-       WHERE e.event_type = 'click' GROUP BY e.user_id),
-s2 AS (SELECT e.user_id, min(e.ts) AS t2
-       FROM events e JOIN s1 ON e.user_id = s1.user_id AND e.ts >= s1.t1
-       WHERE e.event_type = 'purchase' GROUP BY e.user_id)
-SELECT 'view' AS step, CAST(0 AS BIGINT) AS step_index,
-       count(*) AS n_users FROM s0
-UNION ALL SELECT 'click', CAST(1 AS BIGINT), count(*) FROM s1
-UNION ALL SELECT 'purchase', CAST(2 AS BIGINT), count(*) FROM s2
-"""
-
-
-def q_retention(spark, sf_dir):
-    """operators/events.retention: signup cohorts by first-anchor date,
-    day-offset activity counts on a DENSE (cohort x period) grid with
-    explicit zeros (activity collapsed to (user, day) before the final
-    shuffle)."""
-    out = ev.retention(_t(spark, sf_dir, "events"), max_periods=5)
-    return out.select(
-        F.date_format("cohort_date", "yyyy-MM-dd").alias("cohort_date"),
-        "period",
-        "n_cohort",
-        "n_active",
-    )
-
-
-_Q_RETENTION_SQL = """
-WITH cohorts AS (
-  SELECT user_id, min(CAST(ts AS DATE)) AS cohort_date
-  FROM events WHERE event_type = 'signup' GROUP BY user_id),
-days AS (SELECT DISTINCT user_id, CAST(ts AS DATE) AS d FROM events),
-hits AS (
-  SELECT c.cohort_date, datediff('day', c.cohort_date, a.d) AS period,
-         count(DISTINCT c.user_id) AS n_active
-  FROM cohorts c JOIN days a ON c.user_id = a.user_id
-  WHERE datediff('day', c.cohort_date, a.d) BETWEEN 0 AND 5
-  GROUP BY 1, 2),
-sizes AS (SELECT cohort_date, count(*) AS n_cohort
-          FROM cohorts GROUP BY cohort_date),
-grid AS (
-  SELECT s.cohort_date, s.n_cohort, g.period
-  FROM sizes s, UNNEST(generate_series(0, 5)) AS g(period))
-SELECT strftime(g.cohort_date, '%Y-%m-%d') AS cohort_date,
-       CAST(g.period AS BIGINT) AS period,
-       CAST(g.n_cohort AS BIGINT) AS n_cohort,
-       CAST(coalesce(h.n_active, 0) AS BIGINT) AS n_active
-FROM grid g LEFT JOIN hits h
-  ON g.cohort_date = h.cohort_date AND g.period = h.period
-"""
-
-
-def q_interval_join(spark, sf_dir):
-    """operators/intervals.interval_join: half-open [start, end)
-    overlap pairs via the bin-bucketing rewrite — explode to 1 h time
-    bins, co-partitioned equi-join on (user_id, bin), canonical-bin
-    dedupe (no distinct), overlap verified at exact microseconds. The
-    naive plan Spark gives the same predicate is a nested-loop join;
-    this one is a hash join (plan pinned in tests). Oracle: DuckDB's
-    plain inequality join."""
-    from opentopodata_spark.operators import intervals
-
-    e = _t(spark, sf_dir, "events")
-    l = e.where(F.col("event_id") % 3 == 0).selectExpr(
-        "event_id AS l_id",
-        "user_id",
-        "ts AS l_start",
-        "ts + make_interval(0, 0, 0, 0, CAST(event_id % 7 + 1 AS INT), 0, 0)"
-        " AS l_end",
-    )
-    r = e.where(F.col("event_id") % 10 == 0).selectExpr(
-        "event_id AS r_id",
-        "user_id",
-        "ts + make_interval(0, 0, 0, 0, CAST(event_id % 5 AS INT), 0, 0)"
-        " AS r_start",
-        "ts + make_interval(0, 0, 0, 0,"
-        " CAST(event_id % 5 + event_id % 13 + 2 AS INT), 0, 0) AS r_end",
-    )
-    out = intervals.interval_join(
-        l, r, "l_start", "l_end", "r_start", "r_end",
-        on=["user_id"], bin_width_s=3600,
-    )
-    return out.select(
-        "user_id", "l_id", "r_id",
-        (
-            F.unix_micros(F.least("l_end", "r_end").cast("timestamp"))
-            - F.unix_micros(F.greatest("l_start", "r_start").cast("timestamp"))
-        ).alias("overlap_us"),
-    )
-
-
-_Q_INTERVAL_SQL = """
-WITH l AS (SELECT event_id AS l_id, user_id,
-                  ts AS l_start,
-                  ts + to_hours(CAST(event_id % 7 + 1 AS BIGINT)) AS l_end
-           FROM events WHERE event_id % 3 = 0),
-r AS (SELECT event_id AS r_id, user_id,
-             ts + to_hours(CAST(event_id % 5 AS BIGINT)) AS r_start,
-             ts + to_hours(CAST(event_id % 5 + event_id % 13 + 2 AS BIGINT))
-               AS r_end
-      FROM events WHERE event_id % 10 = 0)
-SELECT l.user_id, l_id, r_id,
-       date_diff('microsecond', greatest(l_start, r_start),
-                 least(l_end, r_end)) AS overlap_us
-FROM l JOIN r ON l.user_id = r.user_id
-             AND l_start < r_end AND r_start < l_end
-"""
-
-
-def q_asof_join(spark, sf_dir):
-    """operators/asof.asof_join: every event annotated with the most
-    recent at-or-before 'error' event per user — the union + running-
-    last window shape (ONE exchange, no join node; plan pinned in
-    tests). Oracle: DuckDB's NATIVE ASOF LEFT JOIN."""
-    from opentopodata_spark.operators import asof
-
-    e = _t(spark, sf_dir, "events")
-    left = e.select("event_id", "user_id", "ts")
-    right = (
-        e.where(F.col("event_type") == "error")
-        .groupBy("user_id", "ts")
-        .agg(F.max("value").alias("err_value"))
-    )
-    out = asof.asof_join(left, right, on="user_id")
-    return out.select(
-        "event_id",
-        "user_id",
-        F.date_format("ts", "yyyy-MM-dd HH:mm:ss").alias("ts"),
-        F.date_format("right_ts", "yyyy-MM-dd HH:mm:ss").alias("err_ts"),
-        F.round("right_err_value", 6).alias("err_value"),
-    )
-
-
-_Q_ASOF_SQL = """
-WITH r AS (
-  SELECT user_id, ts, max(value) AS err_value
-  FROM events WHERE event_type = 'error' GROUP BY user_id, ts)
-SELECT e.event_id, e.user_id,
-       strftime(e.ts, '%Y-%m-%d %H:%M:%S') AS ts,
-       strftime(r.ts, '%Y-%m-%d %H:%M:%S') AS err_ts,
-       round(r.err_value, 6) AS err_value
-FROM events e ASOF LEFT JOIN r
-  ON e.user_id = r.user_id AND e.ts >= r.ts
-"""
-
-
-def q_geofence_counts(spark, sf_dir):
-    """Geofencing aggregate (operators/events.geofence_rollup): events
-    with deterministic coordinates PIP-joined against the polygon set
-    (broadcast S2 cover + interior fast path), rolled up per (hour,
-    polygon). Full SQL oracle: ray-cast crossings + group-by."""
-    _ship_package(spark)
-    e = _t(spark, sf_dir, "events").select(
-        "event_id",
-        "ts",
-        "user_id",
-        ((F.col("event_id") % 1700) / 10.0 - 85.0 + 0.05).alias("lat"),
-        ((F.col("event_id") * 7 % 3500) / 10.0 - 175.0 + 0.05).alias("lon"),
-    )
-    # level 6 (~1.2 deg cells): these fences are continent-sized, so a
-    # fine cover costs ~10^6 driver-built cells per polygon while the
-    # exactness is level-independent (boundary cells ray-cast anyway);
-    # the level trades cover size against refine volume, nothing else
-    out = ev.geofence_rollup(e, _PIP_POLYGONS, level=6)
-    return out.select(
-        F.date_format("window_start", "yyyy-MM-dd HH:mm:ss").alias("window_start"),
-        "polygon_id",
-        "n_events",
-        "n_users",
-    )
-
-
-def _geofence_sql() -> str:
-    pts_sql = (
-        "SELECT event_id AS pid, ts, user_id,"
-        " (event_id % 1700) / 10.0 - 85.0 + 0.05 AS lat,"
-        " (event_id * 7 % 3500) / 10.0 - 175.0 + 0.05 AS lon"
-        " FROM events"
-    )
-    return f"""
-WITH pts AS ({pts_sql}),
-edges(polygon_id, y1, x1, y2, x2) AS (VALUES
-    {_pip_edge_values()}),
-crossings AS (
-  SELECT p.pid AS point_id, e.polygon_id,
-         CASE WHEN ((e.y1 > p.lat) <> (e.y2 > p.lat))
-               AND (p.lon < (e.x2 - e.x1) * (p.lat - e.y1) / (e.y2 - e.y1) + e.x1)
-              THEN 1 ELSE 0 END AS c
-  FROM pts p CROSS JOIN edges e),
-inside AS (
-  SELECT point_id, polygon_id FROM crossings
-  GROUP BY point_id, polygon_id HAVING SUM(c) % 2 = 1)
-SELECT strftime(date_trunc('hour', p.ts), '%Y-%m-%d %H:%M:%S') AS window_start,
-       i.polygon_id,
-       count(*) AS n_events,
-       count(DISTINCT p.user_id) AS n_users
-FROM inside i JOIN pts p ON i.point_id = p.pid
-GROUP BY 1, 2
-"""
 
 
 # dissolve fixture: a vertex-matched unit-cell tiling with five region
@@ -707,10 +472,9 @@ _BUFFER_K = 16
 def q_buffer_pip(spark, sf_dir):
     """Geodesic buffer geofences (operators/buffer.buffer_points): five
     anchor sites become 16-gon rings of exact Karney direct solutions
-    at 500 km (vertices quantized to 2^-20 deg, CCW), then the event
-    stream (deterministic event_id-derived coordinates — the geofence
-    fixture) PIP-joins against them through the broadcast S2-cover
-    front door. Returns per-fence event/user counts PLUS the exact ring
+    at 500 km (vertices quantized to 2^-20 deg, CCW), then the events
+    table (deterministic event_id-derived coordinates) PIP-joins
+    against them through the broadcast S2-cover front door. Returns per-fence event/user counts PLUS the exact ring
     coordinate sums — the oracle rebuilds the rings with the SEQUENTIAL
     twin (buffer_rings_sequential) and runs its OWN ray cast in SQL, so
     a green row pins both the distributed ring construction (quantized
@@ -806,232 +570,6 @@ counts AS (
 SELECT s.polygon_id, coalesce(c.n_events, 0) AS n_events,
        coalesce(c.n_users, 0) AS n_users, s.lat_sum, s.lon_sum
 FROM sums s LEFT JOIN counts c USING (polygon_id)
-"""
-
-
-def q_geofence_transitions(spark, sf_dir):
-    """operators/events.geofence_transitions: per-user fence enter/exit
-    changes (PIP membership sets diffed against the previous event via
-    one per-user window). Full SQL oracle (ray-cast + lag of lists)."""
-    _ship_package(spark)
-    e = _t(spark, sf_dir, "events").select(
-        "event_id",
-        "ts",
-        "user_id",
-        ((F.col("event_id") % 1700) / 10.0 - 85.0 + 0.05).alias("lat"),
-        ((F.col("event_id") * 7 % 3500) / 10.0 - 175.0 + 0.05).alias("lon"),
-    )
-    out = ev.geofence_transitions(e, _PIP_POLYGONS, level=6)
-    return out.select(
-        "user_id",
-        F.date_format("ts", "yyyy-MM-dd HH:mm:ss").alias("ts"),
-        "polygon_id",
-        "transition",
-    )
-
-
-def _geofence_transitions_sql() -> str:
-    pts_sql = (
-        "SELECT event_id AS pid, ts, user_id,"
-        " (event_id % 1700) / 10.0 - 85.0 + 0.05 AS lat,"
-        " (event_id * 7 % 3500) / 10.0 - 175.0 + 0.05 AS lon"
-        " FROM events"
-    )
-    return f"""
-WITH pts AS ({pts_sql}),
-edges(polygon_id, y1, x1, y2, x2) AS (VALUES
-    {_pip_edge_values()}),
-crossings AS (
-  SELECT p.pid AS point_id, e.polygon_id,
-         CASE WHEN ((e.y1 > p.lat) <> (e.y2 > p.lat))
-               AND (p.lon < (e.x2 - e.x1) * (p.lat - e.y1) / (e.y2 - e.y1) + e.x1)
-              THEN 1 ELSE 0 END AS c
-  FROM pts p CROSS JOIN edges e),
-inside AS (
-  SELECT point_id, polygon_id FROM crossings
-  GROUP BY point_id, polygon_id HAVING SUM(c) % 2 = 1),
-memb AS (
-  SELECT p.pid, p.user_id, p.ts,
-         coalesce(list_sort(list(i.polygon_id)
-                  FILTER (WHERE i.polygon_id IS NOT NULL)),
-                  CAST([] AS VARCHAR[])) AS ins
-  FROM pts p LEFT JOIN inside i ON p.pid = i.point_id
-  GROUP BY p.pid, p.user_id, p.ts),
-lagd AS (
-  SELECT user_id, ts, ins,
-         coalesce(lag(ins) OVER (PARTITION BY user_id ORDER BY ts, pid),
-                  CAST([] AS VARCHAR[])) AS prev
-  FROM memb)
-SELECT user_id, strftime(ts, '%Y-%m-%d %H:%M:%S') AS ts,
-       unnest(list_filter(ins, x -> NOT list_contains(prev, x))) AS polygon_id,
-       'enter' AS transition
-FROM lagd
-UNION ALL
-SELECT user_id, strftime(ts, '%Y-%m-%d %H:%M:%S') AS ts,
-       unnest(list_filter(prev, x -> NOT list_contains(ins, x))) AS polygon_id,
-       'exit' AS transition
-FROM lagd
-"""
-
-
-def q_streaming_rollup(spark, sf_dir):
-    """Structured Streaming twin of events_rollup: the events table is
-    consumed via readStream with a 10-minute watermark and hourly windows
-    in APPEND mode (windows emit once the watermark passes their end) —
-    the availableNow drain flushes state, so the emitted set is exactly
-    the windows with window_end <= max(ts) - 10 min. Deterministic, and
-    the oracle below reproduces it in plain SQL."""
-    import shutil
-    import tempfile
-
-    from opentopodata_spark import streaming as stx
-
-    work = tempfile.mkdtemp(prefix="otds_stream_q_")
-    try:
-        ev = _t(spark, sf_dir, "events")
-        ev.coalesce(1).write.mode("overwrite").parquet(f"{work}/in")
-        rollup = stx.events_rollup_stream(
-            spark, f"{work}/in", watermark="10 minutes", window="1 hour"
-        )
-        q = (
-            rollup.writeStream.outputMode("append")
-            .option("checkpointLocation", f"{work}/ckpt")
-            .trigger(availableNow=True)
-            .start(path=f"{work}/out", format="parquet")
-        )
-        q.awaitTermination()
-        res = spark.read.parquet(f"{work}/out")
-        out = res.select(
-            F.date_format("window_start", "yyyy-MM-dd HH:mm:ss").alias(
-                "window_start"
-            ),
-            "event_type",
-            "n_events",
-            F.round(F.col("sum_value").cast("double"), 6).alias("sum_value"),
-        )
-        out = out.cache()
-        out.count()  # materialize before the temp dir goes away
-        return out
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
-
-
-_Q_STREAMING_ROLLUP_SQL = """
-WITH mx AS (SELECT max(ts) AS m FROM events)
-SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S') AS window_start,
-       event_type,
-       count(*) AS n_events,
-       round(CAST(sum(value::DECIMAL(28,6)) AS DOUBLE), 6) AS sum_value
-FROM events
-GROUP BY date_trunc('hour', ts), event_type
-HAVING date_trunc('hour', ts) + INTERVAL 1 HOUR
-       <= (SELECT m - INTERVAL 10 MINUTE FROM mx)
-"""
-
-
-def q_streaming_sessionize(spark, sf_dir):
-    """Custom stateful streaming operator (applyInPandasWithState):
-    gap-based sessionization over the events stream. Deterministic for a
-    full drain + timeout drains: emitted rows are every session closed by
-    a later in-order event PLUS open sessions whose end + gap fell behind
-    the final watermark (max ts - 10 min). The SQL oracle reproduces that
-    exact set."""
-    import shutil
-    import tempfile
-
-    from opentopodata_spark import streaming as stx
-
-    work = tempfile.mkdtemp(prefix="otds_sess_q_")
-    try:
-        ev = _t(spark, sf_dir, "events")
-        ev.coalesce(1).write.mode("overwrite").parquet(f"{work}/in")
-        # extra drains: event-time timeouts fire on the micro-batch AFTER
-        # the one that advanced the watermark
-        for _ in range(3):
-            q = (
-                stx.sessionize_stream(
-                    spark, f"{work}/in", gap_minutes=30, watermark="10 minutes"
-                )
-                .writeStream.outputMode("append")
-                .option("checkpointLocation", f"{work}/ckpt")
-                .trigger(availableNow=True)
-                .start(path=f"{work}/out", format="parquet")
-            )
-            q.awaitTermination()
-        res = spark.read.parquet(f"{work}/out")
-        out = res.select(
-            "user_id",
-            F.date_format("session_start", "yyyy-MM-dd HH:mm:ss").alias(
-                "session_start"
-            ),
-            F.date_format("session_end", "yyyy-MM-dd HH:mm:ss").alias(
-                "session_end"
-            ),
-            "n_events",
-        )
-        out = out.cache()
-        out.count()  # materialize before the temp dir goes away
-        return out
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
-
-
-_Q_STREAMING_SESSIONIZE_SQL = """
-WITH e AS (
-  SELECT user_id, ts, epoch_us(ts) AS us,
-    CASE WHEN epoch_us(ts) - lag(epoch_us(ts)) OVER w > 1800000000
-         THEN 1 ELSE 0 END AS brk
-  FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts)),
-sess AS (
-  SELECT user_id, ts, us,
-    sum(brk) OVER (PARTITION BY user_id ORDER BY us
-                   ROWS UNBOUNDED PRECEDING) AS sid
-  FROM e),
-per_session AS (
-  SELECT user_id, sid, min(ts) AS session_start, max(ts) AS session_end,
-         max(us) AS end_us, count(*) AS n_events
-  FROM sess GROUP BY user_id, sid),
-mx AS (SELECT max(epoch_us(ts)) AS m FROM events)
-SELECT user_id,
-       strftime(session_start, '%Y-%m-%d %H:%M:%S') AS session_start,
-       strftime(session_end, '%Y-%m-%d %H:%M:%S') AS session_end,
-       n_events
-FROM per_session ps
-WHERE sid < (SELECT max(sid) FROM per_session p2 WHERE p2.user_id = ps.user_id)
-   OR end_us + 1800000000 < (SELECT m - 600000000 FROM mx)
-"""
-# ^ strict < on the timeout boundary: Spark fires event-time timeouts only
-# when timeoutTimestamp is strictly below the eviction watermark, so a
-# session ending exactly gap+delay before max(ts) stays open on both sides.
-
-
-def q_sessionize(spark, sf_dir):
-    s = ev.sessionize(_t(spark, sf_dir, "events"), gap_minutes=30)
-    return s.groupBy("user_id").agg(
-        F.count(F.lit(1)).alias("n_sessions"),
-        F.sum("n_events").alias("total_events"),
-        F.max("n_events").alias("max_session_events"),
-    )
-
-
-_Q_SESSIONIZE_SQL = """
-WITH e AS (
-  SELECT user_id, epoch_us(ts) AS us,
-    CASE WHEN epoch_us(ts) - lag(epoch_us(ts)) OVER w > 1800000000
-         THEN 1 ELSE 0 END AS brk
-  FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts)),
-sess AS (
-  SELECT user_id,
-    sum(brk) OVER (PARTITION BY user_id ORDER BY us
-                   ROWS UNBOUNDED PRECEDING) AS session_id
-  FROM e),
-per_session AS (
-  SELECT user_id, session_id, count(*) AS n_events
-  FROM sess GROUP BY user_id, session_id)
-SELECT user_id, count(*) AS n_sessions,
-       CAST(sum(n_events) AS BIGINT) AS total_events,
-       max(n_events) AS max_session_events
-FROM per_session GROUP BY user_id
 """
 
 
@@ -1403,7 +941,7 @@ def q_pip_coverage(spark, sf_dir):
     return out.select(F.col("pid").alias("point_id"), "polygon_id")
 
 
-def _pip_edge_values() -> str:
+def _pip_sql() -> str:
     edge_rows = []
     for poly in _PIP_POLYGONS:
         la, lo = poly["lats"], poly["lons"]
@@ -1416,11 +954,7 @@ def _pip_edge_values() -> str:
             edge_rows.append(
                 f"('{poly['polygon_id']}', {y1!r}, {x1!r}, {y2!r}, {x2!r})"
             )
-    return ",\n    ".join(edge_rows)
-
-
-def _pip_sql() -> str:
-    edges = _pip_edge_values()
+    edges = ",\n    ".join(edge_rows)
     return f"""
 WITH pts AS ({_POINTS_SQL}),
 edges(polygon_id, y1, x1, y2, x2) AS (VALUES
@@ -1592,89 +1126,6 @@ def q_zonal_stats(spark, sf_dir):
         "polygon_id", "n_px", "n_nodata", "n_valid",
         "vmin", "vmax", "vsum", "vmean",
     )
-
-
-def q_interval_coverage(spark, sf_dir):
-    """Gaps-and-islands union length (operators/intervals.
-    interval_coverage): deterministic event-derived intervals
-    [ts, ts + (1 + event_id%7) minutes) per user_id%16 group — one
-    partition+sort serves both window passes, then a map-side-combined
-    two-level aggregation; all arithmetic int64 microseconds, exact.
-    Full SQL oracle: the identical window construction in DuckDB."""
-    from opentopodata_spark.operators.intervals import interval_coverage
-
-    _ship_package(spark)
-    us = F.unix_micros(F.col("ts").cast("timestamp"))
-    e = _t(spark, sf_dir, "events").select(
-        (F.col("user_id") % 16).cast("int").alias("g"),
-        us.alias("start"),
-        (us + (F.lit(1) + F.col("event_id") % 7) * 60_000_000).alias("end"),
-    )
-    return interval_coverage(e, group_cols=("g",))
-
-
-_Q_INTERVAL_COVERAGE_SQL = """
-WITH iv AS (
-  SELECT CAST(user_id % 16 AS INTEGER) AS g,
-         epoch_us(ts) AS s,
-         epoch_us(ts) + (1 + event_id % 7) * 60000000 AS e
-  FROM events),
-o AS (
-  SELECT g, s, e,
-         CASE WHEN max(e) OVER w IS NULL OR s > max(e) OVER w
-              THEN 1 ELSE 0 END AS new
-  FROM iv WHERE e > s
-  WINDOW w AS (PARTITION BY g ORDER BY s, e
-               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)),
-isl AS (
-  SELECT g, s, e,
-         SUM(new) OVER (PARTITION BY g ORDER BY s, e
-                        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-           AS island
-  FROM o),
-agg AS (
-  SELECT g, island, min(s) AS i_s, max(e) AS i_e, count(*) AS n
-  FROM isl GROUP BY 1, 2)
-SELECT g, CAST(sum(n) AS BIGINT) AS n_intervals,
-       CAST(count(*) AS BIGINT) AS n_islands,
-       CAST(sum(i_e - i_s) AS BIGINT) AS covered_us
-FROM agg GROUP BY g
-"""
-
-
-_TOPK_K = 3
-
-
-def q_topk_per_group(spark, sf_dir):
-    """Bounded top-k per group (operators/topk.topk_per_group): the
-    candidate/finalize rewrite of the window-rank idiom — per-batch
-    vectorized prune keeps <= k rows per group before the shuffle, so
-    the exact window rank runs on a candidate set instead of the whole
-    table. Deterministic total order via required tie columns. Oracle:
-    the plain row_number() window over everything."""
-    from opentopodata_spark.operators.topk import topk_per_group
-
-    _ship_package(spark)
-    li = _t(spark, sf_dir, "lineitem").select(
-        "l_returnflag", "l_orderkey", "l_linenumber", "l_extendedprice"
-    )
-    return topk_per_group(
-        li, ("l_returnflag",), "l_extendedprice", _TOPK_K,
-        ("l_orderkey", "l_linenumber"),
-    )
-
-
-_Q_TOPK_SQL = f"""
-SELECT l_returnflag, l_orderkey, l_linenumber, l_extendedprice,
-       CAST(rank AS INTEGER) AS rank
-FROM (
-  SELECT l_returnflag, l_orderkey, l_linenumber, l_extendedprice,
-         row_number() OVER (PARTITION BY l_returnflag
-                            ORDER BY l_extendedprice DESC,
-                                     l_orderkey, l_linenumber) AS rank
-  FROM lineitem)
-WHERE rank <= {_TOPK_K}
-"""
 
 
 _RSTATS_NB = 16
@@ -4702,18 +4153,14 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # -- new in r5 (inserted here as they land) --
         "iceberg_documents": q_iceberg_documents,
         "wkt2_elevation": q_wkt2_elevation,
-        # -- modules CHANGED in r5 (ADVICE fixes: topk null groups/ties,
-        #    dissolve cancelled-key row, knn broadcast cap) — re-verify
-        #    even though green in r4 --
-        "topk_per_group": q_topk_per_group,
+        # -- modules CHANGED in r5 (ADVICE fixes: dissolve cancelled-key
+        #    row, knn broadcast cap) — re-verify even though green in r4 --
         "dissolve_regions": q_dissolve_regions,
         "knn_topk": q_knn_topk,
         "range_join": q_range_join,
         # -- last green in r2 (VERDICT r4 Next #1): the stale rows,
-        #    streaming_* first (streaming.py changed after their last
-        #    check) --
-        "streaming_rollup": q_streaming_rollup,
-        "streaming_sessionize": q_streaming_sessionize,
+        #    streaming_overview first (streaming.py changed after its
+        #    last check) --
         "streaming_overview": q_streaming_overview,
         "terrain_slope": q_terrain_slope,
         "zonal_stats": q_zonal_stats,
@@ -4721,7 +4168,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "contour_lines": q_contour_lines,
         "overview_tiles": q_overview_tiles,
         "raster_diff": q_raster_diff,
-        "sessionize": q_sessionize,
         "pip_coverage": q_pip_coverage,
         "s2_cells": q_s2_cells,
         # -- last green in r3; oldest cohort next, headline ones first --
@@ -4732,12 +4178,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # -- r3 cohort continues --
         "slippy_tiles": q_slippy_tiles,
         "tile_pyramid": q_tile_pyramid,
-        "events_rollup": q_events_rollup,
-        "asof_join": q_asof_join,
         # -- green in CORRECTNESS_r04; rotated out of the window --
         "buffer_pip": q_buffer_pip,
         "raster_stats": q_raster_stats,
-        "interval_coverage": q_interval_coverage,
         "zonal_majority": q_zonal_majority,
         "overlay_join": q_overlay_join,
         "line_overlay_join": q_line_overlay_join,
@@ -4748,7 +4191,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "convex_hull": q_convex_hull,
         "line_simplify": q_line_simplify,
         "vector_ingest": q_vector_ingest,
-        "interval_join": q_interval_join,
         "raster_grid": q_raster_grid,
         "polygon_burn": q_polygon_burn,
         "raster_polygonize": q_raster_polygonize,
@@ -4764,10 +4206,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "raster_formats": q_raster_formats,
         "remote_elevation": q_remote_elevation,
         "proj4_elevation": q_proj4_elevation,
-        "funnel": q_funnel,
-        "retention": q_retention,
-        "geofence_counts": q_geofence_counts,
-        "geofence_transitions": q_geofence_transitions,
         "elevation_profile": q_elevation_profile,
         "line_of_sight": q_line_of_sight,
         "viewshed": q_viewshed,
@@ -4796,7 +4234,6 @@ def oracle_sql() -> dict[str, str]:
         "convex_hull": _Q_HULL_SQL,
         "line_simplify": _Q_SIMPLIFY_SQL,
         "vector_ingest": _vector_ingest_sql(),
-        "interval_join": _Q_INTERVAL_SQL,
         "slippy_tiles": _slippy_sql(),
         "tile_pyramid": _tile_pyramid_sql(),
         "buffer_pip": _buffer_pip_sql(),
@@ -4804,18 +4241,7 @@ def oracle_sql() -> dict[str, str]:
         # raster_stats shares the zonal pixel-table build; degrade to the
         # rows-only check rather than failing the whole registry
         **_raster_stats_oracle_entry(),
-        "interval_coverage": _Q_INTERVAL_COVERAGE_SQL,
-        "topk_per_group": _Q_TOPK_SQL,
         **_zonal_majority_oracle_entry(),
-        "events_rollup": _Q_EVENTS_SQL,
-        "asof_join": _Q_ASOF_SQL,
-        "funnel": _Q_FUNNEL_SQL,
-        "retention": _Q_RETENTION_SQL,
-        "geofence_counts": _geofence_sql(),
-        "geofence_transitions": _geofence_transitions_sql(),
-        "streaming_rollup": _Q_STREAMING_ROLLUP_SQL,
-        "streaming_sessionize": _Q_STREAMING_SESSIONIZE_SQL,
-        "sessionize": _Q_SESSIONIZE_SQL,
         "rasterize_grid": _Q_RASTERIZE_SQL,
         # elevation_e2e / geodesic_paths / s2_cells and the raster queries
         # are genuinely non-SQL (rasters, Karney geodesics, S2 Hilbert

@@ -22,8 +22,8 @@ config         YAML config loading + dataset registry (driver-side)
 tiles          tile-index build (filename -> corner) + tile-key column math
 oracle         single-process reference-semantics implementation (test oracle)
 operators.*    the Spark operators (extract, elevation resolve, paths, knn
-               and range joins, events, spatial joins and overlay, and the
-               raster operators: terrain, zonal, polygonize, warp, tiles)
+               and range joins, spatial joins and overlay, and the raster
+               operators: terrain, zonal, polygonize, warp, tiles)
 lineage        per-partition lineage checkpoint + anti-join resume
 session        SparkSession builder helpers
 """

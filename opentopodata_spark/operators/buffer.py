@@ -4,8 +4,8 @@ The reference resolves points against FIXED polygon coverage
 (`/root/reference/opentopodata/config.py:432-451`); the complementary
 primitive a pipeline needs is the inverse construction — "the polygon
 within ``radius_m`` of each site" — so that every existing polygon
-front door (operators/spatial.point_in_polygon_join, events.geofence_*,
-zonal, rasterize burn) can answer
+front door (operators/spatial.point_in_polygon_join, zonal, rasterize
+burn) can answer
 WITHIN-DISTANCE questions without a dedicated distance join.
 
 Each anchor becomes a regular ``n_vertices``-gon whose vertices are

@@ -9,9 +9,9 @@ footprint touch", "collapse each user's GPS trace to its shape".
 Everything here is built from the same Spark-first discipline as the
 rest of the engine:
 
-``polygon_join``  — the 2-D analogue of operators/intervals.py's
-    bin-bucketing rewrite.  Spark plans a raw geometric predicate join
-    as BroadcastNestedLoop / cartesian (O(|L|·|R|)); instead each
+``polygon_join``  — a grid-cell equi-join.  Spark plans a raw
+    geometric predicate join as BroadcastNestedLoop / cartesian
+    (O(|L|·|R|)); instead each
     polygon's bbox explodes to the fixed-width GRID CELLS it covers
     (pure column exprs), the two sides equi-join on the cell key (a
     shuffle hash join Catalyst can re-plan under AQE), a CANONICAL-CELL
@@ -20,8 +20,8 @@ rest of the engine:
     bbox intersection), and the exact closed-set ``intersects``
     predicate runs as an Arrow-batched pandas UDF over the surviving
     candidates only.  Replication per polygon = its bbox cell count
-    (``max_cells`` refuses pathological polygons executor-side, the
-    same loud-refusal discipline as interval_join's ``max_bins``).
+    (``max_cells`` refuses pathological polygons executor-side with a
+    loud error instead of letting one polygon's replication blow up).
 
 ``convex_hull``  — two-level distributed hull: per-partition monotone
     chains (mapInPandas, keep-collinear variant) shrink each partition
@@ -359,10 +359,10 @@ def polygon_join(
 
     ``max_bucket`` (opt-in, one extra aggregate per side): refuse a hot
     grid cell holding more than this many polygons on EITHER side
-    before the per-cell candidate product goes quadratic — the same
-    loud-refusal discipline as interval_join's ``max_bucket``.  A
-    refused cell means cell_size is too coarse for that region's
-    polygon density; shrink it (or salt the dense region upstream).
+    before the per-cell candidate product goes quadratic: a loud
+    error, never a silent quadratic join.  A refused cell means
+    cell_size is too coarse for that region's polygon density; shrink
+    it (or salt the dense region upstream).
     """
     for k in (left_kind, right_kind):
         if k not in ("polygon", "line"):

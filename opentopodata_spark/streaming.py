@@ -16,10 +16,6 @@ Design notes for scale:
   micro-batch runs the identical single-shuffle plan the batch job runs.
 * ``maxFilesPerTrigger`` bounds micro-batch size: ingest latency trades
   against shuffle efficiency explicitly, not implicitly.
-* the events rollup shows the genuinely-streaming path (watermark +
-  windowed aggregation, late data dropped after the watermark) for the
-  engine's events table; it is a standard incremental-state aggregation —
-  state is bounded by (windows in watermark) x (event types).
 
 Exactly-once: the checkpoint dedupes micro-batches across restarts, and
 each micro-batch writes (overwrite) its own ``ingest_batch=<id>``
@@ -41,21 +37,13 @@ __all__ = [
     "TILE_MANIFEST_DDL",
     "stream_documents",
     "run_elevation_stream",
-    "events_rollup_stream",
-    "sessionize_stream",
     "stream_tile_manifests",
     "run_overview_stream",
-    "geofence_transitions_stream",
 ]
 
 DOCUMENTS_DDL = (
     "doc_id string, spans array<struct<"
     "kind:string,text:string,media_ref:string,offset:int>>"
-)
-
-EVENTS_DDL = (
-    "event_id long, ts timestamp, user_id long, event_type string,"
-    " value double, props string"
 )
 
 
@@ -110,140 +98,6 @@ def run_elevation_stream(
     if available_now:
         writer = writer.trigger(availableNow=True)
     return writer.start()
-
-
-def sessionize_stream(
-    spark: SparkSession,
-    events_dir: str,
-    gap_minutes: int = 30,
-    watermark: str = "1 hour",
-) -> DataFrame:
-    """Streaming twin of operators/events.sessionize — a CUSTOM STATEFUL
-    operator via ``applyInPandasWithState`` (gap-based sessions are not
-    expressible as a windowed aggregation: session extent depends on the
-    data, not a fixed grid).
-
-    Per-user state = the one open session (start_us, last_us, n_events).
-    Each micro-batch merges its events into that session with the same
-    gap rule as the batch operator; sessions CLOSED by an in-batch gap
-    emit immediately, and the open session emits when the event-time
-    watermark passes last_ts + gap (state timeout) — so emitted rows are
-    exactly the sessions no future in-order event can extend. State is
-    one row per user with an open session: bounded by active users
-    within the watermark horizon, the textbook stateful-streaming shape.
-
-    Determinism caveat (tested): for the SAME file arrivals and drains,
-    output equals the batch ``sessionize`` restricted to closed sessions
-    (session_end + gap <= final watermark)."""
-    import pandas as pd
-
-    gap_us = gap_minutes * 60 * 1_000_000
-    out_schema = (
-        "user_id long, session_start timestamp, session_end timestamp,"
-        " n_events long"
-    )
-    state_schema = "start_us long, last_us long, n long"
-
-    def _emit(user_id, start_us, last_us, n):
-        return pd.DataFrame(
-            {
-                "user_id": [user_id],
-                "session_start": [pd.to_datetime(start_us, unit="us")],
-                "session_end": [pd.to_datetime(last_us, unit="us")],
-                "n_events": [n],
-            }
-        )
-
-    def fn(key, pdf_iter, state):
-        (user_id,) = key
-        if state.hasTimedOut:
-            start_us, last_us, n = state.get
-            state.remove()
-            yield _emit(user_id, start_us, last_us, n)
-            return
-        if state.exists:
-            start_us, last_us, n = state.get
-        else:
-            start_us = None
-            last_us = n = 0
-        for pdf in pdf_iter:
-            ts = pdf["ts"].sort_values()
-            us = ts.astype("int64") // 1000  # ns -> us
-            for t in us:
-                t = int(t)
-                if start_us is None:
-                    start_us, last_us, n = t, t, 1
-                elif t - last_us > gap_us:
-                    yield _emit(user_id, start_us, last_us, n)
-                    start_us, last_us, n = t, t, 1
-                elif t < start_us:
-                    # late (cross-batch out-of-order) event, still inside
-                    # the watermark. If it chains onto the open session's
-                    # head, extend the session backwards — matching the
-                    # batch operator's globally-sorted semantics. If it is
-                    # older than the open session by more than the gap, in
-                    # sorted order it belongs to an already-closed earlier
-                    # session: emit it as its own singleton (late-data
-                    # policy — two such stragglers that would have chained
-                    # with EACH OTHER emit separately; the watermark
-                    # bounds how late this path can trigger at all).
-                    if start_us - t <= gap_us:
-                        start_us = t
-                        n += 1
-                    else:
-                        yield _emit(user_id, t, t, 1)
-                else:
-                    last_us = max(last_us, t)
-                    n += 1
-        if start_us is None:
-            state.remove() if state.exists else None
-            return
-        state.update((start_us, last_us, n))
-        # close the open session when the watermark passes last + gap
-        timeout_ms = (last_us + gap_us) // 1000
-        state.setTimeoutTimestamp(max(timeout_ms, state.getCurrentWatermarkMs() + 1))
-
-    ev = spark.readStream.schema(EVENTS_DDL).parquet(events_dir)
-    return (
-        ev.withWatermark("ts", watermark)
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            fn,
-            outputStructType=out_schema,
-            stateStructType=state_schema,
-            outputMode="append",
-            timeoutConf="EventTimeTimeout",
-        )
-    )
-
-
-def events_rollup_stream(
-    spark: SparkSession,
-    events_dir: str,
-    watermark: str = "30 minutes",
-    window: str = "1 hour",
-) -> DataFrame:
-    """Streaming windowed rollup over the events table: watermarked
-    event-time windows per event_type. Append-mode compatible (windows
-    emit once finalized by the watermark); state is bounded by the
-    watermark horizon."""
-    ev = spark.readStream.schema(EVENTS_DDL).parquet(events_dir)
-    return (
-        ev.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window).alias("w"), F.col("event_type"))
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            # decimal: incremental state-merge order can't perturb the sum
-            F.sum(F.col("value").cast("decimal(28,6)")).alias("sum_value"),
-        )
-        .select(
-            F.col("w.start").alias("window_start"),
-            F.col("w.end").alias("window_end"),
-            "event_type",
-            "n_events",
-            "sum_value",
-        )
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -314,95 +168,3 @@ def run_overview_stream(
     if available_now:
         writer = writer.trigger(availableNow=True)
     return writer.start()
-
-
-def geofence_transitions_stream(
-    spark: SparkSession,
-    events_dir: str,
-    polygons: list,
-    watermark: str = "1 hour",
-) -> DataFrame:
-    """Streaming twin of operators/events.geofence_transitions — live
-    fence ENTER/EXIT detection via ``applyInPandasWithState``.
-
-    Membership per event is computed INLINE by a closure over the
-    polygon list (vectorized ray-cast per polygon over the Arrow batch)
-    rather than the batch op's S2-cover join: a second stateful operator
-    (the membership groupBy) upstream of the state function is exactly
-    the multi-stateful-operator shape streaming restricts, and a
-    geofence set is small by nature (10s-100s of fences — a broadcast
-    closure). The batch operator remains the shape for polygon sets too
-    big to close over.
-
-    Per-user state = the sorted list of currently-inside fence ids.
-    Events apply in (ts, event_id) order within each batch; a user's
-    first-ever event enters every fence it is already inside —
-    identical to the batch twin for in-order arrivals (the sessionize
-    determinism caveat applies to out-of-order cross-batch data; the
-    watermark bounds it). State never times out: membership is durable
-    per active user, one small row each.
-    """
-    import numpy as np
-    import pandas as pd
-
-    from .operators.spatial import points_in_polygon_mask
-
-    polys = [
-        (str(p["polygon_id"]), list(p["lats"]), list(p["lons"]))
-        for p in polygons
-    ]
-    out_schema = (
-        "user_id long, ts timestamp, polygon_id string, transition string"
-    )
-    state_schema = "inside array<string>"
-
-    def fn(key, pdf_iter, state):
-        (user_id,) = key
-        if state.hasTimedOut:  # pragma: no cover - NoTimeout configured
-            state.remove()
-            return
-        inside = set(state.get[0]) if state.exists else set()
-        out_ts, out_poly, out_tr = [], [], []
-        for pdf in pdf_iter:
-            pdf = pdf.sort_values(["ts", "event_id"])
-            la = pdf["lat"].to_numpy(dtype=np.float64)
-            lo = pdf["lon"].to_numpy(dtype=np.float64)
-            members = np.zeros((len(pdf), len(polys)), dtype=bool)
-            for j, (_pid, pla, plo) in enumerate(polys):
-                members[:, j] = points_in_polygon_mask(la, lo, pla, plo)
-            for i, ts in enumerate(pdf["ts"]):
-                now = {polys[j][0] for j in np.nonzero(members[i])[0]}
-                for p in sorted(now - inside):
-                    out_ts.append(ts)
-                    out_poly.append(p)
-                    out_tr.append("enter")
-                for p in sorted(inside - now):
-                    out_ts.append(ts)
-                    out_poly.append(p)
-                    out_tr.append("exit")
-                inside = now
-        state.update((sorted(inside),))
-        if out_ts:
-            yield pd.DataFrame(
-                {
-                    "user_id": [user_id] * len(out_ts),
-                    "ts": out_ts,
-                    "polygon_id": out_poly,
-                    "transition": out_tr,
-                }
-            )
-
-    ev = spark.readStream.schema(
-        "event_id long, ts timestamp, user_id long, lat double, lon double"
-    ).parquet(events_dir)
-    return (
-        ev.withWatermark("ts", watermark)
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            fn,
-            outputStructType=out_schema,
-            stateStructType=state_schema,
-            outputMode="append",
-            timeoutConf="NoTimeout",
-        )
-    )

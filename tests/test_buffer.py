@@ -6,7 +6,6 @@ from __future__ import annotations
 import math
 
 import pytest
-from pyspark.sql import functions as F
 
 from opentopodata_spark import geodesic
 from opentopodata_spark.operators import buffer, spatial
@@ -117,34 +116,3 @@ def test_circumscribed_radius_covers_circle(spark):
         [("m", g["lat2"], g["lon2"])], "name string, lat double, lon double"
     )
     assert spatial.point_in_polygon_join(pts, polys, level=8).count() == 1
-
-
-def test_buffer_feeds_geofence_rollup(spark):
-    """Composition: buffer output rows are exactly the polygon shape the
-    events front door takes — 'events within 100 km of each site' is
-    buffer_points + geofence_rollup with no glue."""
-    from opentopodata_spark.operators import buffer as buf
-    from opentopodata_spark.operators import events as evops
-
-    anchors = spark.createDataFrame(
-        [("hq", 47.0, 8.0)], "point_id string, lat double, lon double"
-    )
-    polys = [
-        {"polygon_id": r.polygon_id, "lats": list(r.lats),
-         "lons": list(r.lons)}
-        for r in buf.buffer_points(anchors, 100_000.0, n_vertices=24).collect()
-    ]
-    near = geodesic.direct(47.0, 8.0, 120.0, 50_000.0)
-    far = geodesic.direct(47.0, 8.0, 300.0, 200_000.0)
-    rows = [
-        (1, "2024-01-01 10:00:00", 7, 47.0, 8.0),
-        (2, "2024-01-01 10:30:00", 8, near["lat2"], near["lon2"]),
-        (3, "2024-01-01 11:00:00", 7, far["lat2"], far["lon2"]),
-    ]
-    df = spark.createDataFrame(
-        rows, "event_id long, ts_s string, user_id long, lat double,"
-        " lon double"
-    ).withColumn("ts", F.col("ts_s").cast("timestamp")).drop("ts_s")
-    got = {(str(r.window_start), r.polygon_id): (r.n_events, r.n_users)
-           for r in evops.geofence_rollup(df, polys).collect()}
-    assert got == {("2024-01-01 10:00:00", "hq"): (2, 2)}

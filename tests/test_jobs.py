@@ -133,7 +133,9 @@ def _package_files() -> list:
 def test_no_dangling_package_imports(monkeypatch):
     """Every ``opentopodata_spark`` import in the package and in
     ``__spark_entry__.py``, the lazy ones included, names a module file,
-    and every imported name exists in it. ``oracle_sql()`` checks only
+    and every imported name exists in it. Every name a module lists in
+    ``__all__`` is defined or imported at its top level, so a star
+    import cannot break on a deleted name. ``oracle_sql()`` checks only
     queries that ``queries()`` registers."""
     dangling = []
     for path in [os.path.join(REPO, "__spark_entry__.py")] + _package_files():
@@ -148,6 +150,16 @@ def test_no_dangling_package_imports(monkeypatch):
                     name not in _top_level_names(target)
                 ):
                     dangling.append(f"{rel}:{lineno} {mod}.{name}")
+        for node in ast.parse(open(path).read()).body:
+            if isinstance(node, ast.Assign) and any(
+                isinstance(t, ast.Name) and t.id == "__all__"
+                for t in node.targets
+            ):
+                defined = _top_level_names(path)
+                dangling += [
+                    f"{rel}:{node.lineno} __all__ {e.value}"
+                    for e in node.value.elts if e.value not in defined
+                ]
     assert dangling == []
 
     import __spark_entry__ as contract

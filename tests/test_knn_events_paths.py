@@ -1,5 +1,5 @@
-"""Unit tests for the kNN joins, event analytics and path sampling
-operators on tiny hand-checked inputs.
+"""Unit tests for the kNN joins and path sampling operators on tiny
+hand-checked inputs.
 """
 
 from __future__ import annotations
@@ -7,7 +7,6 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from opentopodata_spark.operators import events as ev
 from opentopodata_spark.operators import knn, paths
 
 
@@ -48,43 +47,6 @@ class TestKnn:
         out = knn.knn_join(pts, anchors, k=1, metric="haversine").collect()[0]
         # 1 degree of latitude ~ 111.2 km; nearest anchor is (0,0) -> 0 m
         assert out.anchor_id == 1 and out.dist == 0.0
-
-
-# ---------------------------------------------------------------------------
-# events
-# ---------------------------------------------------------------------------
-
-class TestEvents:
-    def test_sessionize(self, spark):
-        rows = [
-            (1, "2024-01-01 10:00:00"),
-            (1, "2024-01-01 10:10:00"),
-            (1, "2024-01-01 11:30:00"),  # 80 min gap -> new session
-            (2, "2024-01-01 09:00:00"),
-        ]
-        df = spark.createDataFrame(rows, "user_id long, ts_s string").select(
-            "user_id", F.col("ts_s").cast("timestamp").alias("ts")
-        )
-        out = ev.sessionize(df, gap_minutes=30).collect()
-        per_user = {}
-        for r in out:
-            per_user.setdefault(r.user_id, []).append(r.n_events)
-        assert sorted(per_user[1]) == [1, 2]
-        assert per_user[2] == [1]
-
-    def test_tumbling_rollup_exact_sum(self, spark):
-        rows = [
-            ("2024-01-01 10:05:00", "click", 0.1, 1),
-            ("2024-01-01 10:55:00", "click", 0.2, 2),
-            ("2024-01-01 11:05:00", "click", 0.4, 1),
-        ]
-        df = spark.createDataFrame(
-            rows, "ts_s string, event_type string, value double, user_id long"
-        ).select(F.col("ts_s").cast("timestamp").alias("ts"), "event_type", "value", "user_id")
-        out = {str(r.window_start): r for r in ev.tumbling_rollup(df).collect()}
-        ten = out["2024-01-01 10:00:00"]
-        assert ten.n_events == 2 and ten.n_users == 2
-        assert ten.sum_value == 0.3  # decimal-exact, not 0.30000000000000004
 
 
 # ---------------------------------------------------------------------------

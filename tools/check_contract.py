@@ -23,8 +23,7 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 TABLES = (
-    "region nation customer supplier part orders lineitem events "
-    "documents"
+    "region nation customer supplier part orders events documents"
 ).split()
 
 
