@@ -23,7 +23,7 @@ tiles          tile-index build (filename -> corner) + tile-key column math
 oracle         single-process reference-semantics implementation (test oracle)
 operators.*    the Spark operators (extract, elevation resolve, paths, knn
                and range joins, spatial joins and overlay, and the raster
-               operators: terrain, zonal, polygonize, warp, tiles)
+               operators: zonal, polygonize, rasterize, warp, tiles)
 lineage        per-partition lineage checkpoint + anti-join resume
 session        SparkSession builder helpers
 """

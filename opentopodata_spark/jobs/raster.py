@@ -1,12 +1,11 @@
-"""Raster-ops batch job: terrain derivatives / zonal stats / rasterize.
+"""Raster-ops batch job: polygonize / zonal stats / rasterize.
 
 The raster<->vector cluster surface, submit-able the same way as
 jobs/elevation.py (``spark-submit --py-files otds.zip -m ... raster``).
 Subcommands:
 
-  terrain    tiled DEM -> slope|aspect|hillshade|tpi|tri|roughness tiles
-             (cross-tile halo reads, resume via --skip-existing,
-             per-tile lineage checksums in the manifest)
+  polygonize tiled raster -> region polygons parquet (+ optional
+             GeoJSON FeatureCollection; gdal_polygonize)
   zonal      tiled/loose rasters + polygons (GeoJSON or engine JSON)
              -> per-polygon statistics parquet
   rasterize  points parquet (lat, lon[, value]) -> cell aggregation
@@ -18,10 +17,10 @@ Subcommands:
              gdalbuildvrt/gdalwarp/gdaladdo dataset recipe, distributed)
   buildvrt   VRT mosaic over tiles (gdalbuildvrt; driver-only)
   info       raster metadata JSON (gdalinfo; driver-only)
-  contours   tiled DEM -> iso-line segments parquet (gdal_contour)
-  calc       two tile sets -> cell-wise expression tiles (gdal_calc)
-  grid       scattered points parquet -> interpolated raster tiles
-             (gdal_grid: invdist/invdistnn/average/nearest + metrics)
+  transcode  any-format tiles -> GeoTIFF (gdal_translate -of GTiff)
+  tiles      datasets -> Web Mercator terrain tiles (Terrain-RGB /
+             Terrarium) + optional MBTiles
+  burn       vector features -> raster tiles (gdal_rasterize)
 
 Polygons file format (``--polygons``): JSON list of
 {"polygon_id": str, "lats": [...], "lons": [...]} — the engine's
@@ -38,7 +37,6 @@ import sys
 import time
 
 from .. import config as _config
-from ..operators.gridding import GRID_ALGORITHMS as _GRID_ALGORITHMS
 from ..session import get_spark
 
 
@@ -62,10 +60,10 @@ def _tile_rows_from_config(cfg_path: str, name: str):
 
 def _tiles_from_globs(globs) -> list[tuple[int, int, str]]:
     """Loose raster globs -> (iy, ix, path) rows with CORNER-DERIVED grid
-    keys (regular grid assumed). The keys are load-bearing: halo-reading
-    operators (terrain, contours) look up neighbors by (iy±1, ix±1), so
-    arbitrary keys like sorted-order enumeration would silently sever
-    tile adjacency and drop seam output."""
+    keys (regular grid assumed). The keys are load-bearing: polygonize
+    looks up seam neighbors by (iy±1, ix±1), so arbitrary keys like
+    sorted-order enumeration would silently sever tile adjacency and
+    split regions at the seams."""
     from .. import geotiff as _geotiff
 
     paths = sorted(p for pat in globs for p in _glob.glob(pat))
@@ -132,73 +130,6 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument("--master", default=None)
     sub = p.add_subparsers(dest="cmd", required=True)
 
-    t = sub.add_parser("terrain", help="slope/aspect/hillshade tiles")
-    t.add_argument("--config", help="dataset config YAML")
-    t.add_argument("--dataset", help="tiled dataset name from the config")
-    t.add_argument("--rasters", nargs="*", help="glob(s) of a regular tile grid (alternative to --config; grid keys derived from filenames is NOT attempted — files must share one grid and are keyed by sorted order per row/col of their corners)")
-    t.add_argument("--out", required=True)
-    t.add_argument("--kind", default="slope",
-                   choices=["slope", "aspect", "hillshade",
-                            "hillshade_multidirectional",
-                            "hillshade_combined", "tpi", "tri",
-                            "tri_wilson", "roughness"])
-    t.add_argument("--alg", default="horn",
-                   choices=["horn", "zevenbergen_thorne"],
-                   help="gradient stencil for slope/aspect/hillshade"
-                        " (gdaldem -alg)")
-    t.add_argument("--scale", type=float, default=1.0, help="xy->z unit factor (111120 for degree grids with meter elevations)")
-    t.add_argument("--z-factor", type=float, default=1.0)
-    t.add_argument("--azimuth", type=float, default=315.0)
-    t.add_argument("--altitude", type=float, default=45.0)
-    t.add_argument("--skip-existing", action="store_true", help="resume: do not recompute tiles whose output exists")
-
-    fa = sub.add_parser("flowacc", help="D8 flow accumulation tiles")
-    fa.add_argument("--config")
-    fa.add_argument("--dataset")
-    fa.add_argument("--rasters", nargs="*")
-    fa.add_argument("--out", required=True)
-    fa.add_argument("--scale", type=float, default=1.0)
-    fa.add_argument("--skip-existing", action="store_true")
-
-    sv = sub.add_parser(
-        "sieve", help="remove small regions (gdal_sieve): merge regions"
-        " below --threshold cells into their largest neighbour"
-    )
-    sv.add_argument("--config")
-    sv.add_argument("--dataset")
-    sv.add_argument("--rasters", nargs="*")
-    sv.add_argument("--out", required=True)
-    sv.add_argument("--threshold", type=int, required=True,
-                    help="minimum region size in cells (strict <)")
-    sv.add_argument("--bands", type=float, nargs="*",
-                    help="quantization edges for float rasters"
-                    " (class k = count of edges <= value)")
-
-    fnd = sub.add_parser(
-        "fillnodata", help="fill NODATA voids (gdal_fillnodata): 8-ray"
-        " IDW up to --max-distance px, optional --smoothing passes"
-    )
-    fnd.add_argument("--config")
-    fnd.add_argument("--dataset")
-    fnd.add_argument("--rasters", nargs="*")
-    fnd.add_argument("--out", required=True)
-    fnd.add_argument("--max-distance", type=float, default=16.0)
-    fnd.add_argument("--smoothing", type=int, default=0)
-
-    px = sub.add_parser(
-        "proximity", help="distance-to-target raster (gdal_proximity):"
-        " exact euclidean within --max-distance"
-    )
-    px.add_argument("--config")
-    px.add_argument("--dataset")
-    px.add_argument("--rasters", nargs="*")
-    px.add_argument("--out", required=True)
-    px.add_argument("--target-values", type=float, nargs="+",
-                    required=True)
-    px.add_argument("--max-distance", type=float, required=True)
-    px.add_argument("--dist-units", choices=["pixel", "geo"],
-                    default="pixel")
-
     pg = sub.add_parser(
         "polygonize", help="regions -> polygons (gdal_polygonize):"
         " region stats parquet + optional GeoJSON FeatureCollection"
@@ -213,21 +144,6 @@ def build_parser() -> argparse.ArgumentParser:
                     " assembly — bounded by the region count)")
     pg.add_argument("--bands", type=float, nargs="*",
                     help="quantization edges for float rasters")
-
-    crp = sub.add_parser(
-        "colorrelief", help="RGBA relief tiles through a color ramp"
-        " (gdaldem color-relief)"
-    )
-    crp.add_argument("--config")
-    crp.add_argument("--dataset")
-    crp.add_argument("--rasters", nargs="*")
-    crp.add_argument("--out", required=True)
-    crp.add_argument("--ramp", required=True,
-                     help="GDAL color-relief text file:"
-                     " 'elevation r g b [a]' per line, 'nv ...' for"
-                     " NODATA")
-    crp.add_argument("--mode", default="interpolate",
-                     choices=["interpolate", "nearest", "exact"])
 
     z = sub.add_parser("zonal", help="per-polygon raster statistics")
     z.add_argument("--config")
@@ -309,32 +225,6 @@ def build_parser() -> argparse.ArgumentParser:
         "info", help="print raster metadata as JSON (gdalinfo)")
     gi.add_argument("--raster", required=True)
 
-    gs = sub.add_parser(
-        "stats", help="exact whole-catalog statistics + histogram "
-                      "(gdalinfo -stats/-hist, distributed over tiles)")
-    gs.add_argument("--rasters", nargs="+", required=True,
-                    help="raster path globs")
-    gs.add_argument("--buckets", type=int, default=0,
-                    help="histogram buckets (0 = stats only)")
-
-    c = sub.add_parser("contours", help="iso-elevation line segments")
-    c.add_argument("--config")
-    c.add_argument("--dataset")
-    c.add_argument("--rasters", nargs="*")
-    c.add_argument("--out", required=True)
-    c.add_argument("--levels", required=True, help="comma-separated elevations")
-    c.add_argument("--no-dedupe", action="store_true")
-
-    x = sub.add_parser("calc", help="cell-wise expression over tile pairs")
-    x.add_argument("--config")
-    x.add_argument("--dataset-a")
-    x.add_argument("--dataset-b")
-    x.add_argument("--rasters-a", nargs="*")
-    x.add_argument("--rasters-b", nargs="*")
-    x.add_argument("--out", required=True)
-    x.add_argument("--expression", default="a - b")
-    x.add_argument("--skip-existing", action="store_true")
-
     tc = sub.add_parser(
         "transcode",
         help="any-format tiles -> GeoTIFF (gdal_translate -of GTiff)")
@@ -388,30 +278,6 @@ def build_parser() -> argparse.ArgumentParser:
     r.add_argument("--tile-px", type=int, default=1024)
     r.add_argument("--agg-col", default="n_points", help="cell column to rasterize into --tiles-out")
 
-    gg = sub.add_parser(
-        "grid", help="scattered points -> interpolated raster (gdal_grid)"
-    )
-    gg.add_argument("--points", required=True,
-                    help="parquet with lat, lon, value columns")
-    gg.add_argument("--value-col", default="value")
-    gg.add_argument("--out", required=True, help="GeoTIFF tile directory")
-    gg.add_argument("--grid", required=True, help="x0,y0,sx,sy,width,height")
-    gg.add_argument("--algorithm", default="invdist",
-                    choices=list(_GRID_ALGORITHMS))
-    gg.add_argument("--power", type=float, default=2.0)
-    gg.add_argument("--smoothing", type=float, default=0.0)
-    gg.add_argument("--radius", type=float, default=0.0,
-                    help="circular search radius (0 = all points,"
-                         " broadcast-bounded)")
-    gg.add_argument("--radius2", type=float, default=None,
-                    help="second ellipse semi-axis (defaults to --radius)")
-    gg.add_argument("--angle", type=float, default=0.0,
-                    help="ellipse rotation, degrees CCW")
-    gg.add_argument("--min-points", type=int, default=0)
-    gg.add_argument("--max-points", type=int, default=0)
-    gg.add_argument("--nodata", type=float, default=-9999.0)
-    gg.add_argument("--tile-px", type=int, default=256)
-
     bn = sub.add_parser(
         "burn", help="vector features -> raster (gdal_rasterize)"
     )
@@ -451,67 +317,7 @@ def run(argv: list[str] | None = None) -> dict:
     t0 = time.time()
     stats: dict = {"job": f"raster-{ns.cmd}"}
 
-    if ns.cmd == "terrain":
-        from ..operators import terrain as _terrain
-
-        if ns.config and ns.dataset:
-            tiles = _tile_rows_from_config(ns.config, ns.dataset)
-        elif ns.rasters:
-            tiles = _tiles_from_globs(ns.rasters)
-        else:
-            raise ValueError("terrain needs --config/--dataset or --rasters")
-        manifest = _terrain.terrain_tiles(
-            spark, tiles, ns.out, kind=ns.kind, alg=ns.alg,
-            scale=ns.scale,
-            z_factor=ns.z_factor, azimuth=ns.azimuth, altitude=ns.altitude,
-            skip_existing=ns.skip_existing,
-        )
-        manifest.write.mode("overwrite").parquet(f"{ns.out}/_manifest")
-        m = spark.read.parquet(f"{ns.out}/_manifest")
-        stats.update(
-            tiles=m.count(),
-            errors=m.where(m.error.isNotNull()).count(),
-            out=ns.out,
-        )
-
-    elif ns.cmd == "flowacc":
-        from ..operators import hydrology as _hydrology
-
-        if ns.config and ns.dataset:
-            tiles = _tile_rows_from_config(ns.config, ns.dataset)
-        elif ns.rasters:
-            tiles = _tiles_from_globs(ns.rasters)
-        else:
-            raise ValueError("flowacc needs --config/--dataset or --rasters")
-        manifest = _hydrology.flow_accumulation(
-            spark, tiles, ns.out, scale=ns.scale,
-            skip_existing=ns.skip_existing,
-        )
-        manifest.write.mode("overwrite").parquet(f"{ns.out}/_manifest")
-        m = spark.read.parquet(f"{ns.out}/_manifest")
-        stats.update(
-            tiles=m.count(),
-            errors=m.where(m.error.isNotNull()).count(),
-            out=ns.out,
-        )
-
-    elif ns.cmd == "sieve":
-        from ..operators import sieve as _sieve
-
-        if ns.config and ns.dataset:
-            tiles = _tile_rows_from_config(ns.config, ns.dataset)
-        elif ns.rasters:
-            tiles = _tiles_from_globs(ns.rasters)
-        else:
-            raise ValueError("sieve needs --config/--dataset or --rasters")
-        manifest = _sieve.sieve_tiles(
-            spark, tiles, ns.out, ns.threshold, bands=ns.bands,
-        )
-        manifest.write.mode("overwrite").parquet(f"{ns.out}/_manifest")
-        m = spark.read.parquet(f"{ns.out}/_manifest")
-        stats.update(tiles=m.count(), out=ns.out)
-
-    elif ns.cmd == "polygonize":
+    if ns.cmd == "polygonize":
         import json as _json
 
         from ..operators import polyvec as _polyvec
@@ -548,68 +354,6 @@ def run(argv: list[str] | None = None) -> dict:
                 )
             os.replace(tmp, ns.geojson)
             stats.update(geojson=ns.geojson)
-
-    elif ns.cmd == "colorrelief":
-        from ..operators import colorrelief as _colorrelief
-
-        if ns.config and ns.dataset:
-            tiles = _tile_rows_from_config(ns.config, ns.dataset)
-        elif ns.rasters:
-            tiles = _tiles_from_globs(ns.rasters)
-        else:
-            raise ValueError(
-                "colorrelief needs --config/--dataset or --rasters"
-            )
-        with open(ns.ramp) as f:
-            ramp_text = f.read()
-        manifest = _colorrelief.colorrelief_tiles(
-            spark, tiles, ns.out, ramp_text, mode=ns.mode,
-        )
-        manifest.write.mode("overwrite").parquet(f"{ns.out}/_manifest")
-        m = spark.read.parquet(f"{ns.out}/_manifest")
-        stats.update(tiles=m.count(), out=ns.out)
-
-    elif ns.cmd == "proximity":
-        from ..operators import proximity as _proximity
-
-        if ns.config and ns.dataset:
-            tiles = _tile_rows_from_config(ns.config, ns.dataset)
-        elif ns.rasters:
-            tiles = _tiles_from_globs(ns.rasters)
-        else:
-            raise ValueError(
-                "proximity needs --config/--dataset or --rasters"
-            )
-        manifest = _proximity.proximity_tiles(
-            spark, tiles, ns.out, ns.target_values, ns.max_distance,
-            dist_units=ns.dist_units,
-        )
-        manifest.write.mode("overwrite").parquet(f"{ns.out}/_manifest")
-        m = spark.read.parquet(f"{ns.out}/_manifest")
-        stats.update(tiles=m.count(), out=ns.out)
-
-    elif ns.cmd == "fillnodata":
-        from ..operators import fillnodata as _fillnodata
-
-        if ns.config and ns.dataset:
-            tiles = _tile_rows_from_config(ns.config, ns.dataset)
-        elif ns.rasters:
-            tiles = _tiles_from_globs(ns.rasters)
-        else:
-            raise ValueError(
-                "fillnodata needs --config/--dataset or --rasters"
-            )
-        manifest = _fillnodata.fillnodata_tiles(
-            spark, tiles, ns.out, max_distance=ns.max_distance,
-            smoothing_iterations=ns.smoothing,
-        )
-        manifest.write.mode("overwrite").parquet(f"{ns.out}/_manifest")
-        m = spark.read.parquet(f"{ns.out}/_manifest")
-        stats.update(
-            tiles=m.count(),
-            filled=m.agg({"n_filled": "sum"}).collect()[0][0],
-            out=ns.out,
-        )
 
     elif ns.cmd == "prep":
         from ..operators import warp as _warp
@@ -689,24 +433,6 @@ def run(argv: list[str] | None = None) -> dict:
             out=ns.out,
         )
 
-    elif ns.cmd == "stats":
-        from ..operators import rstats as _rstats
-
-        paths = sorted(
-            p for g in ns.rasters for p in _glob.glob(g)
-        )
-        s = _rstats.raster_stats(spark, paths)
-        stats.update(n_rasters=len(paths), **s)
-        if ns.buckets:
-            hist = _rstats.raster_histogram(
-                spark, paths, n_buckets=ns.buckets,
-                vmin=s["vmin"], vmax=s["vmax"],
-            )
-            stats["histogram"] = [
-                int(r["count"])
-                for r in hist.orderBy("bucket").collect()
-            ]
-
     elif ns.cmd == "info":
         from ..geotiff import open_raster as _open
 
@@ -750,50 +476,6 @@ def run(argv: list[str] | None = None) -> dict:
             dst_res=dst_res, dst_bounds=dst_bounds,
             method=ns.method, tile_px=ns.tile_px, nodata=ns.nodata,
             skip_existing=ns.skip_existing,
-        )
-        manifest.write.mode("overwrite").parquet(f"{ns.out}/_manifest")
-        m = spark.read.parquet(f"{ns.out}/_manifest")
-        stats.update(
-            tiles=m.count(),
-            errors=m.where(m.error.isNotNull()).count(),
-            out=ns.out,
-        )
-
-    elif ns.cmd == "contours":
-        from ..operators import contours as _contours
-
-        if ns.config and ns.dataset:
-            tiles = _tile_rows_from_config(ns.config, ns.dataset)
-        elif ns.rasters:
-            # corner-derived keys: contour cells read their halo from
-            # key-neighbors, so enumeration keys would sever adjacency
-            tiles = _tiles_from_globs(ns.rasters)
-        else:
-            raise ValueError("contours needs --config/--dataset or --rasters")
-        levels = [float(v) for v in ns.levels.split(",")]
-        segs = _contours.contour_tiles(
-            spark, tiles, levels, dedupe=not ns.no_dedupe
-        )
-        segs.write.mode("overwrite").parquet(ns.out)
-        stats.update(segments=spark.read.parquet(ns.out).count(), out=ns.out)
-
-    elif ns.cmd == "calc":
-        from ..operators import algebra as _algebra
-
-        def _side(cfg_ds, globs, label):
-            if ns.config and cfg_ds:
-                return _tile_rows_from_config(ns.config, cfg_ds)
-            if globs:
-                # corner-derived keys pair A/B tiles geographically, not
-                # by filename sort order
-                return _tiles_from_globs(globs)
-            raise ValueError(f"calc needs --dataset-{label} or --rasters-{label}")
-
-        manifest = _algebra.raster_calc_tiles(
-            spark,
-            _side(ns.dataset_a, ns.rasters_a, "a"),
-            _side(ns.dataset_b, ns.rasters_b, "b"),
-            ns.out, expression=ns.expression, skip_existing=ns.skip_existing,
         )
         manifest.write.mode("overwrite").parquet(f"{ns.out}/_manifest")
         m = spark.read.parquet(f"{ns.out}/_manifest")
@@ -977,34 +659,6 @@ def run(argv: list[str] | None = None) -> dict:
         stats.update(
             tiles=m.count(),
             burned_cells=m.agg({"n_burned": "sum"}).collect()[0][0],
-            out=ns.out,
-        )
-
-    elif ns.cmd == "grid":
-        from ..operators import gridding as _gridding
-        from ..operators import rasterize as _rz
-
-        parts = [float(v) for v in ns.grid.split(",")]
-        if len(parts) != 6:
-            raise ValueError("--grid must be x0,y0,sx,sy,width,height")
-        grid = _rz.GridSpec(
-            parts[0], parts[1], parts[2], parts[3],
-            int(parts[4]), int(parts[5]),
-        )
-        r2 = ns.radius if ns.radius2 is None else ns.radius2
-        manifest = _gridding.grid_points(
-            spark, spark.read.parquet(ns.points), grid, ns.out,
-            algorithm=ns.algorithm, value_col=ns.value_col,
-            power=ns.power, smoothing=ns.smoothing,
-            radius1=ns.radius, radius2=r2, angle=ns.angle,
-            min_points=ns.min_points, max_points=ns.max_points,
-            nodata=ns.nodata, tile_px=ns.tile_px,
-        )
-        manifest.write.mode("overwrite").parquet(f"{ns.out}/_manifest")
-        m = spark.read.parquet(f"{ns.out}/_manifest")
-        stats.update(
-            tiles=m.count(),
-            valid_cells=m.agg({"n_valid": "sum"}).collect()[0][0],
             out=ns.out,
         )
 

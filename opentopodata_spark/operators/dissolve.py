@@ -3,7 +3,7 @@
 The `ogr2ogr -dissolve` / grouped ST_Union twin for the case that
 actually appears in tiled geo corpora: a layer PARTITIONED into
 non-overlapping polygons that share edges exactly (admin hierarchies,
-grid/quadkey footprints, polygonize/sieve output), dissolved to one
+grid/quadkey footprints, polygonize output), dissolved to one
 (multi)polygon per key. The reference has no vector algebra at all
 (its only join is point-vs-coverage, `/root/reference/opentopodata/
 config.py:432-451`); this completes the overlay family next to

@@ -29,8 +29,8 @@ tiles, so naive per-cell labeling can't work at catalog scale):
      layout-independent).
 
 Reference note: the reference has no polygonize analog (it delegates
-raster analysis to GDAL entirely); this follows the same beyond-
-reference pattern as terrain/hydrology. gdal_polygonize semantics:
+raster analysis to GDAL entirely); it is a beyond-reference
+operator. gdal_polygonize semantics:
 nodata cells belong to no region; 4-connectivity; regions never cross
 class boundaries.
 """
@@ -96,16 +96,13 @@ class _UnionFind:
                 self.parent[ra] = rb
 
 
-def _label_tile(klass: np.ndarray, gy0: int, gx0: int, gw: int,
-                with_adjacency: bool = False):
+def _label_tile(klass: np.ndarray, gy0: int, gx0: int, gw: int):
     """Run-length 4-connected labeling of one tile.
 
-    Returns (regions, border[, adj]): regions = (region=min_gid, klass,
+    Returns (regions, border): regions = (region=min_gid, klass,
     n_cells) rows; border = per-edge-cell arrays (gids, klasses,
-    roots_gid) for the N/S/W/E tile edges; adj (with_adjacency only) =
-    distinct (region_a, region_b) pairs of DIFFERENT-class regions that
-    touch inside this tile (the sieve's region graph edges). Global
-    cell id gid = gy * gw + gx.
+    roots_gid) for the N/S/W/E tile edges. Global cell id
+    gid = gy * gw + gx.
     """
     h, w = klass.shape
     # runs per row, fully vectorized: a run starts at (r, c) when c == 0
@@ -192,51 +189,14 @@ def _label_tile(klass: np.ndarray, gy0: int, gx0: int, gw: int,
     out_regions = list(zip(
         reg_gid.tolist(), reg_klass.tolist(), reg_cells.tolist()
     ))  # (region=min_gid, klass, n_cells)
-    if not with_adjacency:
-        return out_regions, border
-
-    # different-class touching pairs, vectorized. Horizontal: runs k,
-    # k+1 in the same row always differ in class (that's what ends a
-    # run). Vertical: for each run j in rows 1..h-1, the previous-row
-    # runs overlapping its column span are the contiguous index range
-    # found by searchsorted on FLAT run coordinates (start_flat /
-    # end_flat are globally sorted because rows are raveled in order).
-    def pair_regions(ki: np.ndarray, kj: np.ndarray):
-        both = (run_klass_a[ki] != -1) & (run_klass_a[kj] != -1) & (
-            run_klass_a[ki] != run_klass_a[kj]
-        )
-        ki, kj = ki[both], kj[both]
-        ra = reg_gid[np.searchsorted(uniq_root, roots[ki])]
-        rb = reg_gid[np.searchsorted(uniq_root, roots[kj])]
-        return np.minimum(ra, rb), np.maximum(ra, rb)
-
-    horiz = np.flatnonzero(run_row_a[1:] == run_row_a[:-1])
-    pa_h, pb_h = pair_regions(horiz, horiz + 1)
-    j_all = np.arange(int(row_first_run[1]), n_runs, dtype=np.int64)
-    prev_flat_s = (run_row_a[j_all] - 1) * w + run_start_a[j_all]
-    prev_flat_e = (run_row_a[j_all] - 1) * w + run_end_a[j_all]
-    i_lo = np.searchsorted(end_flat, prev_flat_s, side="right")
-    i_hi = np.searchsorted(start_flat, prev_flat_e, side="left") - 1
-    counts = i_hi - i_lo + 1  # >= 1: the previous row covers [0, w)
-    total = int(counts.sum())
-    ii = np.repeat(i_lo, counts) + (
-        np.arange(total, dtype=np.int64)
-        - np.repeat(np.cumsum(counts) - counts, counts)
-    )
-    jj = np.repeat(j_all, counts)
-    pa_v, pb_v = pair_regions(ii, jj)
-    pa = np.concatenate([pa_h, pa_v])
-    pb = np.concatenate([pb_h, pb_v])
-    adj = np.unique(np.stack([pa, pb], axis=1), axis=0) if len(pa) \
-        else np.empty((0, 2), np.int64)
-    return out_regions, border, adj
+    return out_regions, border
 
 
 def _normalize_grid(tiles):
     """[(iy, ix, path)] under ANY affine-consistent integer keying ->
     ([(row, col, path)], orig_of): row 0 = the NORTHERNMOST tile row,
-    growing southward — the orientation this family's gid / halo-slice
-    arithmetic assumes — and col 0 = westmost; ``orig_of`` maps
+    growing southward — the orientation the gid arithmetic of
+    polygonize and polyvec assumes — and col 0 = westmost; ``orig_of`` maps
     (row, col) back to the caller's (iy, ix) for output labeling.
 
     Keys are authoritative for ADJACENCY (key ± 1 = neighbouring
@@ -298,7 +258,7 @@ def _normalize_grid(tiles):
 
 def _grid_geometry(tiles):
     """(tile_h, tile_w, grid_w_cells) from the tile list; refuses mixed
-    tile sizes (adjacency math needs a uniform grid, like hydrology)."""
+    tile sizes (adjacency math needs a uniform grid)."""
     first = _open_cached(tiles[0][2])
     th, tw = first.height, first.width
     for _iy, _ix, p in tiles[1:]:

@@ -294,7 +294,7 @@ def region_polygons(
                 klass = classify_array(arr, bands=bands)
                 gy0, gx0 = iy * th, ix * tw
                 regions, border = _label_tile(klass, gy0, gx0, gw)
-                labels = _cell_labels(klass, gy0, gx0, gw)
+                labels = _local_cell_labels(klass, gy0, gx0, gw)
                 for region, k, n in regions:
                     rows.append(("r", region, k, n, 0, 0, 0, 0))
                 for side, (gids, ks, rgs) in border.items():
@@ -473,10 +473,31 @@ def _point_in_ring(pt, ring) -> bool:
     return inside
 
 
-def _cell_labels(klass, gy0, gx0, gw):
-    from .sieve import _local_cell_labels
-
-    return _local_cell_labels(klass, gy0, gx0, gw)
+def _local_cell_labels(klass: np.ndarray, gy0: int, gx0: int,
+                       gw: int) -> np.ndarray:
+    """Per-cell LOCAL region id (min gid within this tile) — the same
+    labels _label_tile assigns, expanded to cells.
+    Run-batched min-propagation restricted to one tile."""
+    h, w = klass.shape
+    gid = ((gy0 + np.arange(h, dtype=np.int64))[:, None] * gw
+           + gx0 + np.arange(w, dtype=np.int64)[None, :])
+    label = np.where(klass != -1, gid, np.int64(-1))
+    while True:
+        new = label
+        for transpose in (False, True):
+            l2 = np.ascontiguousarray(new.T) if transpose else new
+            k2 = np.ascontiguousarray(klass.T) if transpose else klass
+            h2, w2 = k2.shape
+            nr = np.ones((h2, w2), dtype=bool)
+            nr[:, 1:] = k2[:, 1:] != k2[:, :-1]
+            starts = np.flatnonzero(nr.ravel())
+            mins = np.minimum.reduceat(l2.ravel(), starts)
+            counts = np.diff(np.append(starts, h2 * w2))
+            l2 = np.repeat(mins, counts).reshape(h2, w2)
+            new = l2.T if transpose else l2
+        if np.array_equal(new, label):
+            return label
+        label = new
 
 
 def region_boundary_stats_sequential(
@@ -505,8 +526,6 @@ def region_boundary_stats_sequential(
         klass[iy * th:(iy + 1) * th, ix * tw:(ix + 1) * tw] = (
             classify_array(arr, bands=bands)
         )
-    from .sieve import _local_cell_labels
-
     labels = _local_cell_labels(klass, 0, 0, gw)
     perim: dict[int, int] = {}
     pad_k = np.pad(klass, 1, constant_values=-1)

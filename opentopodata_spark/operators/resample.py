@@ -74,7 +74,7 @@ def resample_tiles(
     """Build factor-``factor`` overview tiles for a tile set. ``tiles``:
     (iy, ix, path) rows. Per-tile map, zero shuffles; outputs publish via
     atomic rename with lineage checksums (same resume contract as
-    :func:`opentopodata_spark.operators.terrain.terrain_tiles`).
+    :func:`opentopodata_spark.operators.warp.warp_tiles`).
 
     use_overviews: serve ``method='average'`` tiles straight from an
     embedded reduced-resolution IFD (COG overview) when the source file

@@ -15,7 +15,7 @@ cut into tiles, and each Spark task materializes one output tile by
      backend.py semantics: half-pixel inset, NODATA-poisoned kernels,
      integer rounding),
   4. writing a north-up GeoTIFF with the atomic-rename + lineage
-     manifest contract shared with terrain/resample.
+     manifest contract shared with resample/transcode.
 
 Scale shape: embarrassingly parallel over output tiles — zero shuffles,
 no driver-side pixel data. Each task reads only the source WINDOWS its

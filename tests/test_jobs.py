@@ -130,15 +130,25 @@ def _package_files() -> list:
     ]
 
 
+def _py_files(d: str) -> list:
+    return [
+        os.path.join(REPO, d, fn)
+        for fn in sorted(os.listdir(os.path.join(REPO, d)))
+        if fn.endswith(".py")
+    ]
+
+
 def test_no_dangling_package_imports(monkeypatch):
-    """Every ``opentopodata_spark`` import in the package and in
-    ``__spark_entry__.py``, the lazy ones included, names a module file,
-    and every imported name exists in it. Every name a module lists in
-    ``__all__`` is defined or imported at its top level, so a star
-    import cannot break on a deleted name. ``oracle_sql()`` checks only
+    """Every ``opentopodata_spark`` import in the package, in
+    ``__spark_entry__.py``, in ``tools/`` and in ``perfbench/``, the lazy
+    ones included, names a module file, and every imported name exists
+    in it. Every name a module lists in ``__all__`` is defined or
+    imported at its top level, so a star import cannot break on a
+    deleted name. ``oracle_sql()`` checks only
     queries that ``queries()`` registers."""
     dangling = []
-    for path in [os.path.join(REPO, "__spark_entry__.py")] + _package_files():
+    paths = [os.path.join(REPO, "__spark_entry__.py")] + _package_files()
+    for path in paths + _py_files("tools") + _py_files("perfbench"):
         rel = os.path.relpath(path, REPO)
         for lineno, mod, names in _package_imports(path):
             target = _module_file(mod)
@@ -166,7 +176,7 @@ def test_no_dangling_package_imports(monkeypatch):
 
     # keys only: skip building the precomputed oracle tables
     monkeypatch.setattr(contract, "_oracle_parquet", lambda name, b: name)
-    for name in ("_zonal_sql", "_raster_stats_sql", "_zonal_majority_sql"):
+    for name in ("_zonal_sql", "_zonal_majority_sql"):
         monkeypatch.setattr(contract, name, lambda: "SELECT 1")
     assert set(contract.oracle_sql()) <= set(contract.queries())
 
@@ -177,9 +187,8 @@ def test_no_orphan_package_modules():
     ``tools/`` and ``perfbench/``. A module that only tests import ships
     to every worker and does no work there."""
     roots = [os.path.join(REPO, "__spark_entry__.py")] + [
-        os.path.join(REPO, d, fn)
-        for d in ("opentopodata_spark/jobs", "tools", "perfbench")
-        for fn in os.listdir(os.path.join(REPO, d)) if fn.endswith(".py")
+        f for d in ("opentopodata_spark/jobs", "tools", "perfbench")
+        for f in _py_files(d)
     ]
     reached, todo = set(), roots
     while todo:

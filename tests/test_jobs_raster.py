@@ -1,5 +1,5 @@
-"""jobs/raster.py CLI tests: the three subcommands end-to-end, output
-read-back, resume flag, and client-error exits."""
+"""jobs/raster.py CLI tests: the subcommands end-to-end, output
+read-back, and client-error exits."""
 
 from __future__ import annotations
 
@@ -17,32 +17,6 @@ from opentopodata_spark.jobs import raster as job
 @pytest.fixture()
 def srtm_cfg(raster_root):
     return os.path.join(raster_root, "test-config.yaml")
-
-
-def test_terrain_from_config(spark, srtm_cfg, tmp_path, capsys):
-    out = str(tmp_path / "slope")
-    rc = job.main([
-        "--cores", "4", "terrain", "--config", srtm_cfg,
-        "--dataset", "srtm90subset", "--out", out,
-        "--kind", "slope", "--scale", "111120",
-    ])
-    assert rc == 0
-    res = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    assert res["status"] == "OK" and res["tiles"] == 2 and res["errors"] == 0
-    tifs = sorted(glob.glob(os.path.join(out, "slope_*.tif")))
-    assert len(tifs) == 2
-    r = geotiff.open_raster(tifs[0])
-    inner = r.read_block(1, r.height - 1, 1, r.width - 1)
-    assert np.isfinite(inner).any()
-    # resume run: nothing recomputed, same manifest size
-    mt = {p: os.path.getmtime(p) for p in tifs}
-    rc = job.main([
-        "--cores", "4", "terrain", "--config", srtm_cfg,
-        "--dataset", "srtm90subset", "--out", out,
-        "--kind", "slope", "--scale", "111120", "--skip-existing",
-    ])
-    assert rc == 0
-    assert all(os.path.getmtime(p) == t for p, t in mt.items())
 
 
 def test_zonal_cli(spark, srtm_cfg, tmp_path, capsys):
@@ -198,74 +172,6 @@ def test_buildvrt_and_info_cli(srtm_cfg, tmp_path, capsys):
         and b[2] == pytest.approx(12.0 + 1 / 2400)
 
 
-def test_contours_cli(spark, srtm_cfg, tmp_path, capsys):
-    out = str(tmp_path / "segs")
-    rc = job.main([
-        "--cores", "4", "contours", "--config", srtm_cfg,
-        "--dataset", "srtm90subset", "--out", out, "--levels", "1605.5,1614.5",
-    ])
-    assert rc == 0
-    res = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    assert res["status"] == "OK" and res["segments"] > 100
-    segs = spark.read.parquet(out)
-    assert set(segs.columns) == {"level", "x1", "y1", "x2", "y2"}
-
-
-def test_calc_cli_self_diff(spark, srtm_cfg, tmp_path, capsys):
-    out = str(tmp_path / "diff")
-    rc = job.main([
-        "--cores", "4", "calc", "--config", srtm_cfg,
-        "--dataset-a", "srtm90subset", "--dataset-b", "srtm90subset",
-        "--out", out, "--expression", "a - b",
-    ])
-    assert rc == 0
-    res = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    assert res["status"] == "OK" and res["tiles"] == 2 and res["errors"] == 0
-    m = spark.read.parquet(f"{out}/_manifest")
-    assert all(r["sum_value"] == 0.0 for r in m.collect())
-
-
-def test_flowacc_cli(spark, tmp_path, capsys):
-    # small non-overlapping 2x2 grid (flowacc requires no tile overlap)
-    rng = np.random.default_rng(9)
-    H = W = 40
-    yy, xx = np.mgrid[0:H, 0:W]
-    mosaic = 15.0 * np.sin(xx / 6.0) + 0.3 * yy + rng.normal(0, 0.3, (H, W))
-    res = 0.01
-    for ty in range(2):
-        for tx in range(2):
-            geotiff.write_geotiff(
-                str(tmp_path / f"fa_{ty}_{tx}.tif"),
-                mosaic[ty * 20:(ty + 1) * 20, tx * 20:(tx + 1) * 20],
-                x0=5.0 + tx * 20 * res, y0=1.0 - ty * 20 * res,
-                sx=res, sy=res, epsg=4326, nodata=-9999,
-            )
-    out = str(tmp_path / "acc")
-    rc = job.main([
-        "--cores", "4", "flowacc",
-        "--rasters", str(tmp_path / "fa_*.tif"), "--out", out,
-    ])
-    assert rc == 0
-    resj = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    assert resj["status"] == "OK" and resj["tiles"] == 4 and resj["errors"] == 0
-    tifs = sorted(glob.glob(os.path.join(out, "flow_acc_*.tif")))
-    assert len(tifs) == 4
-    # mass balance: sum over all cells of (acc+1) counts each cell once
-    # per path cell; instead pin a cheap invariant — total accumulation
-    # equals total path length, and every value is a whole number >= 0
-    from opentopodata_spark.operators import hydrology
-
-    want = hydrology.mosaic_flow_accumulation(mosaic, res, res)
-    got = np.full((H, W), np.nan)
-    for p in tifs:
-        iy, ix = map(int, os.path.basename(p)[:-4].split("_")[2:])
-        r = geotiff.open_raster(p)
-        got[(1 - iy) * 20:(2 - iy) * 20, ix * 20:(ix + 1) * 20] = \
-            r.read_block(0, r.height, 0, r.width)
-    fin = np.isfinite(want)
-    assert np.array_equal(got[fin].astype(np.float64), want[fin])
-
-
 def test_visibility_cli(spark, srtm_cfg, tmp_path, capsys):
     """jobs/visibility: los + viewshed subcommands end-to-end over the
     SRTM fixture config."""
@@ -369,134 +275,6 @@ def test_transcode_jp2_to_geotiff(spark, tmp_path, capsys):
     assert ej == et
 
 
-def test_sieve_cli(spark, tmp_path, capsys):
-    rng = np.random.default_rng(13)
-    k = rng.integers(0, 3, (40, 40)).astype(np.int16)
-    res = 0.01
-    for ty in range(2):
-        for tx in range(2):
-            geotiff.write_geotiff(
-                str(tmp_path / f"sv_{ty}_{tx}.tif"),
-                k[ty * 20:(ty + 1) * 20, tx * 20:(tx + 1) * 20],
-                x0=5.0 + tx * 20 * res, y0=1.0 - ty * 20 * res,
-                sx=res, sy=res, epsg=4326, nodata=-9999,
-            )
-    out = str(tmp_path / "sieved")
-    rc = job.main([
-        "--cores", "4", "sieve",
-        "--rasters", str(tmp_path / "sv_*.tif"), "--out", out,
-        "--threshold", "8",
-    ])
-    assert rc == 0
-    resj = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    assert resj["status"] == "OK" and resj["tiles"] == 4
-    tifs = sorted(glob.glob(os.path.join(out, "sieve_*.tif")))
-    assert len(tifs) == 4
-    # every surviving region in the rewritten mosaic is >= threshold
-    # (salt-noise input: everything merges into a few big regions)
-    from opentopodata_spark.operators import polygonize
-
-    rows = polygonize.label_regions_sequential(
-        [(int(p.split("_")[-2]), int(p.split("_")[-1][:-4]), p)
-         for p in tifs]
-    )
-    sizes = [n for _i, _v, n, _t in rows]
-    assert sum(sizes) == 1600
-    # no nodata in this fixture, so nothing can hide below threshold
-    assert min(sizes) >= 8
-
-
-def test_fillnodata_cli(spark, tmp_path, capsys):
-    z = np.full((40, 40), 5.0)
-    z[18:22, 18:22] = np.nan
-    for ty in range(2):
-        for tx in range(2):
-            sub = z[ty * 20:(ty + 1) * 20, tx * 20:(tx + 1) * 20]
-            geotiff.write_geotiff(
-                str(tmp_path / f"fn_{ty}_{tx}.tif"),
-                np.where(np.isfinite(sub), sub, -9999.0)
-                .astype(np.float32),
-                x0=5.0 + tx * 0.2, y0=1.0 - ty * 0.2,
-                sx=0.01, sy=0.01, epsg=4326, nodata=-9999.0,
-            )
-    out = str(tmp_path / "filled")
-    rc = job.main([
-        "--cores", "4", "fillnodata",
-        "--rasters", str(tmp_path / "fn_*.tif"), "--out", out,
-        "--max-distance", "6",
-    ])
-    assert rc == 0
-    resj = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    assert resj["status"] == "OK" and resj["tiles"] == 4
-    assert resj["filled"] == 16
-    for p in sorted(glob.glob(os.path.join(out, "fill_*.tif"))):
-        r = geotiff.open_raster(p)
-        arr = r.read_block(0, r.height, 0, r.width)
-        assert np.allclose(arr, 5.0)  # constant field fills exactly
-
-
-def test_proximity_cli(spark, tmp_path, capsys):
-    k = np.zeros((40, 40), dtype=np.float32)
-    k[20, 20] = 1.0
-    for ty in range(2):
-        for tx in range(2):
-            geotiff.write_geotiff(
-                str(tmp_path / f"px_{ty}_{tx}.tif"),
-                k[ty * 20:(ty + 1) * 20, tx * 20:(tx + 1) * 20],
-                x0=5.0 + tx * 0.2, y0=1.0 - ty * 0.2,
-                sx=0.01, sy=0.01, epsg=4326, nodata=-9999.0,
-            )
-    out = str(tmp_path / "prox")
-    rc = job.main([
-        "--cores", "4", "proximity",
-        "--rasters", str(tmp_path / "px_*.tif"), "--out", out,
-        "--target-values", "1", "--max-distance", "5",
-    ])
-    assert rc == 0
-    resj = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    assert resj["status"] == "OK" and resj["tiles"] == 4
-    # the target sits at geographic row 20 col 20 = the SOUTH-west
-    # tile's local (0, 0). Outputs carry the CALLER's keys, and
-    # _tiles_from_globs keys are iy-UP (northing order), so the
-    # NORTH-west tile is prox_1_0; its bottom-right corner (19,19)
-    # is sqrt(2) away from the target across the seam.
-    r = geotiff.open_raster(os.path.join(out, "prox_1_0.tif"))
-    d = r.read_block(0, 20, 0, 20)
-    assert np.isclose(d[19, 19], np.sqrt(2.0), atol=1e-6)
-    assert not np.isfinite(d[0, 0])
-    # the target itself lives in the SOUTH-east tile (caller key 0,1)
-    r0 = geotiff.open_raster(os.path.join(out, "prox_0_1.tif"))
-    assert r0.read_block(0, 20, 0, 20)[0, 0] == 0.0
-
-
-def test_colorrelief_cli(spark, tmp_path, capsys):
-    geotiff.write_geotiff(
-        str(tmp_path / "cr.tif"),
-        np.linspace(0, 900, 64, dtype=np.float32).reshape(8, 8),
-        x0=5.0, y0=1.0, sx=0.01, sy=0.01, epsg=4326, nodata=-9999.0,
-    )
-    ramp = str(tmp_path / "ramp.txt")
-    with open(ramp, "w") as f:
-        f.write("0 0 100 0\n1000 255 255 255\nnv 0 0 0 0\n")
-    out = str(tmp_path / "relief")
-    rc = job.main([
-        "--cores", "4", "colorrelief",
-        "--rasters", str(tmp_path / "cr.tif"), "--out", out,
-        "--ramp", ramp,
-    ])
-    assert rc == 0
-    resj = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    assert resj["status"] == "OK" and resj["tiles"] == 1
-    from opentopodata_spark import png as _png
-
-    rgba = _png.decode_png(
-        open(os.path.join(out, "relief_0_0.png"), "rb").read()
-    )
-    assert rgba.shape == (8, 8, 4)
-    assert tuple(rgba[0, 0]) == (0, 100, 0, 255)   # elevation 0
-    assert rgba[7, 7][0] > 200                      # near-white at top
-
-
 def test_polygonize_cli(spark, tmp_path, capsys):
     k = np.zeros((8, 8), dtype=np.int16)
     k[2:5, 2:5] = 7
@@ -523,32 +301,6 @@ def test_polygonize_cli(spark, tmp_path, capsys):
     assert by_val[0]["properties"]["n_cells"] == 55
     # the background polygon carries the island as a hole
     assert len(by_val[0]["geometry"]["coordinates"]) == 2
-
-
-def test_grid_cli(spark, tmp_path, capsys):
-    pts = str(tmp_path / "gpts.parquet")
-    rows = [
-        (0.55 + 0.11 * (i % 7), 0.45 + 0.13 * (i % 9),
-         float(10 * (i % 4))) for i in range(120)
-    ]
-    spark.createDataFrame(
-        rows, "lat double, lon double, value double"
-    ).write.parquet(pts)
-    out = str(tmp_path / "gridded")
-    rc = job.main([
-        "--cores", "4", "grid", "--points", pts,
-        "--grid", "0,2,0.1,0.1,20,20", "--out", out,
-        "--algorithm", "invdist", "--radius", "0.3",
-        "--tile-px", "10",
-    ])
-    assert rc == 0
-    res = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    assert res["status"] == "OK" and res["tiles"] == 4
-    assert res["valid_cells"] > 0
-    m = spark.read.parquet(f"{out}/_manifest").collect()
-    p = [r.path for r in m if r.n_valid > 0][0]
-    a = geotiff.open_raster(p).read_block(0, 10, 0, 10)
-    assert np.isfinite(a).any()
 
 
 def test_burn_cli_geojson(spark, tmp_path, capsys):
@@ -610,22 +362,3 @@ def test_burn_cli_mixed_geometry_refused(tmp_path, capsys):
     assert res["status"] == "INVALID_REQUEST"
 
 
-def test_raster_stats_cli(tmp_path, spark, capsys):
-    import numpy as np
-
-    from opentopodata_spark import geotiff
-    from opentopodata_spark.jobs import raster as rjob
-
-    rng = np.random.RandomState(4)
-    arr = rng.randint(0, 500, size=(40, 50)).astype(np.int16)
-    arr[:5, :5] = -9999
-    p = str(tmp_path / "s.tif")
-    geotiff.write_geotiff(p, arr, x0=0.0, y0=10.0, sx=0.01, sy=0.01,
-                          epsg=4326, nodata=-9999)
-    stats = rjob.run(["--cores", "4", "stats", "--rasters", p,
-                      "--buckets", "8"])
-    v = arr[arr != -9999].astype(np.float64)
-    assert stats["n_valid"] == v.size and stats["n_nodata"] == 25
-    assert stats["vmin"] == v.min() and stats["vmax"] == v.max()
-    assert abs(stats["mean"] - v.mean()) < 1e-9
-    assert sum(stats["histogram"]) == v.size and len(stats["histogram"]) == 8

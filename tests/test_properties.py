@@ -169,27 +169,6 @@ def test_block_reduce_properties(h, w, k, seed):
 
 
 @given(
-    a=st.floats(-5.0, 5.0, allow_nan=False),
-    b=st.floats(-5.0, 5.0, allow_nan=False),
-    c=st.floats(-1000.0, 1000.0, allow_nan=False),
-    sx=st.floats(0.01, 10.0), sy=st.floats(0.01, 10.0),
-)
-@settings(max_examples=80, deadline=None)
-def test_horn_exact_on_planes(a, b, c, sx, sy):
-    """Horn's 3x3 kernel recovers the gradient of any plane exactly
-    (it is a weighted average of exact central differences)."""
-    from opentopodata_spark.operators import terrain
-
-    n = 6
-    x = np.arange(n) * sx
-    y = -np.arange(n) * sy  # rows southward
-    z = a * x[None, :] + b * y[:, None] + c
-    dzdx, dzdy = terrain.horn_derivatives(z, sx, sy, 1.0)
-    assert np.allclose(dzdx, a, atol=max(1e-9, abs(a) * 1e-9) + 1e-12)
-    assert np.allclose(dzdy, b, atol=max(1e-9, abs(b) * 1e-9) + 1e-12)
-
-
-@given(
     lat=st.floats(-89.0, 89.0), lon=st.floats(-179.0, 179.0),
     n=st.integers(3, 10), r=st.floats(0.1, 5.0),
     seed=st.integers(0, 2**31 - 1),

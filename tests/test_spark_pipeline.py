@@ -91,6 +91,11 @@ class TestDifferential:
         cds = config.load_datasets(
             os.path.join(compressed_raster_root, "test-config.yaml")
         )
+        # the config is generated for THIS checkout, never another one's
+        root = os.path.realpath(compressed_raster_root) + os.sep
+        for d in cds.values():
+            p = getattr(d, "path", None) or getattr(d, "tile_path", None)
+            assert p is None or os.path.realpath(p).startswith(root), p
         ds = [
             cds["nodata"],
             cds["eudemsubset"],
