@@ -6,6 +6,8 @@ Subcommands:
 
   polygonize tiled raster -> region polygons parquet (+ optional
              GeoJSON FeatureCollection; gdal_polygonize)
+  colorrelief tiled DEM + GDAL color ramp -> RGBA PNG relief tiles
+             (gdaldem color-relief)
   zonal      tiled/loose rasters + polygons (GeoJSON or engine JSON)
              -> per-polygon statistics parquet
   rasterize  points parquet (lat, lon[, value]) -> cell aggregation
@@ -144,6 +146,21 @@ def build_parser() -> argparse.ArgumentParser:
                     " assembly — bounded by the region count)")
     pg.add_argument("--bands", type=float, nargs="*",
                     help="quantization edges for float rasters")
+
+    crp = sub.add_parser(
+        "colorrelief", help="RGBA relief tiles through a color ramp"
+        " (gdaldem color-relief)"
+    )
+    crp.add_argument("--config")
+    crp.add_argument("--dataset")
+    crp.add_argument("--rasters", nargs="*")
+    crp.add_argument("--out", required=True)
+    crp.add_argument("--ramp", required=True,
+                     help="GDAL color-relief text file:"
+                     " 'elevation r g b [a]' per line, 'nv ...' for"
+                     " NODATA")
+    crp.add_argument("--mode", default="interpolate",
+                     choices=["interpolate", "nearest", "exact"])
 
     z = sub.add_parser("zonal", help="per-polygon raster statistics")
     z.add_argument("--config")
@@ -354,6 +371,26 @@ def run(argv: list[str] | None = None) -> dict:
                 )
             os.replace(tmp, ns.geojson)
             stats.update(geojson=ns.geojson)
+
+    elif ns.cmd == "colorrelief":
+        from ..operators import colorrelief as _colorrelief
+
+        if ns.config and ns.dataset:
+            tiles = _tile_rows_from_config(ns.config, ns.dataset)
+        elif ns.rasters:
+            tiles = _tiles_from_globs(ns.rasters)
+        else:
+            raise ValueError(
+                "colorrelief needs --config/--dataset or --rasters"
+            )
+        with open(ns.ramp) as f:
+            ramp_text = f.read()
+        manifest = _colorrelief.colorrelief_tiles(
+            spark, tiles, ns.out, ramp_text, mode=ns.mode,
+        )
+        manifest.write.mode("overwrite").parquet(f"{ns.out}/_manifest")
+        m = spark.read.parquet(f"{ns.out}/_manifest")
+        stats.update(tiles=m.count(), out=ns.out)
 
     elif ns.cmd == "prep":
         from ..operators import warp as _warp
