@@ -264,15 +264,27 @@ def make_all_rasters(
     styles: dict[str, dict] | None = None,
     with_hgt_zip: bool = False,
 ) -> dict[str, list[str]]:
-    """Generate the full fixture corpus + config. Idempotent (skips if the
-    marker file already exists). ``styles`` maps dataset name -> extra
-    write_geotiff kwargs (compression/predictor/layout); ``with_hgt_zip``
-    additionally generates a zipped-SRTM dataset and registers it."""
+    """Generate the full fixture corpus + config. Idempotent (skips the
+    rasters if the marker file already exists). ``styles`` maps dataset
+    name -> extra write_geotiff kwargs (compression/predictor/layout);
+    ``with_hgt_zip`` additionally generates a zipped-SRTM dataset and
+    registers it. The config names absolute paths under ``root``, so the
+    config of a corpus copied or moved from another root is rewritten."""
     styles = styles or {}
     os.makedirs(root, exist_ok=True)
     config_path = os.path.join(root, "test-config.yaml")
     marker = os.path.join(root, ".complete")
+    config_text = TEST_CONFIG_YAML.format(root=root)
+    if with_hgt_zip:
+        config_text += SRTM_HGT_ZIP_CONFIG_EXTRA.format(root=root)
     if os.path.exists(marker):
+        with open(config_path) as f:
+            elsewhere = f"path: {root}/" not in f.read()
+        if elsewhere:
+            tmp = f"{config_path}.{os.getpid()}.tmp"
+            with open(tmp, "w") as f:
+                f.write(config_text)
+            os.replace(tmp, config_path)
         return {"config": [config_path]}
     out = {
         "etopo1deg": [
@@ -299,10 +311,8 @@ def make_all_rasters(
             **styles.get("eudemnoepsg", {}),
         ),
     }
-    config_text = TEST_CONFIG_YAML.format(root=root)
     if with_hgt_zip:
         out["srtmhgtzip"] = make_srtm_hgt_zip(os.path.join(root, "test-srtm90m-hgt-zip"))
-        config_text += SRTM_HGT_ZIP_CONFIG_EXTRA.format(root=root)
     with open(config_path, "w") as f:
         f.write(config_text)
     out["config"] = [config_path]

@@ -24,13 +24,29 @@ minimal GeoTIFF implementation sufficient for elevation rasters:
 
 The uncompressed contiguous case memory-maps the pixel data, so 4x4
 interpolation windows touch only the OS pages they need. Compressed rasters
-decode per strip/tile on demand through a process-wide, byte-budgeted LRU of
-decoded blocks (``OTDS_BLOCK_CACHE_MB``, default 256) — the moral equivalent
-of GDAL's block cache. Windowed reads (``Raster.read_window``) decode only
-the blocks the window intersects; this is the property that matters at
-100 TB: executor tasks sample tiles without materializing whole rasters, and
-repeated batches hitting the same tile reuse decoded blocks across tasks in
-the same Python worker.
+decode per strip/tile on demand. Windowed reads (``Raster.read_window``)
+decode only the blocks the window intersects; this is the property that
+matters at 100 TB: executor tasks sample tiles without materializing whole
+rasters. Decoded blocks pass through two cache tiers:
+
+* L1, a process-wide, byte-budgeted LRU of decoded blocks
+  (``OTDS_BLOCK_CACHE_MB``, default 256) — the moral equivalent of GDAL's
+  block cache. Repeated batches hitting the same tile reuse decoded blocks
+  across tasks in the same Python worker.
+* The spill tier, one directory per executor shared by all of its Python
+  workers: ``<SparkFiles.getRootDirectory()>/decoded-blocks/<sha1 of the
+  block reader's key>/<block index>`` holds each compressed block's decoded
+  bytes. Spark hands a task to whichever Python worker is idle, so without
+  it every worker decodes the blocks it has not decoded itself. An L1 miss
+  reads the file; a missing or wrong-sized file means decode, then publish
+  through a temp file and ``os.replace``, so no reader sees a partial
+  block. The tier is active only inside Spark Python workers (the driver,
+  the oracle and scripts keep L1 alone), lives as long as that directory
+  (in local mode the driver's temp dir, deleted when the application
+  stops), and stops writing once the disk holds less than half the free
+  space it had at the worker's first spill; a failed write skips the
+  spill. ``block_cache_stats()`` counts hits, decodes and spills per
+  process.
 
 The reference reads compressed rasters via GDAL
 (/root/reference/opentopodata/backend.py:103) and its docs explicitly
@@ -41,12 +57,14 @@ support is first-class here, not an afterthought.
 
 from __future__ import annotations
 
+import hashlib
 import io
 import lzma
 import math
 import os
 import re
 import struct
+import sys
 import threading
 import zipfile
 import zlib
@@ -165,6 +183,12 @@ _BLOCK_CACHE_BYTES = int(float(os.environ.get("OTDS_BLOCK_CACHE_MB", "256")) * 2
 _block_cache: OrderedDict[tuple, np.ndarray] = OrderedDict()
 _block_cache_used = 0
 _block_cache_lock = threading.Lock()
+# block_cache_stats() counters; clear_block_cache() zeroes them
+_block_stats = dict.fromkeys(
+    ("l1_hits", "spill_hits", "decodes", "decoded_bytes", "spill_writes",
+     "spill_skips"),
+    0,
+)
 
 
 def _cache_get(key):
@@ -191,10 +215,77 @@ def _cache_put(key, arr: np.ndarray):
 
 
 def clear_block_cache():
+    """Empty this process's L1 and zero block_cache_stats(); the spill tier
+    is shared with other processes and stays."""
     global _block_cache_used
     with _block_cache_lock:
         _block_cache.clear()
         _block_cache_used = 0
+        for k in _block_stats:
+            _block_stats[k] = 0
+
+
+# ---------------------------------------------------------------------------
+# Spill tier: decoded blocks shared by the Python workers of one executor
+# ---------------------------------------------------------------------------
+
+_spill_floor: int | None = None  # free bytes below which this process stops
+
+
+def block_cache_stats() -> dict[str, int]:
+    """Counters of the GeoTIFF block reader in this process since the last
+    clear_block_cache(): L1 hits, spill-tier hits, block decodes, decoded
+    bytes, spill writes, and spills skipped by the disk bound or a failed
+    write (diagnostic; used by tests to pin the cache tiers)."""
+    return dict(_block_stats)
+
+
+def _free_bytes(path: str) -> int:
+    st = os.statvfs(path)
+    return st.f_bavail * st.f_frsize
+
+
+def _spill_get(path: str, shape: tuple[int, int], dtype: np.dtype):
+    """The decoded block at ``path``, or None when it is missing or has the
+    wrong size (a reader never sees a partial file, see _spill_put)."""
+    arr = np.empty(shape, dtype)
+    try:
+        with open(path, "rb") as f:
+            if os.fstat(f.fileno()).st_size != arr.nbytes:
+                return None
+            if f.readinto(arr.reshape(-1).view(np.uint8)) != arr.nbytes:
+                return None
+    except OSError:
+        return None
+    return arr
+
+
+def _spill_put(path: str, arr: np.ndarray) -> None:
+    """Publish a decoded block: temp file, then os.replace. Skipped once the
+    disk's free space falls under half of what it was at this process's
+    first spill, or when any write fails."""
+    global _spill_floor
+    d = os.path.dirname(path)
+    tmp = f"{path}.{os.getpid()}.tmp"
+    try:
+        os.makedirs(d, exist_ok=True)
+        free = _free_bytes(d)
+        if _spill_floor is None:
+            _spill_floor = free // 2
+        if free < _spill_floor:
+            _block_stats["spill_skips"] += 1
+            return
+        with open(tmp, "wb") as f:
+            f.write(np.ascontiguousarray(arr))
+        os.replace(tmp, path)
+    except OSError:
+        _block_stats["spill_skips"] += 1
+        try:
+            os.unlink(tmp)
+        except OSError:
+            pass
+        return
+    _block_stats["spill_writes"] += 1
 
 
 # ---------------------------------------------------------------------------
@@ -757,10 +848,24 @@ class _BlockReader:
             ]
         return list(range(r0 // self.block_h, (r1 - 1) // self.block_h + 1))
 
+    def _spill_dir(self) -> str | None:
+        """This reader's directory in the spill tier; None outside a Spark
+        Python worker and for uncompressed blocks, which decode for free.
+        A worker has imported SparkFiles before it runs a task, so a
+        process that has not is no worker."""
+        files = sys.modules.get("pyspark.core.files")
+        if (self.compression == _C_NONE or files is None
+                or not files.SparkFiles._is_running_on_worker):
+            return None
+        key = repr((self.source.cache_key, self.cache_tag)).encode()
+        return os.path.join(files.SparkFiles.getRootDirectory(),
+                            "decoded-blocks", hashlib.sha1(key).hexdigest())
+
     def read(self, r0: int, r1: int, c0: int, c1: int) -> np.ndarray:
         """Decode-and-assemble a clipped [r0:r1, c0:c1] window. Only blocks
         intersecting the window are decoded; decoded blocks go through the
-        process-wide LRU so repeat reads are free."""
+        process-wide LRU so repeat reads are free, and compressed ones
+        through the executor's spill tier (module docstring)."""
         out = np.empty((r1 - r0, c1 - c0), dtype=self.dtype.newbyteorder("="))
         need = self._blocks_for_window(r0, r1, c0, c1)
         missing = []
@@ -771,6 +876,7 @@ class _BlockReader:
                 missing.append(idx)
             else:
                 blocks[idx] = arr
+        _block_stats["l1_hits"] += len(blocks)
         if missing:
             sparse = [
                 i for i in missing if self.offsets[i] == 0 or self.counts[i] == 0
@@ -784,11 +890,30 @@ class _BlockReader:
                 _cache_put((self.source.cache_key, self.cache_tag, idx), arr)
                 blocks[idx] = arr
             missing = [i for i in missing if i not in blocks]
+            spill = self._spill_dir() if missing else None
+            if spill is not None:
+                dt = self.dtype.newbyteorder("=")
+                undecoded = []
+                for idx in missing:
+                    arr = _spill_get(
+                        os.path.join(spill, str(idx)), self._block_shape(idx), dt
+                    )
+                    if arr is None:
+                        undecoded.append(idx)
+                    else:
+                        _cache_put((self.source.cache_key, self.cache_tag, idx), arr)
+                        blocks[idx] = arr
+                _block_stats["spill_hits"] += len(missing) - len(undecoded)
+                missing = undecoded
             raws = self.source.read_many(
                 [(self.offsets[i], self.counts[i]) for i in missing]
-            )
+            ) if missing else []
             for idx, raw in zip(missing, raws):
                 arr = self._decode(idx, raw)
+                _block_stats["decodes"] += 1
+                _block_stats["decoded_bytes"] += arr.nbytes
+                if spill is not None:
+                    _spill_put(os.path.join(spill, str(idx)), arr)
                 _cache_put((self.source.cache_key, self.cache_tag, idx), arr)
                 blocks[idx] = arr
         tiles_across = -(-self.width // self.block_w) if self.tiled else 1

@@ -610,3 +610,148 @@ def test_gz_corrupt_body_clean_error(tmp_path):
         f.write(raw[: len(raw) // 2])  # truncate mid-stream
     with pytest.raises(geotiff.RasterOpenError):
         geotiff.open_raster(p)
+
+
+# ---------------------------------------------------------------------------
+# Spill tier: decoded blocks shared by the Python workers of one executor
+# ---------------------------------------------------------------------------
+
+SPILL_WINDOW = (100, 700, 200, 900)  # 3 x 4 of the 256 x 256 tiles
+
+
+@pytest.fixture(scope="module")
+def deflate_p2_tile(tmp_path_factory):
+    from opentopodata_spark import fixtures
+
+    d = str(tmp_path_factory.mktemp("deflate_p2"))
+    return fixtures.make_srtm_subset(
+        d, compression="deflate", predictor=2, tile_size=(256, 256)
+    )[0]
+
+
+@pytest.fixture
+def worker_spill(tmp_path, monkeypatch):
+    """Read as a Spark Python worker would, with SparkFiles rooted in
+    tmp_path; yields the spill tier's directory."""
+    from pyspark.core.files import SparkFiles
+
+    monkeypatch.setattr(SparkFiles, "_is_running_on_worker", True)
+    monkeypatch.setattr(SparkFiles, "_root_directory", str(tmp_path))
+    monkeypatch.setattr(geotiff, "_spill_floor", None)
+    geotiff.clear_block_cache()
+    yield tmp_path / "decoded-blocks"
+    geotiff.clear_block_cache()
+
+
+def _spilled(root):
+    return sorted(p for p in root.rglob("*") if p.is_file())
+
+
+def _read(path):
+    win, _ = geotiff.open_raster(path).read_window(*SPILL_WINDOW)
+    return win
+
+
+def test_spill_tier_serves_a_cleared_worker(deflate_p2_tile, worker_spill):
+    first = _read(deflate_p2_tile)
+    s = geotiff.block_cache_stats()
+    assert s["decodes"] == 12 and s["spill_writes"] == 12
+    assert s["decoded_bytes"] == 12 * 256 * 256 * 2
+    assert len(_spilled(worker_spill)) == 12
+    geotiff.clear_block_cache()  # another worker: an empty L1
+    second = _read(deflate_p2_tile)
+    s = geotiff.block_cache_stats()
+    assert s["decodes"] == 0 and s["spill_hits"] == 12
+    assert s["spill_writes"] == 0 and s["l1_hits"] == 0
+    assert second.dtype == first.dtype and second.tobytes() == first.tobytes()
+    _read(deflate_p2_tile)
+    assert geotiff.block_cache_stats()["l1_hits"] == 12
+
+
+def test_truncated_spill_file_is_decoded_again(deflate_p2_tile, worker_spill):
+    first = _read(deflate_p2_tile)
+    victim = _spilled(worker_spill)[0]
+    whole = victim.read_bytes()
+    victim.write_bytes(whole[: len(whole) // 2])
+    geotiff.clear_block_cache()
+    second = _read(deflate_p2_tile)
+    s = geotiff.block_cache_stats()
+    assert s["decodes"] == 1 and s["spill_hits"] == 11
+    assert second.tobytes() == first.tobytes()
+    assert victim.read_bytes() == whole  # republished whole
+
+
+def test_no_spill_outside_a_worker(deflate_p2_tile, tmp_path, monkeypatch):
+    from pyspark.core.files import SparkFiles
+
+    monkeypatch.setattr(SparkFiles, "_is_running_on_worker", False)
+    monkeypatch.setattr(SparkFiles, "_root_directory", str(tmp_path))
+    geotiff.clear_block_cache()
+    _read(deflate_p2_tile)
+    s = geotiff.block_cache_stats()
+    assert s["decodes"] == 12
+    assert s["spill_writes"] == s["spill_skips"] == s["spill_hits"] == 0
+    assert list(tmp_path.iterdir()) == []
+
+
+def test_disk_bound_stops_spill_writes(deflate_p2_tile, worker_spill,
+                                       monkeypatch):
+    """Free space at the first spill sets the floor at half of it; once the
+    disk falls below, nothing more is written and reads stay exact."""
+    free = iter([1000, 600] + [499] * 100)
+    monkeypatch.setattr(geotiff, "_free_bytes", lambda path: next(free))
+    first = _read(deflate_p2_tile)
+    s = geotiff.block_cache_stats()
+    assert s["spill_writes"] == 2 and s["spill_skips"] == 10
+    assert len(_spilled(worker_spill)) == 2
+    geotiff.clear_block_cache()
+    second = _read(deflate_p2_tile)
+    s = geotiff.block_cache_stats()
+    assert s["spill_hits"] == 2 and s["decodes"] == 10
+    assert s["spill_writes"] == 0 and len(_spilled(worker_spill)) == 2
+    assert second.tobytes() == first.tobytes()
+
+
+def test_failed_spill_write_is_skipped(deflate_p2_tile, worker_spill):
+    worker_spill.write_bytes(b"")  # a file where the tier's directory goes
+    first = _read(deflate_p2_tile)
+    s = geotiff.block_cache_stats()
+    assert s["decodes"] == 12 and s["spill_skips"] == 12
+    assert s["spill_writes"] == 0
+    geotiff.clear_block_cache()
+    assert _read(deflate_p2_tile).tobytes() == first.tobytes()
+
+
+def _spill_worker(path, root):
+    """One Spark-worker-like process: three reads, each from an empty L1."""
+    import hashlib
+
+    from pyspark.core.files import SparkFiles
+
+    SparkFiles._is_running_on_worker = True
+    SparkFiles._root_directory = root
+    digests = []
+    for _ in range(3):
+        geotiff.clear_block_cache()
+        digests.append(hashlib.sha1(_read(path).tobytes()).hexdigest())
+    return digests
+
+
+def test_concurrent_workers_share_one_spill_tier(deflate_p2_tile, tmp_path):
+    """Six processes (more than the 4 cores this suite is sized for) race
+    to decode, publish and read the same blocks: every read is exact and
+    only whole block files are left."""
+    import hashlib
+    import multiprocessing
+
+    geotiff.clear_block_cache()
+    want = hashlib.sha1(_read(deflate_p2_tile).tobytes()).hexdigest()
+    n = 6
+    with multiprocessing.get_context("spawn").Pool(n) as pool:
+        got = pool.starmap_async(
+            _spill_worker, [(deflate_p2_tile, str(tmp_path))] * n
+        ).get(timeout=120)
+    assert [d for ds in got for d in ds] == [want] * (3 * n)
+    files = _spilled(tmp_path / "decoded-blocks")
+    assert len(files) == 12
+    assert all(f.stat().st_size == 256 * 256 * 2 for f in files)

@@ -275,34 +275,6 @@ def test_transcode_jp2_to_geotiff(spark, tmp_path, capsys):
     assert ej == et
 
 
-def test_colorrelief_cli(spark, tmp_path, capsys):
-    geotiff.write_geotiff(
-        str(tmp_path / "cr.tif"),
-        np.linspace(0, 900, 64, dtype=np.float32).reshape(8, 8),
-        x0=5.0, y0=1.0, sx=0.01, sy=0.01, epsg=4326, nodata=-9999.0,
-    )
-    ramp = str(tmp_path / "ramp.txt")
-    with open(ramp, "w") as f:
-        f.write("0 0 100 0\n1000 255 255 255\nnv 0 0 0 0\n")
-    out = str(tmp_path / "relief")
-    rc = job.main([
-        "--cores", "4", "colorrelief",
-        "--rasters", str(tmp_path / "cr.tif"), "--out", out,
-        "--ramp", ramp,
-    ])
-    assert rc == 0
-    resj = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    assert resj["status"] == "OK" and resj["tiles"] == 1
-    from opentopodata_spark import png as _png
-
-    rgba = _png.decode_png(
-        open(os.path.join(out, "relief_0_0.png"), "rb").read()
-    )
-    assert rgba.shape == (8, 8, 4)
-    assert tuple(rgba[0, 0]) == (0, 100, 0, 255)   # elevation 0
-    assert rgba[7, 7][0] > 200                      # near-white at top
-
-
 def test_polygonize_cli(spark, tmp_path, capsys):
     k = np.zeros((8, 8), dtype=np.int16)
     k[2:5, 2:5] = 7

@@ -105,6 +105,25 @@ class TestDifferential:
         n = _diff(spark, points, ds, "bilinear")
         assert n > 1000
 
+    def test_compressed_resolve_twice_through_spill_tier(
+            self, spark, points, compressed_raster_root):
+        """The sampler's workers publish decoded blocks to the executor's
+        spill tier under the SparkFiles root; a second resolve, whose
+        tasks land on whichever worker is idle, reads them back exactly."""
+        import os
+
+        from pyspark import SparkFiles
+
+        cds = config.load_datasets(
+            os.path.join(compressed_raster_root, "test-config.yaml")
+        )
+        ds = [cds[n] for n in ("nodata", "eudemsubset", "srtm90subset",
+                               "etopo1deg")]
+        _diff(spark, points, ds, "bilinear")
+        spill = os.path.join(SparkFiles.getRootDirectory(), "decoded-blocks")
+        assert any(files for _, _, files in os.walk(spill)), spill
+        _diff(spark, points, ds, "bilinear")
+
     def test_compressed_vs_plain_identical(self, spark, points, datasets,
                                            compressed_raster_root):
         """Same pipeline, same points: compressed corpus must produce
