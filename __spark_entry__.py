@@ -1997,8 +1997,8 @@ def _build_elevation_oracle(sf_dir: str):
     )
 
 
-_FORMAT_FMTS = ("tif", "asc", "bil", "nc", "nc4", "gpkg", "vrt", "jpa",
-                "jp2", "dt0", "mbtiles")
+_FORMAT_FMTS = ("tif", "asc", "bil", "nc", "nc4", "gpkg", "vrt", "dt0",
+                "mbtiles")
 
 
 def _formats_fixture_dir() -> str:
@@ -2009,7 +2009,6 @@ def _formats_fixture_dir() -> str:
 
     from opentopodata_spark import fixtures, geotiff, gpkg, hdf5
     from opentopodata_spark import gridformats as gf
-    from opentopodata_spark import jp2 as jp2mod
 
     root = os.path.join(_fixture_root(), "formats_r4e")
     marker = os.path.join(root, ".complete")
@@ -2033,27 +2032,10 @@ def _formats_fixture_dir() -> str:
         d = os.path.join(root, f"fmt_{fmt}")
         os.makedirs(d, exist_ok=True)
         for stem, (lon0, grid) in tiles.items():
-            ext = "tif" if fmt == "jpa" else fmt
-            p = os.path.join(d, f"{stem}.{ext}")
+            p = os.path.join(d, f"{stem}.{fmt}")
             if fmt == "tif":
                 geotiff.write_geotiff(p, grid, x0=lon0, y0=1.0, sx=res,
                                       sy=res, epsg=4326, nodata=-32768)
-            elif fmt == "jpa":
-                # arithmetic-coded JPEG-in-TIFF (T.81 QM coder): lossy
-                # uint8, so the terrain rides at a -1500 m offset; its
-                # oracle is its own single-process twin over the SAME
-                # bytes, not the int16 family
-                geotiff.write_geotiff(
-                    p, (grid - 1500).astype(np.uint8), x0=lon0, y0=1.0,
-                    sx=res, sy=res, epsg=4326,
-                    compression="jpeg-arith", tile_size=(32, 32),
-                )
-            elif fmt == "jp2":
-                # GeoJP2 (T.800 reversible 5/3 + MQ EBCOT): LOSSLESS,
-                # so the oracle build asserts it equals the GeoTIFF
-                # int16 family bit-for-bit
-                jp2mod.write_jp2(p, grid, x0=lon0, y0=1.0, sx=res,
-                                 sy=res, epsg=4326, levels=3)
             elif fmt == "asc":
                 gf.write_ascii_grid(p, grid, x0=lon0, y0=1.0, sx=res,
                                     nodata=-32768, wkt=wgs84_wkt)
@@ -2111,7 +2093,7 @@ def _formats_fixture_dir() -> str:
                 # DTED is POINT-registered on a 121-lattice (30 arcsec,
                 # level 0), so it carries its own grid sampled at the
                 # lattice points and verifies against its own
-                # sequential twin, like gpkg/vrt/jpa
+                # sequential twin, like gpkg/vrt
                 from opentopodata_spark import dted
 
                 n = 121
@@ -2170,23 +2152,19 @@ def q_raster_formats(spark, sf_dir):
     """Cross-format differential as a CONTRACT query: the same two-tile
     terrain written as GeoTIFF / Esri ASCII / BIL / netCDF3 / netCDF4
     (HDF5, deflate+shuffle) / GeoPackage (PNG16 gridded coverage) / VRT
-    mosaic / arithmetic-coded JPEG-in-TIFF (T.81 QM coder, uint8 at a
-    -1500 m offset) / GeoJP2 (T.800 reversible 5/3 + MQ EBCOT,
-    lossless int16) / DTED level 0 (MIL-PRF-89020B signed-magnitude
-    records, point-registered lattice — its own sequential twin, like
-    gpkg/vrt) / Terrarium-encoded MBTiles (the AWS/Mapbox web-terrain
-    distribution: SQLite XYZ pyramid of elevation-in-PNG-RGB tiles in
-    Web Mercator — its own sequential twin, integer metres exact),
-    resolved through the distributed pipeline — every
-    format
-    must produce the same elevations as its single-process sequential
-    twin; the same-geometry integer formats (tif/asc/bil/nc/nc4) must
-    also agree with each other bit-for-bit (asserted inside the oracle
-    build). The VRT is ONE mosaic (seam points see true cross-tile
-    neighbors, not tile-edge clamps) and the GeoPackage gridded profile
-    is float32 (unrounded bilinear — the reference's dtype-driven
-    integer rounding, S9), so those two verify against their own
-    sequential twins."""
+    mosaic / DTED level 0 (MIL-PRF-89020B signed-magnitude records,
+    point-registered lattice) / Terrarium-encoded MBTiles (the
+    AWS/Mapbox web-terrain distribution: SQLite XYZ pyramid of
+    elevation-in-PNG-RGB tiles in Web Mercator, integer metres exact),
+    resolved through the distributed pipeline. Every format must produce
+    the same elevations as its single-process sequential twin; the
+    same-geometry integer formats (tif/asc/bil/nc/nc4) must also agree
+    with each other bit-for-bit (asserted inside the oracle build). The
+    VRT is ONE mosaic (seam points see true cross-tile neighbors, not
+    tile-edge clamps), the GeoPackage gridded profile is float32
+    (unrounded bilinear — the reference's dtype-driven integer rounding,
+    S9), and DTED and MBTiles carry their own grids, so those four
+    verify against their own sequential twins only."""
     from opentopodata_spark.operators import elevation
 
     _ship_package(spark)
@@ -2221,7 +2199,7 @@ def _build_raster_formats_oracle(sf_dir: str):
             lats, lons, [_format_dataset(fmt)], "bilinear")
         if fmt == "tif":
             base = elev
-        elif fmt in ("asc", "bil", "nc", "nc4", "jp2"):
+        elif fmt in ("asc", "bil", "nc", "nc4"):
             # same-geometry integer formats must agree with the GeoTIFF
             # exactly — a failed assert fails the oracle build loudly.
             # (vrt is ONE mosaic, so seam points interpolate true

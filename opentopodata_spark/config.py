@@ -261,8 +261,8 @@ def dataset_from_config(name: str, path: str | None = None, **kwargs) -> Dataset
         tile_path = all_rasters[0]
         try:
             geotiff.open_raster(tile_path)
-        except geotiff.RasterOpenError:
-            raise ConfigError(f"Unsupported filetype for '{tile_path}'.")
+        except geotiff.RasterOpenError as e:
+            raise ConfigError(f"Unsupported filetype for '{tile_path}'. ({e})")
         ds = SingleFileDataset(name, tile_path=tile_path)
         if wgs84_bounds:
             ds.wgs84_bounds = wgs84_bounds

@@ -91,7 +91,6 @@ _T_TILE_LENGTH = 323
 _T_TILE_OFFSETS = 324
 _T_TILE_BYTE_COUNTS = 325
 _T_SAMPLE_FORMAT = 339
-_T_JPEG_TABLES = 347  # abbreviated tables-only JPEG stream shared by blocks
 _T_MODEL_PIXEL_SCALE = 33550
 _T_MODEL_TIEPOINT = 33922
 _T_GEO_KEY_DIRECTORY = 34735
@@ -121,8 +120,7 @@ _FT_FMT = {
 # Compression codes
 _C_NONE = 1
 _C_LZW = 5
-_C_JPEG_OLD = 6
-_C_JPEG = 7  # "new-style" JPEG (TIFF TechNote 2): one JPEG stream per block
+_C_JPEG_CODES = (6, 7)  # old-style and TechNote-2 JPEG: lossy, refused at open
 _C_DEFLATE_ADOBE = 8
 _C_PACKBITS = 32773
 _C_DEFLATE_OLD = 32946
@@ -133,10 +131,6 @@ _COMPRESSION_CODES = {
     "lzw": _C_LZW,
     "packbits": _C_PACKBITS,
     "lzma": _C_LZMA,
-    "jpeg": _C_JPEG,
-    # same TIFF code 7, entropy-coded with the T.81 QM arithmetic coder
-    # (GDAL: JPEGTABLESMODE + libjpeg built with arithmetic support)
-    "jpeg-arith": _C_JPEG,
 }
 
 # GeoTIFF keys
@@ -762,9 +756,6 @@ class _BlockReader:
     # value sparse blocks (offset/bytecount 0, GDAL SPARSE_OK) read back as:
     # the nodata value if the file declares one, else 0 — GDAL's semantics
     fill: float = 0.0
-    # compression 7: abbreviated tables-only stream from the JPEGTables
-    # tag, merged ahead of each block's entropy stream before decode
-    jpeg_tables: bytes | None = None
     # distinguishes IFDs of one file in the process-wide block LRU: the
     # base band and its overview levels share a cache_key (same bytes on
     # disk) but index disjoint block grids
@@ -789,34 +780,8 @@ class _BlockReader:
         r0 = idx * self.block_h
         return min(self.block_h, self.height - r0), self.width
 
-    def _decode_jpeg_block(self, idx: int, raw: bytes) -> np.ndarray:
-        """New-style JPEG (compression 7, TIFF TechNote 2): each block is
-        a JPEG stream, optionally abbreviated with its DQT/DHT segments
-        hoisted into the shared JPEGTables tag. Merge = tables stream
-        minus its EOI + block stream minus its SOI. Multi-component
-        (YCbCr) blocks keep channel 0 after the codec's RGB transform —
-        the same band-1 semantics as the other multi-band paths."""
-        from .jpeg import decode_jpeg
-
-        if self.jpeg_tables and len(self.jpeg_tables) >= 4 and raw[:2] == b"\xff\xd8":
-            merged = self.jpeg_tables[:-2] + raw[2:]
-        else:
-            merged = raw
-        img = decode_jpeg(merged)
-        if img.ndim == 3:
-            img = np.ascontiguousarray(img[:, :, 0])
-        h, w = self._block_shape(idx)
-        if img.shape[0] < h or img.shape[1] < w:
-            raise RasterOpenError(
-                f"JPEG block {idx} decodes to {img.shape}, expected at "
-                f"least ({h}, {w})"
-            )
-        return img[:h, :w].astype(self.dtype.newbyteorder("="), copy=False)
-
     def _decode(self, idx: int, raw: bytes) -> np.ndarray:
         h, w = self._block_shape(idx)
-        if self.compression == _C_JPEG:
-            return self._decode_jpeg_block(idx, raw)
         data = self._decompress(raw)
         if self.predictor == 3:
             return _predict3_decode(data, h, w, self.dtype)  # spp==1 enforced at open
@@ -1102,9 +1067,8 @@ def write_geotiff(
     are offset by half a pixel, exactly the convention the reference's
     bounds-validation relies on (backend.py:46-60).
 
-    compression: "none" | "deflate" | "lzw" | "packbits" | "lzma" |
-    "jpeg" | "jpeg-arith" (TIFF code 7 with Huffman / QM-arithmetic
-    entropy coding respectively; uint8 only).
+    compression: "none" | "deflate" | "lzw" | "packbits" | "lzma" (all
+    lossless; the reader refuses lossy JPEG-compressed TIFFs).
     predictor: 1 (none), 2 (horizontal, integer dtypes), 3 (float byte
     shuffle, float dtypes).
     sparse_ok: blocks entirely equal to the nodata value (or entirely zero
@@ -1144,34 +1108,9 @@ def write_geotiff(
         raise ValueError("predictor 2 requires an integer dtype (use 3 for floats)")
     if predictor == 3 and kind != "f":
         raise ValueError("predictor 3 requires a float dtype")
-    if comp == _C_JPEG:
-        # lossy imagery blocks (aerial/ortho sidecars, 12-bit deep DEM
-        # derivatives); precision-critical elevation data should use a
-        # lossless codec
-        if array.dtype == np.uint16:
-            if array.max(initial=0) > 4095:
-                raise ValueError(
-                    "12-bit JPEG compression requires values < 4096"
-                )
-            bits = 12  # uint16 container, 12 significant bits (JPEG12)
-        elif array.dtype != np.uint8:
-            raise ValueError(
-                "JPEG compression requires a uint8 (or uint16 for "
-                "12-bit) array"
-            )
-        if predictor != 1:
-            raise ValueError("JPEG compression does not take a predictor")
-
     le_dtype = array.dtype.newbyteorder("<")
 
     def encode_block(blk: np.ndarray) -> bytes:
-        if comp == _C_JPEG:
-            from .jpeg import encode_jpeg
-
-            return encode_jpeg(
-                np.ascontiguousarray(blk), quality=95,
-                arithmetic=compression == "jpeg-arith",
-            )
         if predictor == 2:
             raw = _predict2_encode(blk).astype(le_dtype, copy=False).tobytes()
         elif predictor == 3:
@@ -1410,7 +1349,16 @@ def open_raster(path: str) -> Raster:
     range reads (only the IFD and the blocks a window touches are ever
     fetched — the cloud-optimized-GeoTIFF access pattern), .hgt and
     .zip/.gz containers via one full-object fetch (those formats have no
-    internal random access worth ranging into)."""
+    internal random access worth ranging into).
+
+    Lossy JPEG rasters are refused with a RasterOpenError, local or
+    remote: JPEG 2000 (.jp2/.j2k) here, before any fetch, and
+    JPEG-compressed TIFFs (compression 6/7) when the IFD is read."""
+    if path.split("?", 1)[0].lower().endswith((".jp2", ".j2k")):
+        raise RasterOpenError(
+            f"'{path}': JPEG 2000 is not supported (convert to GeoTIFF,"
+            " e.g. DEFLATE-tiled)"
+        )
     if path.startswith(("http://", "https://")):
         return _open_remote(path)
     lower = path.lower()
@@ -1451,10 +1399,6 @@ def open_raster(path: str) -> Raster:
         from . import mbtiles
 
         return mbtiles.open_mbtiles(path)
-    if lower.endswith((".jp2", ".j2k")):
-        from . import jp2
-
-        return jp2.open_jp2(path)
     if lower.endswith((".nc", ".nc4")):
         # netCDF comes in two wire formats: classic (magic 'CDF') and
         # netCDF4 = HDF5 (magic \x89HDF) — sniff, don't trust the name
@@ -1551,12 +1495,6 @@ def _open_remote(url: str) -> Raster:
             " has no random access worth ranging into — convert, or serve"
             " GeoTIFF)"
         )
-    if lower.endswith((".jp2", ".j2k")):
-        # whole-object fetch: JP2 tier-1 has no cheap random access, so
-        # remote JP2 tiles behave like .zip/.gz containers
-        from . import jp2
-
-        return jp2.open_jp2_bytes(url, _fetch_url(url))
     if lower.endswith((".dt0", ".dt1", ".dt2")):
         # whole-object fetch: DTED's column-major signed-magnitude
         # records have no useful row-range access, and a cell is <=25 MB
@@ -1783,37 +1721,25 @@ def _open_tiff(source: _ByteSource) -> Raster:
                 return None, next_off
         bits = int(value(_T_BITS, [8])[0])
         comp = int(value(_T_COMPRESSION, [1])[0])
-        if comp == _C_JPEG_OLD:
-            raise RasterOpenError(
-                f"'{path}': old-style TIFF JPEG (compression 6) was deprecated"
-                " by TIFF TechNote 2 — re-encode with compression 7"
-            )
         if comp not in (
             _C_NONE, _C_LZW, _C_DEFLATE_ADOBE, _C_DEFLATE_OLD, _C_PACKBITS,
-            _C_LZMA, _C_JPEG,
+            _C_LZMA,
         ):
+            what = (f"JPEG-compressed TIFF (compression {comp}) is lossy and"
+                    if comp in _C_JPEG_CODES else f"TIFF compression {comp} is")
             raise RasterOpenError(
-                f"'{path}': unsupported TIFF compression {comp} (supported: none,"
-                " LZW, DEFLATE, PackBits, LZMA, JPEG)"
+                f"'{path}': {what} not supported (supported: none, LZW,"
+                " DEFLATE, PackBits, LZMA; convert to GeoTIFF with one of"
+                " them)"
             )
         predictor = int(value(_T_PREDICTOR, [1])[0])
         if predictor not in (1, 2, 3):
             raise RasterOpenError(f"'{path}': unsupported predictor {predictor}")
-        if comp == _C_JPEG and bits not in (8, 12):
-            raise RasterOpenError(
-                f"'{path}': {bits}-bit TIFF JPEG is not supported (8-bit"
-                " baseline and 12-bit extended-sequential are)"
-            )
         sfmt = int(value(_T_SAMPLE_FORMAT, [1])[0])
         kind = _KIND_FOR_SAMPLE_FORMAT.get(sfmt)
         if kind is None:
             raise RasterOpenError(f"'{path}': unsupported sample format {sfmt}")
-        if comp == _C_JPEG and bits == 12:
-            # 12-bit JPEG samples ride in a uint16 container (GDAL's
-            # JPEG12 convention)
-            dtype = np.dtype(f"{bo}u2")
-        else:
-            dtype = np.dtype(f"{bo}{kind}{bits // 8}")
+        dtype = np.dtype(f"{bo}{kind}{bits // 8}")
 
         # Multi-band files: read band 1 only (the reference's rasterio read(1),
         # backend.py:103). PlanarConfiguration=2 stores each band's blocks
@@ -1925,7 +1851,6 @@ def _open_tiff(source: _ByteSource) -> Raster:
                 compression=comp, predictor=predictor,
                 spp=spp if chunky_multiband else 1,
                 fill=nodata if nodata is not None else 0.0,
-                jpeg_tables=value(_T_JPEG_TABLES) if comp == _C_JPEG else None,
                 cache_tag=cache_tag,
             )
 

@@ -6,7 +6,7 @@ Why: the north rule names an Iceberg table of interleaved documents and
 Iceberg-checkpointed lineage, but this sandbox has no
 iceberg-spark-runtime jars. The formats themselves are fully published
 (https://iceberg.apache.org/spec/ — table spec v2; Avro 1.11 Object
-Container File spec), so — like the SQLite/HDF5/JPEG2000 readers in
+Container File spec), so — like the SQLite/HDF5 readers in
 this repo — the metadata layer is implemented from spec: snapshots,
 manifest lists, manifests, partition tuples, sequence numbers,
 append/delete commits, time travel, and metadata-only partition

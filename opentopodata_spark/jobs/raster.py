@@ -232,7 +232,7 @@ def build_parser() -> argparse.ArgumentParser:
     tc.add_argument("--dataset")
     tc.add_argument("--rasters", nargs="*",
                     help="glob(s) or http(s) URLs of source tiles in any "
-                         "supported format (jp2, gpkg, nc, asc, ...)")
+                         "supported format (gpkg, nc, asc, ...)")
     tc.add_argument("--out", required=True)
     tc.add_argument("--compression", default="deflate",
                     choices=["none", "deflate", "lzw", "packbits",

@@ -5,12 +5,12 @@ catalog — the step the reference's own performance notes prescribe
 before serving (/root/reference/docs/notes/performance-optimisation.md
 §"Dataset format": convert to a tiled, compressed GeoTIFF). It is also
 this engine's scale path for interchange formats whose decode has no
-cheap random access (JPEG2000 tier-1, netCDF3, GeoPackage pyramids):
-pay the decode ONCE, tile-parallel across the cluster, and serve the
-hot elevation path from windowed GeoTIFF reads thereafter.
+cheap random access (netCDF3, GeoPackage pyramids): pay the decode
+ONCE, tile-parallel across the cluster, and serve the hot elevation
+path from windowed GeoTIFF reads thereafter.
 
 Per-tile map, zero shuffles. Output tiles keep the SOURCE FILENAME STEM
-(N00E010.jp2 -> N00E010.tif) so tile-corner filename parsing — the
+(N00E010.nc -> N00E010.tif) so tile-corner filename parsing — the
 dataset join key (reference config.py:376-409) — survives the
 transcode. Atomic rename publish + value checksums in the manifest,
 the same resume contract as terrain_tiles/resample_tiles.

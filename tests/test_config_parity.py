@@ -140,6 +140,16 @@ class TestConfigValidation:
                 )
             )
 
+    def test_single_file_jpeg2000_says_why(self, tmp_path):
+        d = tmp_path / "jp2"
+        d.mkdir()
+        (d / "dem.jp2").write_bytes(b"\x00\x00\x00\x0cjP  \r\n\x87\n")
+        with pytest.raises(config.ConfigError) as e:
+            config.dataset_from_config("j", path=str(d))
+        msg = str(e.value)
+        assert msg.startswith("Unsupported filetype for ")
+        assert "JPEG 2000" in msg and "convert to GeoTIFF" in msg
+
     def test_default_max_locations(self, tmp_path):
         c = config.load_config(
             self._write(tmp_path, "datasets:\n- name: a\n  path: /x\n")

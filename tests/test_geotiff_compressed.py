@@ -221,25 +221,71 @@ def test_zip_without_raster_member(tmp_path):
         geotiff.open_raster(p)
 
 
-def test_unsupported_compression_clear_error(tmp_path):
-    """A JPEG-coded TIFF fails with a clear message, not a crash."""
-    arr = np.zeros((4, 4), dtype=np.int16)
-    p = str(tmp_path / "jp.tif")
-    geotiff.write_geotiff(p, arr, x0=0, y0=4, sx=1, sy=1, epsg=4326)
-    # patch the compression tag (259) value to 7 (JPEG)
-    data = bytearray(open(p, "rb").read())
+def _tiff_with_compression_tag(path, dtype, comp):
+    """A small GeoTIFF whose compression tag (259) is patched to ``comp``."""
     import struct
 
+    geotiff.write_geotiff(path, np.zeros((4, 4), dtype=dtype),
+                          x0=0, y0=4, sx=1, sy=1, epsg=4326)
+    data = bytearray(open(path, "rb").read())
     ifd_offset = struct.unpack("<I", data[4:8])[0]
     (n,) = struct.unpack("<H", data[ifd_offset : ifd_offset + 2])
     for i in range(n):
         base = ifd_offset + 2 + i * 12
         tag = struct.unpack("<H", data[base : base + 2])[0]
         if tag == 259:
-            data[base + 8 : base + 10] = struct.pack("<H", 7)
-    open(p, "wb").write(bytes(data))
-    with pytest.raises(geotiff.RasterOpenError, match="compression"):
-        geotiff.open_raster(p)
+            data[base + 8 : base + 10] = struct.pack("<H", comp)
+    open(path, "wb").write(bytes(data))
+
+
+def _open_error_message(path):
+    with pytest.raises(geotiff.RasterOpenError) as e:
+        geotiff.open_raster(path)
+    return str(e.value).replace(path, "")  # the message, not the tmp path
+
+
+def test_unsupported_compression_clear_error(tmp_path):
+    """An unknown codec (34712, JPEG 2000 in TIFF) fails at open with a
+    message naming it and the supported ones, not a crash at read."""
+    p = str(tmp_path / "j2.tif")
+    _tiff_with_compression_tag(p, np.int16, 34712)
+    msg = _open_error_message(p)
+    assert "TIFF compression 34712 is not supported" in msg
+    assert "DEFLATE" in msg and "convert to GeoTIFF" in msg
+
+
+@pytest.mark.parametrize("comp", [6, 7])
+@pytest.mark.parametrize("dtype", [np.uint8, np.int16])
+def test_jpeg_tiff_refused_at_open(tmp_path, dtype, comp):
+    """A JPEG-coded TIFF (old-style 6 or TechNote-2 7) is refused at open
+    with a message naming the format, not decoded or failed at read."""
+    p = str(tmp_path / "jp.tif")
+    _tiff_with_compression_tag(p, dtype, comp)
+    msg = _open_error_message(p)
+    assert f"JPEG-compressed TIFF (compression {comp})" in msg
+    assert "convert to GeoTIFF" in msg
+
+
+@pytest.mark.parametrize(
+    "name", ["x.jp2", "x.J2K", "http://127.0.0.1:9/x.jp2?sig=1"])
+def test_jpeg2000_refused(tmp_path, name):
+    """JPEG 2000 is refused by extension, before the file is read or
+    fetched (nothing listens on the discard port, so a fetch would fail
+    differently)."""
+    path = name if "://" in name else str(tmp_path / name)
+    requests = geotiff.range_request_count()
+    with pytest.raises(geotiff.RasterOpenError) as e:
+        geotiff.open_raster(path)
+    msg = str(e.value)
+    assert "JPEG 2000" in msg and "convert to GeoTIFF" in msg
+    assert geotiff.range_request_count() == requests
+
+
+def test_writer_refuses_jpeg(tmp_path):
+    with pytest.raises(ValueError, match="unsupported compression 'jpeg'"):
+        geotiff.write_geotiff(
+            str(tmp_path / "j.tif"), np.zeros((16, 16), np.uint8),
+            x0=0, y0=16, sx=1, sy=1, epsg=4326, compression="jpeg")
 
 
 def _write_multiband_tiff(path, bands, planar, compression="none", predictor=1,

@@ -222,12 +222,12 @@ def test_visibility_cli(spark, srtm_cfg, tmp_path, capsys):
     assert rc == 2
 
 
-def test_transcode_jp2_to_geotiff(spark, tmp_path, capsys):
-    """JP2 tiles -> GeoTIFF via the transcode job: lossless values,
+def test_transcode_netcdf_to_geotiff(spark, tmp_path, capsys):
+    """netCDF3 tiles -> GeoTIFF via the transcode job: lossless values,
     preserved stems/georeferencing, resumable."""
-    from opentopodata_spark import jp2
+    from opentopodata_spark import gridformats
 
-    src = tmp_path / "jp2src"
+    src = tmp_path / "ncsrc"
     src.mkdir()
     side = 48
     res = 1.0 / side
@@ -237,12 +237,14 @@ def test_transcode_jp2_to_geotiff(spark, tmp_path, capsys):
         g = (1500 + 900 * np.sin((x + lon0) / 7.0)
              * np.cos(y / 11.0)).astype(np.int16)
         grids[stem] = g
-        jp2.write_jp2(str(src / f"{stem}.jp2"), g, x0=lon0, y0=1.0,
-                      sx=res, sy=res, epsg=4326)
+        gridformats.write_netcdf(
+            str(src / f"{stem}.nc"), g,
+            lats=1.0 - (np.arange(side) + 0.5) * res,
+            lons=lon0 + (np.arange(side) + 0.5) * res)
     out = str(tmp_path / "tif")
     rc = job.main([
         "--cores", "4", "transcode",
-        "--rasters", str(src / "*.jp2"), "--out", out,
+        "--rasters", str(src / "*.nc"), "--out", out,
     ])
     assert rc == 0
     r1 = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
@@ -256,7 +258,7 @@ def test_transcode_jp2_to_geotiff(spark, tmp_path, capsys):
           for p in glob.glob(os.path.join(out, "*.tif"))}
     rc = job.main([
         "--cores", "4", "transcode",
-        "--rasters", str(src / "*.jp2"), "--out", out, "--skip-existing",
+        "--rasters", str(src / "*.nc"), "--out", out, "--skip-existing",
     ])
     assert rc == 0
     assert {p: os.path.getmtime(p)

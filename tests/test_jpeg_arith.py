@@ -1,226 +1,29 @@
-"""Arithmetic-coded sequential JPEG (SOF9 + DAC, T.81 Annex D QM-coder).
-
-Correctness contract: the arithmetic encoder/decoder pair is the exact
-dual of itself (round-trip), and because encode_jpeg produces the SAME
-quantized coefficients for both entropy modes, an arithmetic decode must
-be pixel-identical to the Huffman decode of the same input — a twin
-differential that checks the statistical models end to end, not just
-the coder loop. The QM coder itself also gets a direct randomized
-bit-level round-trip.
-
-Reference parity: the reference reads arithmetic JPEG-in-TIFF through
-GDAL/libjpeg (/root/reference/opentopodata/backend.py:89); here the
-jpeg-arith GeoTIFF writer option + open_raster exercise the same format.
+"""Arithmetic-coded JPEG (SOF9, with DAC conditioning segments) is not
+decoded: a compression-7 TIFF carrying it is refused at open, before any
+DAC segment is parsed, so even invalid DAC tables give the same message
+naming the format.
 """
 
 import struct
 
-import numpy as np
-import pytest
-
-from opentopodata_spark import jpeg, jpeg_arith
-from opentopodata_spark.geotiff import open_raster, write_geotiff
-from opentopodata_spark.jpeg_arith import (
-    _ArithDecoder,
-    _ArithEncoder,
-    _FIXED_BIN,
-    _QE,
-    _Stats,
-    _deframe_bits,
-)
+from tests.conftest import assert_jpeg_tiff_refused, jpeg_stream, strip_tiff_bytes
 
 
-def _gradient(h, w, c=1, seed=3):
-    rng = np.random.RandomState(seed)
-    base = np.linspace(0, 255, h * w * c).reshape(h, w, c)
-    return (base + rng.randint(0, 40, (h, w, c))).clip(0, 255).astype(
-        np.uint8
-    ).squeeze()
-
-
-class TestQmCoder:
-    @pytest.mark.parametrize("seed", [0, 1, 2, 3])
-    def test_random_bit_roundtrip(self, seed):
-        rng = np.random.RandomState(seed)
-        n_bins = 7
-        # biased + equiprobable decision mix across several contexts
-        probs = rng.uniform(0.02, 0.98, n_bins)
-        choices = rng.randint(0, n_bins, 5000)
-        decisions = (rng.uniform(size=5000) < probs[choices]).astype(int)
-
-        enc = _ArithEncoder()
-        st = _Stats(n_bins)
-        for b, d in zip(choices, decisions):
-            enc.encode(st, int(b), int(d))
-        framed = enc.finish()
-
-        dec = _ArithDecoder(_deframe_bits(framed))
-        st2 = _Stats(n_bins)
-        out = [dec.decode(st2, int(b)) for b in choices]
-        assert out == decisions.tolist()
-
-    def test_fixed_bin_never_adapts(self):
-        enc = _ArithEncoder()
-        st = _Stats(1)
-        st.idx[0] = _FIXED_BIN
-        for d in (0, 1) * 200:
-            enc.encode(st, 0, d)
-        assert st.idx[0] == _FIXED_BIN
-        framed = enc.finish()
-        dec = _ArithDecoder(_deframe_bits(framed))
-        st2 = _Stats(1)
-        st2.idx[0] = _FIXED_BIN
-        assert [dec.decode(st2, 0) for _ in range(400)] == [0, 1] * 200
-        assert st2.idx[0] == _FIXED_BIN
-
-    def test_stuffing_invariant(self):
-        # all-1 decisions on a skewed bin produce long 0xFF runs; every
-        # byte after an 0xFF must have its top bit stuffed to zero
-        enc = _ArithEncoder()
-        st = _Stats(1)
-        for _ in range(4000):
-            enc.encode(st, 0, 1)
-        framed = enc.finish()
-        for prev, cur in zip(framed, framed[1:]):
-            if prev == 0xFF:
-                assert cur <= 0x7F
-
-    def test_qe_table_well_formed(self):
-        assert len(_QE) == 114
-        for qe, nlps, nmps, sw in _QE:
-            assert 0 < qe < 0x8000
-            assert 0 <= nlps < len(_QE) and 0 <= nmps < len(_QE)
-            assert sw in (0, 1)
-
-
-class TestTwinDifferential:
-    @pytest.mark.parametrize("shape,sub,ri", [
-        ((16, 16, 1), "444", 0),
-        ((13, 21, 3), "420", 0),
-        ((31, 9, 3), "444", 0),
-        ((40, 56, 3), "420", 4),
-        ((7, 7, 1), "444", 0),
-        ((64, 64, 3), "444", 3),
-        ((129, 65, 3), "420", 7),
-    ])
-    def test_pixel_identical_to_huffman(self, shape, sub, ri):
-        img = _gradient(*shape[:2], shape[2], seed=sum(shape))
-        kw = dict(quality=80, subsampling=sub, restart_interval=ri)
-        b_h = jpeg.encode_jpeg(img, **kw)
-        b_a = jpeg.encode_jpeg(img, arithmetic=True, **kw)
-        assert np.array_equal(jpeg.decode_jpeg(b_h), jpeg.decode_jpeg(b_a))
-
-    def test_deterministic(self):
-        img = _gradient(24, 40)
-        a = jpeg.encode_jpeg(img, arithmetic=True)
-        b = jpeg.encode_jpeg(img, arithmetic=True)
-        assert a == b
-
-    def test_compresses_smooth_content_better(self):
-        # adaptive QM coding beats per-image canonical Huffman on smooth
-        # (DEM-like) content — the reason the format exists
-        y, x = np.mgrid[0:96, 0:128]
-        dem = (128 + 60 * np.sin(x / 9.0) * np.cos(y / 13.0)).astype(
-            np.uint8
-        )
-        b_h = jpeg.encode_jpeg(dem, quality=92)
-        b_a = jpeg.encode_jpeg(dem, quality=92, arithmetic=True)
-        assert len(b_a) < len(b_h)
-        assert np.array_equal(jpeg.decode_jpeg(b_h), jpeg.decode_jpeg(b_a))
-
-    def test_sof9_and_dac_markers_present(self):
-        b = jpeg.encode_jpeg(_gradient(16, 16), arithmetic=True)
-        assert b"\xff\xc9" in b
-        assert b"\xff\xcc" in b
-        assert b"\xff\xc4" not in b  # no Huffman tables
+def _dac(body: bytes) -> bytes:
+    return b"\xff\xcc" + struct.pack(">H", 2 + len(body)) + body
 
 
 class TestDacValidation:
-    def test_bad_kx(self):
-        with pytest.raises(jpeg.JpegError, match="Kx"):
-            jpeg_arith.parse_dac(bytes([0x10, 0]), {}, {})
+    def _refused(self, tmp_path, dac_body: bytes):
+        stream = jpeg_stream(16, 16, sof=0xC9, segments=_dac(dac_body))
+        blob = strip_tiff_bytes(16, 16, stream, compression=7)
+        assert_jpeg_tiff_refused(str(tmp_path / "a.tif"), blob)
 
-    def test_l_greater_than_u(self):
-        with pytest.raises(jpeg.JpegError, match="L <= U"):
-            jpeg_arith.parse_dac(bytes([0x00, 0x0F]), {}, {})
+    def test_bad_kx(self, tmp_path):
+        self._refused(tmp_path, bytes([0x10, 0]))
 
-    def test_odd_length(self):
-        with pytest.raises(jpeg.JpegError, match="even"):
-            jpeg_arith.parse_dac(b"\x00", {}, {})
+    def test_l_greater_than_u(self, tmp_path):
+        self._refused(tmp_path, bytes([0x00, 0x0F]))
 
-    def test_dac_overrides_conditioning(self):
-        img = _gradient(32, 32)
-        b = bytearray(jpeg.encode_jpeg(img, arithmetic=True))
-        # round-trip still exact when the DAC carries the defaults the
-        # encoder used — parse path exercised through decode_jpeg
-        assert np.array_equal(
-            jpeg.decode_jpeg(bytes(b))[:, :, 0],
-            jpeg.decode_jpeg(jpeg.encode_jpeg(img))[:, :, 0],
-        )
-
-
-class TestTiffIntegration:
-    def _dem(self, h=96, w=96):
-        x = np.linspace(0, 4 * np.pi, w)
-        y = np.linspace(0, 3 * np.pi, h)
-        return ((np.sin(y)[:, None] * np.cos(x)[None, :] * 0.5 + 0.5)
-                * 200 + 20).astype(np.uint8)
-
-    def test_tiled_jpeg_arith_tiff(self, tmp_path):
-        img = self._dem()
-        p_h = str(tmp_path / "h.tif")
-        p_a = str(tmp_path / "a.tif")
-        for p, comp in ((p_h, "jpeg"), (p_a, "jpeg-arith")):
-            write_geotiff(p, img, x0=0.0, y0=1.0, sx=0.01, sy=0.01,
-                          epsg=4326, compression=comp, tile_size=(32, 32))
-        wa, _ = open_raster(p_a).read_window(0, 96, 0, 96)
-        wh, _ = open_raster(p_h).read_window(0, 96, 0, 96)
-        # same quantized coefficients through both entropy coders
-        assert np.array_equal(wa, wh)
-        assert np.abs(wa.astype(int) - img.astype(int)).max() <= 3
-
-    def test_arith_stream_smaller_on_disk(self, tmp_path):
-        import os
-
-        img = self._dem(128, 128)
-        p_h = str(tmp_path / "h.tif")
-        p_a = str(tmp_path / "a.tif")
-        for p, comp in ((p_h, "jpeg"), (p_a, "jpeg-arith")):
-            write_geotiff(p, img, x0=0.0, y0=1.0, sx=0.01, sy=0.01,
-                          epsg=4326, compression=comp,
-                          rows_per_strip=32)
-        assert os.path.getsize(p_a) < os.path.getsize(p_h)
-
-    def test_abbreviated_jpegtables_with_dac(self, tmp_path):
-        """TechNote-2 layout for arithmetic streams: DQT + DAC hoisted
-        into JPEGTables, per-tile streams abbreviated — the layout GDAL
-        emits with JPEGTABLESMODE=3 and an arithmetic libjpeg."""
-        img = self._dem(64, 64)
-        full = jpeg.encode_jpeg(img, arithmetic=True)
-        tables = b"\xff\xd8"
-        rest = b"\xff\xd8"
-        i = 2
-        while i + 4 <= len(full):
-            marker = full[i + 1]
-            if marker == 0xDA:
-                rest += full[i:]
-                break
-            (seglen,) = struct.unpack(">H", full[i + 2:i + 4])
-            seg = full[i:i + 2 + seglen]
-            if marker in (0xDB, 0xCC):  # hoist DQT + DAC
-                tables += seg
-            else:
-                rest += seg
-            i += 2 + seglen
-        tables += b"\xff\xd9"
-
-        from tests.test_jpeg_tiff import _tiff_with_jpegtables  # noqa
-
-        # reuse the hand-assembled TIFF builder with our split stream
-        blob = _tiff_with_jpegtables(img, stream=None)  # smoke the import
-        assert blob[:2] in (b"II", b"MM")
-        # direct merge check (what _decode_jpeg_block does)
-        merged = tables[:-2] + rest[2:]
-        assert np.array_equal(
-            jpeg.decode_jpeg(merged), jpeg.decode_jpeg(full)
-        )
+    def test_odd_length(self, tmp_path):
+        self._refused(tmp_path, b"\x00")

@@ -1,227 +1,55 @@
-"""JPEG-compressed TIFF (compression 7, TIFF TechNote 2).
-
-Covers the writer round-trip (tiled + strip layouts), the abbreviated
-JPEGTables path via a hand-assembled TIFF (independent of the writer,
-which always emits self-contained per-block streams), band-1 extraction
-from a YCbCr color stream, and the loud old-style/12-bit rejections.
+"""JPEG-compressed TIFF (compression 6 old-style, 7 TIFF TechNote 2) is
+lossy and refused when the IFD is read, whatever the stream, the sample
+depth or the JPEGTables tag; the writer has no JPEG mode.
 """
-
-import struct
 
 import numpy as np
 import pytest
 
-from opentopodata_spark import geotiff
-from opentopodata_spark.geotiff import RasterOpenError, open_raster, write_geotiff
-from opentopodata_spark.jpeg import encode_jpeg
-
-
-def smooth_image(h=96, w=96):
-    x = np.linspace(0, 4 * np.pi, w)
-    y = np.linspace(0, 3 * np.pi, h)
-    return ((np.sin(y)[:, None] * np.cos(x)[None, :] * 0.5 + 0.5) * 200 + 20
-            ).astype(np.uint8)
+from opentopodata_spark.geotiff import write_geotiff
+from tests.conftest import assert_jpeg_tiff_refused, jpeg_stream, strip_tiff_bytes
 
 
 class TestWriterRoundTrip:
-    def test_tiled(self, tmp_path):
-        img = smooth_image()
-        p = str(tmp_path / "t.tif")
-        write_geotiff(p, img, x0=0.0, y0=1.0, sx=0.01, sy=0.01, epsg=4326,
-                      compression="jpeg", tile_size=(32, 32))
-        r = open_raster(p)
-        assert r.dtype == np.uint8
-        w, _ = r.read_window(0, 96, 0, 96)
-        assert np.abs(w.astype(int) - img.astype(int)).max() <= 3
-
-    def test_strips_partial_window(self, tmp_path):
-        img = smooth_image()
-        p = str(tmp_path / "s.tif")
-        write_geotiff(p, img, x0=0.0, y0=1.0, sx=0.01, sy=0.01, epsg=4326,
-                      compression="jpeg", rows_per_strip=20)
-        r = open_raster(p)
-        w, org = r.read_window(10, 60, 5, 90)
-        assert org == (10, 5)
-        assert np.abs(w.astype(int) - img[10:60, 5:90].astype(int)).max() <= 3
-
     def test_writer_rejects_non_uint8(self, tmp_path):
-        with pytest.raises(ValueError, match="uint8"):
-            write_geotiff(str(tmp_path / "x.tif"),
-                          np.zeros((8, 8), dtype=np.int16),
-                          x0=0, y0=1, sx=0.1, sy=0.1, epsg=4326,
-                          compression="jpeg")
-
-
-def _split_jpeg(stream: bytes) -> tuple[bytes, bytes]:
-    """Full JPEG -> (abbreviated tables-only stream, abbreviated image
-    stream), per TIFF TechNote 2: DQT/DHT segments hoisted out."""
-    i = 2
-    tables = b""
-    rest = b"\xff\xd8"
-    while i < len(stream):
-        assert stream[i] == 0xFF
-        marker = stream[i + 1]
-        (ln,) = struct.unpack(">H", stream[i + 2:i + 4])
-        seg = stream[i:i + 2 + ln]
-        if marker in (0xDB, 0xC4):
-            tables += seg
-        else:
-            rest += seg
-        i += 2 + ln
-        if marker == 0xDA:  # start of scan: entropy bytes to the end
-            rest += stream[i:]
-            break
-    return b"\xff\xd8" + tables + b"\xff\xd9", rest
-
-
-def _tiff_with_jpegtables(img: np.ndarray, stream: bytes | None = None) -> bytes:
-    """Hand-assemble a single-strip little-endian TIFF whose strip is an
-    abbreviated JPEG stream and whose tables live in tag 347. ``stream``
-    overrides the encoded JPEG (e.g. a color stream for the same
-    dimensions)."""
-    full = encode_jpeg(img, quality=95) if stream is None else stream
-    tables, scan = _split_jpeg(full)
-    h, w = img.shape
-
-    entries = []  # (tag, ftype, count, packed_value_or_offset_placeholder)
-    trailer = bytearray()
-
-    def add(tag, ftype, count, payload: bytes):
-        entries.append((tag, ftype, count, payload))
-
-    def add_outline(tag, ftype, count, data: bytes):
-        add(tag, ftype, count, b"OFF_" + struct.pack("<I", len(trailer)))
-        trailer.extend(data + b"\x00" * (len(data) % 2))
-
-    add(256, 3, 1, struct.pack("<HH", w, 0))           # width
-    add(257, 3, 1, struct.pack("<HH", h, 0))           # height
-    add(258, 3, 1, struct.pack("<HH", 8, 0))           # bits
-    add(259, 3, 1, struct.pack("<HH", 7, 0))           # compression = JPEG
-    add(262, 3, 1, struct.pack("<HH", 1, 0))           # photometric
-    add_outline(273, 4, 1, b"STRIPDATA")               # patched below
-    add(277, 3, 1, struct.pack("<HH", 1, 0))           # spp
-    add(278, 3, 1, struct.pack("<HH", h, 0))           # rows/strip
-    add(279, 4, 1, struct.pack("<I", len(scan)))       # byte count
-    add_outline(347, 7, len(tables), tables)           # JPEGTables
-    add_outline(33550, 12, 3, struct.pack("<3d", 0.01, 0.01, 0.0))
-    add_outline(33922, 12, 6, struct.pack("<6d", 0, 0, 0, 10.0, 1.0, 0.0))
-    add_outline(34735, 3, 16,
-                struct.pack("<16H", 1, 1, 0, 3,
-                            1024, 0, 1, 2,      # ModelType = geographic
-                            1025, 0, 1, 1,      # RasterType
-                            2048, 0, 1, 4326))  # GeographicType
-
-    entries.sort(key=lambda e: e[0])
-    n = len(entries)
-    header = struct.pack("<2sHI", b"II", 42, 8)
-    ifd_size = 2 + n * 12 + 4
-    trailer_at = 8 + ifd_size
-    strip_at = trailer_at + len(trailer)
-
-    ifd = struct.pack("<H", n)
-    for tag, ftype, count, payload in entries:
-        if payload.startswith(b"OFF_"):
-            (rel,) = struct.unpack("<I", payload[4:])
-            payload = struct.pack("<I", trailer_at + rel)
-        if tag == 273:
-            payload = struct.pack("<I", strip_at)
-        ifd += struct.pack("<HHI", tag, ftype, count) + payload[:4].ljust(4, b"\x00")
-    ifd += struct.pack("<I", 0)
-    return header + ifd + bytes(trailer) + scan
+        for comp in ("jpeg", "jpeg-arith"):
+            with pytest.raises(ValueError,
+                               match=f"unsupported compression '{comp}'"):
+                write_geotiff(str(tmp_path / "x.tif"),
+                              np.zeros((8, 8), dtype=np.int16),
+                              x0=0, y0=1, sx=0.1, sy=0.1, epsg=4326,
+                              compression=comp)
 
 
 def test_jpegtables_abbreviated_stream(tmp_path):
-    img = smooth_image(48, 64)
-    blob = _tiff_with_jpegtables(img)
-    p = str(tmp_path / "abbrev.tif")
-    with open(p, "wb") as f:
-        f.write(blob)
-    r = open_raster(p)
-    assert (r.width, r.height) == (64, 48)
-    assert r.crs.epsg == 4326 and (r.x0, r.y0) == (10.0, 1.0)
-    w, _ = r.read_window(0, 48, 0, 64)
-    assert np.abs(w.astype(int) - img.astype(int)).max() <= 3
-
-
-def test_color_jpeg_tiff_reads_band1(tmp_path):
-    """3-component YCbCr JPEG blocks: the reader keeps channel 0 after
-    the codec's RGB transform (band-1 semantics). The JPEG stream itself
-    carries the component count, so the decode branch is the same one a
-    GDAL-written spp=3/photometric=6 file takes."""
-    img = smooth_image(32, 32)
-    rgb = np.stack([img, np.roll(img, 5, 0), np.roll(img, 9, 1)], axis=-1)
-    blob = _tiff_with_jpegtables(img, stream=encode_jpeg(rgb, quality=95))
-    p = str(tmp_path / "c.tif")
-    with open(p, "wb") as f:
-        f.write(blob)
-    r = open_raster(p)
-    w2, _ = r.read_window(0, 32, 0, 32)
-    assert np.abs(w2.astype(int) - img.astype(int)).max() <= 6
+    """Tables hoisted into tag 347, an abbreviated stream in the strip."""
+    tables = jpeg_stream(48, 64, sos=False)
+    scan = jpeg_stream(48, 64, tables=False)
+    blob = strip_tiff_bytes(48, 64, scan, compression=7, jpeg_tables=tables)
+    assert_jpeg_tiff_refused(str(tmp_path / "abbrev.tif"), blob)
 
 
 def test_old_style_jpeg_rejected(tmp_path):
-    img = smooth_image(16, 16)
-    blob = bytearray(_tiff_with_jpegtables(img))
-    # patch compression tag value 7 -> 6 (entry payload little-endian)
-    idx = blob.find(struct.pack("<HHI", 259, 3, 1) + struct.pack("<HH", 7, 0))
-    assert idx > 0
-    blob[idx + 8:idx + 10] = struct.pack("<H", 6)
-    p = str(tmp_path / "old.tif")
-    with open(p, "wb") as f:
-        f.write(bytes(blob))
-    with pytest.raises(RasterOpenError, match="old-style"):
-        open_raster(p)
+    blob = strip_tiff_bytes(16, 16, jpeg_stream(16, 16), compression=6)
+    assert_jpeg_tiff_refused(str(tmp_path / "old.tif"), blob, compression=6)
 
 
 def test_14bit_jpeg_rejected(tmp_path):
-    img = smooth_image(16, 16)
-    blob = bytearray(_tiff_with_jpegtables(img))
-    idx = blob.find(struct.pack("<HHI", 258, 3, 1) + struct.pack("<HH", 8, 0))
-    assert idx > 0
-    blob[idx + 8:idx + 10] = struct.pack("<H", 14)
-    p = str(tmp_path / "b14.tif")
-    with open(p, "wb") as f:
-        f.write(bytes(blob))
-    with pytest.raises(RasterOpenError, match="14-bit"):
-        open_raster(p)
+    stream = jpeg_stream(16, 16, sof=0xC1, precision=14)
+    blob = strip_tiff_bytes(16, 16, stream, compression=7, bits=14)
+    assert_jpeg_tiff_refused(str(tmp_path / "b14.tif"), blob)
 
 
 class TestJpeg12InTiff:
-    """12-bit JPEG-in-TIFF (GDAL's JPEG12: BitsPerSample=12, uint16
-    container) — the deep-sample mode real elevation derivatives ship
-    in; reference reads it through GDAL (backend.py:89)."""
-
-    def _dem12(self, h=96, w=96):
-        x = np.linspace(0, 4 * np.pi, w)
-        y = np.linspace(0, 3 * np.pi, h)
-        return (2000 + 1400 * np.sin(y)[:, None] * np.cos(x)[None, :]
-                ).astype(np.uint16)
-
-    @pytest.mark.parametrize("comp", ["jpeg", "jpeg-arith"])
-    def test_roundtrip(self, tmp_path, comp):
-        img = self._dem12()
-        p = str(tmp_path / f"d12_{comp}.tif")
-        write_geotiff(p, img, x0=0.0, y0=1.0, sx=0.01, sy=0.01,
-                      epsg=4326, compression=comp, tile_size=(32, 32))
-        r = open_raster(p)
-        assert r.dtype == np.uint16
-        w, _ = r.read_window(0, 96, 0, 96)
-        # q95 quantization error on a 12-bit range
-        assert np.abs(w.astype(int) - img.astype(int)).max() <= 40
-
-    def test_huffman_arith_twin(self, tmp_path):
-        img = self._dem12()
-        ws = []
-        for comp in ("jpeg", "jpeg-arith"):
-            p = str(tmp_path / f"t_{comp}.tif")
-            write_geotiff(p, img, x0=0.0, y0=1.0, sx=0.01, sy=0.01,
-                          epsg=4326, compression=comp, rows_per_strip=24)
-            ws.append(open_raster(p).read_window(3, 90, 7, 88)[0])
-        assert np.array_equal(ws[0], ws[1])
+    """GDAL's JPEG12 (BitsPerSample=12 in a uint16 container): refused at
+    open, and the writer cannot produce it."""
 
     def test_writer_rejects_overrange(self, tmp_path):
-        with pytest.raises(ValueError, match="4096"):
+        with pytest.raises(ValueError, match="unsupported compression 'jpeg'"):
             write_geotiff(str(tmp_path / "x.tif"),
                           np.full((8, 8), 5000, dtype=np.uint16),
                           x0=0, y0=1, sx=0.1, sy=0.1, epsg=4326,
                           compression="jpeg")
+        stream = jpeg_stream(8, 8, sof=0xC1, precision=12)
+        blob = strip_tiff_bytes(8, 8, stream, compression=7, bits=12)
+        assert_jpeg_tiff_refused(str(tmp_path / "d12.tif"), blob)

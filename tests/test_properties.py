@@ -191,92 +191,6 @@ def test_pip_mask_convex_polygon_center(lat, lon, n, r, seed):
     assert bool(inside[1]) is False
 
 
-# ---------------------------------------------------------------------------
-# QM/MQ arithmetic coders and the JPEG2000 lossless chain
-# ---------------------------------------------------------------------------
-
-@settings(max_examples=30, deadline=None)
-@given(
-    n=st.integers(1, 2000),
-    nbins=st.integers(1, 19),
-    skew=st.floats(0.01, 0.99),
-    seed=st.integers(0, 2**31 - 1),
-    coder=st.sampled_from(["qm", "mq"]),
-)
-def test_arith_coder_roundtrip(n, nbins, skew, seed, coder):
-    """Any decision sequence through any context pattern round-trips
-    through both interval coders."""
-    from opentopodata_spark import jp2
-    from opentopodata_spark.jpeg_arith import (
-        _ArithDecoder, _ArithEncoder, _Stats, _deframe_bits)
-
-    rng = np.random.default_rng(seed)
-    ch = rng.integers(0, nbins, n)
-    dec = (rng.uniform(size=n) < skew).astype(int)
-    if coder == "qm":
-        enc, st = _ArithEncoder(), _Stats(nbins)
-    else:
-        enc, st = jp2._mq_encoder(), _Stats(nbins)
-    for b, d in zip(ch, dec):
-        enc.encode(st, int(b), int(d))
-    framed = enc.finish()
-    for prev, cur in zip(framed, framed[1:]):  # stuffing invariant
-        if prev == 0xFF:
-            assert cur <= 0x7F
-    if coder == "qm":
-        de, st2 = _ArithDecoder(_deframe_bits(framed)), _Stats(nbins)
-    else:
-        de, st2 = jp2._mq_decoder(framed), _Stats(nbins)
-    assert [de.decode(st2, int(b)) for b in ch] == dec.tolist()
-
-
-@settings(max_examples=20, deadline=None)
-@given(
-    h=st.integers(1, 40),
-    w=st.integers(1, 40),
-    dtype=st.sampled_from(["uint8", "uint16", "int16"]),
-    levels=st.integers(0, 5),
-    seed=st.integers(0, 2**31 - 1),
-    sparsity=st.floats(0.0, 1.0),
-)
-def test_jp2_lossless_roundtrip(h, w, dtype, levels, seed, sparsity):
-    """decode(encode(x)) == x for every shape/dtype/level — the whole
-    DWT + EBCOT + tier-2 + codestream chain."""
-    from opentopodata_spark import jp2
-
-    rng = np.random.default_rng(seed)
-    dt = np.dtype(dtype)
-    lo = 0 if dt.kind == "u" else -(1 << 15)
-    hi = (1 << (8 * dt.itemsize)) - 1 if dt.kind == "u" else (1 << 15) - 1
-    arr = rng.integers(lo, hi + 1, (h, w)).astype(dt)
-    arr[rng.uniform(size=(h, w)) < sparsity] = 0
-    cs = jp2.encode_jp2_codestream(arr, levels=levels)
-    out = jp2.decode_jp2_codestream(cs)
-    assert out.dtype == arr.dtype
-    assert np.array_equal(out, arr)
-
-
-@settings(max_examples=20, deadline=None)
-@given(
-    h=st.integers(1, 33),
-    w=st.integers(1, 33),
-    seed=st.integers(0, 2**31 - 1),
-    q=st.integers(40, 98),
-    gray=st.booleans(),
-)
-def test_jpeg_arithmetic_huffman_twin(h, w, seed, q, gray):
-    """Arithmetic and Huffman entropy coding of the same quantized
-    coefficients decode to identical pixels, at any size/quality."""
-    from opentopodata_spark import jpeg
-
-    rng = np.random.default_rng(seed)
-    shape = (h, w) if gray else (h, w, 3)
-    img = rng.integers(0, 256, shape).astype(np.uint8)
-    b_h = jpeg.encode_jpeg(img, quality=q)
-    b_a = jpeg.encode_jpeg(img, quality=q, arithmetic=True)
-    assert np.array_equal(jpeg.decode_jpeg(b_h), jpeg.decode_jpeg(b_a))
-
-
 @given(
     arrays(
         np.int16,

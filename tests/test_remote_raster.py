@@ -318,24 +318,3 @@ class TestRemoteElevationPipeline:
             else:
                 assert a.elevation == b.elevation  # bit-identical
 
-
-def test_remote_jp2_full_fetch(tmp_path):
-    """Remote .jp2 tiles fetch whole (no random access into tier-1) and
-    decode losslessly to the local values."""
-    import numpy as np
-
-    from opentopodata_spark import jp2
-    from opentopodata_spark.geotiff import open_raster
-
-    y, x = np.mgrid[0:48, 0:48]
-    dem = (1500 + 900 * np.sin(x / 7.0) * np.cos(y / 11.0)).astype(
-        np.int16)
-    jp2.write_jp2(str(tmp_path / "N00E010.jp2"), dem, x0=10.0, y0=1.0,
-                  sx=1 / 48, sy=1 / 48, epsg=4326)
-    srv, base = _serve(str(tmp_path))
-    try:
-        r = open_raster(f"{base}/N00E010.jp2")
-        assert np.array_equal(r.read_window(0, 48, 0, 48)[0], dem)
-        assert r.crs.epsg == 4326 and abs(r.x0 - 10.0) < 1e-12
-    finally:
-        srv.shutdown()
