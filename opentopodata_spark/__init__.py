@@ -22,8 +22,10 @@ config         YAML config loading + dataset registry (driver-side)
 tiles          tile-index build (filename -> corner) + tile-key column math
 oracle         single-process reference-semantics implementation (test oracle)
 operators.*    the Spark operators (extract, elevation resolve, paths, knn
-               and range joins, spatial joins and overlay, and the raster
-               operators: zonal, polygonize, rasterize, warp, tiles)
+               and range joins, spatial joins and overlay, and the
+               raster<->vector operators: zonal, polygonize, rasterize,
+               burn; DEMs arrive prepared, e.g. by gdalwarp, so there is
+               no warp, resample or tile-export operator)
 lineage        per-partition lineage checkpoint + anti-join resume
 session        SparkSession builder helpers
 """

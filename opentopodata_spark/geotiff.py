@@ -1336,6 +1336,25 @@ def write_geotiff(
 
 _HGT_RE = re.compile(r"([NSns])(\d+)([EWew])(\d+)")
 
+# Raster formats the engine does not read, by extension -> format name.
+_REFUSED_FORMATS = {
+    ".jp2": "JPEG 2000",
+    ".j2k": "JPEG 2000",
+    ".gpkg": "GeoPackage raster",
+    ".mbtiles": "MBTiles",
+}
+
+
+def _refuse_format(path: str) -> None:
+    """Raise RasterOpenError if ``path`` (a file or URL; any query
+    string ignored) names a format in _REFUSED_FORMATS."""
+    ext = os.path.splitext(path.split("?", 1)[0])[1].lower()
+    if ext in _REFUSED_FORMATS:
+        raise RasterOpenError(
+            f"'{path}': {_REFUSED_FORMATS[ext]} is not supported (convert"
+            " to GeoTIFF, e.g. DEFLATE-tiled)"
+        )
+
 
 def open_raster(path: str) -> Raster:
     """Open a GeoTIFF, SRTM .hgt, Esri ASCII grid (.asc), gridded XYZ
@@ -1351,14 +1370,12 @@ def open_raster(path: str) -> Raster:
     .zip/.gz containers via one full-object fetch (those formats have no
     internal random access worth ranging into).
 
-    Lossy JPEG rasters are refused with a RasterOpenError, local or
-    remote: JPEG 2000 (.jp2/.j2k) here, before any fetch, and
-    JPEG-compressed TIFFs (compression 6/7) when the IFD is read."""
-    if path.split("?", 1)[0].lower().endswith((".jp2", ".j2k")):
-        raise RasterOpenError(
-            f"'{path}': JPEG 2000 is not supported (convert to GeoTIFF,"
-            " e.g. DEFLATE-tiled)"
-        )
+    The formats in _REFUSED_FORMATS (JPEG 2000, GeoPackage raster,
+    MBTiles) are refused with a RasterOpenError by extension, local or
+    remote, before any byte is read or fetched; so are the children of a
+    .vrt that name one. JPEG-compressed TIFFs (compression 6/7) are
+    refused when the IFD is read."""
+    _refuse_format(path)
     if path.startswith(("http://", "https://")):
         return _open_remote(path)
     lower = path.lower()
@@ -1390,15 +1407,10 @@ def open_raster(path: str) -> Raster:
     if lower.endswith(".vrt"):
         from . import gridformats
 
-        return gridformats.open_vrt(path)
-    if lower.endswith(".gpkg"):
-        from . import gpkg
-
-        return gpkg.open_gpkg(path)
-    if lower.endswith(".mbtiles"):
-        from . import mbtiles
-
-        return mbtiles.open_mbtiles(path)
+        vrt = gridformats.open_vrt(path)
+        for src in vrt._blocks.sources:  # children open lazily, at read
+            _refuse_format(src["filename"])
+        return vrt
     if lower.endswith((".nc", ".nc4")):
         # netCDF comes in two wire formats: classic (magic 'CDF') and
         # netCDF4 = HDF5 (magic \x89HDF) — sniff, don't trust the name
@@ -1501,16 +1513,6 @@ def _open_remote(url: str) -> Raster:
         from . import dted
 
         return dted.open_dted_bytes(url, _fetch_url(url))
-    if lower.endswith(".mbtiles"):
-        # SQLite pages range-read like GeoTIFF blocks: only the B-tree
-        # path to the tiles a window touches is ever fetched
-        from . import mbtiles
-
-        return mbtiles.open_mbtiles(url, source=_RangeByteSource(url))
-    if lower.endswith(".gpkg"):
-        from . import gpkg
-
-        return gpkg.open_gpkg(url, source=_RangeByteSource(url))
     if lower.endswith(".zip"):
         import io
 
@@ -1739,6 +1741,12 @@ def _open_tiff(source: _ByteSource) -> Raster:
         kind = _KIND_FOR_SAMPLE_FORMAT.get(sfmt)
         if kind is None:
             raise RasterOpenError(f"'{path}': unsupported sample format {sfmt}")
+        if bits not in ((16, 32, 64) if kind == "f" else (8, 16, 32, 64)):
+            raise RasterOpenError(
+                f"'{path}': BitsPerSample {bits} with sample format {sfmt}"
+                " is not supported (supported: integer 8/16/32/64, float"
+                " 16/32/64; convert to GeoTIFF with one of them)"
+            )
         dtype = np.dtype(f"{bo}{kind}{bits // 8}")
 
         # Multi-band files: read band 1 only (the reference's rasterio read(1),

@@ -1,48 +1,27 @@
-"""GeoPackage raster tiles (.gpkg): pure-numpy SQLite + GPKG reader/writer.
+"""The SQLite file-format walker and writer behind GeoPackage feature
+layers (vector.py reads and writes ``.gpkg`` polygons and points).
 
-The reference reads GeoPackage rasters through GDAL
-(/root/reference/opentopodata/backend.py:89). A GeoPackage is a SQLite
-database with OGC-standard tables; this module implements the slice of
-the PUBLIC SQLite file format and the GPKG spec that raster/DEM tiles
-use:
+A GeoPackage is a SQLite database with OGC-standard tables. This module
+implements the slice of the public SQLite file format those tables use:
 
-SQLite side (read): database header, table B-trees (leaf + interior
-pages), record decoding (all serial types), overflow-page chains for
-large tile blobs, sqlite_master discovery, naive CREATE TABLE column
-mapping.
+Read: database header, table B-trees (leaf + interior pages), record
+decoding (all serial types), overflow-page chains for large blobs,
+sqlite_master discovery, naive CREATE TABLE column mapping.
 
-GPKG side: gpkg_contents (data_type 'tiles' or '2d-gridded-coverage'),
-gpkg_spatial_ref_sys (EPSG / WKT), gpkg_tile_matrix_set (extent),
-gpkg_tile_matrix (zoom pyramid), the tile-pyramid user table
-(zoom_level, tile_column, tile_row, tile_data), and for DEMs the
-gridded-coverage extension: gpkg_2d_gridded_coverage_ancillary
-(global scale/offset/data_null) + gpkg_2d_gridded_tile_ancillary
-(per-tile scale/offset keyed by tile rowid). Tile payloads decode
-through png.py (8/16-bit grayscale; 16-bit is the DEM profile).
+Write: leaf B-trees with one interior root when rows overflow a page,
+overflow chains for oversized payloads, and sqlite_master on page 1;
+stdlib sqlite3 reads the result.
 
-Reads are windowed: read_window decodes only the PNG tiles under the
-window, through the process-wide block LRU. The writer emits a minimal,
-spec-conformant .gpkg (single-zoom pyramid, PNG16 gridded coverage or
-plain 8-bit gray) as the fixture generator and a real small-grid sink.
+GeoPackage rasters are not read: ``geotiff.open_raster`` refuses
+``.gpkg`` (convert to GeoTIFF).
 """
 
 from __future__ import annotations
 
 import os
 import struct
-from dataclasses import dataclass
 
-import numpy as np
-
-from . import png as _png
-from .geotiff import (
-    CRSInfo,
-    Raster,
-    RasterOpenError,
-    _ByteSource,
-    _cache_get,
-    _cache_put,
-)
+from .geotiff import RasterOpenError, _ByteSource
 
 
 class GpkgError(RasterOpenError):
@@ -140,95 +119,6 @@ class _SQLite:
                     f"'{self.src.path}': unexpected page type {ptype}"
                 )
 
-    def _local_len(self, plen: int) -> int:
-        """Bytes of a payload stored inline on the leaf page (the rest
-        rides the overflow chain)."""
-        u = self.usable
-        max_local = u - 35
-        if plen <= max_local:
-            return plen
-        min_local = ((u - 12) * 32) // 255 - 23
-        local = min_local + (plen - min_local) % (u - 4)
-        return local if local <= max_local else min_local
-
-    def rows_prefix(self, rootpage: int, ncols: int):
-        """Yield (rowid, first-``ncols`` values) touching ONLY each
-        cell's local payload prefix — a trailing large blob's overflow
-        chain is never read. This is how a planet-scale tile table is
-        indexed without materializing its blobs; rows whose prefix
-        cannot satisfy ``ncols`` (pathological headers) fall back to
-        the full payload."""
-        stack = [rootpage]
-        while stack:
-            page = self._page(stack.pop())
-            base = 100 if page[:16] == b"SQLite format 3\x00" else 0
-            ptype = page[base]
-            ncells = struct.unpack(">H", page[base + 3 : base + 5])[0]
-            if ptype == 5:
-                right = struct.unpack(">I", page[base + 8 : base + 12])[0]
-                arr = base + 12
-                for i in range(ncells):
-                    off = struct.unpack(
-                        ">H", page[arr + 2 * i : arr + 2 * i + 2])[0]
-                    stack.append(
-                        struct.unpack(">I", page[off : off + 4])[0])
-                stack.append(right)
-            elif ptype == 13:
-                arr = base + 8
-                for i in range(ncells):
-                    off = struct.unpack(
-                        ">H", page[arr + 2 * i : arr + 2 * i + 2])[0]
-                    plen, p = _varint(page, off)
-                    rowid, p = _varint(page, p)
-                    local = page[p : p + self._local_len(plen)]
-                    vals = _record_prefix(local, ncols)
-                    if vals is None:  # header/values spill past prefix
-                        # rows physically SHORTER than the declared
-                        # schema (pre-ALTER-TABLE rows) pad with None
-                        # so callers can index positionally
-                        full = _record(self._payload(page, p, plen))
-                        vals = (full + [None] * ncols)[:ncols]
-                    yield rowid, vals
-            else:
-                raise GpkgError(
-                    f"'{self.src.path}': unexpected page type {ptype}")
-
-    def row_by_rowid(self, rootpage: int, rowid: int):
-        """Fetch ONE row by rowid: descend interior pages, decode a
-        single leaf cell (including its overflow chain). O(tree depth)
-        page reads — the lazy-blob path for tile tables."""
-        page_no = rootpage
-        while True:
-            page = self._page(page_no)
-            base = 100 if page[:16] == b"SQLite format 3\x00" else 0
-            ptype = page[base]
-            ncells = struct.unpack(">H", page[base + 3 : base + 5])[0]
-            if ptype == 5:
-                arr = base + 12
-                nxt = struct.unpack(">I", page[base + 8 : base + 12])[0]
-                for i in range(ncells):
-                    off = struct.unpack(
-                        ">H", page[arr + 2 * i : arr + 2 * i + 2])[0]
-                    key, _ = _varint(page, off + 4)
-                    if rowid <= key:
-                        nxt = struct.unpack(
-                            ">I", page[off : off + 4])[0]
-                        break
-                page_no = nxt
-            elif ptype == 13:
-                arr = base + 8
-                for i in range(ncells):
-                    off = struct.unpack(
-                        ">H", page[arr + 2 * i : arr + 2 * i + 2])[0]
-                    plen, p = _varint(page, off)
-                    rid, p = _varint(page, p)
-                    if rid == rowid:
-                        return _record(self._payload(page, p, plen))
-                return None
-            else:
-                raise GpkgError(
-                    f"'{self.src.path}': unexpected page type {ptype}")
-
     def tables(self) -> dict[str, tuple[int, str]]:
         """name -> (rootpage, create_sql) from sqlite_master."""
         out = {}
@@ -273,56 +163,6 @@ def _record(payload: bytes) -> list:
     return vals
 
 
-def _record_prefix(local: bytes, ncols: int):
-    """Decode the first ``ncols`` values from a payload PREFIX; None if
-    the header or any needed value extends past it."""
-    try:
-        hlen, p = _varint(local, 0)
-    except IndexError:
-        return None
-    if hlen > len(local):
-        return None
-    serials = []
-    q = p
-    while q < hlen and len(serials) < ncols:
-        s, q = _varint(local, q)
-        serials.append(s)
-    if len(serials) < ncols:
-        return None
-    p = hlen
-    vals = []
-    for s in serials:
-        if s == 0:
-            vals.append(None)
-        elif s in (1, 2, 3, 4, 5, 6):
-            n = {1: 1, 2: 2, 3: 3, 4: 4, 5: 6, 6: 8}[s]
-            if p + n > len(local):
-                return None
-            vals.append(int.from_bytes(local[p : p + n], "big",
-                                       signed=True))
-            p += n
-        elif s == 7:
-            if p + 8 > len(local):
-                return None
-            vals.append(struct.unpack(">d", local[p : p + 8])[0])
-            p += 8
-        elif s == 8:
-            vals.append(0)
-        elif s == 9:
-            vals.append(1)
-        elif s >= 12:
-            n = (s - 12) // 2 if s % 2 == 0 else (s - 13) // 2
-            if p + n > len(local):
-                return None
-            raw = local[p : p + n]
-            vals.append(raw if s % 2 == 0
-                        else raw.decode("utf-8", "replace"))
-            p += n
-        else:
-            raise GpkgError(f"reserved SQLite serial type {s}")
-    return vals
-
-
 def _columns(create_sql: str) -> list[str]:
     """Naive column-name extraction from CREATE TABLE sql."""
     inner = create_sql[create_sql.index("(") + 1 : create_sql.rindex(")")]
@@ -360,226 +200,7 @@ def _table_dicts(db: _SQLite, tables, name: str):
 
 
 # ---------------------------------------------------------------------------
-# GPKG raster assembly
-# ---------------------------------------------------------------------------
-
-
-@dataclass
-class _GpkgTileReader:
-    """Windowed reads over one zoom level's tile grid; duck-types
-    geotiff._BlockReader.read. Tiles decode via png.py through the
-    process-wide block LRU."""
-
-    source: _ByteSource
-    db: _SQLite
-    dtype: np.dtype
-    height: int
-    width: int
-    tile_h: int
-    tile_w: int
-    # (tile_row, tile_col) -> (rootpage, rowid, blob_col): blobs fetch
-    # lazily by rowid (one B-tree descent), never materialized at open
-    tiles: dict[tuple[int, int], tuple] = None
-    scales: dict[tuple[int, int], tuple[float, float]] = None
-    g_scale: float = 1.0
-    g_offset: float = 0.0
-    data_null: float | None = None
-    gridded: bool = False
-    fill: float = float("nan")
-
-    def _decode(self, key: tuple[int, int]) -> np.ndarray:
-        loc = self.tiles.get(key)
-        native = self.dtype.newbyteorder("=")
-        if loc is None:
-            return np.full((self.tile_h, self.tile_w),
-                           native.type(self.fill) if self.dtype.kind == "f"
-                           else 0, dtype=native)
-        root, rowid, blob_col = loc
-        row = self.db.row_by_rowid(root, rowid)
-        blob = (row[blob_col] if row is not None
-                and blob_col < len(row) else None)
-        if blob is None:
-            # NULL tile_data (legal placeholder rows) == missing tile
-            return np.full((self.tile_h, self.tile_w),
-                           native.type(self.fill) if self.dtype.kind == "f"
-                           else 0, dtype=native)
-        if not isinstance(blob, (bytes, bytearray)):
-            raise GpkgError(
-                f"'{self.source.path}': tile rowid {rowid} is not a blob")
-        blob = bytes(blob)
-        if not _png.is_png(blob[:16]):
-            raise GpkgError(
-                f"'{self.source.path}': non-PNG tile payload (JPEG/WebP"
-                " tiles are not supported — re-encode with PNG)")
-        arr = _png.decode_png(blob)
-        if arr.shape[2] != 1:
-            arr = arr[:, :, :1]  # gray profile; extra channels dropped
-        a = arr[:, :, 0]
-        if self.gridded:
-            s, o = self.scales.get(key, (self.g_scale, self.g_offset))
-            out = a.astype(np.float64) * s + o
-            if self.data_null is not None:
-                out[a == self.data_null] = np.nan
-            return out.astype(np.float32)
-        return a.astype(native)
-
-    def read(self, r0: int, r1: int, c0: int, c1: int) -> np.ndarray:
-        native = self.dtype.newbyteorder("=")
-        fill = native.type(self.fill) if self.dtype.kind == "f" else 0
-        out = np.full((r1 - r0, c1 - c0), fill, dtype=native)
-        tr0, tr1 = r0 // self.tile_h, (r1 - 1) // self.tile_h
-        tc0, tc1 = c0 // self.tile_w, (c1 - 1) // self.tile_w
-        for tr in range(tr0, tr1 + 1):
-            for tc in range(tc0, tc1 + 1):
-                ck = (self.source.cache_key, "gpkg", tr, tc)
-                arr = _cache_get(ck)
-                if arr is None:
-                    arr = self._decode((tr, tc))
-                    _cache_put(ck, arr)
-                gr0, gc0 = tr * self.tile_h, tc * self.tile_w
-                orow0, orow1 = max(r0, gr0), min(r1, gr0 + self.tile_h,
-                                                 self.height)
-                ocol0, ocol1 = max(c0, gc0), min(c1, gc0 + self.tile_w,
-                                                 self.width)
-                if orow0 >= orow1 or ocol0 >= ocol1:
-                    continue
-                out[orow0 - r0 : orow1 - r0, ocol0 - c0 : ocol1 - c0] = arr[
-                    orow0 - gr0 : orow1 - gr0, ocol0 - gc0 : ocol1 - gc0
-                ]
-        return out
-
-
-def open_gpkg(path: str, source: _ByteSource | None = None) -> Raster:
-    """Open a GeoPackage raster/DEM as a Raster (finest zoom level).
-
-    Supports tile pyramids ('tiles' content) with 8-bit gray PNG tiles
-    and DEMs ('2d-gridded-coverage') with 16-bit PNG tiles + gridded
-    ancillary scale/offset/data_null (global and per-tile). JPEG or
-    WebP tile payloads, and multi-table packages, are refused loudly.
-    """
-    src = source if source is not None else _ByteSource(path)
-    db = _SQLite(src)
-    tables = db.tables()
-
-    contents = [
-        d for _r, d in _table_dicts(db, tables, "gpkg_contents")
-        if d.get("data_type") in ("tiles", "2d-gridded-coverage")
-    ]
-    if not contents:
-        raise GpkgError(f"'{path}': no raster (tiles) content in gpkg")
-    content = contents[0]
-    tname = content["table_name"]
-    gridded = content["data_type"] == "2d-gridded-coverage"
-
-    srs_id = content.get("srs_id")
-    epsg = None
-    wkt = None
-    for _r, d in _table_dicts(db, tables, "gpkg_spatial_ref_sys"):
-        if d.get("srs_id") == srs_id:
-            if (d.get("organization") or "").upper() == "EPSG":
-                epsg = int(d["organization_coordsys_id"])
-            else:
-                wkt = d.get("definition")
-            break
-    if epsg is None and not wkt:
-        raise GpkgError(f"'{path}': srs_id {srs_id} not resolvable")
-
-    tms = None
-    for _r, d in _table_dicts(db, tables, "gpkg_tile_matrix_set"):
-        if d.get("table_name") == tname:
-            tms = d
-            break
-    if tms is None:
-        raise GpkgError(f"'{path}': missing gpkg_tile_matrix_set row")
-
-    matrices = [d for _r, d in _table_dicts(db, tables, "gpkg_tile_matrix")
-                if d.get("table_name") == tname]
-    if not matrices:
-        raise GpkgError(f"'{path}': missing gpkg_tile_matrix rows")
-    tm = min(matrices, key=lambda d: float(d["pixel_x_size"]))
-
-    # gridded-coverage ancillary (global + per-tile)
-    g_scale, g_offset, data_null = 1.0, 0.0, None
-    if gridded:
-        for _r, d in _table_dicts(
-            db, tables, "gpkg_2d_gridded_coverage_ancillary"
-        ):
-            if d.get("tile_matrix_set_name") == tname:
-                g_scale = float(d.get("scale") or 1.0)
-                g_offset = float(d.get("offset") or 0.0)
-                if d.get("data_null") is not None:
-                    data_null = float(d["data_null"])
-                dt = (d.get("datatype") or "integer").lower()
-                if dt != "integer":
-                    raise GpkgError(
-                        f"'{path}': gridded datatype '{dt}' unsupported"
-                        " (integer/PNG16 profile only)"
-                    )
-                break
-
-    zoom = int(tm["zoom_level"])
-    tile_w, tile_h = int(tm["tile_width"]), int(tm["tile_height"])
-    mw, mh = int(tm["matrix_width"]), int(tm["matrix_height"])
-    px, py = float(tm["pixel_x_size"]), float(tm["pixel_y_size"])
-
-    # index the tile table by PREFIX scan (zoom/row/col + rowid) — the
-    # blobs themselves fetch lazily by rowid at decode time, so opening
-    # a multi-GB coverage never materializes its payloads
-    t_root, t_sql = tables[tname]
-    t_cols = _columns(t_sql)
-    try:
-        iz = t_cols.index("zoom_level")
-        ir = t_cols.index("tile_row")
-        ic = t_cols.index("tile_column")
-        ib = t_cols.index("tile_data")
-    except ValueError:
-        raise GpkgError(f"'{path}': '{tname}' lacks tile columns"
-                        f" ({t_cols})")
-    tiles: dict[tuple[int, int], tuple] = {}
-    rowid_of: dict[int, tuple[int, int]] = {}
-    for rowid, vals in db.rows_prefix(t_root, max(iz, ir, ic) + 1):
-        if vals[iz] is None or int(vals[iz]) != zoom:
-            continue
-        if vals[ir] is None or vals[ic] is None:
-            continue
-        key = (int(vals[ir]), int(vals[ic]))
-        tiles[key] = (t_root, rowid, ib)
-        rowid_of[rowid] = key
-    if not tiles:
-        raise GpkgError(f"'{path}': no tiles at zoom {zoom}")
-
-    scales: dict[tuple[int, int], tuple[float, float]] = {}
-    if gridded:
-        for _r, d in _table_dicts(
-            db, tables, "gpkg_2d_gridded_tile_ancillary"
-        ):
-            if d.get("tpudt_name") != tname:
-                continue
-            key = rowid_of.get(int(d["tpudt_id"]))
-            if key is None:
-                continue
-            scales[key] = (float(d.get("scale") or 1.0),
-                           float(d.get("offset") or 0.0))
-
-    width, height = mw * tile_w, mh * tile_h
-    dtype = np.dtype("<f4") if gridded else np.dtype("u1")
-    blocks = _GpkgTileReader(
-        source=src, db=db, dtype=dtype, height=height, width=width,
-        tile_h=tile_h, tile_w=tile_w, tiles=tiles, scales=scales,
-        g_scale=g_scale, g_offset=g_offset, data_null=data_null,
-        gridded=gridded,
-    )
-    return Raster(
-        path=path, width=width, height=height, dtype=dtype,
-        nodata=None,  # data_null folds into NaN during decode
-        crs=CRSInfo(epsg=epsg, wkt=wkt),
-        x0=float(tms["min_x"]), y0=float(tms["max_y"]), sx=px, sy=py,
-        _blocks=blocks,
-    )
-
-
-# ---------------------------------------------------------------------------
-# Writer: minimal spec-conformant .gpkg (fixture generator + small sink)
+# SQLite writer
 # ---------------------------------------------------------------------------
 
 
@@ -628,8 +249,7 @@ def _enc_record(vals: list) -> bytes:
 class _DbWriter:
     """Emit a SQLite db from (create_sql, rows) table definitions.
     Leaf-only B-trees with a single interior root when rows overflow one
-    page; oversized payloads spill to standard overflow chains (the
-    page-size heuristics upstream merely keep SMALL tiles inline)."""
+    page; oversized payloads spill to standard overflow chains."""
 
     def __init__(self, page_size: int):
         self.page_size = page_size
@@ -753,153 +373,11 @@ class _DbWriter:
         return bytes(buf)
 
 
-_SRS_SQL = ("CREATE TABLE gpkg_spatial_ref_sys (srs_name TEXT, srs_id "
-            "INTEGER, organization TEXT, organization_coordsys_id INTEGER,"
-            " definition TEXT, description TEXT)")
-_CONTENTS_SQL = ("CREATE TABLE gpkg_contents (table_name TEXT, data_type "
-                 "TEXT, identifier TEXT, description TEXT, last_change "
-                 "TEXT, min_x DOUBLE, min_y DOUBLE, max_x DOUBLE, max_y "
-                 "DOUBLE, srs_id INTEGER)")
-_TMS_SQL = ("CREATE TABLE gpkg_tile_matrix_set (table_name TEXT, srs_id "
-            "INTEGER, min_x DOUBLE, min_y DOUBLE, max_x DOUBLE, max_y "
-            "DOUBLE)")
-_TM_SQL = ("CREATE TABLE gpkg_tile_matrix (table_name TEXT, zoom_level "
-           "INTEGER, matrix_width INTEGER, matrix_height INTEGER, "
-           "tile_width INTEGER, tile_height INTEGER, pixel_x_size DOUBLE,"
-           " pixel_y_size DOUBLE)")
-_COV_SQL = ("CREATE TABLE gpkg_2d_gridded_coverage_ancillary (id INTEGER,"
-            " tile_matrix_set_name TEXT, datatype TEXT, scale DOUBLE, "
-            "offset DOUBLE, precision DOUBLE, data_null DOUBLE)")
-_TILE_ANC_SQL = ("CREATE TABLE gpkg_2d_gridded_tile_ancillary (id INTEGER,"
-                 " tpudt_name TEXT, tpudt_id INTEGER, scale DOUBLE, offset"
-                 " DOUBLE, min DOUBLE, max DOUBLE, mean DOUBLE, "
-                 "std_dev DOUBLE)")
-
-
-def write_gpkg(
-    path: str,
-    array: np.ndarray,
-    *,
-    x0: float,
-    y0: float,
-    sx: float,
-    sy: float,
-    epsg: int = 4326,
-    tile_size: int = 128,
-    table_name: str = "dem",
-    gridded: bool = True,
-    scale: float = 1.0,
-    offset: float = 0.0,
-    data_null: float | None = 65535.0,
-    per_tile_ancillary: bool = False,
-) -> None:
-    """Write a single-zoom GeoPackage raster.
-
-    gridded=True: the DEM profile — float input packed to PNG16 with
-    ``value = png * scale + offset`` (NaN -> data_null); per_tile
-    ancillary optionally re-derives scale/offset per tile (GDAL's
-    layout). gridded=False: plain 8-bit gray tiles ('tiles' content).
-    """
-    array = np.asarray(array)
-    h, w = array.shape
-    mh = -(-h // tile_size)
-    mw = -(-w // tile_size)
-    full_h, full_w = mh * tile_size, mw * tile_size
-
-    tile_rows: list[tuple[int, list]] = []
-    anc_rows: list[tuple[int, list]] = []
-    rowid = 0
-    max_blob = 0
-    for tr in range(mh):
-        for tc in range(mw):
-            block = np.full((tile_size, tile_size), np.nan)
-            r0, c0 = tr * tile_size, tc * tile_size
-            rr = min(tile_size, h - r0)
-            cc = min(tile_size, w - c0)
-            if rr <= 0 or cc <= 0:
-                continue
-            block[:rr, :cc] = array[r0 : r0 + rr, c0 : c0 + cc]
-            if gridded:
-                if per_tile_ancillary:
-                    finite = block[np.isfinite(block)]
-                    t_off = float(finite.min()) if finite.size else 0.0
-                    t_scale = max(
-                        (float(finite.max()) - t_off) / 65000.0, 1e-9
-                    ) if finite.size else 1.0
-                else:
-                    t_scale, t_off = scale, offset
-                packed = np.round((block - t_off) / t_scale)
-                packed = np.where(np.isnan(block),
-                                  data_null if data_null is not None else 0,
-                                  packed)
-                blob = _png.encode_png(
-                    np.clip(packed, 0, 65535).astype(np.uint16),
-                    filter_type=2,
-                )
-            else:
-                blob = _png.encode_png(
-                    np.nan_to_num(block, nan=0).astype(np.uint8),
-                    filter_type=2,
-                )
-            rowid += 1
-            max_blob = max(max_blob, len(blob))
-            tile_rows.append((rowid, [0, tr, tc, blob]))
-            if gridded and per_tile_ancillary:
-                anc_rows.append((rowid, [rowid, table_name, rowid,
-                                         t_scale, t_off, None, None, None,
-                                         None]))
-
-    # pick the smallest page size whose leaf holds the largest blob
-    page_size = 4096
-    while page_size < max_blob + 200 and page_size < 65536:
-        page_size *= 2
-    dbw = _DbWriter(page_size)
-
-    tiles_sql = (f"CREATE TABLE {table_name} (id INTEGER PRIMARY KEY, "
-                 "zoom_level INTEGER, tile_column INTEGER, tile_row "
-                 "INTEGER, tile_data BLOB)")
-    # note: reader maps columns from sql; rows above carry
-    # (zoom, tile_row, tile_col...) in the declared order below
-    tiles_sql = (f"CREATE TABLE {table_name} (zoom_level INTEGER, "
-                 "tile_row INTEGER, tile_column INTEGER, tile_data BLOB)")
-
-    max_x = x0 + full_w * sx
-    min_y = y0 - full_h * sy
-    tables: list[tuple[str, str, list]] = [
-        ("gpkg_spatial_ref_sys", _SRS_SQL, [
-            (1, [f"EPSG:{epsg}", epsg, "EPSG", epsg, "undefined", None]),
-        ]),
-        ("gpkg_contents", _CONTENTS_SQL, [
-            (1, [table_name,
-                 "2d-gridded-coverage" if gridded else "tiles",
-                 table_name, None, "2026-01-01T00:00:00Z",
-                 x0, min_y, max_x, y0, epsg]),
-        ]),
-        ("gpkg_tile_matrix_set", _TMS_SQL, [
-            (1, [table_name, epsg, x0, min_y, max_x, y0]),
-        ]),
-        ("gpkg_tile_matrix", _TM_SQL, [
-            (1, [table_name, 0, mw, mh, tile_size, tile_size, sx, sy]),
-        ]),
-        (table_name, tiles_sql, tile_rows),
-    ]
-    if gridded:
-        tables.append(("gpkg_2d_gridded_coverage_ancillary", _COV_SQL, [
-            (1, [1, table_name, "integer", scale, offset, None,
-                 data_null]),
-        ]))
-        if per_tile_ancillary:
-            tables.append(("gpkg_2d_gridded_tile_ancillary",
-                           _TILE_ANC_SQL, anc_rows))
-
-    _assemble_sqlite(path, dbw, tables)
-
-
 def _assemble_sqlite(path: str, dbw: _DbWriter,
                      tables: list[tuple[str, str, list]]) -> None:
     """Build the user tables into ``dbw``, write sqlite_master on page 1,
-    and atomically emit the finished database file. Shared by the raster
-    tile writer above and the vector feature writer (vector.py)."""
+    and atomically emit the finished database file (vector.py's
+    GeoPackage feature writer)."""
     page_size = dbw.page_size
     # page 1 must be sqlite_master; write a placeholder first, build the
     # user tables, then rebuild page 1 with the real rootpages

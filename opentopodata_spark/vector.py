@@ -13,8 +13,8 @@ module implements the two formats from their public specifications:
   layers are unprojected to WGS84 through crs.py), `.cpg` encoding.
   `.shx` is not required — records are walked sequentially.
 * **GeoPackage features** (OGC 12-128r19 §2.1.3 + ISO WKB): vector
-  layers inside the same SQLite container gpkg.py already reads for
-  raster tiles — `gpkg_geometry_columns` discovery, GPB geometry-blob
+  layers in a SQLite container, walked by gpkg.py's B-tree reader —
+  `gpkg_geometry_columns` discovery, GPB geometry-blob
   headers, standard/ISO/EWKB geometry decode, srs unprojection.
 * **WKB** both byte orders, 2D/Z/M/ZM, ISO (+1000-style) and EWKB
   (flag-bit) type codes, nested collections.
@@ -33,7 +33,7 @@ and to give `jobs/vecconvert` an ogr2ogr-style round trip. The GPKG
 writer reuses gpkg.py's pure-python SQLite page builder; tests verify
 its output with the STDLIB sqlite3 engine (an independent
 implementation), and conversely read stdlib-sqlite3-written GeoPackages
-with gpkg.py's pure-numpy B-tree reader.
+with gpkg.py's pure-python B-tree reader.
 """
 
 from __future__ import annotations

@@ -4,9 +4,8 @@ write_geotiff(overviews=...) emits gdaladdo-style reduced-resolution
 IFDs chained after the base band; open_raster follows the chain into
 Raster.overviews with derived georeferencing. The scale payoff — a
 coarse read touches 1/k² of the bytes, locally and over HTTP ranges —
-is asserted here, along with the exactness contract the resample
-operator relies on (the embedded level IS the NODATA-aware average of
-the base band, bit-for-bit).
+is asserted here, along with the exactness contract (the embedded level
+IS the NODATA-aware average of the base band, bit-for-bit).
 
 Reference note: the reference serves full-resolution points only and
 never reads overviews (rasterio read(1) of IFD #1,
@@ -232,62 +231,3 @@ class TestRemoteCOG:
         full_bytes = _fetched_bytes(srv) - open_bytes - coarse_bytes
         assert full_bytes > coarse_bytes * 10
 
-
-class TestResampleFromOverviews:
-    def test_bit_identical_and_flagged_off_by_default(self, tmp_path, spark):
-        from opentopodata_spark.operators.resample import resample_tiles
-
-        tiles = []
-        for iy in range(2):
-            for ix in range(2):
-                arr = _rand(96, 96, seed=20 + iy * 2 + ix,
-                            nodata=-9999.0, hole=(0, 30, 0, 9))
-                p = str(tmp_path / f"src_{iy}_{ix}.tif")
-                geotiff.write_geotiff(
-                    p, arr, x0=ix * 0.96, y0=1.0 - iy * 0.96 + 46.0,
-                    sx=0.01, sy=0.01, epsg=4326, nodata=-9999.0,
-                    compression="deflate", predictor=3, tile_size=(32, 32),
-                    overviews=(2,),
-                )
-                tiles.append((iy, ix, p))
-
-        out_a = str(tmp_path / "direct")
-        out_b = str(tmp_path / "via_ovr")
-        man_a = resample_tiles(
-            spark, tiles, out_a, factor=2, method="average"
-        ).orderBy("tile_iy", "tile_ix").collect()
-        man_b = resample_tiles(
-            spark, tiles, out_b, factor=2, method="average",
-            use_overviews=True,
-        ).orderBy("tile_iy", "tile_ix").collect()
-        assert all(r.from_overview is False for r in man_a)
-        assert all(r.from_overview is True for r in man_b)
-        assert [r.asDict() | {"path": None, "from_overview": None}
-                for r in man_a] == [
-            r.asDict() | {"path": None, "from_overview": None}
-            for r in man_b
-        ]
-        for ra, rb in zip(man_a, man_b):
-            a = geotiff.open_raster(ra.path)
-            b = geotiff.open_raster(rb.path)
-            np.testing.assert_array_equal(a.band, b.band)
-
-    def test_sources_without_levels_fall_back(self, tmp_path, spark):
-        from opentopodata_spark.operators.resample import resample_tiles
-
-        arr = _rand(64, 64, seed=33)
-        p = str(tmp_path / "plain.tif")
-        geotiff.write_geotiff(
-            p, arr, x0=0, y0=0.64 + 46, sx=0.01, sy=0.01, epsg=4326,
-            nodata=-9999.0,
-        )
-        rows = resample_tiles(
-            spark, [(0, 0, p)], str(tmp_path / "o"), factor=2,
-            method="average", use_overviews=True,
-        ).collect()
-        assert rows[0].error is None and rows[0].from_overview is False
-        got = geotiff.open_raster(rows[0].path)
-        exp = build_overview(arr, 2, nodata=-9999.0)
-        np.testing.assert_allclose(
-            got.band, exp.astype(np.float32), rtol=0, atol=0
-        )

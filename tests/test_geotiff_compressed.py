@@ -221,8 +221,8 @@ def test_zip_without_raster_member(tmp_path):
         geotiff.open_raster(p)
 
 
-def _tiff_with_compression_tag(path, dtype, comp):
-    """A small GeoTIFF whose compression tag (259) is patched to ``comp``."""
+def _tiff_with_tag(path, dtype, tag, value):
+    """A small GeoTIFF whose SHORT tag ``tag`` is patched to ``value``."""
     import struct
 
     geotiff.write_geotiff(path, np.zeros((4, 4), dtype=dtype),
@@ -232,9 +232,8 @@ def _tiff_with_compression_tag(path, dtype, comp):
     (n,) = struct.unpack("<H", data[ifd_offset : ifd_offset + 2])
     for i in range(n):
         base = ifd_offset + 2 + i * 12
-        tag = struct.unpack("<H", data[base : base + 2])[0]
-        if tag == 259:
-            data[base + 8 : base + 10] = struct.pack("<H", comp)
+        if struct.unpack("<H", data[base : base + 2])[0] == tag:
+            data[base + 8 : base + 10] = struct.pack("<H", value)
     open(path, "wb").write(bytes(data))
 
 
@@ -248,7 +247,7 @@ def test_unsupported_compression_clear_error(tmp_path):
     """An unknown codec (34712, JPEG 2000 in TIFF) fails at open with a
     message naming it and the supported ones, not a crash at read."""
     p = str(tmp_path / "j2.tif")
-    _tiff_with_compression_tag(p, np.int16, 34712)
+    _tiff_with_tag(p, np.int16, 259, 34712)
     msg = _open_error_message(p)
     assert "TIFF compression 34712 is not supported" in msg
     assert "DEFLATE" in msg and "convert to GeoTIFF" in msg
@@ -260,10 +259,25 @@ def test_jpeg_tiff_refused_at_open(tmp_path, dtype, comp):
     """A JPEG-coded TIFF (old-style 6 or TechNote-2 7) is refused at open
     with a message naming the format, not decoded or failed at read."""
     p = str(tmp_path / "jp.tif")
-    _tiff_with_compression_tag(p, dtype, comp)
+    _tiff_with_tag(p, dtype, 259, comp)
     msg = _open_error_message(p)
     assert f"JPEG-compressed TIFF (compression {comp})" in msg
     assert "convert to GeoTIFF" in msg
+
+
+@pytest.mark.parametrize(
+    "dtype, bits",
+    [(np.uint8, 4), (np.uint16, 12), (np.float32, 8)],
+    ids=["int4", "int12", "float8"],
+)
+def test_bits_per_sample_refused_at_open(tmp_path, dtype, bits):
+    """Only integer 8/16/32/64 and float 16/32/64 samples are read; any
+    other BitsPerSample is refused at open, not read as whole bytes (a
+    12-bit pixel would come back split into two uint8 values)."""
+    p = str(tmp_path / "b.tif")
+    _tiff_with_tag(p, dtype, 258, bits)
+    msg = _open_error_message(p)
+    assert f"BitsPerSample {bits} " in msg and "not supported" in msg
 
 
 @pytest.mark.parametrize(

@@ -1,100 +1,62 @@
-"""GeoPackage raster tiles (opentopodata_spark.gpkg).
+"""GeoPackage: the SQLite walker that vector.py's feature layers use,
+and the refusal of GeoPackage rasters.
 
-The reference reads .gpkg rasters through GDAL
-(/root/reference/opentopodata/backend.py:89); this engine implements
-the SQLite file format subset + the OGC GPKG tables in pure numpy.
-Pins: write->read round trips for the gridded-coverage DEM profile
-(PNG16 + scale/offset/data_null, global and per-tile ancillary) and
-plain 8-bit tiles, windowed decode through the block LRU, SQLite
-overflow-page chains (hand-crafted fixture), multi-leaf B-trees, loud
-rejections, and an elevation-pipeline differential vs GeoTIFF.
+``open_raster`` refuses a ``.gpkg`` by extension, local or remote,
+before any byte is read or fetched, with a RasterOpenError naming
+"GeoPackage raster" and "convert to GeoTIFF"; a single-file dataset
+carries that reason in its ConfigError, and a VRT naming a ``.gpkg``
+child is refused at open. The walker and writer tests round-trip a
+multi-page table through stdlib sqlite3 and read a hand-crafted database
+whose one row spills across an overflow-page chain.
 """
 
 from __future__ import annotations
 
-import os
 import struct
 
-import numpy as np
 import pytest
 
-from opentopodata_spark import geotiff, gpkg
-from opentopodata_spark.geotiff import RasterOpenError, open_raster
+from opentopodata_spark import config, geotiff, gpkg
+from opentopodata_spark.geotiff import RasterOpenError, _ByteSource, open_raster
 
 
-@pytest.fixture()
-def dem():
-    rng = np.random.RandomState(11)
-    arr = np.round(rng.rand(300, 260) * 900.0)
-    arr[5, 7] = np.nan
-    return arr
+def _assert_refused(msg: str):
+    assert "GeoPackage raster is not supported" in msg
+    assert "convert to GeoTIFF" in msg
+
+
+def _refusal(path: str, *paths: str) -> str:
+    """The RasterOpenError message of open_raster(path), every path
+    removed from it."""
+    with pytest.raises(RasterOpenError) as e:
+        open_raster(path)
+    msg = str(e.value)
+    for p in (path,) + paths:
+        msg = msg.replace(p, "")
+    return msg
 
 
 class TestRoundTrip:
-    def test_gridded_dem_profile(self, tmp_path, dem):
-        p = str(tmp_path / "d.gpkg")
-        gpkg.write_gpkg(p, dem, x0=10.0, y0=1.0, sx=0.01, sy=0.01,
-                        epsg=4326, tile_size=128, scale=1.0, offset=0.0)
-        r = open_raster(p)
-        assert r.crs.epsg == 4326
-        assert r.dtype == np.dtype("<f4")
-        assert abs(r.x0 - 10.0) < 1e-12 and abs(r.y0 - 1.0) < 1e-12
-        w = np.asarray(r.read_window(0, 300, 0, 260)[0])
-        assert np.isnan(w[5, 7])  # data_null -> NaN
-        m = ~np.isnan(dem)
-        assert np.array_equal(w[m], dem[m].astype(np.float32))
-
-    def test_windowed_reads(self, tmp_path, dem):
-        p = str(tmp_path / "w.gpkg")
-        gpkg.write_gpkg(p, dem, x0=10.0, y0=1.0, sx=0.01, sy=0.01,
-                        tile_size=64, scale=1.0, offset=0.0)
-        r = open_raster(p)
-        rng = np.random.RandomState(3)
-        for _ in range(10):
-            r0, c0 = rng.randint(0, 280), rng.randint(0, 240)
-            r1 = r0 + rng.randint(1, 300 - r0)
-            c1 = c0 + rng.randint(1, 260 - c0)
-            got = np.asarray(r.read_window(r0, r1, c0, c1)[0])
-            sub = dem[r0:r1, c0:c1]
-            m = ~np.isnan(sub)
-            assert np.array_equal(got[m], sub[m].astype(np.float32))
-            assert np.all(np.isnan(got[~m]))
-
-    def test_scale_offset_and_per_tile(self, tmp_path, dem):
-        p = str(tmp_path / "s.gpkg")
-        gpkg.write_gpkg(p, dem, x0=0.0, y0=3.0, sx=0.01, sy=0.01,
-                        tile_size=64, scale=0.25, offset=-100.0)
-        w = np.asarray(open_raster(p).read_window(0, 300, 0, 260)[0])
-        m = ~np.isnan(dem)
-        assert np.allclose(w[m], dem[m], atol=0.25)
-        q = str(tmp_path / "pt.gpkg")
-        gpkg.write_gpkg(q, dem, x0=0.0, y0=3.0, sx=0.01, sy=0.01,
-                        tile_size=64, per_tile_ancillary=True)
-        w2 = np.asarray(open_raster(q).read_window(0, 300, 0, 260)[0])
-        assert float(np.max(np.abs(w2[m] - dem[m]))) < 0.05
-
-    def test_plain_8bit_tiles(self, tmp_path):
-        rng = np.random.RandomState(4)
-        a8 = (rng.rand(140, 150) * 255).astype(np.uint8)
-        p = str(tmp_path / "g.gpkg")
-        gpkg.write_gpkg(p, a8, x0=0.0, y0=1.0, sx=0.01, sy=0.01,
-                        gridded=False, tile_size=64)
-        r = open_raster(p)
-        assert r.dtype == np.dtype("u1")
-        assert np.array_equal(
-            np.asarray(r.read_window(0, 140, 0, 150)[0]), a8)
-
     def test_multi_leaf_btree(self, tmp_path):
-        """Enough tiles that the tiles table spills to several leaf
-        pages under one interior root."""
-        rng = np.random.RandomState(5)
-        arr = np.round(rng.rand(512, 512) * 500.0)
-        p = str(tmp_path / "big.gpkg")
-        gpkg.write_gpkg(p, arr, x0=0.0, y0=5.0, sx=0.01, sy=0.01,
-                        tile_size=64, scale=1.0, offset=0.0)
-        r = open_raster(p)
-        w = np.asarray(r.read_window(0, 512, 0, 512)[0])
-        assert np.array_equal(w, arr.astype(np.float32))
+        """Enough rows that the table spills to several leaf pages under
+        one interior root, plus one row past the inline limit that
+        spills to an overflow chain: the walker and stdlib sqlite3 both
+        read back what the writer wrote."""
+        import sqlite3
+
+        rows = [(i, [f"r{i}", bytes([i % 251]) * 40]) for i in range(1, 301)]
+        rows.append((301, ["big", bytes(range(256)) * 40]))
+        p = str(tmp_path / "t.db")
+        gpkg._assemble_sqlite(p, gpkg._DbWriter(1024), [
+            ("t", "CREATE TABLE t (name TEXT, b BLOB)", rows)])
+        db = gpkg._SQLite(_ByteSource(p))
+        assert sorted(db.rows(db.tables()["t"][0])) == rows
+        con = sqlite3.connect(p)
+        try:
+            got = con.execute("SELECT rowid, name, b FROM t ORDER BY rowid")
+            assert got.fetchall() == [(r, *v) for r, v in rows]
+        finally:
+            con.close()
 
 
 class TestSqliteStructure:
@@ -158,8 +120,6 @@ class TestSqliteStructure:
         with open(p, "wb") as f:
             f.write(bytes(page1 + page2 + b"".join(ov_pages)))
 
-        from opentopodata_spark.geotiff import _ByteSource
-
         db = gpkg._SQLite(_ByteSource(p))
         rows = list(db.rows(db.tables()["t"][0]))
         assert rows == [(1, ["x", blob])]
@@ -168,111 +128,52 @@ class TestSqliteStructure:
         p = str(tmp_path / "x.gpkg")
         with open(p, "wb") as f:
             f.write(b"not a database at all" * 10)
-        with pytest.raises(RasterOpenError, match="SQLite"):
-            open_raster(p)
-
-    def test_no_raster_content_is_loud(self, tmp_path, dem):
-        p = str(tmp_path / "d.gpkg")
-        gpkg.write_gpkg(p, dem, x0=0.0, y0=3.0, sx=0.01, sy=0.01,
-                        tile_size=128)
-        # surgically rename the content type to a vector layer
-        raw = bytearray(open(p, "rb").read())
-        at = raw.find(b"2d-gridded-coverage")
-        raw[at : at + len(b"2d-gridded-coverage")] = b"featuresfeaturesfea"
-        with open(p, "wb") as f:
-            f.write(bytes(raw))
-        with pytest.raises(RasterOpenError, match="no raster"):
-            open_raster(p)
-
-
-def test_gpkg_elevation_differential(tmp_path, spark):
-    """GPKG DEM (scale=1 exact PNG16 packing) resolves bit-identically
-    to the same grid as GeoTIFF through the distributed pipeline."""
-    from pyspark.sql import functions as F
-
-    from opentopodata_spark import config, fixtures
-    from opentopodata_spark.operators import elevation
-
-    res = 1.0 / 60.0
-    side = 61
-    lons = 10.0 + (np.arange(side) + 0.5) * res
-    lats = 1.0 - (np.arange(side) + 0.5) * res
-    grid = np.round(
-        fixtures.terrain_wgs84(lats[:, None], lons[None, :])
-    ).astype(np.float64)
-    d_tif = tmp_path / "tif"
-    d_gp = tmp_path / "gp"
-    os.makedirs(d_tif)
-    os.makedirs(d_gp)
-    geotiff.write_geotiff(str(d_tif / "t.tif"), grid.astype(np.float32),
-                          x0=10.0, y0=1.0, sx=res, sy=res, epsg=4326,
-                          nodata=-32768)
-    gpkg.write_gpkg(str(d_gp / "t.gpkg"), grid, x0=10.0, y0=1.0, sx=res,
-                    sy=res, epsg=4326, tile_size=32, scale=1.0, offset=0.0)
-
-    rng = np.random.default_rng(3)
-    pts = spark.createDataFrame(
-        [(i, float(la), float(lo)) for i, (la, lo) in enumerate(
-            zip(rng.uniform(0.02, 0.95, 80), rng.uniform(10.02, 10.95, 80))
-        )],
-        "point_id long, lat double, lon double",
-    ).withColumn("point_pos", F.lit(0)).withColumn("doc_id", F.lit("d"))
-
-    out = {}
-    for name, d in (("tif", d_tif), ("gp", d_gp)):
-        ds = config.dataset_from_config(name, path=str(d))
-        out[name] = {r.point_id: r.elevation for r in
-                     elevation.ElevationResolver(spark, [ds], "bilinear")
-                     .resolve(pts).collect()}
-    # the GPKG raster is float32 of the same integers the tif stores:
-    # identical bilinear inputs -> identical outputs
-    assert out["gp"] == out["tif"]
+        _assert_refused(_refusal(p))
 
 
 def test_remote_gpkg_range_reads(tmp_path):
-    """A .gpkg served over HTTP reads through _RangeByteSource: SQLite
-    pages fetch as byte ranges (never a full-object GET) and windows
-    equal the local twin."""
-    import numpy as np
-
-    from opentopodata_spark.geotiff import open_raster
+    """A .gpkg served over HTTP is refused before any request: the
+    range server sees none."""
     from test_remote_raster import _serve
 
-    arr = (100.0 + np.arange(128 * 128).reshape(128, 128) % 900
-           ).astype(np.float64)
-    p = str(tmp_path / "dem.gpkg")
-    gpkg.write_gpkg(p, arr, x0=10.0, y0=1.0, sx=1 / 128, sy=1 / 128,
-               epsg=4326, tile_size=64, scale=1.0, offset=0.0)
+    with open(tmp_path / "dem.gpkg", "wb") as f:
+        f.write(b"SQLite format 3\x00" + bytes(4096))
     srv, base = _serve(str(tmp_path))
     try:
-        local = open_raster(p)
-        remote = open_raster(f"{base}/dem.gpkg")
-        wl, _ = local.read_window(10, 50, 20, 70)
-        wr, _ = remote.read_window(10, 50, 20, 70)
-        assert np.array_equal(wl, wr)
-        assert all(rng for _p, rng in srv.requests), "full GET happened"
+        requests = geotiff.range_request_count()
+        _assert_refused(_refusal(f"{base}/dem.gpkg?sig=1"))
+        assert srv.requests == []
+        assert geotiff.range_request_count() == requests
     finally:
         srv.shutdown()
 
 
-def test_null_tile_data_reads_as_fill(tmp_path):
-    """Regression: NULL tile_data rows must read as the fill value, not
-    raise at window time (the pre-lazy reader skipped them)."""
-    import sqlite3
+def test_single_file_gpkg_dataset_says_why(tmp_path):
+    d = tmp_path / "gp"
+    d.mkdir()
+    (d / "dem.gpkg").write_bytes(b"SQLite format 3\x00" + bytes(4096))
+    with pytest.raises(config.ConfigError) as e:
+        config.dataset_from_config("g", path=str(d))
+    msg = str(e.value).replace(str(d / "dem.gpkg"), "")
+    assert msg.startswith("Unsupported filetype for ")
+    _assert_refused(msg)
 
-    import numpy as np
 
-    arr = np.full((128, 128), 500.0)
-    p = str(tmp_path / "dem.gpkg")
-    gpkg.write_gpkg(p, arr, x0=10.0, y0=1.0, sx=1 / 128, sy=1 / 128,
-                    epsg=4326, tile_size=64, scale=1.0, offset=0.0)
-    con = sqlite3.connect(p)
-    con.execute("UPDATE dem SET tile_data=NULL WHERE tile_row=1 AND"
-                " tile_column=1")
-    con.commit()
-    con.close()
-    r = open_raster(p)
-    win, _ = r.read_window(64, 128, 64, 128)
-    assert np.isnan(win).all()
-    win2, _ = r.read_window(0, 64, 0, 64)
-    assert (win2 == 500.0).all()
+def test_vrt_with_gpkg_child_refused_at_open(tmp_path):
+    """A VRT opens its children lazily, at the first read; a .gpkg child
+    is refused when the VRT itself is opened."""
+    child = str(tmp_path / "dem.gpkg")
+    with open(child, "wb") as f:
+        f.write(b"SQLite format 3\x00" + bytes(4096))
+    vrt = str(tmp_path / "m.vrt")
+    with open(vrt, "w") as f:
+        f.write(
+            '<VRTDataset rasterXSize="64" rasterYSize="64">'
+            "<SRS>EPSG:4326</SRS>"
+            "<GeoTransform>10.0, 0.01, 0, 1.0, 0, -0.01</GeoTransform>"
+            '<VRTRasterBand dataType="Float32" band="1"><SimpleSource>'
+            '<SourceFilename relativeToVRT="1">dem.gpkg</SourceFilename>'
+            "<SourceBand>1</SourceBand></SimpleSource>"
+            "</VRTRasterBand></VRTDataset>"
+        )
+    _assert_refused(_refusal(vrt, child))

@@ -3,7 +3,6 @@ read-back, and client-error exits."""
 
 from __future__ import annotations
 
-import glob
 import json
 import os
 
@@ -66,110 +65,12 @@ def test_bad_grid_is_client_error(tmp_path, capsys):
     assert res["status"] == "INVALID_REQUEST"
 
 
-def test_resample_cli(spark, srtm_cfg, tmp_path, capsys):
-    out = str(tmp_path / "ovr")
-    rc = job.main([
-        "--cores", "4", "resample", "--config", srtm_cfg,
-        "--dataset", "srtm90subset", "--out", out, "--factor", "8",
-    ])
-    assert rc == 0
-    res = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    assert res["status"] == "OK" and res["tiles"] == 2 and res["errors"] == 0
-    tifs = sorted(glob.glob(os.path.join(out, "ovr8_*.tif")))
-    assert len(tifs) == 2
-    r = geotiff.open_raster(tifs[0])
-    assert r.width == -(-1201 // 8) and r.height == -(-1201 // 8)
 
 
-def test_warp_cli(spark, srtm_cfg, tmp_path, capsys):
-    out = str(tmp_path / "utm")
-    rc = job.main([
-        "--cores", "4", "warp", "--config", srtm_cfg,
-        "--dataset", "srtm90subset", "--out", out,
-        "--dst-epsg", "32632", "--dst-res", "500", "--tile-px", "256",
-    ])
-    assert rc == 0
-    res = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    assert res["status"] == "OK" and res["errors"] == 0 and res["tiles"] >= 1
-    tifs = sorted(glob.glob(os.path.join(out, "warp_*.tif")))
-    assert len(tifs) == res["tiles"]
-    r = geotiff.open_raster(tifs[0])
-    assert r.crs.epsg == 32632 and r.res == (500.0, 500.0)
-    assert np.isfinite(r.read_block(0, r.height, 0, r.width)).any()
 
 
-def test_prep_cli_produces_servable_dataset(spark, srtm_cfg, tmp_path,
-                                            capsys):
-    """prep = the reference's documented dataset recipe in one command:
-    warp onto a tap-aligned grid, corner-named tiles with embedded COG
-    overviews, emitted serving config. The emitted config must LOAD and
-    resolve elevations that match the original dataset."""
-    from opentopodata_spark import config as cfg_mod
-    from opentopodata_spark import geotiff as gt
-    from opentopodata_spark.operators import elevation
-
-    out = str(tmp_path / "prep")
-    rc = job.main([
-        "--cores", "4", "prep", "--config", srtm_cfg,
-        "--dataset", "srtm90subset", "--out", out,
-        "--dst-res", str(1 / 1200), "--tile-px", "1200",
-        "--overviews", "8", "--vrt", "--name", "warped",
-    ])
-    assert rc == 0
-    res = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    assert res["status"] == "OK" and res["errors"] == 0
-    assert res["filename_tile_size"] == 1.0
-    # corner-named, servable, with embedded overviews
-    tile = os.path.join(out, "tiles", "N00E010.tif")
-    assert os.path.exists(tile)
-    r = gt.open_raster(tile)
-    assert len(r.overviews) == 1 and r.overviews[0].width == 150
-    assert cfg_mod.filename_to_tile_corner(tile) == (0, 10)
-    # the VRT mosaic opens
-    assert gt.open_raster(res["vrt"]).width >= 1200
-    # the emitted config serves elevations matching the source dataset
-    dsets = cfg_mod.load_datasets(res["config"])
-    ds_w = cfg_mod.resolve_dataset_names("warped", dsets)
-    ds_s = cfg_mod.resolve_dataset_names(
-        "srtm90subset", cfg_mod.load_datasets(srtm_cfg))
-    pts = spark.createDataFrame(
-        [(i, 0.15 + 0.07 * i, 10.2 + 0.15 * i) for i in range(10)],
-        "point_id long, lat double, lon double",
-    )
-    got = {
-        r_.point_id: r_.elevation
-        for r_ in elevation.ElevationResolver(spark, ds_w, "bilinear")
-        .resolve(pts).collect()
-    }
-    exp = {
-        r_.point_id: r_.elevation
-        for r_ in elevation.ElevationResolver(spark, ds_s, "bilinear")
-        .resolve(pts).collect()
-    }
-    for i in range(10):
-        assert got[i] == pytest.approx(exp[i], abs=2.0)
 
 
-def test_buildvrt_and_info_cli(srtm_cfg, tmp_path, capsys):
-    out = str(tmp_path / "srtm.vrt")
-    rc = job.main([
-        "buildvrt", "--config", srtm_cfg,
-        "--dataset", "srtm90subset", "--out", out,
-    ])
-    assert rc == 0
-    res = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    assert res["status"] == "OK" and res["sources"] == 2
-    assert res["width"] == 2401 and res["height"] == 1201  # 1-px overlap
-
-    rc = job.main(["info", "--raster", out])
-    assert rc == 0
-    info = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    assert info["status"] == "OK"
-    assert info["epsg"] == 4326 and info["width"] == 2401
-    assert info["dtype"] == "int16"
-    b = info["bounds"]
-    assert b[0] == pytest.approx(10.0 - 1 / 2400) \
-        and b[2] == pytest.approx(12.0 + 1 / 2400)
 
 
 def test_visibility_cli(spark, srtm_cfg, tmp_path, capsys):
@@ -222,59 +123,6 @@ def test_visibility_cli(spark, srtm_cfg, tmp_path, capsys):
     assert rc == 2
 
 
-def test_transcode_netcdf_to_geotiff(spark, tmp_path, capsys):
-    """netCDF3 tiles -> GeoTIFF via the transcode job: lossless values,
-    preserved stems/georeferencing, resumable."""
-    from opentopodata_spark import gridformats
-
-    src = tmp_path / "ncsrc"
-    src.mkdir()
-    side = 48
-    res = 1.0 / side
-    grids = {}
-    for lon0, stem in ((10.0, "N00E010"), (11.0, "N00E011")):
-        y, x = np.mgrid[0:side, 0:side]
-        g = (1500 + 900 * np.sin((x + lon0) / 7.0)
-             * np.cos(y / 11.0)).astype(np.int16)
-        grids[stem] = g
-        gridformats.write_netcdf(
-            str(src / f"{stem}.nc"), g,
-            lats=1.0 - (np.arange(side) + 0.5) * res,
-            lons=lon0 + (np.arange(side) + 0.5) * res)
-    out = str(tmp_path / "tif")
-    rc = job.main([
-        "--cores", "4", "transcode",
-        "--rasters", str(src / "*.nc"), "--out", out,
-    ])
-    assert rc == 0
-    r1 = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    assert r1["status"] == "OK" and r1["tiles"] == 2 and r1["errors"] == 0
-    for stem, g in grids.items():
-        t = geotiff.open_raster(os.path.join(out, f"{stem}.tif"))
-        assert np.array_equal(t.read_window(0, side, 0, side)[0], g)
-        assert t.crs.epsg == 4326 and abs(t.sx - res) < 1e-12
-    # resume: outputs untouched
-    mt = {p: os.path.getmtime(p)
-          for p in glob.glob(os.path.join(out, "*.tif"))}
-    rc = job.main([
-        "--cores", "4", "transcode",
-        "--rasters", str(src / "*.nc"), "--out", out, "--skip-existing",
-    ])
-    assert rc == 0
-    assert {p: os.path.getmtime(p)
-            for p in glob.glob(os.path.join(out, "*.tif"))} == mt
-    # the transcoded tiles resolve identically to the originals
-    from opentopodata_spark import config, oracle
-
-    lats = [0.05 + (i * 0.171) % 0.9 for i in range(25)]
-    lons = [10.05 + (i * 0.313) % 1.9 for i in range(25)]
-    ds_j = config.dataset_from_config("j", path=str(src) + "/",
-                                      filename_tile_size=1)
-    ds_t = config.dataset_from_config("t", path=out + "/",
-                                      filename_tile_size=1)
-    ej, _ = oracle.get_elevation(lats, lons, [ds_j], "bilinear")
-    et, _ = oracle.get_elevation(lats, lons, [ds_t], "bilinear")
-    assert ej == et
 
 
 def test_polygonize_cli(spark, tmp_path, capsys):

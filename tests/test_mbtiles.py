@@ -1,163 +1,24 @@
-"""MBTiles terrain reader/writer (mbtiles.py).
+"""MBTiles rasters are refused.
 
-The stdlib ``sqlite3`` module is a REAL SQLite build, so it serves as
-an independent oracle in both directions: databases our writer emits
-must parse with sqlite3, and databases sqlite3 writes (true SQLite
-page layout, both the ``tiles`` and the tippecanoe ``map``+``images``
-schemas) must read back through our pure-numpy B-tree walker.
+``open_raster`` refuses a ``.mbtiles`` by extension, local or remote,
+before any byte is read or fetched, with a RasterOpenError naming
+"MBTiles" and "convert to GeoTIFF".
 """
 
-import math
-import os
-import sqlite3
-import struct
+import socket
 
-import numpy as np
 import pytest
 
-from opentopodata_spark import config, mbtiles, png
+from opentopodata_spark import geotiff
 from opentopodata_spark.geotiff import RasterOpenError, open_raster
 
-ORIGIN = 20037508.342789244
 
-
-def _terrain(h, w, seed=5):
-    rng = np.random.default_rng(seed)
-    return rng.integers(-100, 4000, size=(h, w)).astype(np.float64)
-
-
-class TestRoundTrip:
-    def test_terrarium_integer_exact_and_holes(self, tmp_path):
-        z, c0, r0, ts = 10, 550, 335, 128
-        t = _terrain(2 * ts, 3 * ts)
-        p = str(tmp_path / "t.mbtiles")
-        mbtiles.write_mbtiles(p, t, zoom=z, min_col=c0, min_row=r0,
-                              encoding="terrarium", tile_px=ts,
-                              skip_tiles={(1, 2)})
-        r = open_raster(p)
-        assert (r.width, r.height) == (3 * ts, 2 * ts)
-        assert r.crs.epsg == 3857
-        span = 2 * ORIGIN / 2**z
-        assert r.x0 == pytest.approx(-ORIGIN + c0 * span)
-        assert r.y0 == pytest.approx(ORIGIN - r0 * span)
-        assert r.sx == pytest.approx(span / ts)
-        got = r.band
-        # terrarium encodes 1/256 m steps: integer metres are EXACT
-        assert np.array_equal(got[:ts, :ts],
-                              t[:ts, :ts].astype(np.float32))
-        hole = r.read_window(ts, 2 * ts, 2 * ts, 3 * ts)[0]
-        assert np.isnan(hole).all()
-
-    def test_terrain_rgb_decimetre_quantization(self, tmp_path):
-        t = _terrain(128, 128) + 0.37
-        p = str(tmp_path / "t.mbtiles")
-        mbtiles.write_mbtiles(p, t, zoom=8, min_col=100, min_row=90,
-                              encoding="terrain-rgb", tile_px=128)
-        r = open_raster(p)
-        assert np.abs(r.band - t).max() <= 0.0501
-
-    def test_written_db_parses_with_real_sqlite(self, tmp_path):
-        p = str(tmp_path / "t.mbtiles")
-        mbtiles.write_mbtiles(p, _terrain(128, 256), zoom=9, min_col=5,
-                              min_row=7, encoding="terrarium",
-                              tile_px=128)
-        con = sqlite3.connect(p)
-        meta = dict(con.execute(
-            "select name, value from metadata").fetchall())
-        assert meta["format"] == "png"
-        assert meta["encoding"] == "terrarium"
-        rows = con.execute(
-            "select zoom_level, tile_column, tile_row, tile_data"
-            " from tiles order by tile_column").fetchall()
-        con.close()
-        assert len(rows) == 2
-        n = 1 << 9
-        assert rows[0][:3] == (9, 5, n - 1 - 7)
-        assert png.is_png(rows[0][3][:16])
-
-
-class TestRealSqliteDbs:
-    """Databases written by the REAL sqlite3 library."""
-
-    def _tile_blob(self, value: float, ts: int = 64) -> bytes:
-        block = np.full((ts, ts), value)
-        return png.encode_png(
-            mbtiles._encode_elevation(block, "terrarium"))
-
-    def test_tiles_schema_and_zoom_selection(self, tmp_path):
-        p = str(tmp_path / "real.mbtiles")
-        con = sqlite3.connect(p)
-        con.execute("CREATE TABLE metadata (name TEXT, value TEXT)")
-        con.execute("CREATE TABLE tiles (zoom_level INTEGER, tile_column"
-                    " INTEGER, tile_row INTEGER, tile_data BLOB)")
-        con.executemany("INSERT INTO metadata VALUES (?, ?)",
-                        [("name", "x"), ("format", "png"),
-                         ("encoding", "terrarium")])
-        # two zooms: the reader must pick the finest (z=4)
-        for z, val in ((3, 100.0), (4, 250.0)):
-            n = 1 << z
-            con.execute("INSERT INTO tiles VALUES (?, ?, ?, ?)",
-                        (z, 2, n - 1 - 3, self._tile_blob(val)))
-        con.commit()
-        con.close()
-        r = open_raster(p)
-        assert r.width == r.height == 64
-        assert np.all(r.band == 250.0)
-        span = 2 * ORIGIN / 16
-        assert r.x0 == pytest.approx(-ORIGIN + 2 * span)
-        assert r.y0 == pytest.approx(ORIGIN - 3 * span)
-        r3 = mbtiles.open_mbtiles(p, zoom=3)
-        assert np.all(r3.band == 100.0)
-
-    def test_map_images_schema(self, tmp_path):
-        """tippecanoe/mb-util layout: 'tiles' is a VIEW (no B-tree);
-        the reader joins the map + images base tables."""
-        p = str(tmp_path / "dedup.mbtiles")
-        con = sqlite3.connect(p)
-        con.execute("CREATE TABLE metadata (name TEXT, value TEXT)")
-        con.execute("CREATE TABLE map (zoom_level INTEGER, tile_column"
-                    " INTEGER, tile_row INTEGER, tile_id TEXT)")
-        con.execute("CREATE TABLE images (tile_id TEXT, tile_data BLOB)")
-        con.execute("CREATE VIEW tiles AS SELECT map.zoom_level,"
-                    " map.tile_column, map.tile_row, images.tile_data"
-                    " FROM map JOIN images ON images.tile_id ="
-                    " map.tile_id")
-        con.executemany("INSERT INTO metadata VALUES (?, ?)",
-                        [("format", "png"), ("encoding", "terrarium")])
-        n = 1 << 5
-        # two map rows sharing one deduplicated image
-        con.execute("INSERT INTO images VALUES ('a', ?)",
-                    (self._tile_blob(77.0),))
-        for col in (10, 11):
-            con.execute("INSERT INTO map VALUES (5, ?, ?, 'a')",
-                        (col, n - 1 - 12))
-        con.commit()
-        con.close()
-        r = open_raster(p)
-        assert (r.width, r.height) == (128, 64)
-        assert np.all(r.band == 77.0)
-
-    def test_large_db_with_overflow_pages(self, tmp_path):
-        """Noisy 256-px tiles exceed one SQLite page: payloads span
-        overflow chains, which the shared gpkg walker must follow."""
-        p = str(tmp_path / "big.mbtiles")
-        con = sqlite3.connect(p)
-        con.execute("PRAGMA page_size = 1024")
-        con.execute("CREATE TABLE metadata (name TEXT, value TEXT)")
-        con.execute("CREATE TABLE tiles (zoom_level INTEGER, tile_column"
-                    " INTEGER, tile_row INTEGER, tile_data BLOB)")
-        con.executemany("INSERT INTO metadata VALUES (?, ?)",
-                        [("format", "png"), ("encoding", "terrarium")])
-        t = _terrain(256, 256, seed=11)
-        blob = png.encode_png(mbtiles._encode_elevation(t, "terrarium"))
-        assert len(blob) > 4096  # must overflow the 1 KiB pages
-        n = 1 << 6
-        con.execute("INSERT INTO tiles VALUES (6, 30, ?, ?)",
-                    (n - 1 - 20, blob))
-        con.commit()
-        con.close()
-        r = open_raster(p)
-        assert np.array_equal(r.band, t.astype(np.float32))
+def _refusal(path: str) -> str:
+    with pytest.raises(RasterOpenError) as e:
+        open_raster(path)
+    msg = str(e.value).replace(path, "")
+    assert "MBTiles is not supported" in msg and "convert to GeoTIFF" in msg
+    return msg
 
 
 class TestErrors:
@@ -165,169 +26,17 @@ class TestErrors:
         p = str(tmp_path / "x.mbtiles")
         with open(p, "wb") as f:
             f.write(b"GIF89a" + b"\x00" * 600)
-        with pytest.raises(RasterOpenError, match="SQLite"):
-            open_raster(p)
-
-    def test_missing_encoding_and_bad_format(self, tmp_path):
-        p = str(tmp_path / "t.mbtiles")
-        mbtiles.write_mbtiles(p, _terrain(64, 64), zoom=5, min_col=1,
-                              min_row=1, encoding="terrarium", tile_px=64)
-        con = sqlite3.connect(p)
-        con.execute("UPDATE metadata SET value='jpg' WHERE name='format'")
-        con.commit()
-        con.close()
-        with pytest.raises(RasterOpenError, match="format"):
-            open_raster(p)
-        con = sqlite3.connect(p)
-        con.execute("UPDATE metadata SET value='png' WHERE name='format'")
-        con.execute("DELETE FROM metadata WHERE name='encoding'")
-        con.commit()
-        con.close()
-        with pytest.raises(RasterOpenError, match="encoding"):
-            open_raster(p)
-        # explicit encoding arg recovers it
-        r = mbtiles.open_mbtiles(p, encoding="terrarium")
-        assert r.width == 64
-
-    def test_writer_validation(self, tmp_path):
-        with pytest.raises(ValueError, match="encoding"):
-            mbtiles.write_mbtiles(str(tmp_path / "x.mbtiles"),
-                                  np.zeros((64, 64)), zoom=3, min_col=0,
-                                  min_row=0, encoding="nope", tile_px=64)
-        with pytest.raises(ValueError, match="multiple"):
-            mbtiles.write_mbtiles(str(tmp_path / "x.mbtiles"),
-                                  np.zeros((65, 64)), zoom=3, min_col=0,
-                                  min_row=0, tile_px=64)
+        _refusal(p)
 
 
-def test_mbtiles_elevation_pipeline_and_remote(tmp_path, spark):
-    """The distributed resolver over an MBTiles terrain dataset equals
-    the sequential oracle and a GeoTIFF twin with the identical Web
-    Mercator geometry, locally AND served over HTTP (SQLite pages
-    range-read like GeoTIFF blocks)."""
-    from pyspark.sql import functions as F
+def test_remote_mbtiles_refused_without_connection(monkeypatch):
+    """Nothing listens on the discard port, and no socket may connect:
+    the refusal comes from the extension alone."""
 
-    from opentopodata_spark import geotiff, oracle
-    from opentopodata_spark.operators import elevation
-    from test_remote_raster import _serve
+    def no_connection(*_a, **_k):
+        raise AssertionError("open_raster tried to connect")
 
-    z, c0, r0, ts = 11, 1100, 671, 128
-    t = _terrain(2 * ts, 2 * ts, seed=3)
-    span = 2 * ORIGIN / 2**z
-    d_mbt = str(tmp_path / "mbt")
-    d_tif = str(tmp_path / "tif")
-    os.makedirs(d_mbt)
-    os.makedirs(d_tif)
-    mbtiles.write_mbtiles(os.path.join(d_mbt, "t.mbtiles"), t, zoom=z,
-                          min_col=c0, min_row=r0, encoding="terrarium",
-                          tile_px=ts)
-    geotiff.write_geotiff(
-        os.path.join(d_tif, "t.tif"), t.astype(np.float32),
-        x0=-ORIGIN + c0 * span, y0=ORIGIN - r0 * span,
-        sx=span / ts, sy=span / ts, epsg=3857, nodata=-9999)
-
-    # the tile block's lat/lon footprint
-    from opentopodata_spark import crs
-    lon_w = (-ORIGIN + c0 * span) / ORIGIN * 180.0
-    lon_e = (-ORIGIN + (c0 + 2) * span) / ORIGIN * 180.0
-    rng = np.random.default_rng(13)
-    lons = rng.uniform(lon_w + 0.01, lon_e - 0.01, 60)
-    y_n = ORIGIN - r0 * span
-    y_s = ORIGIN - (r0 + 2) * span
-    ys = rng.uniform(y_s * 0.995, y_n * 0.995, 60)
-    lats = np.degrees(2 * np.arctan(np.exp(ys / 6378137.0)) - math.pi / 2)
-
-    pts = spark.createDataFrame(
-        [(int(i), float(la), float(lo))
-         for i, (la, lo) in enumerate(zip(lats, lons))],
-        "point_id long, lat double, lon double",
-    )
-    results = {}
-    for key, d in (("mbt", d_mbt), ("tif", d_tif)):
-        ds = config.dataset_from_config(key, path=d)
-        out = elevation.ElevationResolver(spark, [ds], "bilinear").resolve(
-            pts)
-        results[key] = {r.point_id: r.elevation for r in out.collect()}
-    assert len(results["mbt"]) == 60
-    assert results["mbt"] == results["tif"]
-
-    ds = config.dataset_from_config("mbt", path=d_mbt)
-    exp, _ = oracle.get_elevation(lats, lons, [ds], "bilinear")
-    for i, ev in enumerate(exp):
-        assert results["mbt"][i] == ev
-
-    srv, base = _serve(d_mbt)
-    try:
-        local = open_raster(os.path.join(d_mbt, "t.mbtiles"))
-        remote = open_raster(f"{base}/t.mbtiles")
-        win_l, _ = local.read_window(10, 40, 20, 60)
-        win_r, _ = remote.read_window(10, 40, 20, 60)
-        assert np.array_equal(win_l, win_r)
-        # windowed: the byte ranges fetched stay well under the file
-        total = sum(
-            int(rng_.split("=", 1)[1].split("-")[1])
-            - int(rng_.split("=", 1)[1].split("-")[0].split("=")[-1]) + 1
-            for _p, rng_ in srv.requests if rng_)
-        assert all(rng_ for _p, rng_ in srv.requests), "full GET happened"
-    finally:
-        srv.shutdown()
-
-
-def test_open_is_lazy_no_blob_materialization(tmp_path, monkeypatch):
-    """Opening indexes tile keys via payload-PREFIX scans and fetches
-    blobs lazily by rowid: open performs exactly ONE row fetch (the
-    tile-size probe), a single-tile window exactly one more, and the
-    prefix scan never follows an overflow chain. A full-blob scan at
-    open — the planet-pyramid memory bomb — would show 16 fetches."""
-    from opentopodata_spark import gpkg
-    from opentopodata_spark.geotiff import clear_block_cache
-
-    t = _terrain(512, 512, seed=21)
-    p = str(tmp_path / "big.mbtiles")
-    mbtiles.write_mbtiles(p, t, zoom=11, min_col=100, min_row=100,
-                          encoding="terrarium", tile_px=128)
-    clear_block_cache()
-    fetches = []
-    real = gpkg._SQLite.row_by_rowid
-
-    def counting(self, root, rowid):
-        fetches.append(rowid)
-        return real(self, root, rowid)
-
-    monkeypatch.setattr(gpkg._SQLite, "row_by_rowid", counting)
-    r = mbtiles.open_mbtiles(p)
-    assert len(fetches) == 1, fetches  # the tile-size probe only
-    win, _ = r.read_window(200, 210, 200, 210)  # inside one tile
-    assert win.shape == (10, 10) and np.isfinite(win).all()
-    assert len(fetches) <= 2, fetches
-    band = r.band  # full read touches everything, once each
-    assert np.isfinite(band).all()
-    assert len(fetches) <= 1 + 16, fetches
-
-
-def test_null_tile_data_rows_read_as_holes(tmp_path):
-    """NULL tile_data placeholder rows (legal SQLite, written by some
-    tools) read back as NaN holes, including when one is the reader's
-    first size-probe candidate."""
-    p = str(tmp_path / "nulls.mbtiles")
-    con = sqlite3.connect(p)
-    con.execute("CREATE TABLE metadata (name TEXT, value TEXT)")
-    con.execute("CREATE TABLE tiles (zoom_level INTEGER, tile_column"
-                " INTEGER, tile_row INTEGER, tile_data BLOB)")
-    con.executemany("INSERT INTO metadata VALUES (?, ?)",
-                    [("format", "png"), ("encoding", "terrarium")])
-    n = 1 << 5
-    blob = png.encode_png(mbtiles._encode_elevation(
-        np.full((64, 64), 123.0), "terrarium"))
-    # NULL row FIRST so it is a probe candidate
-    con.execute("INSERT INTO tiles VALUES (5, 10, ?, NULL)", (n - 1 - 3,))
-    con.execute("INSERT INTO tiles VALUES (5, 11, ?, ?)",
-                (n - 1 - 3, blob))
-    con.commit()
-    con.close()
-    r = open_raster(p)
-    assert (r.width, r.height) == (128, 64)
-    band = r.band
-    left, right = band[:, :64], band[:, 64:]
-    assert np.isnan(left).all() or np.isnan(right).all()
-    assert np.nansum(band == 123.0) == 64 * 64
+    monkeypatch.setattr(socket, "create_connection", no_connection)
+    requests = geotiff.range_request_count()
+    _refusal("http://127.0.0.1:9/x.mbtiles")
+    assert geotiff.range_request_count() == requests

@@ -3,7 +3,6 @@
 The golden/differential suites pin known cases; these search the input
 space for violations of the invariants the engine depends on:
 
-* PNG: decode(encode(x)) == x for every supported shape/filter.
 * CRS: project -> unproject round-trips to < 1e-6 deg inside each
   projection's domain of validity (the reference delegates this
   contract to pyproj; we must earn it).
@@ -25,26 +24,7 @@ from hypothesis import assume as _assume  # noqa: E402
 from hypothesis import given, settings, strategies as st  # noqa: E402
 from hypothesis.extra.numpy import arrays  # noqa: E402
 
-from opentopodata_spark import crs, geodesic, png, utilmath  # noqa: E402
-
-
-# ---------------------------------------------------------------------------
-# PNG codec
-# ---------------------------------------------------------------------------
-
-@settings(max_examples=40, deadline=None)
-@given(
-    h=st.integers(1, 24),
-    w=st.integers(1, 24),
-    c=st.sampled_from([1, 2, 3, 4]),
-    filt=st.sampled_from([0, 1, 2, 3, 4, "mixed"]),
-    seed=st.integers(0, 2**31 - 1),
-)
-def test_png_round_trip_property(h, w, c, filt, seed):
-    arr = np.random.default_rng(seed).integers(0, 256, (h, w, c)).astype(np.uint8)
-    back = png.decode_png(png.encode_png(arr, filter_type=filt))
-    assert back.shape == arr.shape
-    np.testing.assert_array_equal(back, arr)
+from opentopodata_spark import crs, geodesic, utilmath  # noqa: E402
 
 
 # ---------------------------------------------------------------------------
@@ -146,29 +126,6 @@ def test_path_sampling_endpoints_exact(lats, n):
 # ---------------------------------------------------------------------------
 
 @given(
-    h=st.integers(1, 40), w=st.integers(1, 40), k=st.integers(1, 9),
-    seed=st.integers(0, 2**31 - 1),
-)
-@settings(max_examples=60, deadline=None)
-def test_block_reduce_properties(h, w, k, seed):
-    from opentopodata_spark.operators import resample
-
-    rng = np.random.default_rng(seed)
-    arr = rng.normal(0.0, 100.0, (h, w))
-    out = resample.block_reduce(arr, k, "average")
-    assert out.shape == (-(-h // k), -(-w // k))
-    # global mean is preserved under full-block-only inputs
-    if h % k == 0 and w % k == 0:
-        assert out.mean() == pytest.approx(arr.mean(), rel=1e-12)
-    # every output is within the range of its block
-    assert np.nanmin(out) >= arr.min() - 1e-9
-    assert np.nanmax(out) <= arr.max() + 1e-9
-    # nearest is a pure subsample
-    nearest = resample.block_reduce(arr, k, "nearest")
-    assert np.array_equal(nearest, arr[::k, ::k])
-
-
-@given(
     lat=st.floats(-89.0, 89.0), lon=st.floats(-179.0, 179.0),
     n=st.integers(3, 10), r=st.floats(0.1, 5.0),
     seed=st.integers(0, 2**31 - 1),
@@ -214,32 +171,6 @@ def test_dted_roundtrip_property(grid):
         dted.write_dted(p, full, lat0=0.0, lon0=10.0)
         r = open_raster(p)
         assert np.array_equal(r.band, full)
-
-
-@given(
-    arrays(
-        np.float64,
-        (4, 4),
-        elements=st.floats(min_value=-9999.0, max_value=9000.0,
-                           allow_nan=False),  # terrain-rgb floor: -10 km
-    ),
-    st.sampled_from(["terrarium", "terrain-rgb"]),
-)
-@settings(max_examples=60, deadline=None)
-def test_terrain_encoding_quantization_property(block, encoding):
-    """decode(encode(x)) is within the encoding's quantum everywhere:
-    1/256 m for terrarium, 0.1 m for terrain-rgb; integers are EXACT
-    under terrarium."""
-    from opentopodata_spark import mbtiles
-
-    rgb = mbtiles._encode_elevation(block, encoding)
-    dec = mbtiles._decode_elevation(rgb, encoding)
-    q = (1.0 / 256.0) if encoding == "terrarium" else 0.1
-    assert np.abs(dec - block).max() <= q / 2 + 1e-4
-    ints = np.round(block)
-    dec_i = mbtiles._decode_elevation(
-        mbtiles._encode_elevation(ints, "terrarium"), "terrarium")
-    assert np.array_equal(dec_i, ints.astype(np.float32))
 
 
 # ---------------------------------------------------------------------------
