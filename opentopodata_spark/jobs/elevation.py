@@ -11,7 +11,8 @@ Pipeline (SURVEY.md §3): parquet/Iceberg scan of interleaved text+media
 documents -> single-pass coordinate extraction (P1/P2) -> distributed
 elevation resolution (J1-J4, S1-S9) -> optional bucket-granular lineage
 checkpointing for resume (SNK5) -> parquet / JSON / GeoJSON sink
-(SNK1/SNK2).
+(SNK1/SNK2). ``stream_documents`` + ``run_elevation_stream`` are the
+streaming twin: the same plan per micro-batch over arriving files.
 
 Example:
 
@@ -141,6 +142,73 @@ def run(argv: list[str] | None = None) -> dict:
         }
     )
     return stats
+
+
+# ---------------------------------------------------------------------------
+# streaming twin: continuous documents -> elevations
+# ---------------------------------------------------------------------------
+#
+# New document files land in a directory; each micro-batch runs the SAME
+# extraction + resolver plan as ``run`` via ``foreachBatch`` (batch
+# operators, so the full batch planner applies). Exactly-once: the
+# streaming checkpoint dedupes micro-batches across restarts, and each
+# micro-batch overwrites its own ``ingest_batch=<id>`` partition, so a
+# retry after a partial write replaces its own output. Tested in
+# tests/test_streaming.py, including a restart with no new files and a
+# partial-write retry.
+
+DOCUMENTS_DDL = (
+    "doc_id string, spans array<struct<"
+    "kind:string,text:string,media_ref:string,offset:int>>"
+)
+
+
+def stream_documents(spark, path: str, max_files_per_trigger: int | None = None):
+    """Streaming scan of a documents directory (parquet files arriving).
+    ``maxFilesPerTrigger`` trades ingest latency against shuffle size."""
+    reader = spark.readStream.schema(DOCUMENTS_DDL)
+    if max_files_per_trigger is not None:
+        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
+    return reader.parquet(path)
+
+
+def run_elevation_stream(
+    resolver,
+    documents_stream,
+    out_dir: str,
+    checkpoint_dir: str,
+    available_now: bool = True,
+):
+    """documents stream -> extraction -> resolver -> parquet, exactly-once.
+
+    Returns the started StreamingQuery; callers ``awaitTermination()``.
+    ``available_now=True`` drains everything currently in the directory
+    then stops (the batch-catchup trigger); False runs continuously.
+    """
+
+    def process_batch(batch_df, batch_id: int) -> None:
+        pts = _extract.with_point_id(_extract.extract_points(batch_df)).where(
+            F.col("loc_error").isNull()
+        )
+        resolved = resolver.resolve(pts, carry=("doc_id", "span_pos", "point_pos"))
+        # each micro-batch owns ingest_batch=<id> and OVERWRITES it: a
+        # plain append would duplicate rows when a batch retries
+        (
+            resolved.select(
+                "doc_id", "span_pos", "point_pos", "lat", "lon",
+                "elevation", "dataset",
+            )
+            .write.mode("overwrite")
+            .parquet(f"{out_dir}/ingest_batch={batch_id}")
+        )
+
+    writer = (
+        documents_stream.writeStream.foreachBatch(process_batch)
+        .option("checkpointLocation", checkpoint_dir)
+    )
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
 
 
 def main(argv: list[str] | None = None) -> int:

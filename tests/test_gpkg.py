@@ -4,8 +4,8 @@ and the refusal of GeoPackage rasters.
 ``open_raster`` refuses a ``.gpkg`` by extension, local or remote,
 before any byte is read or fetched, with a RasterOpenError naming
 "GeoPackage raster" and "convert to GeoTIFF"; a single-file dataset
-carries that reason in its ConfigError, and a VRT naming a ``.gpkg``
-child is refused at open. The walker and writer tests round-trip a
+carries that reason in its ConfigError, a VRT naming a ``.gpkg`` child
+is refused at open, and so is a valid feature-only GeoPackage. The walker and writer tests round-trip a
 multi-page table through stdlib sqlite3 and read a hand-crafted database
 whose one row spills across an overflow-page chain.
 """
@@ -128,6 +128,20 @@ class TestSqliteStructure:
         p = str(tmp_path / "x.gpkg")
         with open(p, "wb") as f:
             f.write(b"not a database at all" * 10)
+        _assert_refused(_refusal(p))
+
+    def test_no_raster_content_is_loud(self, tmp_path):
+        """A valid GeoPackage holding only a feature layer (the kind
+        vector.py writes and reads) is refused as a raster too."""
+        from opentopodata_spark.vector import load_features, write_gpkg_features
+
+        p = str(tmp_path / "d.gpkg")
+        fc = {"type": "FeatureCollection", "features": [{
+            "type": "Feature", "id": 1, "properties": {"name": "a"},
+            "geometry": {"type": "Point", "coordinates": [10.5, 0.5]},
+        }]}
+        write_gpkg_features(p, fc, layer="pts")
+        assert len(load_features(p)["features"]) == 1
         _assert_refused(_refusal(p))
 
 

@@ -1,9 +1,9 @@
 """Structured Streaming ingestion: incremental correctness + exactly-once.
 
-The documents stream must produce EXACTLY the rows the batch pipeline
-produces for the same files, across micro-batches, and a restart with no
-new files must write nothing (checkpointed exactly-once). The tile-arrival
-stream must build each overview tile once, however often it is listed."""
+The documents stream (the elevation job's streaming twin) must produce
+EXACTLY the rows the batch pipeline produces for the same files, across
+micro-batches, and a restart with no new files must write nothing
+(checkpointed exactly-once)."""
 
 import os
 import shutil
@@ -11,7 +11,8 @@ import shutil
 import pytest
 from pyspark.sql import functions as F
 
-from opentopodata_spark import config, streaming
+from opentopodata_spark import config
+from opentopodata_spark.jobs import elevation as job
 from opentopodata_spark.operators import elevation, extract
 
 
@@ -24,7 +25,7 @@ def stream_dirs(tmp_path, documents_path, spark):
     os.makedirs(inbox)
     staging = str(tmp_path / "staging")
     for name, chunk in (("a", docs[:half]), ("b", docs[half:])):
-        spark.createDataFrame(chunk, streaming.DOCUMENTS_DDL).coalesce(
+        spark.createDataFrame(chunk, job.DOCUMENTS_DDL).coalesce(
             1
         ).write.parquet(f"{staging}/{name}")
     return inbox, staging, str(tmp_path / "out"), str(tmp_path / "ckpt")
@@ -38,8 +39,8 @@ def _arrive(staging, inbox, name):
 
 
 def _drain(resolver, spark, inbox, out, ckpt):
-    q = streaming.run_elevation_stream(
-        resolver, streaming.stream_documents(spark, inbox), out, ckpt
+    q = job.run_elevation_stream(
+        resolver, job.stream_documents(spark, inbox), out, ckpt
     )
     q.awaitTermination()
 
@@ -125,52 +126,3 @@ class TestElevationStream:
         finally:
             spark.conf.set(cache_key, "true")
 
-
-def test_overview_stream_idempotent(spark, raster_root, tmp_path):
-    """Tile-arrival stream -> overview tiles: wave 2 builds only the new
-    tile; a re-listed wave-1 tile is skipped (sink idempotency), never
-    recomputed or duplicated."""
-    import glob as _glob
-    import json as _json
-
-    from opentopodata_spark import streaming as st
-
-    srtm = sorted(_glob.glob(
-        os.path.join(raster_root, "test-srtm90m-subset", "*.tif")
-    ))
-    man_dir = tmp_path / "manifests"
-    man_dir.mkdir()
-    out_dir = str(tmp_path / "ovr")
-    ckpt = str(tmp_path / "ckpt")
-
-    def emit(name, rows):
-        with open(man_dir / name, "w") as f:
-            for iy, ix, p in rows:
-                f.write(_json.dumps(
-                    {"tile_iy": iy, "tile_ix": ix, "path": p}) + "\n")
-
-    emit("wave1.json", [(0, 10, srtm[0])])
-    q = st.run_overview_stream(
-        spark, st.stream_tile_manifests(spark, str(man_dir)),
-        out_dir, ckpt, factor=8,
-    )
-    q.awaitTermination()
-    tiles1 = sorted(_glob.glob(os.path.join(out_dir, "ovr8_*.tif")))
-    assert len(tiles1) == 1
-    mtime1 = os.path.getmtime(tiles1[0])
-
-    # wave 2: one genuinely new tile + a re-listing of the wave-1 tile
-    emit("wave2.json", [(0, 11, srtm[1]), (0, 10, srtm[0])])
-    q = st.run_overview_stream(
-        spark, st.stream_tile_manifests(spark, str(man_dir)),
-        out_dir, ckpt, factor=8,
-    )
-    q.awaitTermination()
-    tiles2 = sorted(_glob.glob(os.path.join(out_dir, "ovr8_*.tif")))
-    assert len(tiles2) == 2
-    assert os.path.getmtime(tiles1[0]) == mtime1  # untouched, not rebuilt
-    # per-batch manifests are complete even for the skipped tile
-    m = spark.read.parquet(os.path.join(out_dir, "_manifest"))
-    rows = {(r["tile_iy"], r["tile_ix"]): r for r in m.collect()}
-    assert set(rows) == {(0, 10), (0, 11)}
-    assert all(r["error"] is None and r["n_valid"] > 0 for r in rows.values())
