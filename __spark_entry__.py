@@ -1767,7 +1767,7 @@ def _build_elevation_oracle(sf_dir: str):
     )
 
 
-_FORMAT_FMTS = ("tif", "asc", "bil", "nc", "nc4", "vrt", "dt0")
+_FORMAT_FMTS = ("tif", "asc", "bil", "vrt")
 
 
 def _formats_fixture_dir() -> str:
@@ -1776,7 +1776,7 @@ def _formats_fixture_dir() -> str:
     and remote-IO contract queries. Idempotent via a .complete marker."""
     import numpy as np
 
-    from opentopodata_spark import fixtures, geotiff, hdf5
+    from opentopodata_spark import fixtures, geotiff
     from opentopodata_spark import gridformats as gf
 
     root = os.path.join(_fixture_root(), "formats_r4e")
@@ -1811,32 +1811,6 @@ def _formats_fixture_dir() -> str:
             elif fmt == "bil":
                 gf.write_bil(p, grid, x0=lon0, y0=1.0, sx=res,
                              nodata=-32768, wkt=wgs84_wkt)
-            elif fmt == "nc":
-                gf.write_netcdf(
-                    p, grid,
-                    lats=1.0 - (np.arange(side) + 0.5) * res,
-                    lons=lon0 + (np.arange(side) + 0.5) * res,
-                    nodata=-32768,
-                )
-            elif fmt == "nc4":
-                hdf5.write_netcdf4(p, grid, x0=lon0, y0=1.0, sx=res,
-                                   sy=res, nodata=-32768,
-                                   compression="deflate", shuffle=True,
-                                   chunk=(32, 32))
-            elif fmt == "dt0":
-                # DTED is POINT-registered on a 121-lattice (30 arcsec,
-                # level 0), so it carries its own grid sampled at the
-                # lattice points and verifies against its own
-                # sequential twin, like vrt
-                from opentopodata_spark import dted
-
-                n = 121
-                dres = 1.0 / (n - 1)
-                dlats = (np.arange(n) * dres)[::-1]
-                dlons = lon0 + np.arange(n) * dres
-                dgrid = np.round(fixtures.terrain_wgs84(
-                    dlats[:, None], dlons[None, :])).astype(np.int16)
-                dted.write_dted(p, dgrid, lat0=0.0, lon0=lon0)
         if fmt == "vrt":
             body = []
             for i, stem in enumerate(sorted(tiles)):
@@ -1884,17 +1858,14 @@ def _format_dataset(fmt: str):
 
 def q_raster_formats(spark, sf_dir):
     """Cross-format differential as a CONTRACT query: the same two-tile
-    terrain written as GeoTIFF / Esri ASCII / BIL / netCDF3 / netCDF4
-    (HDF5, deflate+shuffle) / VRT mosaic / DTED level 0 (MIL-PRF-89020B
-    signed-magnitude records, point-registered lattice), resolved
-    through the distributed pipeline: the seven raster formats the
+    terrain written as GeoTIFF / Esri ASCII / BIL / VRT mosaic, resolved
+    through the distributed pipeline: the four raster formats the
     engine reads. Every format must produce the same elevations as its
     single-process sequential twin; the same-geometry integer formats
-    (tif/asc/bil/nc/nc4) must also agree with each other bit-for-bit
-    (asserted inside the oracle build). The VRT is ONE mosaic (seam
-    points see true cross-tile neighbors, not tile-edge clamps) and
-    DTED carries its own grid, so those two verify against their own
-    sequential twins only."""
+    (tif/asc/bil) must also agree with each other bit-for-bit (asserted
+    inside the oracle build). The VRT is ONE mosaic (seam points see
+    true cross-tile neighbors, not tile-edge clamps), so it verifies
+    against its own sequential twin only."""
     from opentopodata_spark.operators import elevation
 
     _ship_package(spark)
@@ -1929,7 +1900,7 @@ def _build_raster_formats_oracle(sf_dir: str):
             lats, lons, [_format_dataset(fmt)], "bilinear")
         if fmt == "tif":
             base = elev
-        elif fmt in ("asc", "bil", "nc", "nc4"):
+        elif fmt in ("asc", "bil"):
             # same-geometry integer formats must agree with the GeoTIFF
             # exactly — a failed assert fails the oracle build loudly.
             # (vrt is ONE mosaic, so seam points interpolate true

@@ -530,10 +530,8 @@ class _ByteSource:
 # process-wide cache (one cache per Python worker = the executor-side
 # raster cache); misses coalesce adjacent chunks into one Range request.
 
-_RANGE_CHUNK = int(float(os.environ.get("OTDS_RANGE_CHUNK_KB", "256")) * 1024)
-_RANGE_CACHE_BYTES = int(
-    float(os.environ.get("OTDS_RANGE_CACHE_MB", "128")) * 2**20
-)
+_RANGE_CHUNK = 256 * 1024
+_RANGE_CACHE_BYTES = 128 * 2**20
 _range_cache: OrderedDict[tuple, bytes] = OrderedDict()
 _range_cache_used = 0
 _range_cache_lock = threading.Lock()
@@ -1342,6 +1340,13 @@ _REFUSED_FORMATS = {
     ".j2k": "JPEG 2000",
     ".gpkg": "GeoPackage raster",
     ".mbtiles": "MBTiles",
+    ".nc": "netCDF",
+    ".nc4": "netCDF",
+    ".h5": "HDF5",
+    ".hdf5": "HDF5",
+    ".dt0": "DTED",
+    ".dt1": "DTED",
+    ".dt2": "DTED",
 }
 
 
@@ -1358,7 +1363,7 @@ def _refuse_format(path: str) -> None:
 
 def open_raster(path: str) -> Raster:
     """Open a GeoTIFF, SRTM .hgt, Esri ASCII grid (.asc), gridded XYZ
-    (.xyz), Esri BIL (.bil + .hdr), netCDF3 classic (.nc), or a
+    (.xyz), Esri BIL (.bil + .hdr), GDAL VRT mosaic (.vrt), or a
     .zip/.gz container of one (the GDAL /vsizip/ and /vsigzip/ cases
     real DEM mirrors distribute). The extra grid formats live in
     gridformats.py; all return the same Raster, so callers are
@@ -1371,10 +1376,10 @@ def open_raster(path: str) -> Raster:
     internal random access worth ranging into).
 
     The formats in _REFUSED_FORMATS (JPEG 2000, GeoPackage raster,
-    MBTiles) are refused with a RasterOpenError by extension, local or
-    remote, before any byte is read or fetched; so are the children of a
-    .vrt that name one. JPEG-compressed TIFFs (compression 6/7) are
-    refused when the IFD is read."""
+    MBTiles, netCDF, HDF5, DTED) are refused with a RasterOpenError by
+    extension, local or remote, before any byte is read or fetched; so
+    are the children of a .vrt that name one. JPEG-compressed TIFFs
+    (compression 6/7) are refused when the IFD is read."""
     _refuse_format(path)
     if path.startswith(("http://", "https://")):
         return _open_remote(path)
@@ -1411,32 +1416,12 @@ def open_raster(path: str) -> Raster:
         for src in vrt._blocks.sources:  # children open lazily, at read
             _refuse_format(src["filename"])
         return vrt
-    if lower.endswith((".nc", ".nc4")):
-        # netCDF comes in two wire formats: classic (magic 'CDF') and
-        # netCDF4 = HDF5 (magic \x89HDF) — sniff, don't trust the name
-        with open(path, "rb") as f:
-            magic = f.read(8)
-        if magic[:4] == b"\x89HDF":
-            from . import hdf5
-
-            return hdf5.open_netcdf4(path)
-        from . import gridformats
-
-        return gridformats.open_netcdf(path)
-    if lower.endswith((".h5", ".hdf5")):
-        from . import hdf5
-
-        return hdf5.open_netcdf4(path)
     if lower.endswith(".zip"):
         return _open_zip(path)
     if lower.endswith(".gz"):
         return _open_gz(path)
     if lower.endswith(".hgt"):
         return _open_hgt(path)
-    if lower.endswith((".dt0", ".dt1", ".dt2")):
-        from . import dted
-
-        return dted.open_dted(path)
     return _open_tiff(_ByteSource(path))
 
 
@@ -1492,27 +1477,6 @@ def _open_remote(url: str) -> Raster:
         if inner.endswith(".hgt"):
             return _hgt_from_bytes(url, buf, inner)
         return _open_tiff(_ByteSource(url, buf=buf))
-    if lower.endswith((".nc", ".nc4", ".h5", ".hdf5")):
-        # netCDF4 = HDF5: the reader runs on the _ByteSource interface,
-        # so chunked variables read windowed over HTTP like GeoTIFF does.
-        # netCDF3 (magic 'CDF') has a memmap-based local reader only.
-        src = _RangeByteSource(url)
-        magic = src.read_at(0, 8)
-        if magic[:4] == b"\x89HDF":
-            from . import hdf5
-
-            return hdf5.open_netcdf4(url, source=src)
-        raise RasterOpenError(
-            f"'{url}': remote netCDF must be netCDF4/HDF5 (classic netCDF3"
-            " has no random access worth ranging into — convert, or serve"
-            " GeoTIFF)"
-        )
-    if lower.endswith((".dt0", ".dt1", ".dt2")):
-        # whole-object fetch: DTED's column-major signed-magnitude
-        # records have no useful row-range access, and a cell is <=25 MB
-        from . import dted
-
-        return dted.open_dted_bytes(url, _fetch_url(url))
     if lower.endswith(".zip"):
         import io
 

@@ -52,6 +52,13 @@ class _SQLite:
             raise GpkgError(f"'{source.path}' is not a SQLite database")
         ps = struct.unpack(">H", head[16:18])[0]
         self.page_size = 65536 if ps == 1 else ps
+        if not 512 <= self.page_size <= 65536 or (
+            self.page_size & (self.page_size - 1)
+        ):
+            raise GpkgError(
+                f"'{source.path}': bad SQLite page size {ps} (not a power"
+                " of two in 512..65536)"
+            )
         self.reserved = head[20]
         self.usable = self.page_size - self.reserved
         enc = struct.unpack(">I", head[56:60])[0]

@@ -1,9 +1,9 @@
-"""Esri ASCII grid, gridded XYZ, Esri BIL/EHdr, and netCDF3-classic
-raster readers.
+"""Esri ASCII grid, gridded XYZ, Esri BIL/EHdr raster readers, and GDAL
+VRT mosaics over any of the engine's formats.
 
-The reference opens these through rasterio/GDAL (AAIGrid, EHdr and
-netCDF drivers — /root/reference/opentopodata/backend.py:89 just calls
-``rasterio.open``); this sandbox has no GDAL, so the engine ships
+The reference opens these through rasterio/GDAL (AAIGrid, XYZ, EHdr and
+VRT drivers — /root/reference/opentopodata/backend.py:89 just calls
+``rasterio.open``); the engine does not depend on GDAL, so it ships
 minimal pure-numpy readers implementing the public format specs:
 
 * **Esri ASCII grid** (``.asc``/``.agr``, GDAL AAIGrid): text header
@@ -16,28 +16,20 @@ minimal pure-numpy readers implementing the public format specs:
   binary with a key/value text header. ULXMAP/ULYMAP are the CENTER of
   the upper-left pixel (GDAL frmts/raw/ehdrdataset.cpp semantics), so
   the affine origin is offset by half a cell.
-* **netCDF3 classic / 64-bit-offset** (``.nc`` magics ``CDF\\x01`` /
-  ``CDF\\x02``): the self-describing binary format per the public
-  NetCDF classic-format spec. The reader picks the 2-D data variable,
-  georeferences from its 1-D coordinate variables (cell-center
-  convention, uniform spacing enforced), honors ``_FillValue`` /
-  ``missing_value`` as nodata, and applies ``scale_factor``/
-  ``add_offset`` when present. ETOPO1-style global DEMs ship in exactly
-  this layout.
 
-All three return the same :class:`opentopodata_spark.geotiff.Raster`
-the GeoTIFF/HGT paths produce, so every downstream operator (windowed
-interpolation, bounds predicates, terrain stencils, overview builds) is
-format-agnostic.
+netCDF (classic and netCDF4/HDF5) is not read: ``geotiff.open_raster``
+refuses ``.nc``/``.nc4`` by extension (convert to GeoTIFF).
 
-Scale shape: BIL and netCDF are fixed-stride binary, so reads
-memory-map — a 4x4 interpolation window touches only the OS pages it
-needs, the same property the uncompressed-GeoTIFF path has, and decoded
-data is never duplicated per task. South-up netCDF grids (ascending
-latitude coordinate) are exposed through a flipped *view* of the memmap
-(still lazy). ASCII grid is text with no fixed row stride, so it parses
-once at open into an in-memory array: .asc tiles are small in practice
-(the format predates tiling) and the parse is one vectorized
+All return the same :class:`opentopodata_spark.geotiff.Raster` the
+GeoTIFF/HGT paths produce, so windowed interpolation and bounds
+predicates are format-agnostic.
+
+Scale shape: BIL is fixed-stride binary, so reads memory-map — a 4x4
+interpolation window touches only the OS pages it needs, the same
+property the uncompressed-GeoTIFF path has, and decoded data is never
+duplicated per task. ASCII grid is text with no fixed row stride, so it
+parses once at open into an in-memory array: .asc tiles are small in
+practice (the format predates tiling) and the parse is one vectorized
 ``np.fromstring``; anything 100 TB-scale should be (and in the wild is)
 GeoTIFF.
 """
@@ -47,7 +39,6 @@ from __future__ import annotations
 import gzip
 import os
 import re
-import struct
 
 import numpy as np
 
@@ -56,11 +47,9 @@ from .geotiff import CRSInfo, Raster, RasterOpenError
 __all__ = [
     "open_ascii_grid",
     "open_bil",
-    "open_netcdf",
     "open_xyz",
     "write_ascii_grid",
     "write_bil",
-    "write_netcdf",
     "write_xyz",
 ]
 
@@ -456,337 +445,6 @@ def write_bil(
     if wkt is not None:
         with open(os.path.splitext(path)[0] + ".prj", "w") as f:
             f.write(wkt)
-
-
-# ---------------------------------------------------------------------------
-# netCDF3 classic (+ 64-bit offset variant)
-# ---------------------------------------------------------------------------
-
-_NC_BYTE, _NC_CHAR, _NC_SHORT, _NC_INT, _NC_FLOAT, _NC_DOUBLE = 1, 2, 3, 4, 5, 6
-_NC_DIMENSION, _NC_VARIABLE, _NC_ATTRIBUTE = 0x0A, 0x0B, 0x0C
-_NC_DTYPES = {
-    _NC_BYTE: ">i1", _NC_CHAR: "S1", _NC_SHORT: ">i2",
-    _NC_INT: ">i4", _NC_FLOAT: ">f4", _NC_DOUBLE: ">f8",
-}
-# candidate names for the elevation variable, in preference order
-_NC_DATA_NAMES = ("z", "elevation", "band1", "topo", "height", "dem", "data")
-_NC_LAT_NAMES = ("lat", "latitude", "y")
-_NC_LON_NAMES = ("lon", "longitude", "x")
-
-
-class _NCParser:
-    """Header parser for the public netCDF classic-format spec."""
-
-    def __init__(self, buf: bytes, path: str):
-        self.buf = buf
-        self.path = path
-        self.pos = 0
-
-    def fail(self, msg: str):
-        raise RasterOpenError(f"'{self.path}': {msg}")
-
-    def u4(self) -> int:
-        v = struct.unpack_from(">I", self.buf, self.pos)[0]
-        self.pos += 4
-        return v
-
-    def u8(self) -> int:
-        v = struct.unpack_from(">Q", self.buf, self.pos)[0]
-        self.pos += 8
-        return v
-
-    def name(self) -> str:
-        n = self.u4()
-        s = self.buf[self.pos:self.pos + n].decode("utf-8", errors="replace")
-        self.pos += n + (-n % 4)  # names pad to 4-byte boundaries
-        return s
-
-    def values(self, nc_type: int, count: int):
-        dt = np.dtype(_NC_DTYPES[nc_type])
-        nbytes = dt.itemsize * count
-        vals = np.frombuffer(self.buf, dtype=dt, count=count, offset=self.pos)
-        self.pos += nbytes + (-nbytes % 4)
-        if nc_type == _NC_CHAR:
-            return vals.tobytes().decode("utf-8", errors="replace")
-        return vals
-
-    def att_list(self) -> dict:
-        tag = self.u4()
-        n = self.u4()
-        if tag == 0 and n == 0:
-            return {}
-        if tag != _NC_ATTRIBUTE:
-            self.fail(f"bad attribute list tag {tag}")
-        out = {}
-        for _ in range(n):
-            nm = self.name()
-            t = self.u4()
-            cnt = self.u4()
-            out[nm] = self.values(t, cnt)
-        return out
-
-
-def _nc_parse(buf: bytes, path: str):
-    """-> (dims: list[(name, length)], gatts, vars:
-    list[(name, dimids, atts, nc_type, vsize, begin)])"""
-    p = _NCParser(buf, path)
-    if buf[:3] != b"CDF":
-        p.fail("not a netCDF classic file")
-    version = buf[3]
-    if version not in (1, 2):
-        p.fail(f"unsupported netCDF version byte {version} (netCDF-4/HDF5 "
-               "files need the HDF5 library; re-export as classic)")
-    p.pos = 4
-    p.u4()  # numrecs (or STREAMING sentinel) — record vars are rejected below
-    tag = p.u4()
-    n = p.u4()
-    dims: list[tuple[str, int]] = []
-    if tag == _NC_DIMENSION:
-        for _ in range(n):
-            dims.append((p.name(), p.u4()))
-    elif not (tag == 0 and n == 0):
-        p.fail(f"bad dimension list tag {tag}")
-    gatts = p.att_list()
-    tag = p.u4()
-    n = p.u4()
-    vars_: list[tuple[str, tuple[int, ...], dict, int, int, int]] = []
-    if tag == _NC_VARIABLE:
-        for _ in range(n):
-            nm = p.name()
-            ndims = p.u4()
-            dimids = tuple(p.u4() for _ in range(ndims))
-            atts = p.att_list()
-            nc_type = p.u4()
-            vsize = p.u4()
-            begin = p.u8() if version == 2 else p.u4()
-            vars_.append((nm, dimids, atts, nc_type, vsize, begin))
-    elif not (tag == 0 and n == 0):
-        p.fail(f"bad variable list tag {tag}")
-    return dims, gatts, vars_
-
-
-def _nc_scalar(v) -> float:
-    if isinstance(v, str):
-        return float(v)
-    return float(np.asarray(v).ravel()[0])
-
-
-def open_netcdf(path: str) -> Raster:
-    """Open a netCDF3-classic (or 64-bit-offset) 2-D grid as a Raster.
-
-    The data variable is the preferred-name 2-D variable (z/elevation/
-    Band1/...), else the unique 2-D non-coordinate variable. Its two
-    dimensions must have 1-D coordinate variables with uniform spacing;
-    coordinates are cell CENTERS (CF convention), so the affine origin
-    is offset half a cell. Ascending-latitude (south-up) grids are
-    exposed through a flipped lazy view. Record (unlimited-dimension)
-    data variables are rejected loudly — a DEM tile has no time axis."""
-    with open(path, "rb") as f:
-        head = f.read(max(65536, 8192))
-    # the header is almost always < 64 KiB; re-read bigger if the
-    # variable list ran past the buffer
-    dims = gatts = vars_ = None
-    for size in (len(head), 1 << 20, 1 << 24):
-        if size == len(head):
-            buf = head
-        else:
-            with open(path, "rb") as f:
-                buf = f.read(size)
-        try:
-            dims, gatts, vars_ = _nc_parse(buf, path)
-            break
-        except (struct.error, IndexError):
-            continue
-    if vars_ is None:
-        raise RasterOpenError(f"'{path}': unparseable netCDF header")
-
-    dim_names = [d[0] for d in dims]
-    coord_vars = {v[0]: v for v in vars_ if len(v[1]) == 1
-                  and v[0] == dim_names[v[1][0]]}
-    data_cands = [v for v in vars_ if len(v[1]) == 2
-                  and v[0] not in coord_vars]
-    if not data_cands:
-        raise RasterOpenError(f"'{path}': no 2-D data variable")
-    by_pref = [v for nm in _NC_DATA_NAMES for v in data_cands
-               if v[0].lower() == nm]
-    var = by_pref[0] if by_pref else data_cands[0]
-    name, dimids, atts, nc_type, _vsize, begin = var
-    if nc_type not in _NC_DTYPES or nc_type == _NC_CHAR:
-        raise RasterOpenError(f"'{path}': unsupported data type {nc_type}")
-    d0, d1 = dims[dimids[0]], dims[dimids[1]]
-    if d0[1] == 0:  # record dimension (length stored as 0)
-        raise RasterOpenError(
-            f"'{path}': record (unlimited-dimension) variable '{name}' — "
-            "re-export with fixed dimensions"
-        )
-
-    def coord_array(dim_name: str, length: int) -> np.ndarray:
-        cv = coord_vars.get(dim_name)
-        if cv is None:
-            raise RasterOpenError(
-                f"'{path}': dimension '{dim_name}' has no coordinate variable"
-            )
-        cdt = np.dtype(_NC_DTYPES[cv[3]])
-        with open(path, "rb") as f:
-            f.seek(cv[5])
-            raw = f.read(cdt.itemsize * length)
-        return np.frombuffer(raw, dtype=cdt, count=length).astype(np.float64)
-
-    # axis roles: latitude-ish first dim expected (CF order lat, lon)
-    def looks_lat(nm: str) -> bool:
-        return nm.lower() in _NC_LAT_NAMES
-
-    def looks_lon(nm: str) -> bool:
-        return nm.lower() in _NC_LON_NAMES
-
-    if looks_lat(d0[0]) or looks_lon(d1[0]):
-        lat_dim, lon_dim, transposed = d0, d1, False
-    elif looks_lat(d1[0]) or looks_lon(d0[0]):
-        lat_dim, lon_dim, transposed = d1, d0, True
-    else:
-        lat_dim, lon_dim, transposed = d0, d1, False
-    lats = coord_array(lat_dim[0], lat_dim[1])
-    lons = coord_array(lon_dim[0], lon_dim[1])
-    for nm, c in (("lat", lats), ("lon", lons)):
-        if c.size >= 2:
-            steps = np.diff(c)
-            if not np.allclose(steps, steps[0], rtol=1e-6, atol=0):
-                raise RasterOpenError(
-                    f"'{path}': non-uniform {nm} spacing — rectilinear "
-                    "grids with varying cell size are not supported"
-                )
-    sy = abs(lats[1] - lats[0]) if lats.size >= 2 else 1.0
-    sx = abs(lons[1] - lons[0]) if lons.size >= 2 else 1.0
-    if lons.size >= 2 and lons[1] < lons[0]:
-        raise RasterOpenError(f"'{path}': descending longitude unsupported")
-
-    dtype = np.dtype(_NC_DTYPES[nc_type])
-    mm = np.memmap(path, dtype=dtype, mode="r", offset=begin,
-                   shape=(d0[1], d1[1]))
-    data = mm.T if transposed else mm
-    south_up = lats.size >= 2 and lats[1] > lats[0]
-    if south_up:
-        data = data[::-1, :]  # lazy flipped view
-    nodata = None
-    for key in ("_FillValue", "missing_value"):
-        if key in atts:
-            nodata = _nc_scalar(atts[key])
-            break
-    scale = _nc_scalar(atts["scale_factor"]) if "scale_factor" in atts else 1.0
-    offset = _nc_scalar(atts["add_offset"]) if "add_offset" in atts else 0.0
-    if scale != 1.0 or offset != 0.0:
-        # packed data: materialize the unpacked array (documented eager
-        # path — packed DEM exports are modest). CF semantics: the fill
-        # value matches the RAW (pre-scale) samples; unpacked fills
-        # become NaN, which the whole engine already treats as nodata
-        # (read_block maps sentinel->NaN), so the sentinel is dropped.
-        raw = np.asarray(data)
-        unpacked = raw.astype(np.float64) * scale + offset
-        if nodata is not None:
-            unpacked[raw == np.asarray(nodata).astype(raw.dtype)] = np.nan
-            nodata = None
-        data = unpacked.astype(np.float32)
-        dtype = np.dtype(np.float32)
-
-    epsg = 4326  # CF lat/lon grids; grid_mapping projections are out of scope
-    top_lat = lats.max() if lats.size else 0.0
-    return Raster(
-        path=path, width=lon_dim[1], height=lat_dim[1], dtype=dtype,
-        nodata=nodata, crs=CRSInfo(epsg=epsg),
-        x0=float(lons[0] - sx / 2.0) if lons.size else 0.0,
-        y0=float(top_lat + sy / 2.0), sx=float(sx), sy=float(sy),
-        _data=data,
-    )
-
-
-def write_netcdf(
-    path: str,
-    array: np.ndarray,
-    *,
-    lats: np.ndarray,
-    lons: np.ndarray,
-    var_name: str = "z",
-    nodata: float | None = None,
-    scale_factor: float | None = None,
-    add_offset: float | None = None,
-    version: int = 1,
-) -> None:
-    """Write a minimal netCDF3 classic file (spec-exact; used by tests
-    and as a small-grid export). ``array`` row 0 corresponds to
-    ``lats[0]``; ascending lats produce a south-up file."""
-    a = np.asarray(array)
-    if a.ndim != 2 or a.shape != (len(lats), len(lons)):
-        raise ValueError("array shape must be (len(lats), len(lons))")
-    np_to_nc = {"i1": _NC_BYTE, "i2": _NC_SHORT, "i4": _NC_INT,
-                "f4": _NC_FLOAT, "f8": _NC_DOUBLE}
-    key = a.dtype.str.lstrip("<>=|")
-    if key not in np_to_nc:
-        raise ValueError(f"unsupported netCDF dtype {a.dtype}")
-    nc_type = np_to_nc[key]
-
-    def pname(s: str) -> bytes:
-        b = s.encode()
-        return struct.pack(">I", len(b)) + b + b"\x00" * (-len(b) % 4)
-
-    def pvals(t: int, arr: np.ndarray) -> bytes:
-        raw = arr.astype(_NC_DTYPES[t]).tobytes()
-        return raw + b"\x00" * (-len(raw) % 4)
-
-    def patts(atts: list[tuple[str, int, np.ndarray]]) -> bytes:
-        if not atts:
-            return struct.pack(">II", 0, 0)
-        out = struct.pack(">II", _NC_ATTRIBUTE, len(atts))
-        for nm, t, vals in atts:
-            out += pname(nm) + struct.pack(">II", t, len(vals)) + pvals(t, vals)
-        return out
-
-    dims = [("lat", len(lats)), ("lon", len(lons))]
-    header = b"CDF" + bytes([version])
-    header += struct.pack(">I", 0)  # numrecs
-    header += struct.pack(">II", _NC_DIMENSION, len(dims))
-    for nm, ln in dims:
-        header += pname(nm) + struct.pack(">I", ln)
-    header += struct.pack(">II", 0, 0)  # no global atts
-
-    datts = []
-    if nodata is not None:
-        datts.append(("_FillValue", nc_type, np.array([nodata])))
-    if scale_factor is not None:
-        datts.append(("scale_factor", _NC_DOUBLE, np.array([scale_factor])))
-    if add_offset is not None:
-        datts.append(("add_offset", _NC_DOUBLE, np.array([add_offset])))
-
-    begin_w = 8 if version == 2 else 4
-    fmt_begin = ">Q" if version == 2 else ">I"
-
-    def var_header(nm: str, dimids: tuple[int, ...], atts, t: int,
-                   vsize: int) -> bytes:
-        out = pname(nm) + struct.pack(">I", len(dimids))
-        for d in dimids:
-            out += struct.pack(">I", d)
-        out += patts(atts) + struct.pack(">II", t, vsize)
-        return out  # caller appends begin
-
-    lat_t, lon_t = _NC_DOUBLE, _NC_DOUBLE
-    lat_raw = pvals(lat_t, np.asarray(lats, dtype=np.float64))
-    lon_raw = pvals(lon_t, np.asarray(lons, dtype=np.float64))
-    dat_raw = pvals(nc_type, a)
-
-    vh_lat = var_header("lat", (0,), [], lat_t, len(lat_raw))
-    vh_lon = var_header("lon", (1,), [], lon_t, len(lon_raw))
-    vh_z = var_header(var_name, (0, 1), datts, nc_type, len(dat_raw))
-    fixed = (len(header) + struct.calcsize(">II")
-             + len(vh_lat) + len(vh_lon) + len(vh_z) + 3 * begin_w)
-    b_lat = fixed
-    b_lon = b_lat + len(lat_raw)
-    b_z = b_lon + len(lon_raw)
-    out = header + struct.pack(">II", _NC_VARIABLE, 3)
-    out += vh_lat + struct.pack(fmt_begin, b_lat)
-    out += vh_lon + struct.pack(fmt_begin, b_lon)
-    out += vh_z + struct.pack(fmt_begin, b_z)
-    out += lat_raw + lon_raw + dat_raw
-    with open(path, "wb") as f:
-        f.write(out)
 
 
 # ---------------------------------------------------------------------------

@@ -6,8 +6,8 @@ Why: the north rule names an Iceberg table of interleaved documents and
 Iceberg-checkpointed lineage, but this sandbox has no
 iceberg-spark-runtime jars. The formats themselves are fully published
 (https://iceberg.apache.org/spec/ — table spec v2; Avro 1.11 Object
-Container File spec), so — like the SQLite/HDF5 readers in
-this repo — the metadata layer is implemented from spec: snapshots,
+Container File spec), so — like the SQLite walker in this
+repo — the metadata layer is implemented from spec: snapshots,
 manifest lists, manifests, partition tuples, sequence numbers,
 append/delete commits, time travel, and metadata-only partition
 pruning/listing. Spark remains the data plane (parquet scan over the

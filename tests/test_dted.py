@@ -1,208 +1,56 @@
-"""DTED reader/writer (dted.py).
+"""DTED cells (``.dt0``/``.dt1``/``.dt2``) are refused.
 
-Three layers, following the other format suites:
-1. golden bytes — a 2x3 cell hand-assembled field-by-field from the
-   MIL-PRF-89020B layout (independent of the module's writer);
-2. round-trips, georeferencing conventions, and loud-error cases;
-3. pipeline differential — the same point lattice written as DTED and
-   as a GeoTIFF with the identical affine must resolve bit-for-bit
-   through dataset discovery + the distributed resolver, and a remote
-   .dt0 object must equal its local twin.
+``open_raster`` refuses them by extension, local or remote, before any
+byte is read or fetched, with a RasterOpenError naming DTED and
+"convert to GeoTIFF".
 """
 
-import os
-import struct
+import socket
 
-import numpy as np
 import pytest
 
-from opentopodata_spark import config, dted, fixtures
-from opentopodata_spark.geotiff import (
-    RasterOpenError,
-    open_raster,
-    write_geotiff,
-)
+from opentopodata_spark import geotiff
+from opentopodata_spark.geotiff import RasterOpenError, open_raster
 
 
-def _golden_bytes() -> bytes:
-    """n_lon=2 columns x n_lat=3 points, origin (0N, 10E), 30-arcsec
-    spacing; elevations (north-up rows):
-        col 10E: 100, -32767(null), -5   col +30": 7, 0, 42
-    """
-    uhl = b"UHL1" + b"0100000E" + b"0000000N" + b"0300" + b"0300"
-    uhl += b"NA  " + b"U  " + b" " * 12 + b"0002" + b"0003" + b"0" + b" " * 24
-    assert len(uhl) == 80
-    dsi = b"DSI" + b"U" + b" " * 644
-    acc = b"ACC" + b" " * 2697
-
-    def record(block: int, south_to_north: list[int]) -> bytes:
-        body = bytes([0xAA, (block >> 16) & 0xFF, (block >> 8) & 0xFF,
-                      block & 0xFF, (block >> 8) & 0xFF, block & 0xFF,
-                      0, 0])
-        for v in south_to_north:
-            sm = (0x8000 | -v) if v < 0 else v
-            body += struct.pack(">H", sm)
-        return body + struct.pack(">I", sum(body))
-
-    data = record(0, [-5, -32767, 100]) + record(1, [42, 0, 7])
-    return uhl + dsi + acc + data
-
-
-def test_golden_bytes_parse():
-    r = dted.open_dted_bytes("golden.dt0", _golden_bytes())
-    assert (r.width, r.height) == (2, 3)
-    res = 30.0 / 3600.0
-    assert r.sx == pytest.approx(res) and r.sy == pytest.approx(res)
-    # point registration: half-sample outset around the lattice
-    assert r.x0 == pytest.approx(10.0 - res / 2)
-    assert r.y0 == pytest.approx(0.0 + 2 * res + res / 2)
-    assert r.crs.epsg == 4326 and r.nodata == -32767.0
-    assert np.array_equal(r.band, np.array([[100, 7], [-32767, 0], [-5, 42]],
-                                           dtype=np.int16))
-    blk = r.read_block(0, 3, 0, 2)
-    assert np.isnan(blk[1, 0]) and blk[2, 1] == 42.0
-
-
-class TestRoundTrip:
-    def test_bit_exact_with_nulls(self, tmp_path):
-        rng = np.random.default_rng(7)
-        arr = rng.integers(-11000, 9000, size=(121, 121)).astype(np.int16)
-        arr[rng.random(arr.shape) < 0.01] = -32767
-        p = str(tmp_path / "N00E010.dt0")
-        dted.write_dted(p, arr, lat0=0.0, lon0=10.0)
-        r = open_raster(p)
-        assert np.array_equal(r.band, arr)
-        win, org = r.read_window(40, 44, 3, 9)
-        assert org == (40, 3) and np.array_equal(win, arr[40:44, 3:9])
-
-    def test_southern_western_hemispheres(self, tmp_path):
-        arr = (np.arange(121 * 121).reshape(121, 121) % 2000).astype(
-            np.int16)
-        p = str(tmp_path / "S01W011.dt1")
-        dted.write_dted(p, arr, lat0=-1.0, lon0=-11.0)
-        r = open_raster(p)
-        res = 1.0 / 120.0
-        assert r.x0 == pytest.approx(-11.0 - res / 2)
-        assert r.y0 == pytest.approx(0.0 + res / 2)
-        assert np.array_equal(r.band, arr)
-
-    def test_rectangular_high_latitude_cell(self, tmp_path):
-        # high-latitude DTED doubles the longitude spacing: 61 lon
-        # lines x 121 lat points is a legal cell
-        arr = (np.arange(121 * 61).reshape(121, 61) % 500).astype(np.int16)
-        p = str(tmp_path / "N60E010.dt1")
-        dted.write_dted(p, arr, lat0=60.0, lon0=10.0)
-        r = open_raster(p)
-        assert (r.width, r.height) == (61, 121)
-        assert r.sx == pytest.approx(1.0 / 60.0)
-        assert r.sy == pytest.approx(1.0 / 120.0)
-        assert np.array_equal(r.band, arr)
+def _assert_refused(path: str, *paths: str):
+    with pytest.raises(RasterOpenError) as e:
+        open_raster(path)
+    msg = str(e.value)
+    for p in (path,) + paths:
+        msg = msg.replace(p, "")
+    assert "DTED is not supported" in msg and "convert to GeoTIFF" in msg
 
 
 class TestErrors:
-    def test_not_dted(self):
-        with pytest.raises(RasterOpenError, match="UHL1"):
-            dted.open_dted_bytes("x.dt0", b"II*\x00" + b"\x00" * 4000)
-
-    def test_missing_dsi_and_acc(self):
-        buf = bytearray(_golden_bytes())
-        buf[80:83] = b"XXX"
-        with pytest.raises(RasterOpenError, match="DSI"):
-            dted.open_dted_bytes("x.dt0", bytes(buf))
-        buf = bytearray(_golden_bytes())
-        buf[728:731] = b"XXX"
-        with pytest.raises(RasterOpenError, match="ACC"):
-            dted.open_dted_bytes("x.dt0", bytes(buf))
-
-    def test_bad_sentinel_checksum_truncation(self):
-        good = _golden_bytes()
-        buf = bytearray(good)
-        buf[3428] = 0x00
-        with pytest.raises(RasterOpenError, match="sentinel"):
-            dted.open_dted_bytes("x.dt0", bytes(buf))
-        buf = bytearray(good)
-        buf[3428 + 9] ^= 0x5A  # flip an elevation byte
-        with pytest.raises(RasterOpenError, match="checksum"):
-            dted.open_dted_bytes("x.dt0", bytes(buf))
-        with pytest.raises(RasterOpenError, match="truncated"):
-            dted.open_dted_bytes("x.dt0", good[:-5])
-
-    def test_bad_header_fields(self):
-        buf = bytearray(_golden_bytes())
-        buf[4:12] = b"01000A0E"
-        with pytest.raises(RasterOpenError, match="origin longitude"):
-            dted.open_dted_bytes("x.dt0", bytes(buf))
-        buf = bytearray(_golden_bytes())
-        buf[47:51] = b"0001"  # degenerate 1-line grid
-        with pytest.raises(RasterOpenError, match="degenerate"):
-            dted.open_dted_bytes("x.dt0", bytes(buf))
-
-    def test_writer_validation(self, tmp_path):
-        p = str(tmp_path / "N00E010.dt0")
-        ok = np.zeros((121, 121), dtype=np.int16)
-        with pytest.raises(ValueError, match="integer"):
-            dted.write_dted(p, ok.astype(np.float32), lat0=0.0, lon0=10.0)
-        bad = ok.copy()
-        bad[0, 0] = -32768  # no signed-magnitude representation
-        with pytest.raises(ValueError, match="32767"):
-            dted.write_dted(p, bad.astype(np.int32), lat0=0.0, lon0=10.0)
-        with pytest.raises(ValueError, match="tenths"):
-            dted.write_dted(p, np.zeros((64, 64), np.int16),
-                            lat0=0.0, lon0=10.0)
+    def test_not_dted(self, tmp_path):
+        p = str(tmp_path / "x.dt0")
+        with open(p, "wb") as f:
+            f.write(b"II*\x00" + b"\x00" * 4000)
+        _assert_refused(p)
 
 
-def test_dted_matches_geotiff_through_pipeline(tmp_path, spark):
-    """Two 1-degree DTED cells (1-point lattice overlap at the shared
-    meridian, like SRTM) vs GeoTIFF twins with the identical affine:
-    dataset discovery + the distributed resolver must agree
-    bit-for-bit, and a remote .dt0 (full-object fetch) must equal its
-    local twin."""
-    from pyspark.sql import functions as F
+def test_each_extension_refused_locally(tmp_path):
+    """A user header label (the first bytes of a real cell) under every
+    DTED level's name, in any case."""
+    for name in ("N00E010.dt0", "N00E010.dt1", "N00E010.dt2",
+                 "S01W001.DT1"):
+        p = str(tmp_path / name)
+        with open(p, "wb") as f:
+            f.write(b"UHL1" + b"0100000E0000000N" + bytes(3500))
+        _assert_refused(p)
 
-    from opentopodata_spark.operators import elevation
-    from test_remote_raster import _serve
 
-    n = 121
-    res = 1.0 / (n - 1)
-    dirs = {f: str(tmp_path / f) for f in ("dt0", "tif")}
-    for d in dirs.values():
-        os.makedirs(d)
-    for lon0, stem in ((10.0, "N00E010"), (11.0, "N00E011")):
-        lons = lon0 + np.arange(n) * res
-        lats = np.arange(n) * res  # lattice points, south row first
-        grid = np.round(
-            fixtures.terrain_wgs84(lats[::-1][:, None], lons[None, :])
-        ).astype(np.int16)
-        dted.write_dted(os.path.join(dirs["dt0"], f"{stem}.dt0"),
-                        grid, lat0=0.0, lon0=lon0)
-        write_geotiff(os.path.join(dirs["tif"], f"{stem}.tif"), grid,
-                      x0=lon0 - res / 2, y0=1.0 + res / 2, sx=res, sy=res,
-                      epsg=4326, nodata=-32768)
+def test_remote_dted_refused_before_any_request(monkeypatch):
+    """A remote .dt1 is refused before a connection is even attempted."""
+    attempts = []
 
-    rng = np.random.default_rng(3)
-    points = spark.createDataFrame(
-        [(i, float(la), float(lo)) for i, (la, lo) in enumerate(
-            zip(rng.uniform(0.02, 0.98, 120),
-                rng.uniform(10.02, 11.98, 120)))],
-        "point_id long, lat double, lon double",
-    ).withColumn("point_pos", F.lit(0)).withColumn("doc_id", F.lit("d"))
+    def no_network(*args, **kwargs):
+        attempts.append(args)
+        raise OSError("network disabled in this test")
 
-    results = {}
-    for fmt, d in dirs.items():
-        ds = config.dataset_from_config(f"fmt_{fmt}", path=d,
-                                        filename_tile_size=1)
-        out = elevation.ElevationResolver(spark, [ds], "bilinear").resolve(
-            points)
-        results[fmt] = {r.point_id: r.elevation for r in out.collect()}
-    assert len(results["tif"]) == 120
-    assert results["dt0"] == results["tif"]
-
-    srv, base = _serve(dirs["dt0"])
-    try:
-        local = open_raster(os.path.join(dirs["dt0"], "N00E010.dt0"))
-        remote = open_raster(f"{base}/N00E010.dt0")
-        assert np.array_equal(remote.band, local.band)
-        assert (remote.x0, remote.y0, remote.sx, remote.sy) == (
-            local.x0, local.y0, local.sx, local.sy)
-    finally:
-        srv.shutdown()
+    monkeypatch.setattr(socket, "create_connection", no_network)
+    requests = geotiff.range_request_count()
+    _assert_refused("http://127.0.0.1:9/e010/n00.dt1?sig=1")
+    assert attempts == []
+    assert geotiff.range_request_count() == requests

@@ -130,6 +130,22 @@ class TestSqliteStructure:
             f.write(b"not a database at all" * 10)
         _assert_refused(_refusal(p))
 
+    def test_bad_page_size_is_loud(self, tmp_path):
+        """A header page size that is not a power of two in 512..65536
+        is refused with a GpkgError naming the file, before any page is
+        read (a zero page size used to fail with a bare IndexError)."""
+        from opentopodata_spark.vector import load_features
+
+        p = str(tmp_path / "z.gpkg")
+        for ps in (0, 256, 1000):
+            head = bytearray(b"SQLite format 3\x00" + bytes(4080))
+            struct.pack_into(">H", head, 16, ps)
+            with open(p, "wb") as f:
+                f.write(head)
+            with pytest.raises(gpkg.GpkgError) as e:
+                load_features(p)
+            assert p in str(e.value) and f"page size {ps}" in str(e.value)
+
     def test_no_raster_content_is_loud(self, tmp_path):
         """A valid GeoPackage holding only a feature layer (the kind
         vector.py writes and reads) is refused as a raster too."""

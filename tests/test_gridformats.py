@@ -1,18 +1,17 @@
-"""Esri ASCII grid, BIL/EHdr, and netCDF3 readers (gridformats.py).
+"""Esri ASCII grid, gridded XYZ and BIL/EHdr readers (gridformats.py).
 
-Three layers:
-1. golden bytes — a netCDF file hand-assembled in the test from the
-   public classic-format spec (independent of the module's writer) must
-   parse exactly;
-2. unit round-trips + header-variant / error cases per format;
-3. format differential — the SAME analytic terrain written as GeoTIFF,
-   .asc, .bil and .nc must produce bit-identical elevations through the
-   full distributed pipeline (dataset discovery included).
+Two layers:
+1. unit round-trips + header-variant / error cases per format;
+2. format differential — the SAME analytic terrain written as GeoTIFF,
+   .asc, .xyz and .bil must produce bit-identical elevations through
+   the full distributed pipeline (dataset discovery included).
+
+netCDF is not read: a ``.nc`` is refused by extension whatever its
+magic bytes (classic ``CDF`` or netCDF4/HDF5).
 """
 
 import gzip
 import os
-import struct
 
 import numpy as np
 import pytest
@@ -35,68 +34,6 @@ def terrain():
     lats = 1.0 - (np.arange(61) + 0.5) * res
     grid = fixtures.terrain_wgs84(lats[:, None], lons[None, :])
     return np.round(grid).astype(np.int16), res
-
-
-# ---------------------------------------------------------------------------
-# golden: hand-assembled netCDF3 bytes (spec, not the module writer)
-# ---------------------------------------------------------------------------
-
-def _pad4(b: bytes) -> bytes:
-    return b + b"\x00" * (-len(b) % 4)
-
-
-def _nc_name(s: str) -> bytes:
-    return struct.pack(">I", len(s)) + _pad4(s.encode())
-
-
-def test_netcdf_golden_bytes(tmp_path):
-    """2x3 int16 grid, descending lat, _FillValue, assembled field by
-    field from the NetCDF classic-format spec."""
-    lat_vals = np.array([0.75, 0.25], dtype=">f8")
-    lon_vals = np.array([10.25, 10.75, 11.25], dtype=">f8")
-    z_vals = np.array([[10, 20, 30], [40, -9999, 60]], dtype=">i2")
-
-    hdr = b"CDF\x01" + struct.pack(">I", 0)              # magic, numrecs
-    hdr += struct.pack(">II", 0x0A, 2)                   # NC_DIMENSION, 2
-    hdr += _nc_name("lat") + struct.pack(">I", 2)
-    hdr += _nc_name("lon") + struct.pack(">I", 3)
-    hdr += struct.pack(">II", 0, 0)                      # no global atts
-    hdr += struct.pack(">II", 0x0B, 3)                   # NC_VARIABLE, 3
-
-    v_lat = _nc_name("lat") + struct.pack(">II", 1, 0)   # 1 dim, dimid 0
-    v_lat += struct.pack(">II", 0, 0)                    # no atts
-    v_lat += struct.pack(">II", 6, 16)                   # NC_DOUBLE, vsize
-    v_lon = _nc_name("lon") + struct.pack(">II", 1, 1)
-    v_lon += struct.pack(">II", 0, 0)
-    v_lon += struct.pack(">II", 6, 24)
-    v_z = _nc_name("z") + struct.pack(">III", 2, 0, 1)   # 2 dims: lat, lon
-    v_z += struct.pack(">II", 0x0C, 1)                   # 1 attribute
-    v_z += _nc_name("_FillValue") + struct.pack(">II", 3, 1)  # NC_SHORT x1
-    v_z += _pad4(struct.pack(">h", -9999))
-    v_z += struct.pack(">II", 3, 12)                     # NC_SHORT, vsize
-
-    fixed = len(hdr) + len(v_lat) + len(v_lon) + len(v_z) + 3 * 4
-    b_lat, b_lon = fixed, fixed + 16
-    b_z = b_lon + 24
-    blob = (hdr + v_lat + struct.pack(">I", b_lat)
-            + v_lon + struct.pack(">I", b_lon)
-            + v_z + struct.pack(">I", b_z)
-            + lat_vals.tobytes() + lon_vals.tobytes()
-            + _pad4(z_vals.tobytes()))
-    p = str(tmp_path / "golden.nc")
-    with open(p, "wb") as f:
-        f.write(blob)
-
-    r = open_raster(p)
-    assert (r.width, r.height) == (3, 2)
-    assert r.nodata == -9999.0
-    assert (r.x0, r.y0, r.sx, r.sy) == (10.0, 1.0, 0.5, 0.5)
-    assert r.crs.epsg == 4326
-    win, org = r.read_window(0, 2, 0, 3)
-    assert org == (0, 0)
-    assert np.array_equal(win, z_vals.astype(np.int16))
-    blk = r.read_block(1, 2, 1, 2)
-    assert np.isnan(blk[0, 0])
 
 
 # ---------------------------------------------------------------------------
@@ -279,70 +216,24 @@ class TestBil:
 
 
 # ---------------------------------------------------------------------------
-# netCDF3
+# netCDF: refused by extension
 # ---------------------------------------------------------------------------
 
 class TestNetcdf:
-    def test_round_trip_and_v2(self, tmp_path, terrain):
-        arr, res = terrain
-        lats = 1.0 - (np.arange(61) + 0.5) * res
-        lons = 10.0 + (np.arange(61) + 0.5) * res
-        for v in (1, 2):
-            p = str(tmp_path / f"v{v}.nc")
-            gf.write_netcdf(p, arr, lats=lats, lons=lons, nodata=-32768,
-                            version=v)
-            r = open_raster(p)
-            assert abs(r.x0 - 10.0) < 1e-12 and abs(r.y0 - 1.0) < 1e-12
-            assert np.array_equal(r.read_window(3, 40, 2, 50)[0],
-                                  arr[3:40, 2:50])
-
-    def test_south_up_flips_lazily(self, tmp_path, terrain):
-        arr, res = terrain
-        lats = 1.0 - (np.arange(61) + 0.5) * res
-        lons = 10.0 + (np.arange(61) + 0.5) * res
-        p = str(tmp_path / "s.nc")
-        gf.write_netcdf(p, arr[::-1], lats=lats[::-1], lons=lons)
-        r = open_raster(p)
-        assert abs(r.y0 - 1.0) < 1e-12
-        assert np.array_equal(r.read_window(0, 61, 0, 61)[0], arr)
-
-    def test_packed_scale_offset(self, tmp_path):
-        raw = np.array([[2, 4], [6, -32768]], dtype=np.int16)
-        p = str(tmp_path / "p.nc")
-        gf.write_netcdf(p, raw, lats=np.array([0.75, 0.25]),
-                        lons=np.array([0.25, 0.75]), nodata=-32768,
-                        scale_factor=0.5, add_offset=100.0)
-        r = open_raster(p)
-        blk = r.read_block(0, 2, 0, 2)
-        assert blk[0, 0] == 101.0 and blk[1, 0] == 103.0
-        assert np.isnan(blk[1, 1])
-
     def test_hdf5_magic_routes_to_hdf5_reader(self, tmp_path):
-        """.nc with HDF5 magic dispatches to the netCDF4 reader (round 4
-        — previously rejected); corrupt HDF5 still fails loudly."""
-        p = str(tmp_path / "h.nc")
-        with open(p, "wb") as f:
-            f.write(b"\x89HDF\r\n\x1a\n" + b"\x00" * 64)
-        with pytest.raises(RasterOpenError):
-            open_raster(p)
-        from opentopodata_spark import hdf5
-
-        q = str(tmp_path / "ok.nc")
-        hdf5.write_netcdf4(q, np.array([[1.0, 2.0], [3.0, 4.0]],
-                                       dtype=np.float32),
-                           x0=10.0, y0=1.0, sx=0.5, sy=0.5,
-                           compression=None)
-        r = open_raster(q)
-        assert np.array_equal(r.read_window(0, 2, 0, 2)[0],
-                              np.array([[1, 2], [3, 4]], dtype=np.float32))
-
-    def test_non_uniform_spacing_rejected(self, tmp_path):
-        p = str(tmp_path / "n.nc")
-        gf.write_netcdf(p, np.zeros((3, 2), dtype=np.int16),
-                        lats=np.array([0.9, 0.5, 0.4]),
-                        lons=np.array([0.25, 0.75]))
-        with pytest.raises(RasterOpenError, match="non-uniform"):
-            open_raster(p)
+        """A .nc routes to no reader: with netCDF4/HDF5 magic, classic
+        'CDF' magic or neither, it is refused by its extension, with
+        the format named and "convert to GeoTIFF"."""
+        for name, magic in (("h.nc", b"\x89HDF\r\n\x1a\n"),
+                            ("c.nc", b"CDF\x01"), ("x.nc", b"II*\x00")):
+            p = str(tmp_path / name)
+            with open(p, "wb") as f:
+                f.write(magic + b"\x00" * 64)
+            with pytest.raises(RasterOpenError) as e:
+                open_raster(p)
+            msg = str(e.value).replace(p, "")
+            assert "netCDF is not supported" in msg
+            assert "convert to GeoTIFF" in msg
 
 
 # ---------------------------------------------------------------------------
@@ -350,7 +241,7 @@ class TestNetcdf:
 # ---------------------------------------------------------------------------
 
 def test_formats_bit_identical_through_pipeline(tmp_path, spark, terrain):
-    """SRTM-style 2-tile dataset written as GeoTIFF / .asc / .bil / .nc:
+    """SRTM-style 2-tile dataset written as GeoTIFF / .asc / .xyz / .bil:
     dataset discovery (incl. .hdr/.prj aux exclusion) + the distributed
     resolver must agree bit-for-bit across formats."""
     from pyspark.sql import functions as F
@@ -369,7 +260,7 @@ def test_formats_bit_identical_through_pipeline(tmp_path, spark, terrain):
         tiles[stem] = (lon0, grid)
 
     dirs = {}
-    for fmt in ("tif", "asc", "xyz", "bil", "nc", "nc4"):
+    for fmt in ("tif", "asc", "xyz", "bil"):
         d = str(tmp_path / fmt)
         os.makedirs(d)
         for stem, (lon0, grid) in tiles.items():
@@ -383,24 +274,9 @@ def test_formats_bit_identical_through_pipeline(tmp_path, spark, terrain):
             elif fmt == "xyz":
                 gf.write_xyz(p, grid, x0=lon0, y0=1.0, sx=res,
                              wkt=WGS84_WKT)
-            elif fmt == "bil":
+            else:
                 gf.write_bil(p, grid, x0=lon0, y0=1.0, sx=res,
                              nodata=-32768, wkt=WGS84_WKT)
-            elif fmt == "nc4":
-                from opentopodata_spark import hdf5
-
-                hdf5.write_netcdf4(
-                    p, grid, x0=lon0, y0=1.0, sx=res, sy=res,
-                    nodata=-32768, compression="deflate", shuffle=True,
-                    ascending_lat=True, chunk=(32, 32),
-                )
-            else:
-                gf.write_netcdf(
-                    p, grid,
-                    lats=1.0 - (np.arange(side) + 0.5) * res,
-                    lons=lon0 + (np.arange(side) + 0.5) * res,
-                    nodata=-32768,
-                )
         dirs[fmt] = d
 
     rng = np.random.default_rng(42)
@@ -422,7 +298,7 @@ def test_formats_bit_identical_through_pipeline(tmp_path, spark, terrain):
 
     base = results["tif"]
     assert len(base) == 150
-    for fmt in ("asc", "xyz", "bil", "nc", "nc4"):
+    for fmt in ("asc", "xyz", "bil"):
         assert results[fmt] == base, f"{fmt} diverges from GeoTIFF"
 
 

@@ -1,245 +1,105 @@
-"""HDF5 / netCDF4 raster reader + writer (opentopodata_spark.hdf5).
+"""netCDF (classic and netCDF4) and HDF5 rasters are refused.
 
-The reference reads netCDF4 DEM exports through GDAL's libnetcdf
-(/root/reference/opentopodata/backend.py:89); this engine implements the
-HDF5 subset those files use in pure numpy. Tests pin:
-
-- write -> read round trips across the feature matrix (deflate, shuffle,
-  contiguous, ascending latitude, packed scale/offset, int16/float32),
-- windowed chunk decode correctness on arbitrary windows,
-- process-wide chunk cache reuse (second window: zero new source reads),
-- loud rejection of unsupported structures,
-- Band1-style GDAL naming and .h5/.nc4 extension dispatch.
+``open_raster`` refuses ``.nc``, ``.nc4``, ``.h5`` and ``.hdf5`` by
+extension, local or remote, before any byte is read or fetched, with a
+RasterOpenError naming the format and "convert to GeoTIFF". One
+extension names both netCDF wire formats (classic ``CDF`` and netCDF4 =
+HDF5), so the magic bytes are never read. A single-file dataset carries
+that reason in its ConfigError, and a VRT naming a ``.nc`` child is
+refused at open.
 """
 
 from __future__ import annotations
 
-import numpy as np
+import socket
+
 import pytest
 
-from opentopodata_spark import geotiff, hdf5
+from opentopodata_spark import config, geotiff
 from opentopodata_spark.geotiff import RasterOpenError, open_raster
 
-
-@pytest.fixture()
-def grid():
-    rng = np.random.RandomState(7)
-    arr = (rng.rand(130, 170) * 900).astype(np.float32)
-    arr[3, 5] = -9999.0
-    return arr
+_HDF5_MAGIC = b"\x89HDF\r\n\x1a\n"
 
 
-class TestRoundTrip:
-    def test_deflate_chunked(self, tmp_path, grid):
-        p = str(tmp_path / "a.nc")
-        hdf5.write_netcdf4(p, grid, x0=10.0, y0=1.0, sx=0.01, sy=0.01,
-                           nodata=-9999.0, compression="deflate",
-                           chunk=(48, 64))
-        r = open_raster(p)
-        assert (r.width, r.height) == (170, 130)
-        assert r.nodata == -9999.0
-        assert abs(r.x0 - 10.0) < 1e-12 and abs(r.y0 - 1.0) < 1e-12
-        assert r.sx == pytest.approx(0.01, rel=1e-12)
-        assert r.sy == pytest.approx(0.01, rel=1e-12)
-        assert np.array_equal(r.read_window(0, 130, 0, 170)[0], grid)
+def _refusal(path: str, *paths: str) -> str:
+    """The RasterOpenError message of open_raster(path), every path
+    removed from it."""
+    with pytest.raises(RasterOpenError) as e:
+        open_raster(path)
+    msg = str(e.value)
+    for p in (path,) + paths:
+        msg = msg.replace(p, "")
+    return msg
 
-    def test_windowed_reads(self, tmp_path, grid):
-        p = str(tmp_path / "w.nc")
-        hdf5.write_netcdf4(p, grid, x0=10.0, y0=1.0, sx=0.01, sy=0.01,
-                           nodata=-9999.0, compression="deflate",
-                           chunk=(32, 32))
-        r = open_raster(p)
-        rng = np.random.RandomState(3)
-        for _ in range(12):
-            r0, c0 = rng.randint(0, 120), rng.randint(0, 160)
-            r1 = r0 + rng.randint(1, 130 - r0)
-            c1 = c0 + rng.randint(1, 170 - c0)
-            got, org = r.read_window(r0, r1, c0, c1)
-            assert org == (r0, c0)
-            assert np.array_equal(got, grid[r0:r1, c0:c1])
 
-    def test_shuffle_and_ascending_lat(self, tmp_path, grid):
-        p = str(tmp_path / "s.nc")
-        hdf5.write_netcdf4(p, grid, x0=10.0, y0=1.0, sx=0.01, sy=0.01,
-                           nodata=-9999.0, compression="deflate",
-                           shuffle=True, ascending_lat=True, chunk=(32, 32))
-        r = open_raster(p)
-        assert abs(r.y0 - 1.0) < 1e-12  # exposed north-up
-        assert np.array_equal(r.read_window(0, 130, 0, 170)[0], grid)
-        assert np.array_equal(r.read_window(10, 40, 5, 60)[0],
-                              grid[10:40, 5:60])
-
-    def test_contiguous(self, tmp_path, grid):
-        p = str(tmp_path / "c.h5")
-        hdf5.write_netcdf4(p, grid, x0=10.0, y0=1.0, sx=0.01, sy=0.01,
-                           compression=None)
-        r = open_raster(p)  # .h5 extension dispatch
-        assert np.array_equal(r.read_window(20, 40, 10, 30)[0],
-                              grid[20:40, 10:30])
-
-    def test_contiguous_ascending_lat(self, tmp_path, grid):
-        p = str(tmp_path / "ca.nc")
-        hdf5.write_netcdf4(p, grid, x0=10.0, y0=1.0, sx=0.01, sy=0.01,
-                           compression=None, ascending_lat=True)
-        r = open_raster(p)
-        assert np.array_equal(r.read_window(0, 130, 0, 170)[0], grid)
-        assert np.array_equal(r.read_window(97, 130, 0, 11)[0],
-                              grid[97:130, 0:11])
-
-    def test_int16_band1_name(self, tmp_path):
-        arr = (np.arange(60 * 40) % 1999).astype(np.int16).reshape(60, 40)
-        p = str(tmp_path / "b.nc4")
-        hdf5.write_netcdf4(p, arr, x0=5.0, y0=2.0, sx=0.02, sy=0.02,
-                           nodata=-32768, compression="deflate",
-                           chunk=(16, 16), var_name="Band1")
-        r = open_raster(p)
-        assert r.dtype == np.dtype("<i2")
-        assert np.array_equal(r.read_window(0, 60, 0, 40)[0], arr)
-
-    def test_packed_scale_offset(self, tmp_path):
-        src = np.array([[101.0, 102.0], [103.0, np.nan]])
-        p = str(tmp_path / "p.nc")
-        hdf5.write_netcdf4(p, src, x0=0.0, y0=1.0, sx=0.5, sy=0.5,
-                           nodata=-32768, compression="deflate",
-                           scale_factor=0.5, add_offset=100.0)
-        r = open_raster(p)
-        blk = r.read_block(0, 2, 0, 2)
-        assert blk[0, 0] == 101.0 and blk[1, 0] == 103.0
-        assert np.isnan(blk[1, 1])
-        assert r.nodata is None  # sentinel folded into NaN on unpack
-
-    def test_sparse_chunk_fill(self, tmp_path):
-        """A window over a chunk the B-tree doesn't carry reads back as
-        fill — HDF5's unallocated-chunk semantics."""
-        arr = np.full((64, 64), 7.0, dtype=np.float32)
-        p = str(tmp_path / "f.nc")
-        hdf5.write_netcdf4(p, arr, x0=0.0, y0=1.0, sx=0.01, sy=0.01,
-                           nodata=-1.0, compression="deflate",
-                           chunk=(32, 32))
-        r = open_raster(p)
-        # drop one chunk from the reader's map to emulate sparse storage
-        assert isinstance(r._blocks, hdf5._H5ChunkReader)
-        r._blocks.chunks.pop((32, 32))
-        geotiff.clear_block_cache()
-        w, _ = r.read_window(0, 64, 0, 64)
-        assert np.all(w[:32, :32] == 7.0)
-        assert np.all(w[32:, 32:] == -1.0)
+def _assert_refused(msg: str, fmt: str):
+    assert f"{fmt} is not supported" in msg
+    assert "convert to GeoTIFF" in msg
 
 
 class TestCacheAndStructure:
-    def test_chunk_cache_absorbs_repeat_reads(self, tmp_path, grid):
-        p = str(tmp_path / "cc.nc")
-        hdf5.write_netcdf4(p, grid, x0=10.0, y0=1.0, sx=0.01, sy=0.01,
-                           nodata=-9999.0, compression="deflate",
-                           chunk=(32, 32))
-        r = open_raster(p)
-        geotiff.clear_block_cache()
-        reads = []
-        orig = r._blocks.source.read_at
-        r._blocks.source.read_at = lambda o, s: (reads.append((o, s)),
-                                                 orig(o, s))[1]
-        w1, _ = r.read_window(10, 40, 5, 60)
-        n1 = len(reads)
-        assert n1 > 0
-        w2, _ = r.read_window(10, 40, 5, 60)
-        assert len(reads) == n1  # all chunks came from the LRU
-        assert np.array_equal(w1, w2)
-
-    def test_windowed_read_touches_only_needed_chunks(self, tmp_path, grid):
-        p = str(tmp_path / "wo.nc")
-        hdf5.write_netcdf4(p, grid, x0=10.0, y0=1.0, sx=0.01, sy=0.01,
-                           nodata=-9999.0, compression="deflate",
-                           chunk=(32, 32))
-        r = open_raster(p)
-        geotiff.clear_block_cache()
-        reads = []
-        orig = r._blocks.source.read_at
-        r._blocks.source.read_at = lambda o, s: (reads.append((o, s)),
-                                                 orig(o, s))[1]
-        r.read_window(0, 10, 0, 10)  # one chunk
-        assert len(reads) == 1
-
-    def test_truncated_file_is_loud(self, tmp_path, grid):
-        p = str(tmp_path / "t.nc")
-        hdf5.write_netcdf4(p, grid, x0=10.0, y0=1.0, sx=0.01, sy=0.01,
-                           compression=None)
-        with open(p, "rb") as f:
-            head = f.read(40)
-        q = str(tmp_path / "trunc.nc")
-        with open(q, "wb") as f:
-            f.write(head)
-        with pytest.raises(RasterOpenError):
-            open_raster(q)
-
     def test_not_hdf5_is_loud(self, tmp_path):
         p = str(tmp_path / "x.h5")
         with open(p, "wb") as f:
             f.write(b"definitely not hdf5 content")
-        with pytest.raises(RasterOpenError, match="HDF5"):
-            open_raster(p)
-
-    def test_missing_coordinates_is_loud(self, tmp_path, grid):
-        p = str(tmp_path / "m.nc")
-        hdf5.write_netcdf4(p, grid, x0=10.0, y0=1.0, sx=0.01, sy=0.01,
-                           compression=None)
-        src = hdf5._ByteSource(p)
-        h5 = hdf5._H5File(src)
-        links = h5.group_links(h5.root_addr)
-        assert set(links) == {"elevation", "lat", "lon"}
-        # a structurally valid file whose lat var no longer matches any
-        # accepted coordinate name (monkeypatched name table) must fail
-        # loudly, not silently mis-assign axes
-        q = str(tmp_path / "m2.nc")
-        hdf5.write_netcdf4(q, grid, x0=10.0, y0=1.0, sx=0.01, sy=0.01,
-                           compression=None, var_name="z")
-        import opentopodata_spark.hdf5 as m
-
-        old = m._LAT_NAMES
-        try:
-            m._LAT_NAMES = ("nothing_matches",)
-            with pytest.raises(RasterOpenError, match="lat/lon"):
-                m.open_netcdf4(q)
-        finally:
-            m._LAT_NAMES = old
+        _assert_refused(_refusal(p), "HDF5")
 
 
-def test_oracle_parity_netcdf4_vs_geotiff(tmp_path):
-    """Same terrain as .nc4 and .tif through the single-process oracle:
-    bit-identical elevations (the netCDF4 reader is a drop-in source)."""
-    from opentopodata_spark import config, oracle
+def test_each_extension_refused_locally(tmp_path):
+    """Valid-looking headers under every cut name, in any case."""
+    for name, fmt in (("a.nc", "netCDF"), ("b.nc4", "netCDF"),
+                      ("C.NC", "netCDF"), ("d.h5", "HDF5"),
+                      ("e.hdf5", "HDF5")):
+        for magic in (_HDF5_MAGIC, b"CDF\x01"):
+            p = str(tmp_path / name)
+            with open(p, "wb") as f:
+                f.write(magic + bytes(512))
+            _assert_refused(_refusal(p), fmt)
 
-    res = 1.0 / 60.0
-    side = 61
-    import os
 
-    from opentopodata_spark import fixtures
+def test_remote_netcdf_refused_before_any_request(monkeypatch):
+    """A remote .nc is refused before a connection is even attempted."""
+    attempts = []
 
-    for fmt in ("tif", "nc4"):
-        d = str(tmp_path / fmt)
-        os.makedirs(d)
-        for lon0, stem in ((10.0, "N00E010"), (11.0, "N00E011")):
-            lons = lon0 + (np.arange(side) + 0.5) * res
-            lats = 1.0 - (np.arange(side) + 0.5) * res
-            grid = np.round(
-                fixtures.terrain_wgs84(lats[:, None], lons[None, :])
-            ).astype(np.int16)
-            p = os.path.join(d, f"{stem}.{fmt}")
-            if fmt == "tif":
-                geotiff.write_geotiff(p, grid, x0=lon0, y0=1.0, sx=res,
-                                      sy=res, epsg=4326, nodata=-32768)
-            else:
-                hdf5.write_netcdf4(p, grid, x0=lon0, y0=1.0, sx=res, sy=res,
-                                   nodata=-32768, compression="deflate",
-                                   shuffle=True, chunk=(32, 32))
-    rng = np.random.default_rng(11)
-    lats = rng.uniform(0.02, 0.98, 100)
-    lons = rng.uniform(10.02, 11.98, 100)
-    out = {}
-    for fmt in ("tif", "nc4"):
-        ds = config.dataset_from_config(
-            f"g{fmt}", path=str(tmp_path / fmt), filename_tile_size=1)
-        for interp in ("nearest", "bilinear", "cubic"):
-            e, _ = oracle.get_elevation(lats, lons, [ds], interp)
-            out[(fmt, interp)] = e
-    for interp in ("nearest", "bilinear", "cubic"):
-        assert out[("nc4", interp)] == out[("tif", interp)]
+    def no_network(*args, **kwargs):
+        attempts.append(args)
+        raise OSError("network disabled in this test")
+
+    monkeypatch.setattr(socket, "create_connection", no_network)
+    requests = geotiff.range_request_count()
+    for url, fmt in (("http://127.0.0.1:9/dem.nc?sig=1", "netCDF"),
+                     ("https://127.0.0.1:9/dem.hdf5", "HDF5")):
+        _assert_refused(_refusal(url), fmt)
+    assert attempts == []
+    assert geotiff.range_request_count() == requests
+
+
+def test_vrt_with_netcdf_child_refused_at_open(tmp_path):
+    """A VRT opens its children lazily, at the first read; a .nc child
+    is refused when the VRT itself is opened."""
+    child = str(tmp_path / "dem.nc")
+    with open(child, "wb") as f:
+        f.write(b"CDF\x01" + bytes(512))
+    vrt = str(tmp_path / "m.vrt")
+    with open(vrt, "w") as f:
+        f.write(
+            '<VRTDataset rasterXSize="64" rasterYSize="64">'
+            "<SRS>EPSG:4326</SRS>"
+            "<GeoTransform>10.0, 0.01, 0, 1.0, 0, -0.01</GeoTransform>"
+            '<VRTRasterBand dataType="Float32" band="1"><SimpleSource>'
+            '<SourceFilename relativeToVRT="1">dem.nc</SourceFilename>'
+            "<SourceBand>1</SourceBand></SimpleSource>"
+            "</VRTRasterBand></VRTDataset>"
+        )
+    _assert_refused(_refusal(vrt, child), "netCDF")
+
+
+def test_single_file_netcdf_dataset_says_why(tmp_path):
+    d = tmp_path / "nc"
+    d.mkdir()
+    (d / "etopo1.nc").write_bytes(b"CDF\x01" + bytes(512))
+    with pytest.raises(config.ConfigError) as e:
+        config.dataset_from_config("n", path=str(d))
+    msg = str(e.value).replace(str(d / "etopo1.nc"), "")
+    assert msg.startswith("Unsupported filetype for ")
+    _assert_refused(msg, "netCDF")

@@ -208,6 +208,58 @@ def test_no_orphan_package_modules():
     assert orphans == []
 
 
+# OTDS_BLOCK_CACHE_MB goes when the decoded-block L1 does (one cache tier)
+_ENV_KNOBS = {
+    "CONFIG_PATH", "SPARK_GRAFT_CPUS", "SPARK_GRAFT_MASTER",
+    "SPARK_DRIVER_MEM", "OTDS_BLOCK_CACHE_MB",
+}
+
+
+def _env_reads(path: str):
+    """(lineno, name) for every use of ``os.environ`` / ``os.getenv`` in
+    ``path``: a subscript, a ``.get``/``getenv`` call or an ``in`` test.
+    The name is None when it is not a string literal, or when the
+    mapping is used whole (``dict(os.environ)``)."""
+    tree = ast.parse(open(path).read())
+    parent = {c: n for n in ast.walk(tree) for c in ast.iter_child_nodes(n)}
+    for node in ast.walk(tree):
+        if not (
+            isinstance(node, ast.Attribute)
+            and node.attr in ("environ", "getenv")
+            and isinstance(node.value, ast.Name)
+            and node.value.id == "os"
+        ):
+            continue
+        up = parent.get(node)
+        if isinstance(up, ast.Attribute) and up.attr == "get":
+            up = parent.get(up)  # os.environ.get(...)
+        if isinstance(up, ast.Subscript):
+            key = up.slice
+        elif isinstance(up, ast.Call) and up.args:
+            key = up.args[0]
+        elif isinstance(up, ast.Compare):
+            key = up.left
+        else:
+            key = None
+        name = key.value if isinstance(key, ast.Constant) else None
+        yield node.lineno, name
+
+
+def test_no_new_environment_knobs():
+    """The package reads only the environment variables in _ENV_KNOBS.
+    A knob that nothing sets leaves one value in use and a second code
+    path untested; a new one needs a caller that sets it."""
+    reads = [
+        (os.path.relpath(path, REPO), lineno, name)
+        for path in _package_files()
+        for lineno, name in _env_reads(path)
+    ]
+    assert ("opentopodata_spark/config.py", "CONFIG_PATH") in {
+        (rel, name) for rel, _lineno, name in reads
+    }
+    assert [r for r in reads if r[2] not in _ENV_KNOBS] == []
+
+
 # ------------------------------------------------------------- elevation job
 
 

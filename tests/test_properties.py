@@ -22,7 +22,6 @@ import pytest
 hyp = pytest.importorskip("hypothesis")
 from hypothesis import assume as _assume  # noqa: E402
 from hypothesis import given, settings, strategies as st  # noqa: E402
-from hypothesis.extra.numpy import arrays  # noqa: E402
 
 from opentopodata_spark import crs, geodesic, utilmath  # noqa: E402
 
@@ -146,31 +145,6 @@ def test_pip_mask_convex_polygon_center(lat, lon, n, r, seed):
     )
     assert bool(inside[0]) is True
     assert bool(inside[1]) is False
-
-
-@given(
-    arrays(
-        np.int16,
-        (7, 9),
-        elements=st.integers(min_value=-32767, max_value=32767),
-    )
-)
-@settings(max_examples=40, deadline=None)
-def test_dted_roundtrip_property(grid):
-    """Any in-range int16 lattice round-trips DTED bit-exactly (7x9 is
-    deliberately NOT a 1-degree-legal shape for the spans, so scale the
-    lattice to a legal 1-degree grid via tiling)."""
-    import tempfile
-
-    from opentopodata_spark import dted
-    from opentopodata_spark.geotiff import open_raster
-
-    full = np.tile(grid, (18, 9))[:121, :73]  # 121 x 73: both divide 1 deg
-    with tempfile.TemporaryDirectory() as d:
-        p = f"{d}/N00E010.dt1"
-        dted.write_dted(p, full, lat0=0.0, lon0=10.0)
-        r = open_raster(p)
-        assert np.array_equal(r.band, full)
 
 
 # ---------------------------------------------------------------------------

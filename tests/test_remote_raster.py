@@ -174,26 +174,6 @@ class TestRangeReads:
         )
         assert r.bounds.left == pytest.approx(20 - r.sx / 2)
 
-    def test_remote_netcdf4_windowed(self, http_fixtures):
-        from opentopodata_spark import hdf5
-
-        srv, base = http_fixtures
-        rng = np.random.RandomState(9)
-        arr = (rng.rand(768, 768) * 800).astype(np.float32)
-        sub = os.path.join(srv.root, "tmp_remote")
-        os.makedirs(sub, exist_ok=True)
-        p = os.path.join(sub, "grid.nc")
-        hdf5.write_netcdf4(p, arr, x0=3.0, y0=48.0, sx=0.004, sy=0.004,
-                           nodata=-9999.0, compression="deflate",
-                           chunk=(64, 64))
-        geotiff.clear_range_cache()
-        geotiff.clear_block_cache()
-        r = geotiff.open_raster(f"{base}/tmp_remote/grid.nc")
-        w, _ = r.read_window(10, 60, 20, 70)
-        np.testing.assert_array_equal(np.asarray(w), arr[10:60, 20:70])
-        fetched = _fetched_bytes(srv)
-        assert 0 < fetched < os.path.getsize(p) // 2  # windowed, not full
-
     def test_missing_remote_object_is_loud(self, http_fixtures):
         _, base = http_fixtures
         with pytest.raises(geotiff.RasterOpenError, match="404"):

@@ -4,7 +4,7 @@ The reference reads VRT mosaics through GDAL
 (/root/reference/opentopodata/backend.py:89; the docs recommend VRTs for
 mosaicked datasets). Pins: mosaic assembly in painter order, seam
 windows, ComplexSource NODATA masking, mixed child formats (GeoTIFF +
-netCDF4), loud rejection of scaled/rotated/SRS-less VRTs, and an
+BIL), loud rejection of scaled/rotated/SRS-less VRTs, and an
 elevation differential — a VRT over two tiles must resolve identically
 to the tiled dataset itself.
 """
@@ -16,7 +16,7 @@ import os
 import numpy as np
 import pytest
 
-from opentopodata_spark import geotiff, hdf5
+from opentopodata_spark import geotiff, gridformats
 from opentopodata_spark.geotiff import RasterOpenError, open_raster
 
 
@@ -104,11 +104,10 @@ class TestVrt:
         b = a[::-1] + 7.0
         geotiff.write_geotiff(str(tmp_path / "a.tif"), a, x0=10.0, y0=1.0,
                               sx=0.01, sy=0.01, epsg=4326, nodata=-9999)
-        hdf5.write_netcdf4(str(tmp_path / "b.nc"), b, x0=10.5, y0=1.0,
-                           sx=0.01, sy=0.01, nodata=-9999.0,
-                           compression="deflate", chunk=(16, 16))
+        gridformats.write_bil(str(tmp_path / "b.bil"), b, x0=10.5, y0=1.0,
+                              sx=0.01, nodata=-9999.0)
         body = (_source("a.tif", 0, 0, 0, 0, 50, 40)
-                + _source("b.nc", 0, 0, 50, 0, 50, 40))
+                + _source("b.bil", 0, 0, 50, 0, 50, 40))
         p = str(tmp_path / "mix.vrt")
         with open(p, "w") as f:
             f.write(_vrt(100, 40, (10.0, 0.01, 0, 1.0, 0, -0.01), body))
