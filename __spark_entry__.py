@@ -1773,13 +1773,21 @@ _FORMAT_FMTS = ("tif", "asc", "bil", "vrt")
 def _formats_fixture_dir() -> str:
     """Deterministic two-tile terrain written in EVERY supported raster
     format (one subdir per format, same values), for the cross-format
-    and remote-IO contract queries. Idempotent via a .complete marker."""
+    and remote-IO contract queries. The directory is named by a hash of
+    _FORMAT_FMTS and of the writing modules' bytes, so another format
+    list or another writer gets a fresh directory; within one, a
+    .complete marker makes it idempotent."""
+    import hashlib
+
     import numpy as np
 
     from opentopodata_spark import fixtures, geotiff
     from opentopodata_spark import gridformats as gf
 
-    root = os.path.join(_fixture_root(), "formats_r4e")
+    key = hashlib.sha256(repr(_FORMAT_FMTS).encode())
+    for mod in (fixtures, geotiff, gf):
+        key.update(mod.__loader__.get_data(mod.__file__))
+    root = os.path.join(_fixture_root(), f"formats_{key.hexdigest()[:16]}")
     marker = os.path.join(root, ".complete")
     if os.path.exists(marker):
         return root

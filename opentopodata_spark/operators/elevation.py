@@ -46,6 +46,7 @@ from pyspark.sql.types import DoubleType, StringType, StructField, StructType
 from .. import crs as _crs
 from .. import interpolate, tiles
 from ..config import Dataset
+from ..session import worker_bootstrap
 
 # Edge of the shuffle's spatial cell, in degrees: one SRTM-style 1° tile.
 CELL_DEG = 1.0
@@ -141,6 +142,7 @@ def _make_sampler(interpolation: str, nodata_value, names, meta_bc, paths_bc):
     names = pa.array(names, pa.string())
 
     def sample(batches):
+        worker_bootstrap()
         meta, paths = meta_bc.value, paths_bc.value
         for batch in batches:
             lats, lons = _f64(batch.column("lat")), _f64(batch.column("lon"))
@@ -256,8 +258,9 @@ class ElevationResolver:
 
     # ~points per shuffle partition in auto sizing. At this size a
     # partition is ~10-20 MB of point rows and a reduce task runs a
-    # second or more — well above the fixed ~0.2 s every Python task pays
-    # before user code runs (docs/DATA_PIPELINE.md).
+    # second or more — well above the fixed start every Python task pays
+    # before user code runs (~0.05 s on local[4] with worker_bootstrap,
+    # ~0.2 s when this size was set; docs/DATA_PIPELINE.md).
     _ROWS_PER_PARTITION = 200_000
 
     def _plan_partitions(self) -> int:
@@ -268,8 +271,9 @@ class ElevationResolver:
         each, capped at 4 waves, then rounded UP to whole waves — a
         multiple of defaultParallelism (the execution slots), which is
         also the floor. Every sampler task pays a fixed Python-worker
-        start (~0.2 s on local[4]), so a partial wave buys no parallelism
-        and a wave per core of tiny tasks costs that start again; the
+        start (~0.05 s on local[4] with worker_bootstrap, ~0.2 s when
+        this rule was set), so a partial wave buys no parallelism and a
+        wave per core of tiny tasks costs that start again; the
         per-cell salts, not finer partitions, keep the tasks of one wave
         even. Without an estimate (unit tests, ad-hoc calls):
         spark.sql.shuffle.partitions, unchanged."""

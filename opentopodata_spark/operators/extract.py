@@ -51,6 +51,7 @@ from pyspark.sql.types import (
 )
 
 from .. import polyline_codec
+from ..session import worker_bootstrap
 
 LAT_MIN, LAT_MAX = -90.0, 90.0
 LON_MIN, LON_MAX = -180.0, 180.0
@@ -126,6 +127,7 @@ def _polyline_points(texts: pa.Array):
 
 def _extract_batches(batches):
     """mapInArrow fn over (doc_id, kind list, text list) batches."""
+    worker_bootstrap()
     for batch in batches:
         yield from _extract_batch(batch)
 

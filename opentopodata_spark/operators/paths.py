@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .. import geodesic
+from ..session import worker_bootstrap
 
 __all__ = ["sample_paths", "elevation_profile", "profile_metrics",
            "line_of_sight", "los_metrics"]
@@ -51,6 +52,7 @@ def sample_paths(
         raise ValueError("n_samples must be >= 2")
 
     def run(batches):
+        worker_bootstrap()
         for pdf in batches:
             ids, pos, las, los, dist = [], [], [], [], []
             for pid, plats, plons in zip(pdf["path_id"], pdf["lats"], pdf["lons"]):
@@ -336,6 +338,7 @@ def viewshed(
         raise ValueError("n_samples must be >= 2")
 
     def cast_rays(batches):
+        worker_bootstrap()
         from .. import geodesic
 
         # one vectorized Karney solve per (observer, azimuth): the line
@@ -380,6 +383,7 @@ def viewshed(
         else 0.0
 
     def sweep(pdf: pd.DataFrame) -> pd.DataFrame:
+        worker_bootstrap()
         pdf = pdf.sort_values("sample_pos").reset_index(drop=True)
         e = pdf["elevation"].to_numpy(dtype=np.float64)  # NaN for null
         d = pdf["distance_m"].to_numpy(dtype=np.float64)

@@ -9,6 +9,9 @@ Defaults chosen for the 100 TB design point (and harmless locally):
   holds one Arrow batch + one memory-mapped tile window at a time);
 - a broadcast threshold generous enough for the small side of those
   joins (anchor sets, polygon layers).
+
+``worker_bootstrap`` is the Python workers' side: it makes a task's
+start free of PySpark's per-task re-read of every zip's directory.
 """
 
 from __future__ import annotations
@@ -17,8 +20,57 @@ import hashlib
 import os
 import tempfile
 import zipfile
+import zipimport
 
+from pyspark import SparkFiles
 from pyspark.sql import SparkSession
+
+_stdlib_invalidate = zipimport.zipimporter.invalidate_caches
+# archive path -> (st_size, st_mtime_ns, st_ino) when its directory was
+# last read in this worker process
+_archive_stamps: dict[str, tuple | None] = {}
+
+
+def _stamp(archive: str) -> tuple | None:
+    try:
+        st = os.stat(archive)
+    except OSError:
+        return None
+    return (st.st_size, st.st_mtime_ns, st.st_ino)
+
+
+def _guarded_invalidate(self) -> None:
+    """zipimporter.invalidate_caches that re-reads the archive only when
+    its (size, mtime, inode) differs from the stamp of its last read, or
+    when the directory cache no longer holds it."""
+    stamp = _stamp(self.archive)
+    files = zipimport._zip_directory_cache.get(self.archive)
+    if stamp is None or files is None or _archive_stamps.get(self.archive) != stamp:
+        _stdlib_invalidate(self)
+        _archive_stamps[self.archive] = stamp
+    else:
+        self._files = files
+
+
+def worker_bootstrap() -> None:
+    """Make a Python worker's per-task start free; every engine Arrow or
+    pandas function calls this first.
+
+    Before each task PySpark calls ``importlib.invalidate_caches()``, and
+    on CPython 3.11 every zipimporter on the worker's path then re-reads
+    its archive's directory (~0.2 s per task; the spark-core jar alone
+    has ~5,000 entries). Installed once per worker, ``_guarded_invalidate``
+    re-reads an archive only when it changed, as ``FileFinder`` does for
+    directories; a zip added later by ``addPyFile`` is a new path with a
+    new importer. The archives cached at install were just read by this
+    task's own ``invalidate_caches``, so they are stamped as read. The
+    driver is never patched."""
+    if (zipimport.zipimporter.invalidate_caches is _guarded_invalidate
+            or not SparkFiles._is_running_on_worker):
+        return
+    for archive in list(zipimport._zip_directory_cache):
+        _archive_stamps[archive] = _stamp(archive)
+    zipimport.zipimporter.invalidate_caches = _guarded_invalidate
 
 
 def _package_zip() -> str:
@@ -118,13 +170,13 @@ def get_spark(
     )
     if master != "external":
         # One scan task per slot, not several waves: every Python task
-        # pays a fixed ~0.2-0.3 s worker start before user code runs
-        # (PySpark re-reads every zip on the worker's sys.path per task;
-        # see docs/DATA_PIPELINE.md), so a 4x-cores split of a Python
-        # stage pays that start four times per slot. Inputs larger than
-        # cores x 128 MB still split finer by the normal file packing;
-        # minPartitionNum only splits finer than packing would — it
-        # never merges.
+        # pays a fixed worker start before user code runs, ~0.05 s on
+        # local[4] with worker_bootstrap (0.2-0.3 s without it, when
+        # this rule was set; see docs/DATA_PIPELINE.md), so a 4x-cores
+        # split of a Python stage pays that start four times per slot.
+        # Inputs larger than cores x 128 MB still split finer by the
+        # normal file packing; minPartitionNum only splits finer than
+        # packing would — it never merges.
         builder = builder.config("spark.sql.files.minPartitionNum", str(cores))
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

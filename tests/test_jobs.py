@@ -260,6 +260,35 @@ def test_no_new_environment_knobs():
     assert [r for r in reads if r[2] not in _ENV_KNOBS] == []
 
 
+def test_formats_fixture_dir_is_keyed_by_formats_and_writers(
+    tmp_path, monkeypatch
+):
+    """The contract's cross-format fixture directory belongs to one format
+    list and one version of its writers: a changed list or writer gets a
+    freshly written directory, never one another version left complete."""
+    import __spark_entry__ as contract
+    from opentopodata_spark import geotiff
+
+    monkeypatch.setattr(contract, "_fixture_root", lambda: str(tmp_path))
+    monkeypatch.setattr(contract, "_FORMAT_FMTS", ("tif",))
+    first = contract._formats_fixture_dir()
+    assert sorted(os.listdir(first)) == [".complete", "fmt_tif"]
+    assert contract._formats_fixture_dir() == first
+
+    monkeypatch.setattr(contract, "_FORMAT_FMTS", ("tif", "asc"))
+    second = contract._formats_fixture_dir()
+    assert second != first
+    assert sorted(os.listdir(second)) == [".complete", "fmt_asc", "fmt_tif"]
+
+    edited = tmp_path / "geotiff.py"
+    with open(geotiff.__file__, "rb") as f:
+        edited.write_bytes(f.read() + b"\n# edited\n")
+    monkeypatch.setattr(geotiff, "__file__", str(edited))
+    third = contract._formats_fixture_dir()
+    assert third not in (first, second)
+    assert sorted(os.listdir(third)) == [".complete", "fmt_asc", "fmt_tif"]
+
+
 # ------------------------------------------------------------- elevation job
 
 
