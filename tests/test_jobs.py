@@ -213,6 +213,12 @@ _ENV_KNOBS = {
     "CONFIG_PATH", "SPARK_GRAFT_CPUS", "SPARK_GRAFT_MASTER",
     "SPARK_DRIVER_MEM", "OTDS_BLOCK_CACHE_MB",
 }
+# Spark's, PySpark's and the JDK's own variables, which session.get_spark
+# reads to know how Spark's launcher builds the driver JVM's class path
+_ENV_KNOBS |= {
+    "SPARK_CONF_DIR", "JAVA_HOME", "PYSPARK_GATEWAY_PORT",
+    "HADOOP_CONF_DIR", "YARN_CONF_DIR", "SPARK_DIST_CLASSPATH",
+}
 
 
 def _env_reads(path: str):
