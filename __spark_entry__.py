@@ -4,12 +4,13 @@
 (documents -> coordinate extraction -> tile assignment -> raster
 interpolation -> priority coalesce) on deterministic synthetic fixtures
 at sf0.001 scale. ``queries()``/``oracle_sql()`` cover the engine's
-operator inventory (SURVEY.md §2 plus the geospatial and vector
-operators, the raster<->vector operators and the raster dataset
-preparation) over the testdata tables; every aggregate/computed column
-is aliased identically on both sides, and all float expressions are
-written so Spark and DuckDB evaluate the exact same double-precision
-operation sequence.
+operator inventory (SURVEY.md §2 plus the spatial joins -- S2 cells,
+point-in-polygon, kNN and range joins --, vector feature ingestion and
+the raster<->vector operators) over the testdata tables; every
+aggregate/computed column is aliased identically on both sides, and all
+float expressions are written so Spark and DuckDB evaluate the exact
+same double-precision operation sequence. ``oracle_sql()`` lists its
+names for free and builds an oracle only when its SQL is read.
 """
 
 from __future__ import annotations
@@ -17,7 +18,8 @@ from __future__ import annotations
 import os
 import sys
 import tempfile
-from collections.abc import Callable
+from collections.abc import Callable, Mapping
+from functools import partial
 
 _REPO = os.path.dirname(os.path.abspath(__file__))
 if _REPO not in sys.path:
@@ -349,228 +351,6 @@ SELECT pid,
   CAST(string_split(pairs[2], ',')[2] AS DOUBLE) AS lon2,
   CAST(len(pairs) AS BIGINT) AS n_points
 FROM parsed
-"""
-
-
-# ---------------------------------------------------------------------------
-# queries — polygon dissolve and geodesic buffers
-# ---------------------------------------------------------------------------
-
-
-# dissolve fixture: a vertex-matched unit-cell tiling with five region
-# keys — block, ring-with-hole + island, disconnected blobs, and
-# corner-touching cells (two shells, no hole)
-_DISSOLVE_CELLS = (
-    [("A", x, y) for x in range(3) for y in range(4)]
-    + [("B", x, y) for x in range(10, 13) for y in range(3)
-       if (x, y) != (11, 1)]
-    + [("C", 11, 1)]
-    + [("D", 20, 0), ("D", 21, 0), ("D", 21, 1), ("D", 24, 3), ("D", 25, 3)]
-    + [("E", 30, 0), ("E", 31, 1), ("E", 32, 2)]
-)
-
-
-def q_dissolve_regions(spark, sf_dir):
-    """Polygon dissolve (operators/dissolve.dissolve_polygons): a
-    vertex-matched unit-cell tiling merges to one (multi)polygon per
-    region key — interior edges cancel in one map-side-combined
-    integer aggregation, only the dissolved boundary reaches the
-    per-key stitcher. Contract columns are the full integer algebra:
-    n_parts, surviving perim_edges, exact area2_q (union identity is
-    enforced inside the job), and a DIRECTION-SENSITIVE edge checksum
-    recomputed from the OUTPUT rings — so the oracle (its own SQL
-    cancellation replay over the same cell list) pins both which edges
-    survive and the direction the stitcher walked them. Shell/hole
-    counts are not SQL-expressible; they are pinned by the sequential
-    twin in tests/test_dissolve.py."""
-    from opentopodata_spark.operators import dissolve
-
-    _ship_package(spark)
-    rows = [
-        (k, [[[float(x), float(y)], [float(x + 1), float(y)],
-              [float(x + 1), float(y + 1)], [float(x), float(y + 1)]]])
-        for k, x, y in _DISSOLVE_CELLS
-    ]
-    df = spark.createDataFrame(
-        rows, "key string, rings array<array<array<double>>>"
-    )
-    out = dissolve.dissolve_polygons(df, "key")
-    checksum = F.expr("""
-      aggregate(
-        flatten(transform(rings, r ->
-          transform(sequence(0, size(r) - 1), i ->
-            CAST(round(r[i][0] * 1048576.0) AS BIGINT)
-            + 3 * CAST(round(r[i][1] * 1048576.0) AS BIGINT)
-            + 5 * CAST(round(r[(i + 1) % size(r)][0] * 1048576.0) AS BIGINT)
-            + 7 * CAST(round(r[(i + 1) % size(r)][1] * 1048576.0) AS BIGINT)
-          ))),
-        0L, (a, x) -> a + x)
-    """)
-    return out.select(
-        "key", "n_parts", "perim_edges", "area2_q",
-        checksum.alias("edge_checksum"),
-    )
-
-
-def _dissolve_sql() -> str:
-    cells = ",\n    ".join(
-        f"('{k}', {x}, {y})" for k, x, y in _DISSOLVE_CELLS
-    )
-    return f"""
-WITH cells(key, cx, cy) AS (VALUES
-    {cells}),
-e(key, ax, ay, bx, by) AS (
-  SELECT key, cx, cy, cx + 1, cy FROM cells UNION ALL
-  SELECT key, cx + 1, cy, cx + 1, cy + 1 FROM cells UNION ALL
-  SELECT key, cx + 1, cy + 1, cx, cy + 1 FROM cells UNION ALL
-  SELECT key, cx, cy + 1, cx, cy FROM cells),
-eq AS (
-  SELECT key,
-         ax * 1048576::BIGINT AS ax, ay * 1048576::BIGINT AS ay,
-         bx * 1048576::BIGINT AS bx, by * 1048576::BIGINT AS by,
-         ((ax < bx) OR (ax = bx AND ay < by)) AS fwd
-  FROM e),
-und AS (
-  SELECT key,
-         CASE WHEN fwd THEN ax ELSE bx END AS uax,
-         CASE WHEN fwd THEN ay ELSE by END AS uay,
-         CASE WHEN fwd THEN bx ELSE ax END AS ubx,
-         CASE WHEN fwd THEN by ELSE ay END AS uby,
-         SUM(CASE WHEN fwd THEN 1 ELSE -1 END) AS net
-  FROM eq GROUP BY 1, 2, 3, 4, 5),
-surv AS (
-  SELECT key,
-         CASE WHEN net > 0 THEN uax ELSE ubx END AS sax,
-         CASE WHEN net > 0 THEN uay ELSE uby END AS say,
-         CASE WHEN net > 0 THEN ubx ELSE uax END AS sbx,
-         CASE WHEN net > 0 THEN uby ELSE uay END AS sby
-  FROM und WHERE net <> 0),
-agg AS (
-  SELECT key, CAST(count(*) AS BIGINT) AS perim_edges,
-         CAST(sum(sax + 3 * say + 5 * sbx + 7 * sby) AS BIGINT)
-           AS edge_checksum
-  FROM surv GROUP BY key),
-parts AS (
-  SELECT key, CAST(count(*) AS BIGINT) AS n_parts,
-         CAST(count(*) AS BIGINT) * 2 * (1::BIGINT << 40) AS area2_q
-  FROM cells GROUP BY key)
-SELECT p.key, p.n_parts, a.perim_edges, p.area2_q, a.edge_checksum
-FROM parts p JOIN agg a USING (key)
-"""
-
-
-_BUFFER_ANCHORS = [
-    ("den", 40.05, -100.05),
-    ("syd", -33.95, 151.05),
-    ("lonx", 51.55, -0.05),
-    ("tok", 35.05, 139.05),
-    ("nbo", -1.05, 36.95),
-]
-_BUFFER_R_M = 500_000.0
-_BUFFER_K = 16
-
-
-def q_buffer_pip(spark, sf_dir):
-    """Geodesic buffer geofences (operators/buffer.buffer_points): five
-    anchor sites become 16-gon rings of exact Karney direct solutions
-    at 500 km (vertices quantized to 2^-20 deg, CCW), then the events
-    table (deterministic event_id-derived coordinates) PIP-joins
-    against them through the broadcast S2-cover front door. Returns per-fence event/user counts PLUS the exact ring
-    coordinate sums — the oracle rebuilds the rings with the SEQUENTIAL
-    twin (buffer_rings_sequential) and runs its OWN ray cast in SQL, so
-    a green row pins both the distributed ring construction (quantized
-    vertices sum exactly, left-fold order on both sides) and the
-    within-distance join semantics."""
-    from opentopodata_spark.operators import buffer as buf
-    from opentopodata_spark.operators import spatial
-
-    _ship_package(spark)
-    anchors = spark.createDataFrame(
-        _BUFFER_ANCHORS, "point_id string, lat double, lon double"
-    )
-    rings = buf.buffer_points(anchors, _BUFFER_R_M, n_vertices=_BUFFER_K)
-    polys = spatial.polygons_from_df(rings)
-    e = _t(spark, sf_dir, "events").select(
-        "event_id",
-        "user_id",
-        ((F.col("event_id") % 1700) / 10.0 - 85.0 + 0.05).alias("lat"),
-        ((F.col("event_id") * 7 % 3500) / 10.0 - 175.0 + 0.05).alias("lon"),
-    )
-    joined = spatial.point_in_polygon_join(e, polys, level=7)
-    counts = joined.groupBy("polygon_id").agg(
-        F.count("*").alias("n_events"),
-        F.countDistinct("user_id").alias("n_users"),
-    )
-    sums = spark.createDataFrame(
-        [
-            (r.polygon_id, list(r.lats), list(r.lons))
-            for r in rings.collect()
-        ],
-        "polygon_id string, lats array<double>, lons array<double>",
-    ).select(
-        "polygon_id",
-        F.aggregate("lats", F.lit(0.0), lambda a, x: a + x).alias("lat_sum"),
-        F.aggregate("lons", F.lit(0.0), lambda a, x: a + x).alias("lon_sum"),
-    )
-    return sums.join(counts, "polygon_id", "left").select(
-        "polygon_id",
-        F.coalesce("n_events", F.lit(0).cast("long")).alias("n_events"),
-        F.coalesce("n_users", F.lit(0).cast("long")).alias("n_users"),
-        "lat_sum",
-        "lon_sum",
-    )
-
-
-def _buffer_pip_sql() -> str:
-    from opentopodata_spark.operators import buffer as buf
-
-    seq = buf.buffer_rings_sequential(
-        _BUFFER_ANCHORS, _BUFFER_R_M, n_vertices=_BUFFER_K
-    )
-    edge_rows, sums_rows = [], []
-    for pid, la, lo in seq:
-        n = len(la)
-        for k in range(n):
-            y1, x1 = la[k], lo[k]
-            y2, x2 = la[(k + 1) % n], lo[(k + 1) % n]
-            if y1 == y2:
-                continue
-            edge_rows.append(f"('{pid}', {y1!r}, {x1!r}, {y2!r}, {x2!r})")
-        lat_sum = 0.0
-        for v in la:
-            lat_sum += v
-        lon_sum = 0.0
-        for v in lo:
-            lon_sum += v
-        sums_rows.append(f"('{pid}', {lat_sum!r}, {lon_sum!r})")
-    edges = ",\n    ".join(edge_rows)
-    sums = ",\n    ".join(sums_rows)
-    return f"""
-WITH pts AS (
-  SELECT event_id AS pid, user_id,
-         (event_id % 1700) / 10.0 - 85.0 + 0.05 AS lat,
-         (event_id * 7 % 3500) / 10.0 - 175.0 + 0.05 AS lon
-  FROM events),
-edges(polygon_id, y1, x1, y2, x2) AS (VALUES
-    {edges}),
-sums(polygon_id, lat_sum, lon_sum) AS (VALUES
-    {sums}),
-crossings AS (
-  SELECT p.pid AS point_id, e.polygon_id,
-         CASE WHEN ((e.y1 > p.lat) <> (e.y2 > p.lat))
-               AND (p.lon < (e.x2 - e.x1) * (p.lat - e.y1) / (e.y2 - e.y1) + e.x1)
-              THEN 1 ELSE 0 END AS c
-  FROM pts p CROSS JOIN edges e),
-inside AS (
-  SELECT point_id, polygon_id FROM crossings
-  GROUP BY point_id, polygon_id HAVING SUM(c) % 2 = 1),
-counts AS (
-  SELECT i.polygon_id, count(*) AS n_events,
-         count(DISTINCT p.user_id) AS n_users
-  FROM inside i JOIN pts p ON i.point_id = p.pid GROUP BY 1)
-SELECT s.polygon_id, coalesce(c.n_events, 0) AS n_events,
-       coalesce(c.n_users, 0) AS n_users, s.lat_sum, s.lon_sum
-FROM sums s LEFT JOIN counts c USING (polygon_id)
 """
 
 
@@ -1187,13 +967,6 @@ WHERE EXISTS (SELECT 1 FROM counts)""".replace(
     return "\nUNION ALL\n".join(parts)
 
 
-def _zonal_majority_oracle_entry() -> dict[str, str]:
-    try:
-        return {"zonal_majority": _zonal_majority_sql()}
-    except Exception:
-        return {}
-
-
 def q_rasterize_grid(spark, sf_dir):
     """Vector->raster: point stream aggregated onto a 1-degree global
     grid — cell floor keys in pure column exprs, ONE wide shuffle with
@@ -1524,23 +1297,14 @@ HAVING COUNT(*) > 0""")
     return "\nUNION ALL\n".join(parts)
 
 
-def _zonal_oracle_entry() -> dict[str, str]:
-    try:
-        return {"zonal_stats": _zonal_sql()}
-    except Exception:
-        import traceback
-
-        traceback.print_exc()  # loud: a builder bug must not silently
-        return {}  # downgrade the check to rows-only
-
-
 # ---------------------------------------------------------------------------
 # precomputed single-process oracles for the non-SQL-expressible queries
 #
 # DuckDB cannot compute rasters / Karney geodesics / S2 Hilbert ids,
 # so for these the oracle is the repo's own SINGLE-PROCESS reference
-# implementation (numpy, no Spark): expected outputs are recomputed fresh
-# into a parquet at oracle_sql() time and the SQL just reads that file.
+# implementation (numpy, no Spark): a query's expected output is
+# recomputed fresh into a parquet when its oracle SQL is first read, and
+# that SQL just reads the file.
 # This upgrades the former rows-only checks to full rows+schema+hash checks
 # of the distributed plumbing (extraction positions, shuffles, joins,
 # carry-through) against an independent execution path. The scalar kernels
@@ -2320,15 +2084,9 @@ _PRECOMPUTED_BUILDERS = {
 }
 
 
-def _precomputed_oracles() -> dict[str, str]:
-    out = {}
-    for name, builder in _PRECOMPUTED_BUILDERS.items():
-        try:
-            path = _oracle_parquet(name, builder)
-        except Exception:
-            continue  # fall back to the rows-only check for this query
-        out[name] = f"SELECT * FROM read_parquet('{path}')"
-    return out
+def _precomputed_sql(name: str) -> str:
+    path = _oracle_parquet(name, _PRECOMPUTED_BUILDERS[name])
+    return f"SELECT * FROM read_parquet('{path}')"
 
 
 # ---------------------------------------------------------------------------
@@ -2433,572 +2191,6 @@ def _vector_fixture_dir() -> str:
     with open(marker, "w") as f:
         f.write("ok")
     return root
-
-
-# ---------------------------------------------------------------------------
-# vector overlay analytics (operators/overlay.py)
-# ---------------------------------------------------------------------------
-
-
-def _overlay_left(spark, sf_dir):
-    """Concave L-hexagons on an integer grid, derived from part keys —
-    the identical modular arithmetic the SQL oracle replays."""
-    p = _t(spark, sf_dir, "part").where(F.col("p_partkey") % 7 == 0)
-    p = p.selectExpr(
-        "p_partkey AS l_id",
-        "CAST(p_partkey*131 % 2001 AS DOUBLE) AS cx",
-        "CAST(p_partkey*197 % 2001 AS DOUBLE) AS cy",
-        "CAST(p_partkey%13+6 AS DOUBLE) AS a",
-        "CAST(p_partkey%19+6 AS DOUBLE) AS b",
-    )
-    return p.selectExpr(
-        "l_id",
-        "array(array("
-        " array(cx, cy), array(cx+2*a, cy), array(cx+2*a, cy+b),"
-        " array(cx+a, cy+b), array(cx+a, cy+2*b), array(cx, cy+2*b)"
-        ")) AS rings",
-    )
-
-
-def _overlay_right(spark, sf_dir):
-    """Squares from customer keys; every third carries a centered
-    square hole (even-odd interior)."""
-    c = _t(spark, sf_dir, "customer").where(F.col("c_custkey") % 5 == 0)
-    c = c.selectExpr(
-        "c_custkey AS r_id",
-        "CAST(c_custkey*241 % 2001 AS DOUBLE) AS dx",
-        "CAST(c_custkey*311 % 2001 AS DOUBLE) AS dy",
-        "CAST(c_custkey%29+10 AS DOUBLE) AS r",
-        "CAST((c_custkey%29+10) DIV 3 AS DOUBLE) AS h",
-        "c_custkey % 3 = 0 AS holed",
-    )
-    outer = ("array(array(dx-r,dy-r), array(dx+r,dy-r),"
-             " array(dx+r,dy+r), array(dx-r,dy+r))")
-    hole = ("array(array(dx-h,dy-h), array(dx+h,dy-h),"
-            " array(dx+h,dy+h), array(dx-h,dy+h))")
-    return c.selectExpr(
-        "r_id",
-        f"CASE WHEN holed THEN array({outer}, {hole})"
-        f" ELSE array({outer}) END AS rings",
-    )
-
-
-def q_overlay_join(spark, sf_dir):
-    """operators/overlay.polygon_join: polygon×polygon closed-set
-    'intersects' spatial join via the 2-D grid-bucketing rewrite — cell
-    explode (pure exprs) → equi-join on the cell key → canonical-cell
-    dedupe (no distinct) → exact sign-of-cross CLRS predicate on the
-    surviving candidates only (Arrow-batched; never a nested-loop or
-    cartesian plan — pinned in tests/test_overlay.py). The reference
-    has only the point→tile equi-join
-    (/root/reference/opentopodata/config.py:432-451); this is the
-    polygon side of the overlay algebra at corpus scale. Full ANSI-SQL
-    oracle: same closed segment test + even-odd ray casts over
-    UNNESTed edges, all integer arithmetic."""
-    _ship_package(spark)
-    from opentopodata_spark.operators import overlay
-
-    return overlay.polygon_join(
-        _overlay_left(spark, sf_dir), _overlay_right(spark, sf_dir),
-        cell_size=64.0, max_cells=64,
-    )
-
-
-_Q_OVERLAY_SQL = """
-WITH lp AS (
-  SELECT p_partkey AS l_id,
-         (p_partkey*131) % 2001 AS cx, (p_partkey*197) % 2001 AS cy,
-         p_partkey % 13 + 6 AS a, p_partkey % 19 + 6 AS b
-  FROM part WHERE p_partkey % 7 = 0),
-rp AS (
-  SELECT c_custkey AS r_id,
-         (c_custkey*241) % 2001 AS dx, (c_custkey*311) % 2001 AS dy,
-         c_custkey % 29 + 10 AS r, (c_custkey % 29 + 10) // 3 AS h,
-         c_custkey % 3 = 0 AS holed
-  FROM customer WHERE c_custkey % 5 = 0),
-lv AS (
-  SELECT l_id, u.vi,
-    CASE u.vi WHEN 0 THEN cx WHEN 1 THEN cx+2*a WHEN 2 THEN cx+2*a
-              WHEN 3 THEN cx+a WHEN 4 THEN cx+a ELSE cx END AS x,
-    CASE u.vi WHEN 0 THEN cy WHEN 1 THEN cy WHEN 2 THEN cy+b
-              WHEN 3 THEN cy+b WHEN 4 THEN cy+2*b ELSE cy+2*b END AS y
-  FROM lp, UNNEST([0,1,2,3,4,5]) AS u(vi)),
-le AS (
-  SELECT v1.l_id, v1.x AS x1, v1.y AS y1, v2.x AS x2, v2.y AS y2
-  FROM lv v1 JOIN lv v2 ON v1.l_id = v2.l_id AND v2.vi = (v1.vi+1) % 6),
-rv AS (
-  SELECT r_id, 0 AS ring, u.vi,
-    CASE u.vi WHEN 0 THEN dx-r WHEN 1 THEN dx+r WHEN 2 THEN dx+r
-              ELSE dx-r END AS x,
-    CASE u.vi WHEN 0 THEN dy-r WHEN 1 THEN dy-r WHEN 2 THEN dy+r
-              ELSE dy+r END AS y
-  FROM rp, UNNEST([0,1,2,3]) AS u(vi)
-  UNION ALL
-  SELECT r_id, 1, u.vi,
-    CASE u.vi WHEN 0 THEN dx-h WHEN 1 THEN dx+h WHEN 2 THEN dx+h
-              ELSE dx-h END,
-    CASE u.vi WHEN 0 THEN dy-h WHEN 1 THEN dy-h WHEN 2 THEN dy+h
-              ELSE dy+h END
-  FROM rp, UNNEST([0,1,2,3]) AS u(vi) WHERE holed),
-re AS (
-  SELECT v1.r_id, v1.x AS x1, v1.y AS y1, v2.x AS x2, v2.y AS y2
-  FROM rv v1 JOIN rv v2 ON v1.r_id = v2.r_id AND v1.ring = v2.ring
-                       AND v2.vi = (v1.vi+1) % 4),
-lb AS (SELECT l_id, min(x) xmin, max(x) xmax, min(y) ymin, max(y) ymax
-       FROM lv GROUP BY l_id),
-rb AS (SELECT r_id, min(x) xmin, max(x) xmax, min(y) ymin, max(y) ymax
-       FROM rv GROUP BY r_id),
-cand AS (
-  SELECT l.l_id, r.r_id FROM lb l, rb r
-  WHERE l.xmin <= r.xmax AND r.xmin <= l.xmax
-    AND l.ymin <= r.ymax AND r.ymin <= l.ymax),
-seghit AS (
-  SELECT DISTINCT l_id, r_id FROM (
-    SELECT c.l_id, c.r_id,
-      sign((re.x2-re.x1)*(le.y1-re.y1)-(re.y2-re.y1)*(le.x1-re.x1)) d1,
-      sign((re.x2-re.x1)*(le.y2-re.y1)-(re.y2-re.y1)*(le.x2-re.x1)) d2,
-      sign((le.x2-le.x1)*(re.y1-le.y1)-(le.y2-le.y1)*(re.x1-le.x1)) d3,
-      sign((le.x2-le.x1)*(re.y2-le.y1)-(le.y2-le.y1)*(re.x2-le.x1)) d4,
-      le.x1 px1, le.y1 py1, le.x2 px2, le.y2 py2,
-      re.x1 qx1, re.y1 qy1, re.x2 qx2, re.y2 qy2
-    FROM cand c JOIN le ON le.l_id = c.l_id JOIN re ON re.r_id = c.r_id)
-  WHERE (d1 <> d2 AND d1 <> 0 AND d2 <> 0
-         AND d3 <> d4 AND d3 <> 0 AND d4 <> 0)
-     OR (d1 = 0 AND px1 BETWEEN least(qx1,qx2) AND greatest(qx1,qx2)
-                AND py1 BETWEEN least(qy1,qy2) AND greatest(qy1,qy2))
-     OR (d2 = 0 AND px2 BETWEEN least(qx1,qx2) AND greatest(qx1,qx2)
-                AND py2 BETWEEN least(qy1,qy2) AND greatest(qy1,qy2))
-     OR (d3 = 0 AND qx1 BETWEEN least(px1,px2) AND greatest(px1,px2)
-                AND qy1 BETWEEN least(py1,py2) AND greatest(py1,py2))
-     OR (d4 = 0 AND qx2 BETWEEN least(px1,px2) AND greatest(px1,px2)
-                AND qy2 BETWEEN least(py1,py2) AND greatest(py1,py2))),
-la AS (SELECT l_id, x AS px, y AS py FROM lv WHERE vi = 0),
-ra AS (SELECT r_id, x AS px, y AS py FROM rv WHERE ring = 0 AND vi = 0),
-lin AS (
-  SELECT c.l_id, c.r_id
-  FROM cand c JOIN la ON la.l_id = c.l_id JOIN re ON re.r_id = c.r_id
-  GROUP BY c.l_id, c.r_id, la.px, la.py
-  HAVING SUM(CASE WHEN (re.y1 > la.py) <> (re.y2 > la.py)
-    AND la.px < (re.x2-re.x1)*CAST(la.py-re.y1 AS DOUBLE)/(re.y2-re.y1)+re.x1
-    THEN 1 ELSE 0 END) % 2 = 1),
-rin AS (
-  SELECT c.l_id, c.r_id
-  FROM cand c JOIN ra ON ra.r_id = c.r_id JOIN le ON le.l_id = c.l_id
-  GROUP BY c.l_id, c.r_id, ra.px, ra.py
-  HAVING SUM(CASE WHEN (le.y1 > ra.py) <> (le.y2 > ra.py)
-    AND ra.px < (le.x2-le.x1)*CAST(ra.py-le.y1 AS DOUBLE)/(le.y2-le.y1)+le.x1
-    THEN 1 ELSE 0 END) % 2 = 1)
-SELECT l_id, r_id FROM seghit
-UNION SELECT l_id, r_id FROM lin
-UNION SELECT l_id, r_id FROM rin
-"""
-
-
-def q_overlay_join_broadcast(spark, sf_dir):
-    """operators/overlay.polygon_join_broadcast: the shuffle-FREE twin
-    of overlay_join for a dimension-sized right side — right polygons
-    collect to a driver grid index that ships in the mapInPandas
-    closure, every left partition resolves locally, ZERO exchanges
-    (plan pinned in tests). Same fixture and the same full SQL oracle
-    as overlay_join: the two physical strategies must agree row-for-
-    row, which is itself the strongest cross-check of both."""
-    _ship_package(spark)
-    from opentopodata_spark.operators import overlay
-
-    return overlay.polygon_join_broadcast(
-        _overlay_left(spark, sf_dir), _overlay_right(spark, sf_dir),
-        cell_size=64.0,
-    )
-
-
-def q_polygon_metrics(spark, sf_dir):
-    """operators/overlay.polygon_metrics: per-polygon area / perimeter
-    / centroid over rings-with-holes as PURE column expressions
-    (aggregate/transform HOFs — zero UDF, zero exchange, whole-stage
-    codegen; the 10^12-row path is a scan). Fixture: concave
-    L-hexagons (part) ∪ squares-with-holes (customer). Oracle:
-    closed-form metrics from the same integer derivations — area
-    3ab / 4r²−4h², perimeter 4a+4b / 8r+8h, centroid (cx+5a/6,
-    cy+5b/6) / (dx, dy) — never touching the ring arrays, so any
-    construction or HOF defect shows as a mismatch."""
-    _ship_package(spark)
-    from opentopodata_spark.operators import overlay
-
-    lhex = _overlay_left(spark, sf_dir).selectExpr(
-        "concat('P', l_id) AS poly_id", "rings")
-    holed = _overlay_right(spark, sf_dir).selectExpr(
-        "concat('C', r_id) AS poly_id", "rings")
-    return overlay.polygon_metrics(lhex.unionByName(holed))
-
-
-_Q_POLYGON_METRICS_SQL = """
-WITH lp AS (
-  SELECT p_partkey AS id,
-         (p_partkey*131) % 2001 AS cx, (p_partkey*197) % 2001 AS cy,
-         p_partkey % 13 + 6 AS a, p_partkey % 19 + 6 AS b
-  FROM part WHERE p_partkey % 7 = 0),
-rp AS (
-  SELECT c_custkey AS id,
-         (c_custkey*241) % 2001 AS dx, (c_custkey*311) % 2001 AS dy,
-         c_custkey % 29 + 10 AS r, (c_custkey % 29 + 10) // 3 AS h,
-         c_custkey % 3 = 0 AS holed
-  FROM customer WHERE c_custkey % 5 = 0)
-SELECT concat('P', id) AS poly_id,
-       CAST(3*a*b AS DOUBLE) AS area,
-       CAST(4*a + 4*b AS DOUBLE) AS perimeter,
-       round(cx + 5*a/6.0, 6) AS cx,
-       round(cy + 5*b/6.0, 6) AS cy
-FROM lp
-UNION ALL
-SELECT concat('C', id) AS poly_id,
-       CAST(4*r*r - CASE WHEN holed THEN 4*h*h ELSE 0 END AS DOUBLE) AS area,
-       CAST(8*r + CASE WHEN holed THEN 8*h ELSE 0 END AS DOUBLE) AS perimeter,
-       CAST(dx AS DOUBLE) AS cx, CAST(dy AS DOUBLE) AS cy
-FROM rp
-"""
-
-
-def q_polygon_clip(spark, sf_dir):
-    """operators/overlay.clip_polygons: Sutherland–Hodgman clip of the
-    concave L-hexagons against a fixed convex window (per-ring S-H in
-    a mapInPandas batch, holes subtract; zero joins). Oracle: the
-    L-hexagon is the disjoint union of two axis-aligned rectangles, so
-    the clipped area is two exact interval-overlap products — computed
-    in SQL straight from the integer derivation, independent of the
-    S-H sweep. Only clip_area is contracted (the clipped ring's bbox
-    is sensitive to S-H's zero-area bridge slivers by design)."""
-    _ship_package(spark)
-    from opentopodata_spark.operators import overlay
-
-    window = [[200.0, 150.0], [1800.0, 150.0], [1800.0, 1850.0],
-              [200.0, 1850.0]]
-    out = overlay.clip_polygons(
-        _overlay_left(spark, sf_dir), window, poly_id="l_id")
-    return out.select("l_id", "clip_area")
-
-
-_Q_POLYGON_CLIP_SQL = """
-WITH lp AS (
-  SELECT p_partkey AS l_id,
-         (p_partkey*131) % 2001 AS cx, (p_partkey*197) % 2001 AS cy,
-         p_partkey % 13 + 6 AS a, p_partkey % 19 + 6 AS b
-  FROM part WHERE p_partkey % 7 = 0),
-ov AS (
-  SELECT l_id,
-    greatest(0, least(cx + 2*a, 1800) - greatest(cx, 200))
-      * greatest(0, least(cy + b, 1850) - greatest(cy, 150))
-    + greatest(0, least(cx + a, 1800) - greatest(cx, 200))
-      * greatest(0, least(cy + 2*b, 1850) - greatest(cy + b, 150))
-    AS clip_area
-  FROM lp)
-SELECT l_id, CAST(clip_area AS DOUBLE) AS clip_area
-FROM ov WHERE clip_area > 0
-"""
-
-
-def q_sphere_metrics(spark, sf_dir):
-    """operators/overlay.sphere_polygon_metrics: spherical polygon
-    area + great-circle perimeter for lat/lon rings-with-holes — the
-    geodesy twin of polygon_metrics, pure trig column expressions
-    (van Oosterom–Strackee pole-fan excess per edge; zero UDF, zero
-    exchange; plan pinned). Fixture: degree-scale quads from customer
-    keys, every third with a half-size hole, all inside |lat|<62 and
-    |lon|<152 (the documented no-pole/no-antimeridian contract).
-    Oracle: DuckDB replays the identical unit-vector trig; round(3)
-    absorbs JVM-vs-C libm ULP spread."""
-    _ship_package(spark)
-    from opentopodata_spark.operators import overlay
-
-    c = _t(spark, sf_dir, "customer").where(F.col("c_custkey") % 2 == 0)
-    c = c.selectExpr(
-        "c_custkey AS poly_id",
-        "CAST(c_custkey*37 % 120 - 60 + 0.5 AS DOUBLE) AS clat",
-        "CAST(c_custkey*53 % 300 - 150 + 0.5 AS DOUBLE) AS clon",
-        "CAST((c_custkey % 17 + 4) * 0.1 AS DOUBLE) AS p",
-        "CAST((c_custkey % 23 + 4) * 0.1 AS DOUBLE) AS q",
-        "c_custkey % 3 = 0 AS holed",
-    )
-    outer = ("array(array(clon-p, clat-q), array(clon+p, clat-q),"
-             " array(clon+p, clat+q), array(clon-p, clat+q))")
-    hole = ("array(array(clon-p*0.5, clat-q*0.5),"
-            " array(clon+p*0.5, clat-q*0.5),"
-            " array(clon+p*0.5, clat+q*0.5),"
-            " array(clon-p*0.5, clat+q*0.5))")
-    rings = c.selectExpr(
-        "poly_id",
-        f"CASE WHEN holed THEN array({outer}, {hole})"
-        f" ELSE array({outer}) END AS rings",
-    )
-    return overlay.sphere_polygon_metrics(rings)
-
-
-_Q_SPHERE_METRICS_SQL = """
-WITH cp AS (
-  SELECT c_custkey AS id,
-         c_custkey*37 % 120 - 60 + 0.5 AS clat,
-         c_custkey*53 % 300 - 150 + 0.5 AS clon,
-         (c_custkey % 17 + 4) * 0.1 AS p,
-         (c_custkey % 23 + 4) * 0.1 AS q,
-         c_custkey % 3 = 0 AS holed
-  FROM customer WHERE c_custkey % 2 = 0),
-verts AS (
-  SELECT id, 0 AS ring, u.vi,
-    clon + CASE WHEN u.vi IN (1,2) THEN p ELSE -p END AS lon,
-    clat + CASE WHEN u.vi IN (2,3) THEN q ELSE -q END AS lat
-  FROM cp, UNNEST([0,1,2,3]) AS u(vi)
-  UNION ALL
-  SELECT id, 1, u.vi,
-    clon + CASE WHEN u.vi IN (1,2) THEN p*0.5 ELSE -p*0.5 END,
-    clat + CASE WHEN u.vi IN (2,3) THEN q*0.5 ELSE -q*0.5 END
-  FROM cp, UNNEST([0,1,2,3]) AS u(vi) WHERE holed),
-uv AS (
-  SELECT id, ring, vi,
-    cos(radians(lat))*cos(radians(lon)) AS x,
-    cos(radians(lat))*sin(radians(lon)) AS y,
-    sin(radians(lat)) AS z
-  FROM verts),
-terms AS (
-  SELECT a.id, a.ring,
-    2*atan2(a.x*b.y - a.y*b.x,
-            1 + a.x*b.x + a.y*b.y + a.z*b.z + a.z + b.z) AS exc,
-    atan2(sqrt(pow(a.y*b.z - a.z*b.y, 2) + pow(a.z*b.x - a.x*b.z, 2)
-               + pow(a.x*b.y - a.y*b.x, 2)),
-          a.x*b.x + a.y*b.y + a.z*b.z) AS arc
-  FROM uv a JOIN uv b
-    ON a.id = b.id AND a.ring = b.ring AND b.vi = (a.vi+1) % 4),
-rs AS (SELECT id, ring, SUM(exc) AS exc, SUM(arc) AS arc
-       FROM terms GROUP BY id, ring)
-SELECT id AS poly_id,
-  round(SUM(CASE WHEN ring = 0 THEN abs(exc) ELSE -abs(exc) END)
-        * 40589753.12967744, 3) AS area_km2,
-  round(SUM(arc) * 6371.0088, 3) AS perimeter_km
-FROM rs GROUP BY id
-"""
-
-
-def q_line_overlay_join(spark, sf_dir):
-    """operators/overlay.polygon_join with left_kind='line': polyline ×
-    polygon 'intersects' spatial join (the roads-per-region shape) —
-    open paths contribute non-wrapping segments, containment is tested
-    only against the polygon side. Fixture: 5-vertex event squiggles
-    (local 40×40 walks anchored per line — a line feature with a
-    space-spanning bbox would defeat cell bucketing, the same reason
-    road networks ship pre-segmented) × the concave L-hexagons. Full
-    ANSI-SQL oracle: LEAD-windowed line edges + the same CLRS closed
-    segment test + one even-odd ray cast."""
-    _ship_package(spark)
-    from opentopodata_spark.operators import overlay
-
-    e = _t(spark, sf_dir, "events")
-    pts = e.selectExpr(
-        "event_id DIV 5 AS line_id",
-        "event_id AS seq",
-        "CAST((event_id DIV 5)*131 % 2001 + (event_id*7) % 40 AS DOUBLE)"
-        " AS x",
-        "CAST((event_id DIV 5)*197 % 2001 + (event_id*11) % 40 AS DOUBLE)"
-        " AS y",
-    )
-    lines = (
-        pts.groupBy("line_id")
-        .agg(F.array_sort(F.collect_list(F.struct("seq", "x", "y")))
-             .alias("_pts"))
-        .where(F.size("_pts") >= 2)
-        .select(
-            "line_id",
-            F.array(F.transform(
-                F.col("_pts"), lambda s: F.array(s["x"], s["y"]))
-            ).alias("rings"),
-        )
-    )
-    out = overlay.polygon_join(
-        lines, _overlay_left(spark, sf_dir), "line_id", "l_id",
-        cell_size=64.0, left_kind="line",
-    )
-    return out
-
-
-_Q_LINE_OVERLAY_SQL = """
-WITH pts AS (
-  SELECT event_id // 5 AS line_id, event_id AS seq,
-         (event_id // 5)*131 % 2001 + (event_id*7) % 40 AS x,
-         (event_id // 5)*197 % 2001 + (event_id*11) % 40 AS y
-  FROM events),
-nlines AS (SELECT line_id FROM pts GROUP BY line_id HAVING count(*) >= 2),
-ledge AS (
-  SELECT line_id, x AS x1, y AS y1,
-         lead(x) OVER (PARTITION BY line_id ORDER BY seq) AS x2,
-         lead(y) OVER (PARTITION BY line_id ORDER BY seq) AS y2
-  FROM pts QUALIFY x2 IS NOT NULL),
-lbox AS (SELECT line_id, min(x) xmin, max(x) xmax, min(y) ymin, max(y) ymax
-         FROM pts GROUP BY line_id),
-lanchor AS (
-  SELECT p.line_id, p.x AS px, p.y AS py
-  FROM pts p JOIN (SELECT line_id, min(seq) AS s0 FROM pts
-                   GROUP BY line_id) m
-    ON p.line_id = m.line_id AND p.seq = m.s0),
-lp AS (
-  SELECT p_partkey AS l_id,
-         (p_partkey*131) % 2001 AS cx, (p_partkey*197) % 2001 AS cy,
-         p_partkey % 13 + 6 AS a, p_partkey % 19 + 6 AS b
-  FROM part WHERE p_partkey % 7 = 0),
-pv AS (
-  SELECT l_id, u.vi,
-    CASE u.vi WHEN 0 THEN cx WHEN 1 THEN cx+2*a WHEN 2 THEN cx+2*a
-              WHEN 3 THEN cx+a WHEN 4 THEN cx+a ELSE cx END AS x,
-    CASE u.vi WHEN 0 THEN cy WHEN 1 THEN cy WHEN 2 THEN cy+b
-              WHEN 3 THEN cy+b WHEN 4 THEN cy+2*b ELSE cy+2*b END AS y
-  FROM lp, UNNEST([0,1,2,3,4,5]) AS u(vi)),
-pe AS (
-  SELECT v1.l_id, v1.x AS x1, v1.y AS y1, v2.x AS x2, v2.y AS y2
-  FROM pv v1 JOIN pv v2 ON v1.l_id = v2.l_id AND v2.vi = (v1.vi+1) % 6),
-pbox AS (SELECT l_id, min(x) xmin, max(x) xmax, min(y) ymin, max(y) ymax
-         FROM pv GROUP BY l_id),
-cand AS (
-  SELECT lb.line_id, pb.l_id
-  FROM lbox lb JOIN nlines USING (line_id), pbox pb
-  WHERE lb.xmin <= pb.xmax AND pb.xmin <= lb.xmax
-    AND lb.ymin <= pb.ymax AND pb.ymin <= lb.ymax),
-seghit AS (
-  SELECT DISTINCT line_id, l_id FROM (
-    SELECT c.line_id, c.l_id,
-      sign((pe.x2-pe.x1)*(le.y1-pe.y1)-(pe.y2-pe.y1)*(le.x1-pe.x1)) d1,
-      sign((pe.x2-pe.x1)*(le.y2-pe.y1)-(pe.y2-pe.y1)*(le.x2-pe.x1)) d2,
-      sign((le.x2-le.x1)*(pe.y1-le.y1)-(le.y2-le.y1)*(pe.x1-le.x1)) d3,
-      sign((le.x2-le.x1)*(pe.y2-le.y1)-(le.y2-le.y1)*(pe.x2-le.x1)) d4,
-      le.x1 px1, le.y1 py1, le.x2 px2, le.y2 py2,
-      pe.x1 qx1, pe.y1 qy1, pe.x2 qx2, pe.y2 qy2
-    FROM cand c
-    JOIN ledge le ON le.line_id = c.line_id
-    JOIN pe ON pe.l_id = c.l_id)
-  WHERE (d1 <> d2 AND d1 <> 0 AND d2 <> 0
-         AND d3 <> d4 AND d3 <> 0 AND d4 <> 0)
-     OR (d1 = 0 AND px1 BETWEEN least(qx1,qx2) AND greatest(qx1,qx2)
-                AND py1 BETWEEN least(qy1,qy2) AND greatest(qy1,qy2))
-     OR (d2 = 0 AND px2 BETWEEN least(qx1,qx2) AND greatest(qx1,qx2)
-                AND py2 BETWEEN least(qy1,qy2) AND greatest(qy1,qy2))
-     OR (d3 = 0 AND qx1 BETWEEN least(px1,px2) AND greatest(px1,px2)
-                AND qy1 BETWEEN least(py1,py2) AND greatest(py1,py2))
-     OR (d4 = 0 AND qx2 BETWEEN least(px1,px2) AND greatest(px1,px2)
-                AND qy2 BETWEEN least(py1,py2) AND greatest(py1,py2))),
-lin AS (
-  SELECT c.line_id, c.l_id
-  FROM cand c JOIN lanchor a ON a.line_id = c.line_id
-  JOIN pe ON pe.l_id = c.l_id
-  GROUP BY c.line_id, c.l_id, a.px, a.py
-  HAVING SUM(CASE WHEN (pe.y1 > a.py) <> (pe.y2 > a.py)
-    AND a.px < (pe.x2-pe.x1)*CAST(a.py-pe.y1 AS DOUBLE)/(pe.y2-pe.y1)+pe.x1
-    THEN 1 ELSE 0 END) % 2 = 1)
-SELECT line_id, l_id FROM seghit
-UNION SELECT line_id, l_id FROM lin
-"""
-
-
-def q_convex_hull(spark, sf_dir):
-    """operators/overlay.convex_hull: distributed per-group hull —
-    per-partition keep-collinear monotone chains (mapInPandas, no
-    shuffle) shrink the input to local-hull candidates, ONE groupBy
-    gathers them for the final chain; layout-independent because a
-    global-boundary point is on every containing subset's hull
-    boundary. Emits vertex rows + hull_n + doubled-shoelace area
-    (exact on the integer grid). Full ANSI-SQL oracle: directed hull
-    edges by the O(n³) all-points-left predicate, area from the
-    order-independent edge-cross sum."""
-    _ship_package(spark)
-    from opentopodata_spark.operators import overlay
-
-    o = _t(spark, sf_dir, "orders").where(F.col("o_orderkey") % 20 == 0)
-    pts = o.selectExpr(
-        "o_orderkey % 23 AS grp",
-        "CAST(o_orderkey*7919 % 20011 AS DOUBLE) AS x",
-        "CAST(o_orderkey*104729 % 20011 AS DOUBLE) AS y",
-    )
-    return overlay.convex_hull(pts, by=["grp"])
-
-
-_Q_HULL_SQL = """
-WITH pts AS (
-  SELECT DISTINCT o_orderkey % 23 AS grp,
-         (o_orderkey*7919) % 20011 AS x,
-         (o_orderkey*104729) % 20011 AS y
-  FROM orders WHERE o_orderkey % 20 = 0),
-ed AS (
-  SELECT a.grp, a.x AS ax, a.y AS ay, b.x AS bx, b.y AS byy
-  FROM pts a JOIN pts b
-    ON a.grp = b.grp AND (a.x <> b.x OR a.y <> b.y)
-  WHERE NOT EXISTS (
-    SELECT 1 FROM pts p
-    WHERE p.grp = a.grp
-      AND (p.x <> a.x OR p.y <> a.y) AND (p.x <> b.x OR p.y <> b.y)
-      AND NOT (
-        (b.x-a.x)*(p.y-a.y)-(b.y-a.y)*(p.x-a.x) > 0
-        OR ((b.x-a.x)*(p.y-a.y)-(b.y-a.y)*(p.x-a.x) = 0
-            AND NOT (p.x BETWEEN least(a.x,b.x) AND greatest(a.x,b.x)
-                 AND p.y BETWEEN least(a.y,b.y) AND greatest(a.y,b.y)))))),
-v AS (SELECT DISTINCT grp, ax, ay FROM ed),
--- hull_n counts vertices, not directed edges: an all-collinear group
--- has both directions of every edge
-n AS (SELECT grp, count(*) AS hull_n FROM v GROUP BY grp),
-agg AS (SELECT grp, SUM(ax*byy - bx*ay) AS area2 FROM ed GROUP BY grp)
-SELECT e.grp, CAST(e.ax AS DOUBLE) AS x, CAST(e.ay AS DOUBLE) AS y,
-       CAST(n.hull_n AS INT) AS hull_n, CAST(g.area2 AS DOUBLE) AS hull_area2
-FROM v e JOIN n USING (grp) JOIN agg g USING (grp)
-"""
-
-
-def q_line_simplify(spark, sf_dir):
-    """operators/overlay.simplify_lines: Douglas–Peucker per line (one
-    shuffle on line id, vectorized int64 stack loop; retain decision
-    cross² > eps²·len² is exact on the grid, farthest-wins with
-    smallest-index tiebreak). Oracle: a DuckDB RECURSIVE CTE replays
-    the identical split recursion independently."""
-    _ship_package(spark)
-    from opentopodata_spark.operators import overlay
-
-    e = _t(spark, sf_dir, "events").where(F.col("event_id") % 2 == 0)
-    lines = e.selectExpr(
-        "event_id % 37 AS line_id",
-        "event_id AS seq",
-        "CAST(event_id*7919 % 20011 - 10000 AS DOUBLE) AS x",
-        "CAST(event_id*104729 % 20011 - 10000 AS DOUBLE) AS y",
-    )
-    return overlay.simplify_lines(lines, eps=500.0)
-
-
-_Q_SIMPLIFY_SQL = """
-WITH RECURSIVE
-pts AS (
-  SELECT event_id % 37 AS line_id, event_id AS seq,
-         (event_id*7919) % 20011 - 10000 AS x,
-         (event_id*104729) % 20011 - 10000 AS y
-  FROM events WHERE event_id % 2 = 0),
-bounds AS (SELECT line_id, min(seq) AS lo, max(seq) AS hi
-           FROM pts GROUP BY line_id),
-seg(line_id, lo, hi) AS (
-  SELECT line_id, lo, hi FROM bounds
-  UNION ALL
-  SELECT s.line_id,
-         CASE u.side WHEN 0 THEN s.lo ELSE s.k END,
-         CASE u.side WHEN 0 THEN s.k ELSE s.hi END
-  FROM (
-    SELECT sg.line_id, sg.lo, sg.hi,
-      (SELECT p.seq FROM pts p
-        JOIN pts a ON a.line_id = sg.line_id AND a.seq = sg.lo
-        JOIN pts b ON b.line_id = sg.line_id AND b.seq = sg.hi
-       WHERE p.line_id = sg.line_id AND p.seq > sg.lo AND p.seq < sg.hi
-         AND ((b.x-a.x)*(p.y-a.y)-(b.y-a.y)*(p.x-a.x))
-           * ((b.x-a.x)*(p.y-a.y)-(b.y-a.y)*(p.x-a.x))
-           > 250000 * ((b.x-a.x)*(b.x-a.x)+(b.y-a.y)*(b.y-a.y))
-       ORDER BY ((b.x-a.x)*(p.y-a.y)-(b.y-a.y)*(p.x-a.x))
-              * ((b.x-a.x)*(p.y-a.y)-(b.y-a.y)*(p.x-a.x)) DESC,
-                p.seq ASC
-       LIMIT 1) AS k
-    FROM seg sg) s, UNNEST([0,1]) AS u(side)
-  WHERE s.k IS NOT NULL)
-SELECT p.line_id, p.seq, CAST(p.x AS DOUBLE) AS x, CAST(p.y AS DOUBLE) AS y
-FROM (SELECT line_id, lo AS seq FROM seg
-      UNION SELECT line_id, hi FROM seg) k
-JOIN pts p ON p.line_id = k.line_id AND p.seq = k.seq
-"""
 
 
 def q_vector_ingest(spark, sf_dir):
@@ -3109,9 +2301,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # -- new in r5 (inserted here as they land) --
         "iceberg_documents": q_iceberg_documents,
         "wkt2_elevation": q_wkt2_elevation,
-        # -- modules CHANGED in r5 (ADVICE fixes: dissolve cancelled-key
-        #    row, knn broadcast cap) — re-verify even though green in r4 --
-        "dissolve_regions": q_dissolve_regions,
+        # -- modules CHANGED in r5 (ADVICE fix: knn broadcast cap) —
+        #    re-verify even though green in r4 --
         "knn_topk": q_knn_topk,
         "range_join": q_range_join,
         # -- last green in r2 (VERDICT r4 Next #1): the stale rows --
@@ -3128,16 +2319,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "slippy_tiles": q_slippy_tiles,
         "tile_pyramid": q_tile_pyramid,
         # -- green in CORRECTNESS_r04 --
-        "buffer_pip": q_buffer_pip,
         "zonal_majority": q_zonal_majority,
-        "overlay_join": q_overlay_join,
-        "line_overlay_join": q_line_overlay_join,
-        "sphere_metrics": q_sphere_metrics,
-        "overlay_join_broadcast": q_overlay_join_broadcast,
-        "polygon_metrics": q_polygon_metrics,
-        "polygon_clip": q_polygon_clip,
-        "convex_hull": q_convex_hull,
-        "line_simplify": q_line_simplify,
         "vector_ingest": q_vector_ingest,
         "polygon_burn": q_polygon_burn,
         "raster_polygonize": q_raster_polygonize,
@@ -3153,8 +2335,31 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     }
 
 
-def oracle_sql() -> dict[str, str]:
-    return {
+class _Oracles(Mapping):
+    """Query name -> oracle SQL. A value is the SQL itself or a function
+    that builds it; the function runs only when that name is read, so
+    listing the names builds nothing, and a builder that raises fails
+    its own query (loudly) instead of leaving it to a rows-only check."""
+
+    def __init__(self, sql: dict[str, str | Callable[[], str]]):
+        self._sql = sql
+
+    def __getitem__(self, name: str) -> str:
+        sql = self._sql[name]
+        return sql if isinstance(sql, str) else sql()
+
+    def __contains__(self, name) -> bool:
+        return name in self._sql
+
+    def __iter__(self):
+        return iter(self._sql)
+
+    def __len__(self) -> int:
+        return len(self._sql)
+
+
+def oracle_sql() -> Mapping[str, str]:
+    return _Oracles({
         "iceberg_documents": _Q_ICEBERG_DOCS_SQL,
         "tile_floor_keys": _Q_TILE_FLOOR_SQL,
         "bbox_coverage": _Q_BBOX_SQL,
@@ -3162,29 +2367,20 @@ def oracle_sql() -> dict[str, str]:
         "knn_topk": _Q_KNN_SQL,
         "range_join": _Q_RANGE_SQL,
         "coord_extract": _Q_COORD_SQL,
-        "pip_coverage": _pip_sql(),
-        "overlay_join": _Q_OVERLAY_SQL,
-        "line_overlay_join": _Q_LINE_OVERLAY_SQL,
-        "sphere_metrics": _Q_SPHERE_METRICS_SQL,
-        "overlay_join_broadcast": _Q_OVERLAY_SQL,
-        "polygon_metrics": _Q_POLYGON_METRICS_SQL,
-        "polygon_clip": _Q_POLYGON_CLIP_SQL,
-        "convex_hull": _Q_HULL_SQL,
-        "line_simplify": _Q_SIMPLIFY_SQL,
-        "vector_ingest": _vector_ingest_sql(),
-        "slippy_tiles": _slippy_sql(),
-        "tile_pyramid": _tile_pyramid_sql(),
-        "buffer_pip": _buffer_pip_sql(),
-        "dissolve_regions": _dissolve_sql(),
-        **_zonal_majority_oracle_entry(),
+        "pip_coverage": _pip_sql,
+        "vector_ingest": _vector_ingest_sql,
+        "slippy_tiles": _slippy_sql,
+        "tile_pyramid": _tile_pyramid_sql,
+        "zonal_majority": _zonal_majority_sql,
         "rasterize_grid": _Q_RASTERIZE_SQL,
         # elevation_e2e / geodesic_paths / s2_cells and the raster queries
         # are genuinely non-SQL (rasters, Karney geodesics, S2 Hilbert
         # ids): their oracles are the repo's own
         # single-process reference implementations, recomputed fresh into a
-        # parquet that the SQL reads (see _precomputed_oracles above).
-        **_precomputed_oracles(),
+        # parquet that the SQL reads (see _precomputed_sql above).
+        **{name: partial(_precomputed_sql, name)
+           for name in _PRECOMPUTED_BUILDERS},
         # zonal_stats: precomputed PIXEL table; DuckDB runs its own
         # ray-cast mask + aggregation (independent of the Spark path).
-        **_zonal_oracle_entry(),
-    }
+        "zonal_stats": _zonal_sql,
+    })

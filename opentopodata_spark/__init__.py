@@ -22,7 +22,7 @@ config         YAML config loading + dataset registry (driver-side)
 tiles          tile-index build (filename -> corner) + tile-key column math
 oracle         single-process reference-semantics implementation (test oracle)
 operators.*    the Spark operators (extract, elevation resolve, paths, knn
-               and range joins, spatial joins and overlay, and the
+               and range joins, S2 and point-in-polygon joins, and the
                raster<->vector operators: zonal, polygonize, rasterize,
                burn; DEMs arrive prepared, e.g. by gdalwarp, so there is
                no warp, resample or tile-export operator)

@@ -174,8 +174,8 @@ def _is_aux_file(path: str) -> bool:
     lower = path.lower()
     if any(lower.endswith(e) for e in AUX_EXTENSIONS):
         return True
-    # Spark job sidecars: transcode/terrain/... outputs double as dataset
-    # dirs, so _SUCCESS markers, .crc files, and anything inside an
+    # Spark job sidecars: a directory a Spark job wrote can double as a
+    # dataset dir, so _SUCCESS markers, .crc files, and anything inside an
     # underscore-prefixed subdir (e.g. _manifest parquet) are not tiles
     base = os.path.basename(path)
     if base in ("_SUCCESS", "_temporary") or base.startswith("._"):

@@ -202,9 +202,11 @@ def extract_points(documents: DataFrame) -> DataFrame:
 
 
 def with_point_id(points: DataFrame) -> DataFrame:
-    """Attach a globally-unique long point_id (order-free; identity is the
-    (doc_id, span_pos, point_pos) triple — the id exists so downstream
-    windows/joins partition on a single long)."""
+    """Attach point_id = xxhash64(doc_id, span_pos, point_pos): one
+    order-free long for downstream windows/joins. It is a hash, not a
+    key; identity is the triple (at 10^12 documents of ~5.4 points,
+    ~8e5 id pairs collide). The resolver does not depend on unique ids
+    (one output row per input row); ``knn`` does (it groups by id)."""
     return points.withColumn(
         "point_id",
         F.xxhash64("doc_id", "span_pos", "point_pos"),

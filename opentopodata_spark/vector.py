@@ -1,11 +1,8 @@
 """Vector feature ingestion: ESRI Shapefile, GeoPackage features, WKB.
 
-The reference delegates all vector IO to GDAL/OGR; until now this engine
-only accepted GeoJSON on its polygon/feature front doors
-(`operators/spatial.polygons_from_geojson`,
-`operators/rasterize.features_from_geojson`). Real dataset boundaries,
-geofences and zone layers overwhelmingly ship as .shp or .gpkg, so this
-module implements the two formats from their public specifications:
+The reference delegates all vector IO to GDAL/OGR. Real dataset
+boundaries and zone layers mostly ship as .shp or .gpkg, so this module
+implements the two formats from their public specifications:
 
 * **ESRI Shapefile** (ESRI whitepaper, July 1998): `.shp` geometry
   (Point / PolyLine / Polygon / MultiPoint incl. Z and M variants),
@@ -20,17 +17,18 @@ module implements the two formats from their public specifications:
   (flag-bit) type codes, nested collections.
 
 Everything decodes to a plain GeoJSON FeatureCollection mapping, so
-every existing consumer (PIP coverage join, zonal stats, rasterize/burn,
-geofencing) accepts any format through the unchanged front doors — they
-now simply dispatch on file extension. Scale note: vector layers are
-the SMALL side of every join in this engine (they broadcast as cover
-cells or burn features); ingestion is deliberately driver-side, same as
-the GeoJSON path, and the existing `max_polygons` guards still apply.
+every consumer (PIP coverage join, zonal stats, rasterize/burn) accepts
+any format through its front door
+(`operators/spatial.polygons_from_geojson`,
+`operators/rasterize.features_from_geojson`), which dispatches on the
+file extension. Scale note: vector layers are the SMALL side of every
+join in this engine (they broadcast as cover cells or burn features);
+ingestion is deliberately driver-side, same as the GeoJSON path, and the
+existing `max_polygons` guards still apply.
 
 Writers (`write_shapefile`, `write_gpkg_features`) exist so fixtures and
-differential tests have deterministic real bytes without external tools,
-and to give `jobs/vecconvert` an ogr2ogr-style round trip. The GPKG
-writer reuses gpkg.py's pure-python SQLite page builder; tests verify
+differential tests have deterministic real bytes without external
+tools. The GPKG writer reuses gpkg.py's pure-python SQLite page builder; tests verify
 its output with the STDLIB sqlite3 engine (an independent
 implementation), and conversely read stdlib-sqlite3-written GeoPackages
 with gpkg.py's pure-python B-tree reader.

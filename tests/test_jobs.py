@@ -138,7 +138,7 @@ def _py_files(d: str) -> list:
     ]
 
 
-def test_no_dangling_package_imports(monkeypatch):
+def test_no_dangling_package_imports():
     """Every ``opentopodata_spark`` import in the package, in
     ``__spark_entry__.py``, in ``tools/`` and in ``perfbench/``, the lazy
     ones included, names a module file, and every imported name exists
@@ -174,10 +174,6 @@ def test_no_dangling_package_imports(monkeypatch):
 
     import __spark_entry__ as contract
 
-    # keys only: skip building the precomputed oracle tables
-    monkeypatch.setattr(contract, "_oracle_parquet", lambda name, b: name)
-    for name in ("_zonal_sql", "_zonal_majority_sql"):
-        monkeypatch.setattr(contract, name, lambda: "SELECT 1")
     assert set(contract.oracle_sql()) <= set(contract.queries())
 
 
@@ -293,6 +289,73 @@ def test_formats_fixture_dir_is_keyed_by_formats_and_writers(
     third = contract._formats_fixture_dir()
     assert third not in (first, second)
     assert sorted(os.listdir(third)) == [".complete", "fmt_asc", "fmt_tif"]
+
+
+def test_listing_oracles_builds_none(monkeypatch):
+    """``oracle_sql()`` names every query that has an oracle without
+    building one: the tables are built when a query's SQL is read."""
+    import __spark_entry__ as contract
+
+    built = []
+
+    def refuse(name, builder):
+        built.append(name)
+        raise AssertionError(f"built the {name} oracle")
+
+    monkeypatch.setattr(contract, "_oracle_parquet", refuse)
+    names = set(contract.oracle_sql())
+    assert built == []
+    assert set(contract._PRECOMPUTED_BUILDERS) | {
+        "zonal_stats", "zonal_majority"} <= names
+
+
+def test_check_contract_fails_a_query_whose_oracle_raises(
+    tmp_path, monkeypatch, capsys
+):
+    """An oracle builder that raises fails its query, with the exception
+    in the FAIL line, instead of leaving it to a rows-only pass; and
+    only the oracles of the queries named on the command line are
+    built."""
+    import importlib.util
+
+    import pandas as pd
+
+    import __spark_entry__ as contract
+    from opentopodata_spark import session
+
+    def broken(sf_dir):
+        raise RuntimeError("oracle builder broke")
+
+    other = []
+    monkeypatch.setitem(contract._PRECOMPUTED_BUILDERS, "s2_cells", broken)
+    monkeypatch.setitem(contract._PRECOMPUTED_BUILDERS, "geodesic_paths",
+                        lambda sf_dir: other.append(sf_dir))
+    monkeypatch.setattr(contract, "_ORACLE_BUILT", {})
+
+    class OneRow:  # stands in for a query's DataFrame: no Spark needed
+        def toPandas(self):
+            return pd.DataFrame({"x": [1]})
+
+    monkeypatch.setattr(contract, "queries", lambda: {
+        "s2_cells": lambda spark, sf_dir: OneRow(),
+        "geodesic_paths": lambda spark, sf_dir: OneRow(),
+    })
+    monkeypatch.setattr(session, "get_spark", lambda **kw: None)
+    monkeypatch.setenv("OTDS_ORACLE_SF_DIR", str(tmp_path))
+    monkeypatch.setattr(sys, "path", list(sys.path))
+    monkeypatch.setattr(
+        sys, "argv", ["check_contract.py", str(tmp_path), "s2_cells"])
+    spec = importlib.util.spec_from_file_location(
+        "check_contract", os.path.join(REPO, "tools", "check_contract.py"))
+    check = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(check)
+
+    assert check.main() == 1
+    out = capsys.readouterr().out
+    assert ("FAIL  s2_cells: oracle error: "
+            "RuntimeError('oracle builder broke')") in out
+    assert "geodesic_paths" not in out
+    assert other == []
 
 
 # ------------------------------------------------------------- elevation job

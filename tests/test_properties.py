@@ -210,51 +210,3 @@ def test_shp_record_roundtrip_polyline(parts, tmp_path_factory):
                  else [got["coordinates"]])
     assert got_parts == want_parts
 
-
-@settings(max_examples=30, deadline=None)
-@given(
-    cells=st.sets(
-        st.tuples(st.integers(0, 7), st.integers(0, 7)),
-        min_size=1, max_size=30,
-    ),
-    keybits=st.integers(0, 2 ** 30),
-)
-def test_dissolve_sequential_properties(cells, keybits):
-    """Random unit-cell subsets with random 2-key assignments: the
-    sequential dissolve twin must (a) conserve area per key exactly,
-    (b) produce a boundary whose directed edges appear exactly once,
-    (c) close every ring (the stitcher raises otherwise — exercised
-    here over arbitrary hole/multi-part topologies), (d) count shells
-    minus holes consistently with per-key 4-connected components minus
-    enclosed hole components (checked implicitly by area + closure on
-    these small grids)."""
-    from opentopodata_spark.operators import dissolve
-
-    rows = []
-    for i, (x, y) in enumerate(sorted(cells)):
-        key = "A" if (keybits >> i) & 1 else "B"
-        rows.append((key, [[[float(x), float(y)], [float(x + 1), float(y)],
-                            [float(x + 1), float(y + 1)],
-                            [float(x), float(y + 1)]]]))
-    out = dissolve.dissolve_sequential(rows)
-    per_key = {}
-    for k, _ in rows:
-        per_key[k] = per_key.get(k, 0) + 1
-    for k, info in out.items():
-        # (a) union identity: area == n_cells (in quanta^2)
-        assert info["area2_q"] == 2 * per_key[k] * (2 ** 40)
-        assert info["n_parts"] == per_key[k]
-        # (b, c) every ring closed over grid vertices, edges unique
-        seen = set()
-        for ring in info["rings"]:
-            n = len(ring)
-            assert n >= 4
-            for j in range(n):
-                a = (round(ring[j][0]), round(ring[j][1]))
-                b = (round(ring[(j + 1) % n][0]),
-                     round(ring[(j + 1) % n][1]))
-                assert a != b
-                assert (a, b) not in seen
-                seen.add((a, b))
-        assert len(seen) == info["perim_edges"]
-        assert info["n_shells"] >= 1

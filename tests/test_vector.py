@@ -286,6 +286,22 @@ def test_gpkg_roundtrip_and_stdlib_sqlite_reads_it(tmp_path):
     g = geometry_from_wkb(bytes(rows[0][3]), 8)
     _geom_close(g, fc["features"][0]["geometry"])
 
+    # the same features through GeoJSON -> .shp -> a named .gpkg layer
+    # keep their order and properties, and the writer's own
+    # "cities_pk" column does not leak into the properties read back
+    gj = tmp_path / "cities.geojson"
+    gj.write_text(json.dumps(fc))
+    shp = str(tmp_path / "via.shp")
+    write_shapefile(shp, load_features(str(gj)))
+    via = str(tmp_path / "via.gpkg")
+    write_gpkg_features(via, load_features(shp), layer="cities")
+    back = read_gpkg_features(via, layer="cities")
+    assert [f["properties"]["name"] for f in back["features"]] == [
+        "berlin", "paris", "london"]
+    for orig, got in zip(fc["features"], back["features"]):
+        assert got["properties"] == orig["properties"]
+        _geom_close(got["geometry"], orig["geometry"])
+
 
 def test_stdlib_sqlite_written_gpkg_reads_back(tmp_path):
     """A GeoPackage created entirely with stdlib sqlite3 (independent
@@ -643,145 +659,6 @@ def test_null_shape_keeps_attribute_row(tmp_path):
     assert back["features"][0]["geometry"] is None
     assert back["features"][0]["properties"]["name"] == "ghost"
     assert back["features"][1]["geometry"]["coordinates"] == [1.0, 1.0]
-
-
-# ---------------------------------------------------------------------------
-# vectorio CLI (ogr2ogr / ogrinfo twins; driver-only)
-# ---------------------------------------------------------------------------
-
-
-def test_vectorio_convert_and_info(tmp_path):
-    from opentopodata_spark.jobs import vectorio
-
-    fc = _sample_fc()
-    gj = tmp_path / "c.geojson"
-    gj.write_text(json.dumps(fc))
-    shp = str(tmp_path / "c.shp")
-    gpk = str(tmp_path / "c.gpkg")
-    stats = vectorio.run(["convert", "--in", str(gj), "--out", shp])
-    assert stats["n_features"] == 3
-    vectorio.run(["convert", "--in", shp, "--out", gpk,
-                  "--out-layer", "cities"])
-    back = read_gpkg_features(gpk, layer="cities")
-    assert [f["properties"]["name"] for f in back["features"]] == [
-        "berlin", "paris", "london"]
-    info = vectorio.run(["info", "--in", gpk])
-    assert info["n_features"] == 3
-    assert info["geometry_types"] == {"MultiPolygon": 1, "Polygon": 2}
-    assert info["fields"]["name"] == "str"
-    assert info["fields"]["pop"] == "int"
-    # gpkg round trip does not leak the internal pk column
-    assert "cities_pk" not in info["fields"]
-    assert info["bbox"][0] == pytest.approx(-0.5)
-    with pytest.raises(VectorError):
-        vectorio.run(["convert", "--in", str(gj),
-                      "--out", str(tmp_path / "c.xyz")])
-
-
-def test_vectorio_overlay_and_metrics(tmp_path, spark):
-    """overlay/metrics subcommands: .shp × .gpkg front door, closed
-    GeoJSON rings opened, MultiPolygon parts exploded, broadcast and
-    shuffle paths agree."""
-    from opentopodata_spark.jobs import vectorio
-    from opentopodata_spark.vector import write_gpkg_features, write_shapefile
-
-    def ring(cx, cy, r):
-        return [[cx - r, cy - r], [cx + r, cy - r], [cx + r, cy + r],
-                [cx - r, cy + r], [cx - r, cy - r]]
-
-    left_fc = {"type": "FeatureCollection", "features": [
-        {"type": "Feature", "id": "a", "properties": {"name": "a"},
-         "geometry": {"type": "Polygon", "coordinates": [ring(0, 0, 2)]}},
-        {"type": "Feature", "id": "b", "properties": {"name": "b"},
-         "geometry": {"type": "MultiPolygon",
-                      "coordinates": [[ring(10, 10, 1)], [ring(50, 50, 1)]]}},
-    ]}
-    right_fc = {"type": "FeatureCollection", "features": [
-        {"type": "Feature", "id": "r1", "properties": {"name": "r1"},
-         "geometry": {"type": "Polygon", "coordinates": [ring(1, 1, 2)]}},
-        {"type": "Feature", "id": "r2", "properties": {"name": "r2"},
-         "geometry": {"type": "Polygon", "coordinates": [ring(49, 49, 2)]}},
-    ]}
-    shp = str(tmp_path / "left.shp")
-    gpk = str(tmp_path / "right.gpkg")
-    write_shapefile(shp, left_fc)
-    write_gpkg_features(gpk, right_fc, layer="zones")
-
-    out = str(tmp_path / "pairs.parquet")
-    stats = vectorio.run(["overlay", "--left", shp, "--right", gpk,
-                          "--right-layer", "zones", "--out", out,
-                          "--cores", "2"])
-    got = sorted(map(tuple, spark.read.parquet(out)
-                     .select("left_id", "right_id").collect()))
-    # square@origin × r1, multipolygon part #1 (50,50) × r2
-    assert stats["n_pairs"] == 2 == len(got)
-    assert sum(1 for l, _ in got if l.endswith("#1")) == 1
-    assert len({r for _, r in got}) == 2
-    bout = str(tmp_path / "pairs_b.parquet")
-    vectorio.run(["overlay", "--left", shp, "--right", gpk,
-                  "--right-layer", "zones", "--out", bout,
-                  "--broadcast", "--cores", "2"])
-    bgot = sorted(map(tuple, spark.read.parquet(bout)
-                      .select("left_id", "right_id").collect()))
-    assert bgot == got
-
-    mout = str(tmp_path / "metrics.parquet")
-    mstats = vectorio.run(["metrics", "--in", shp, "--out", mout,
-                           "--cores", "2"])
-    assert mstats["n_features"] == 3  # 1 polygon + 2 multipolygon parts
-    rows = {r.poly_id: r for r in spark.read.parquet(mout).collect()}
-    assert any(v.area == 16.0 for v in rows.values())  # the 4x4 square
-    assert all(v.perimeter > 0 for v in rows.values())
-
-
-def test_vectorio_clip_and_simplify(tmp_path, spark):
-    from opentopodata_spark.jobs import vectorio
-
-    fc = {"type": "FeatureCollection", "features": [
-        {"type": "Feature", "id": "sq", "properties": {"name": "sq"},
-         "geometry": {"type": "Polygon", "coordinates": [
-             [[0.0, 0.0], [10.0, 0.0], [10.0, 10.0], [0.0, 10.0],
-              [0.0, 0.0]]]}},
-        {"type": "Feature", "id": "far", "properties": {"name": "far"},
-         "geometry": {"type": "Polygon", "coordinates": [
-             [[100.0, 100.0], [104.0, 100.0], [104.0, 104.0],
-              [100.0, 104.0], [100.0, 100.0]]]}},
-    ]}
-    src = tmp_path / "polys.geojson"
-    src.write_text(json.dumps(fc))
-    out = str(tmp_path / "clipped.geojson")
-    stats = vectorio.run(["clip", "--in", str(src), "--window",
-                          "5", "5", "20", "20", "--out", out,
-                          "--cores", "2"])
-    assert (stats["n_in"], stats["n_out"]) == (2, 1)
-    got = json.loads(open(out).read())
-    ring = got["features"][0]["geometry"]["coordinates"][0]
-    assert ring[0] == ring[-1]                       # closed GeoJSON ring
-    assert got["features"][0]["properties"]["clip_area"] == 25.0
-    assert got["features"][0]["properties"]["src_fid"] == "sq"
-    xs = [v[0] for v in ring]
-    ys = [v[1] for v in ring]
-    assert (min(xs), max(xs), min(ys), max(ys)) == (5.0, 10.0, 5.0, 10.0)
-
-    # simplify: spike survives, collinear midpoints drop; shp round trip
-    line_fc = {"type": "FeatureCollection", "features": [
-        {"type": "Feature", "id": "t", "properties": {"name": "t"},
-         "geometry": {"type": "LineString", "coordinates": [
-             [0.0, 0.0], [1.0, 0.05], [2.0, 0.0], [3.0, 5.0],
-             [4.0, 0.0], [5.0, 0.02], [6.0, 0.0]]}},
-    ]}
-    lsrc = tmp_path / "lines.geojson"
-    lsrc.write_text(json.dumps(line_fc))
-    lout = str(tmp_path / "simplified.geojson")
-    sstats = vectorio.run(["simplify", "--in", str(lsrc), "--eps", "0.5",
-                           "--out", lout, "--cores", "2"])
-    assert sstats["vertices_in"] == 7
-    got = json.loads(open(lout).read())
-    coords = got["features"][0]["geometry"]["coordinates"]
-    assert [0.0, 0.0] == coords[0] and [6.0, 0.0] == coords[-1]
-    assert [3.0, 5.0] in coords          # the spike
-    assert [1.0, 0.05] not in coords     # sub-eps wiggle dropped
-    assert sstats["vertices_out"] == len(coords)
 
 
 def test_zonal_cli_accepts_gpkg_polygons(tmp_path):
