@@ -2,7 +2,7 @@
 
 Defaults chosen for the 100 TB design point (and harmless locally):
 - AQE on, with skew-join splitting for the join-shaped operators
-  (spatial, interval and overlay joins); the elevation resolver has no
+  (spatial and interval joins); the elevation resolver has no
   join and spreads hot spatial cells by salting its one shuffle
   (SURVEY.md §4);
 - Arrow enabled with bounded batch sizes (the mapInArrow raster sampler
