@@ -28,10 +28,10 @@ existing `max_polygons` guards still apply.
 
 Writers (`write_shapefile`, `write_gpkg_features`) exist so fixtures and
 differential tests have deterministic real bytes without external
-tools. The GPKG writer reuses gpkg.py's pure-python SQLite page builder; tests verify
-its output with the STDLIB sqlite3 engine (an independent
-implementation), and conversely read stdlib-sqlite3-written GeoPackages
-with gpkg.py's pure-python B-tree reader.
+tools. The GPKG writer reuses gpkg.py's pure-python SQLite page
+builder; tests verify its output with the STDLIB sqlite3 engine (an
+independent implementation), and conversely read stdlib-sqlite3-written
+GeoPackages with gpkg.py's pure-python B-tree reader.
 """
 
 from __future__ import annotations
