@@ -2101,13 +2101,19 @@ def _vector_fixture_dir() -> str:
     never touches the .shp/.gpkg bytes, so any reader/writer defect
     shows up as a hash mismatch. All coordinates are exact multiples of
     1/1024, making every shoelace term an exact binary double: sums are
-    order-independent and the compare is exact, not tolerance-based."""
+    order-independent and the compare is exact, not tolerance-based.
+    The directory is named by a hash of vector.py's bytes, so another
+    version of the writers gets a fresh directory; within one, a
+    .complete marker makes it idempotent."""
+    import hashlib
+
     import pyarrow as pa
     import pyarrow.parquet as pq
 
     from opentopodata_spark import vector
 
-    root = os.path.join(_fixture_root(), "vector_r4h")
+    key = hashlib.sha256(vector.__loader__.get_data(vector.__file__))
+    root = os.path.join(_fixture_root(), f"vector_{key.hexdigest()[:16]}")
     marker = os.path.join(root, ".complete")
     if os.path.exists(marker):
         return root

@@ -1,4 +1,4 @@
-"""Pure-numpy GeoTIFF writer + block-cached windowed reader.
+"""Pure-numpy GeoTIFF writer + windowed block reader.
 
 rasterio/GDAL is unavailable in this environment, so the engine ships its own
 minimal GeoTIFF implementation sufficient for elevation rasters:
@@ -27,26 +27,23 @@ interpolation windows touch only the OS pages they need. Compressed rasters
 decode per strip/tile on demand. Windowed reads (``Raster.read_window``)
 decode only the blocks the window intersects; this is the property that
 matters at 100 TB: executor tasks sample tiles without materializing whole
-rasters. Decoded blocks pass through two cache tiers:
-
-* L1, a process-wide, byte-budgeted LRU of decoded blocks
-  (``OTDS_BLOCK_CACHE_MB``, default 256) — the moral equivalent of GDAL's
-  block cache. Repeated batches hitting the same tile reuse decoded blocks
-  across tasks in the same Python worker.
-* The spill tier, one directory per executor shared by all of its Python
-  workers: ``<SparkFiles.getRootDirectory()>/decoded-blocks/<sha1 of the
-  block reader's key>/<block index>`` holds each compressed block's decoded
-  bytes. Spark hands a task to whichever Python worker is idle, so without
-  it every worker decodes the blocks it has not decoded itself. An L1 miss
-  reads the file; a missing or wrong-sized file means decode, then publish
-  through a temp file and ``os.replace``, so no reader sees a partial
-  block. The tier is active only inside Spark Python workers (the driver,
-  the oracle and scripts keep L1 alone), lives as long as that directory
-  (in local mode the driver's temp dir, deleted when the application
-  stops), and stops writing once the disk holds less than half the free
-  space it had at the worker's first spill; a failed write skips the
-  spill. ``block_cache_stats()`` counts hits, decodes and spills per
-  process.
+rasters. A process keeps no decoded block once a read returns. The one
+decoded copy per executor is the spill tier, a directory shared by all of
+the executor's Python workers: ``<SparkFiles.getRootDirectory()>/
+decoded-blocks/<sha1 of the block reader's key>/<block index>`` holds each
+compressed block's decoded bytes. Spark hands a task to whichever Python
+worker is idle, so without it every worker decodes the blocks it has not
+decoded itself. A read copies a block's file into its window through one
+scratch buffer per read; a missing or wrong-sized file means decode, then
+publish through a temp file and ``os.replace``, so no reader sees a
+partial block. The tier is active
+only inside Spark Python workers (the driver, the oracle and scripts decode
+the blocks each read needs), lives as long as that directory (in local
+mode the driver's temp dir, deleted when the application stops), and stops
+writing once the disk holds less than half the free space it had at the
+worker's first spill; a failed write skips the spill.
+``block_cache_stats()`` counts spill hits, decodes, decode seconds and
+spills per process.
 
 The reference reads compressed rasters via GDAL
 (/root/reference/opentopodata/backend.py:103) and its docs explicitly
@@ -57,6 +54,7 @@ support is first-class here, not an afterthought.
 
 from __future__ import annotations
 
+import functools
 import hashlib
 import io
 import lzma
@@ -66,6 +64,7 @@ import re
 import struct
 import sys
 import threading
+import time
 import zipfile
 import zlib
 from collections import OrderedDict
@@ -169,68 +168,30 @@ class BoundingBox:
 
 
 # ---------------------------------------------------------------------------
-# Decoded-block LRU (process-wide; shared across Raster instances and tasks
-# within one Python worker — the executor-side block cache)
-# ---------------------------------------------------------------------------
-
-_BLOCK_CACHE_BYTES = int(float(os.environ.get("OTDS_BLOCK_CACHE_MB", "256")) * 2**20)
-_block_cache: OrderedDict[tuple, np.ndarray] = OrderedDict()
-_block_cache_used = 0
-_block_cache_lock = threading.Lock()
-# block_cache_stats() counters; clear_block_cache() zeroes them
-_block_stats = dict.fromkeys(
-    ("l1_hits", "spill_hits", "decodes", "decoded_bytes", "spill_writes",
-     "spill_skips"),
-    0,
-)
-
-
-def _cache_get(key):
-    with _block_cache_lock:
-        arr = _block_cache.get(key)
-        if arr is not None:
-            _block_cache.move_to_end(key)
-        return arr
-
-
-def _cache_put(key, arr: np.ndarray):
-    global _block_cache_used
-    nb = arr.nbytes
-    if nb > _BLOCK_CACHE_BYTES:
-        return
-    with _block_cache_lock:
-        if key in _block_cache:
-            return
-        _block_cache[key] = arr
-        _block_cache_used += nb
-        while _block_cache_used > _BLOCK_CACHE_BYTES and _block_cache:
-            _, old = _block_cache.popitem(last=False)
-            _block_cache_used -= old.nbytes
-
-
-def clear_block_cache():
-    """Empty this process's L1 and zero block_cache_stats(); the spill tier
-    is shared with other processes and stays."""
-    global _block_cache_used
-    with _block_cache_lock:
-        _block_cache.clear()
-        _block_cache_used = 0
-        for k in _block_stats:
-            _block_stats[k] = 0
-
-
-# ---------------------------------------------------------------------------
 # Spill tier: decoded blocks shared by the Python workers of one executor
 # ---------------------------------------------------------------------------
 
+# block_cache_stats() counters; clear_block_cache() zeroes them
+_block_stats = dict.fromkeys(
+    ("spill_hits", "decodes", "decoded_bytes", "decode_s", "spill_writes",
+     "spill_skips"),
+    0,
+)
 _spill_floor: int | None = None  # free bytes below which this process stops
 
 
-def block_cache_stats() -> dict[str, int]:
+def clear_block_cache():
+    """Zero block_cache_stats(). This process keeps no decoded block; the
+    spill tier is shared with other processes and stays."""
+    for k in _block_stats:
+        _block_stats[k] = 0
+
+
+def block_cache_stats() -> dict[str, float]:
     """Counters of the GeoTIFF block reader in this process since the last
-    clear_block_cache(): L1 hits, spill-tier hits, block decodes, decoded
-    bytes, spill writes, and spills skipped by the disk bound or a failed
-    write (diagnostic; used by tests to pin the cache tiers)."""
+    clear_block_cache(): spill-tier hits, block decodes, decoded bytes,
+    seconds spent decoding, spill writes, and spills skipped by the disk
+    bound or a failed write (diagnostic; used by tests to pin the tier)."""
     return dict(_block_stats)
 
 
@@ -239,19 +200,20 @@ def _free_bytes(path: str) -> int:
     return st.f_bavail * st.f_frsize
 
 
-def _spill_get(path: str, shape: tuple[int, int], dtype: np.dtype):
-    """The decoded block at ``path``, or None when it is missing or has the
-    wrong size (a reader never sees a partial file, see _spill_put)."""
-    arr = np.empty(shape, dtype)
+def _spill_read(path: str, buf: np.ndarray) -> bool:
+    """Fill ``buf``, one byte longer than the block, from the decoded block
+    at ``path``: False when the file is missing or has the wrong size (a
+    reader never sees a partial file, see _spill_put)."""
     try:
-        with open(path, "rb") as f:
-            if os.fstat(f.fileno()).st_size != arr.nbytes:
-                return None
-            if f.readinto(arr.reshape(-1).view(np.uint8)) != arr.nbytes:
-                return None
+        fd = os.open(path, os.O_RDONLY)
     except OSError:
-        return None
-    return arr
+        return False
+    try:
+        return os.readv(fd, [buf]) == len(buf) - 1
+    except OSError:
+        return False
+    finally:
+        os.close(fd)
 
 
 def _spill_put(path: str, arr: np.ndarray) -> None:
@@ -754,9 +716,9 @@ class _BlockReader:
     # value sparse blocks (offset/bytecount 0, GDAL SPARSE_OK) read back as:
     # the nodata value if the file declares one, else 0 — GDAL's semantics
     fill: float = 0.0
-    # distinguishes IFDs of one file in the process-wide block LRU: the
-    # base band and its overview levels share a cache_key (same bytes on
-    # disk) but index disjoint block grids
+    # distinguishes IFDs of one file in the spill tier: the base band and
+    # its overview levels share a cache_key (same bytes on disk) but index
+    # disjoint block grids
     cache_tag: int = 0
 
     def _decompress(self, raw: bytes) -> bytes:
@@ -811,6 +773,7 @@ class _BlockReader:
             ]
         return list(range(r0 // self.block_h, (r1 - 1) // self.block_h + 1))
 
+    @functools.cached_property
     def _spill_dir(self) -> str | None:
         """This reader's directory in the spill tier; None outside a Spark
         Python worker and for uncompressed blocks, which decode for free.
@@ -825,80 +788,64 @@ class _BlockReader:
                             "decoded-blocks", hashlib.sha1(key).hexdigest())
 
     def read(self, r0: int, r1: int, c0: int, c1: int) -> np.ndarray:
-        """Decode-and-assemble a clipped [r0:r1, c0:c1] window. Only blocks
-        intersecting the window are decoded; decoded blocks go through the
-        process-wide LRU so repeat reads are free, and compressed ones
-        through the executor's spill tier (module docstring)."""
-        out = np.empty((r1 - r0, c1 - c0), dtype=self.dtype.newbyteorder("="))
-        need = self._blocks_for_window(r0, r1, c0, c1)
-        missing = []
-        blocks: dict[int, np.ndarray] = {}
-        for idx in need:
-            arr = _cache_get((self.source.cache_key, self.cache_tag, idx))
-            if arr is None:
-                missing.append(idx)
-            else:
-                blocks[idx] = arr
-        _block_stats["l1_hits"] += len(blocks)
-        if missing:
-            sparse = [
-                i for i in missing if self.offsets[i] == 0 or self.counts[i] == 0
-            ]
-            for idx in sparse:
-                arr = np.full(
-                    self._block_shape(idx),
-                    _value_as_dtype(self.fill, self.dtype.newbyteorder("=")),
-                    dtype=self.dtype.newbyteorder("="),
-                )
-                _cache_put((self.source.cache_key, self.cache_tag, idx), arr)
-                blocks[idx] = arr
-            missing = [i for i in missing if i not in blocks]
-            spill = self._spill_dir() if missing else None
-            if spill is not None:
-                dt = self.dtype.newbyteorder("=")
-                undecoded = []
-                for idx in missing:
-                    arr = _spill_get(
-                        os.path.join(spill, str(idx)), self._block_shape(idx), dt
-                    )
-                    if arr is None:
-                        undecoded.append(idx)
-                    else:
-                        _cache_put((self.source.cache_key, self.cache_tag, idx), arr)
-                        blocks[idx] = arr
-                _block_stats["spill_hits"] += len(missing) - len(undecoded)
-                missing = undecoded
-            raws = self.source.read_many(
-                [(self.offsets[i], self.counts[i]) for i in missing]
-            ) if missing else []
-            for idx, raw in zip(missing, raws):
-                arr = self._decode(idx, raw)
-                _block_stats["decodes"] += 1
-                _block_stats["decoded_bytes"] += arr.nbytes
-                if spill is not None:
-                    _spill_put(os.path.join(spill, str(idx)), arr)
-                _cache_put((self.source.cache_key, self.cache_tag, idx), arr)
-                blocks[idx] = arr
-        tiles_across = -(-self.width // self.block_w) if self.tiled else 1
-        for idx in need:
-            arr = blocks[idx]
-            if self.tiled:
-                br, bc = divmod(idx, tiles_across)
-            else:
-                br, bc = idx, 0
-            gr0 = br * self.block_h
-            gc0 = bc * self.block_w
-            # overlap of this block with the window, in global coords
-            orow0 = max(r0, gr0)
-            orow1 = min(r1, gr0 + arr.shape[0], self.height)
-            ocol0 = max(c0, gc0)
-            ocol1 = min(c1, gc0 + arr.shape[1], self.width)
-            if orow0 >= orow1 or ocol0 >= ocol1:
+        """Assemble a clipped [r0:r1, c0:c1] window from the blocks it
+        intersects. In a Spark Python worker each compressed block is read
+        from the executor's spill tier (module docstring) when another
+        read published it; any other block is decoded. Nothing is kept
+        after the read returns."""
+        dt = self.dtype.newbyteorder("=")
+        out = np.empty((r1 - r0, c1 - c0), dtype=dt)
+        spill = self._spill_dir
+        row_bytes = self.block_w * dt.itemsize
+        scratch = None
+        undecoded = []
+        for idx in self._blocks_for_window(r0, r1, c0, c1):
+            if self.offsets[idx] == 0 or self.counts[idx] == 0:
+                self._place(out, r0, c0, idx, np.broadcast_to(
+                    _value_as_dtype(self.fill, dt), self._block_shape(idx)))
                 continue
-            out[orow0 - r0 : orow1 - r0, ocol0 - c0 : ocol1 - c0] = arr[
-                orow0 - gr0 : orow1 - gr0, ocol0 - gc0 : ocol1 - gc0
-            ]
+            if spill is not None:
+                if scratch is None:
+                    # one block plus the byte that shows a too-long file
+                    scratch = np.empty(self.block_h * row_bytes + 1, np.uint8)
+                    block = scratch[:-1].view(dt).reshape(
+                        self.block_h, self.block_w)
+                h = self._block_shape(idx)[0]  # a last strip may be short
+                if _spill_read(f"{spill}/{idx}", scratch[: h * row_bytes + 1]):
+                    _block_stats["spill_hits"] += 1
+                    self._place(out, r0, c0, idx, block[:h])
+                    continue
+            undecoded.append(idx)
+        raws = self.source.read_many(
+            [(self.offsets[i], self.counts[i]) for i in undecoded]
+        ) if undecoded else []
+        for idx, raw in zip(undecoded, raws):
+            t0 = time.perf_counter()
+            arr = self._decode(idx, raw)
+            _block_stats["decode_s"] += time.perf_counter() - t0
+            _block_stats["decodes"] += 1
+            _block_stats["decoded_bytes"] += arr.nbytes
+            if spill is not None:
+                _spill_put(f"{spill}/{idx}", arr)
+            self._place(out, r0, c0, idx, arr)
         return out
+
+    def _place(self, out: np.ndarray, r0: int, c0: int, idx: int,
+               block: np.ndarray):
+        """Copy block ``idx`` where it overlaps the window ``out``, whose
+        origin is (r0, c0) and which lies inside the raster."""
+        if self.tiled:
+            br, bc = divmod(idx, -(-self.width // self.block_w))
+        else:
+            br, bc = idx, 0
+        # the block's origin, relative to the window's
+        gr0 = br * self.block_h - r0
+        gc0 = bc * self.block_w - c0
+        rows = slice(max(gr0, 0), min(gr0 + self.block_h, out.shape[0]))
+        cols = slice(max(gc0, 0), min(gc0 + self.block_w, out.shape[1]))
+        if rows.start < rows.stop and cols.start < cols.stop:
+            out[rows, cols] = block[rows.start - gr0 : rows.stop - gr0,
+                                    cols.start - gc0 : cols.stop - gc0]
 
 
 @dataclass
@@ -995,7 +942,7 @@ class Raster:
     @property
     def band(self) -> np.ndarray:
         """Whole band (memory-mapped and lazy when uncompressed; assembled
-        through the block cache otherwise). Prefer read_window in hot paths."""
+        decoded block by block otherwise). Prefer read_window in hot paths."""
         if self._data is not None:
             return self._data
         return self._blocks.read(0, self.height, 0, self.width)

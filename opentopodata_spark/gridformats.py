@@ -462,7 +462,7 @@ class _VRTReader:
     ComplexSource (1:1 scaling only) in document order, GDAL's painter
     semantics. Child rasters open lazily through open_raster (any
     supported format, including nested VRTs and http(s) URLs) and are
-    cached per reader; their own block caches make repeat windows cheap.
+    cached per reader; in a worker their blocks come from the spill tier.
     Duck-types geotiff._BlockReader.read."""
 
     def __init__(self, path: str, dtype: np.dtype, height: int, width: int,

@@ -189,7 +189,7 @@ def sample_points_on_raster_arrays(raster: Raster, lats, lons, method: str):
     # Windowed read: decode only the blocks this batch's in-bounds points
     # touch (margin 3 covers the cubic kernel's -1..+2 offsets after the
     # -0.5 center shift). Uncompressed rasters slice a memmap — free;
-    # compressed rasters hit the executor block cache.
+    # compressed rasters read the executor's spill tier of decoded blocks.
     rr = rows[in_bounds]
     cc = cols[in_bounds]
     margin = 3

@@ -144,9 +144,14 @@ class TestWriteReadChain:
             r.overviews[0].band, build_overview(arr, 2, nodata=-9999.0)
         )
 
-    def test_block_cache_isolates_levels(self, tmp_path):
-        # base and overview share source.cache_key; reading the base
-        # band first must not poison the overview's block reads
+    def test_block_cache_isolates_levels(self, tmp_path, monkeypatch):
+        # base and overview share source.cache_key; in a worker, the base
+        # band's spilled blocks must not poison the overview's block reads
+        from pyspark.core.files import SparkFiles
+
+        monkeypatch.setattr(SparkFiles, "_is_running_on_worker", True)
+        monkeypatch.setattr(SparkFiles, "_root_directory", str(tmp_path))
+        monkeypatch.setattr(geotiff, "_spill_floor", None)
         arr = _rand(64, 64, seed=3)
         p = str(tmp_path / "cache.tif")
         geotiff.write_geotiff(
@@ -155,7 +160,9 @@ class TestWriteReadChain:
             overviews=(2,),
         )
         r = geotiff.open_raster(p)
-        _ = r.band  # populate the LRU with base blocks
+        geotiff.clear_block_cache()
+        _ = r.band  # spill the base blocks
+        assert geotiff.block_cache_stats()["spill_writes"] == 4
         np.testing.assert_array_equal(r.overviews[0].band, build_overview(arr, 2))
 
     def test_pick_level_selection(self, tmp_path):

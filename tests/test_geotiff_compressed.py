@@ -1,7 +1,7 @@
 """Compressed/tiled GeoTIFF + zip-container coverage.
 
 Mirrors every tests/test_geotiff.py case on compressed variants, and adds
-block-cache / windowed-read / cross-codec equivalence checks. The reference
+spill-tier / windowed-read / cross-codec equivalence checks. The reference
 reads all of these through GDAL (/root/reference/opentopodata/backend.py:103)
 and its docs recommend DEFLATE-tiled datasets, so this is the #1 real-world
 format surface.
@@ -129,23 +129,26 @@ def test_read_window_matches_band(tmp_path):
 
 
 def test_windowed_read_decodes_only_touched_blocks(tmp_path):
-    """A corner window must not pull the whole raster through the cache."""
+    """A corner window must not decode the whole raster."""
     arr = _checkerboard(128, 128, np.float32)
     p = str(tmp_path / "c.tif")
     geotiff.write_geotiff(
         p, arr, x0=0, y0=128, sx=1, sy=1, epsg=4326,
         compression="deflate", tile_size=(32, 32),
     )
-    geotiff.clear_block_cache()
     r = geotiff.open_raster(p)
+    geotiff.clear_block_cache()
     win, _ = r.read_window(0, 10, 0, 10)
     np.testing.assert_array_equal(win, arr[:10, :10])
     # exactly one 32x32 tile decoded
-    assert len(geotiff._block_cache) == 1
-    # same window again: served from cache (no new entries)
-    r2 = geotiff.open_raster(p)
-    r2.read_window(2, 8, 2, 8)
-    assert len(geotiff._block_cache) == 1
+    s = geotiff.block_cache_stats()
+    assert s["decodes"] == 1 and s["decoded_bytes"] == 32 * 32 * 4
+    # outside a worker nothing is kept: the same tile is decoded again
+    win, _ = geotiff.open_raster(p).read_window(2, 8, 2, 8)
+    np.testing.assert_array_equal(win, arr[2:8, 2:8])
+    s = geotiff.block_cache_stats()
+    assert s["decodes"] == 2 and s["spill_hits"] == 0
+    assert s["decode_s"] > 0
 
 
 def test_lzw_deflate_same_values(tmp_path):
@@ -606,7 +609,7 @@ def test_gzipped_geotiff(tmp_path):
             f.write(src.read())
     r = geotiff.open_raster(p)
     np.testing.assert_array_equal(np.asarray(r.band), arr)
-    # windowed read path through the shared block cache
+    # windowed read path: decodes only the blocks the window touches
     win, (r0, c0) = r.read_window(5, 9, 3, 11)
     np.testing.assert_array_equal(win, arr[5:9, 3:11])
 
@@ -718,14 +721,25 @@ def test_spill_tier_serves_a_cleared_worker(deflate_p2_tile, worker_spill):
     assert s["decodes"] == 12 and s["spill_writes"] == 12
     assert s["decoded_bytes"] == 12 * 256 * 256 * 2
     assert len(_spilled(worker_spill)) == 12
-    geotiff.clear_block_cache()  # another worker: an empty L1
+    geotiff.clear_block_cache()  # another worker: zeroed counters
     second = _read(deflate_p2_tile)
     s = geotiff.block_cache_stats()
     assert s["decodes"] == 0 and s["spill_hits"] == 12
-    assert s["spill_writes"] == 0 and s["l1_hits"] == 0
+    assert s["spill_writes"] == 0 and s["decode_s"] == 0
     assert second.dtype == first.dtype and second.tobytes() == first.tobytes()
-    _read(deflate_p2_tile)
-    assert geotiff.block_cache_stats()["l1_hits"] == 12
+
+
+def test_worker_rereads_a_window_from_the_spill_tier(deflate_p2_tile,
+                                                     worker_spill):
+    """A worker keeps no decoded block: each read of a published window
+    copies every block from the spill tier again, and decodes none."""
+    first = _read(deflate_p2_tile)
+    geotiff.clear_block_cache()
+    assert _read(deflate_p2_tile).tobytes() == first.tobytes()
+    assert geotiff.block_cache_stats()["spill_hits"] == 12
+    assert _read(deflate_p2_tile).tobytes() == first.tobytes()
+    s = geotiff.block_cache_stats()
+    assert s["spill_hits"] == 24 and s["decodes"] == 0
 
 
 def test_truncated_spill_file_is_decoded_again(deflate_p2_tile, worker_spill):
@@ -739,6 +753,31 @@ def test_truncated_spill_file_is_decoded_again(deflate_p2_tile, worker_spill):
     assert s["decodes"] == 1 and s["spill_hits"] == 11
     assert second.tobytes() == first.tobytes()
     assert victim.read_bytes() == whole  # republished whole
+
+
+def test_strip_spill_reads_a_short_last_strip(tmp_path, worker_spill):
+    """Strips spill too, the last one shorter than the rest; a spill file
+    one byte too long is as wrong as a truncated one."""
+    arr = _checkerboard(100, 48, np.int16)  # strips of 16 rows, the last 4
+    p = str(tmp_path / "strips.tif")
+    geotiff.write_geotiff(p, arr, x0=0, y0=100, sx=1, sy=1, epsg=4326,
+                          compression="deflate", rows_per_strip=16)
+    np.testing.assert_array_equal(geotiff.open_raster(p).band, arr)
+    files = _spilled(worker_spill)
+    assert [f.name for f in files] == [str(i) for i in range(7)]
+    assert files[-1].stat().st_size == 4 * 48 * 2
+    geotiff.clear_block_cache()
+    win, _ = geotiff.open_raster(p).read_window(10, 100, 5, 40)
+    np.testing.assert_array_equal(win, arr[10:, 5:40])
+    s = geotiff.block_cache_stats()
+    assert s["spill_hits"] == 7 and s["decodes"] == 0
+    files[-1].write_bytes(files[-1].read_bytes() + b"\0")
+    geotiff.clear_block_cache()
+    win, _ = geotiff.open_raster(p).read_window(10, 100, 5, 40)
+    np.testing.assert_array_equal(win, arr[10:, 5:40])
+    s = geotiff.block_cache_stats()
+    assert s["spill_hits"] == 6 and s["decodes"] == 1
+    assert files[-1].stat().st_size == 4 * 48 * 2  # republished whole
 
 
 def test_no_spill_outside_a_worker(deflate_p2_tile, tmp_path, monkeypatch):
@@ -772,18 +811,37 @@ def test_disk_bound_stops_spill_writes(deflate_p2_tile, worker_spill,
     assert second.tobytes() == first.tobytes()
 
 
+def test_tripped_disk_bound_decodes_every_read_again(deflate_p2_tile,
+                                                     worker_spill,
+                                                     monkeypatch):
+    """With no spill behind them, the same worker's second read decodes
+    the blocks again and returns the same bytes."""
+    monkeypatch.setattr(geotiff, "_free_bytes", lambda path: 0)
+    monkeypatch.setattr(geotiff, "_spill_floor", 1)
+    first = _read(deflate_p2_tile)
+    second = _read(deflate_p2_tile)
+    s = geotiff.block_cache_stats()
+    assert s["decodes"] == 24 and s["spill_skips"] == 24
+    assert s["spill_hits"] == s["spill_writes"] == 0
+    assert second.tobytes() == first.tobytes()
+    assert _spilled(worker_spill) == []
+
+
 def test_failed_spill_write_is_skipped(deflate_p2_tile, worker_spill):
     worker_spill.write_bytes(b"")  # a file where the tier's directory goes
     first = _read(deflate_p2_tile)
     s = geotiff.block_cache_stats()
     assert s["decodes"] == 12 and s["spill_skips"] == 12
     assert s["spill_writes"] == 0
-    geotiff.clear_block_cache()
-    assert _read(deflate_p2_tile).tobytes() == first.tobytes()
+    second = _read(deflate_p2_tile)
+    s = geotiff.block_cache_stats()
+    assert s["decodes"] == 24 and s["spill_skips"] == 24
+    assert s["spill_hits"] == 0
+    assert second.tobytes() == first.tobytes()
 
 
 def _spill_worker(path, root):
-    """One Spark-worker-like process: three reads, each from an empty L1."""
+    """One Spark-worker-like process: three reads of the same window."""
     import hashlib
 
     from pyspark.core.files import SparkFiles
@@ -792,7 +850,6 @@ def _spill_worker(path, root):
     SparkFiles._root_directory = root
     digests = []
     for _ in range(3):
-        geotiff.clear_block_cache()
         digests.append(hashlib.sha1(_read(path).tobytes()).hexdigest())
     return digests
 

@@ -204,10 +204,9 @@ def test_no_orphan_package_modules():
     assert orphans == []
 
 
-# OTDS_BLOCK_CACHE_MB goes when the decoded-block L1 does (one cache tier)
 _ENV_KNOBS = {
     "CONFIG_PATH", "SPARK_GRAFT_CPUS", "SPARK_GRAFT_MASTER",
-    "SPARK_DRIVER_MEM", "OTDS_BLOCK_CACHE_MB",
+    "SPARK_DRIVER_MEM",
 }
 # Spark's, PySpark's and the JDK's own variables, which session.get_spark
 # reads to know how Spark's launcher builds the driver JVM's class path
@@ -289,6 +288,29 @@ def test_formats_fixture_dir_is_keyed_by_formats_and_writers(
     third = contract._formats_fixture_dir()
     assert third not in (first, second)
     assert sorted(os.listdir(third)) == [".complete", "fmt_asc", "fmt_tif"]
+
+
+def test_vector_fixture_dir_is_keyed_by_its_writers(tmp_path, monkeypatch):
+    """The contract's vector fixture directory belongs to one version of
+    vector.py's writers: an edited writer gets a freshly written
+    directory, never the one an older version left complete."""
+    import __spark_entry__ as contract
+    from opentopodata_spark import vector
+
+    monkeypatch.setattr(contract, "_fixture_root", lambda: str(tmp_path))
+    files = [".complete", "vertices.parquet", "zones.cpg", "zones.dbf",
+             "zones.gpkg", "zones.prj", "zones.shp", "zones.shx"]
+    first = contract._vector_fixture_dir()
+    assert sorted(os.listdir(first)) == files
+    assert contract._vector_fixture_dir() == first
+
+    edited = tmp_path / "vector.py"
+    with open(vector.__file__, "rb") as f:
+        edited.write_bytes(f.read() + b"\n# edited\n")
+    monkeypatch.setattr(vector, "__file__", str(edited))
+    second = contract._vector_fixture_dir()
+    assert second != first
+    assert sorted(os.listdir(second)) == files
 
 
 def test_listing_oracles_builds_none(monkeypatch):

@@ -122,7 +122,7 @@ class TestRangeReads:
         fetched = _fetched_bytes(srv)
         size = os.path.getsize(os.path.join(srv.root, *rel.split("/")))
         assert 0 < fetched < size // 4
-        # repeat read: chunk + block caches absorb it, zero new requests
+        # repeat read: the chunk cache absorbs it, zero new requests
         n = len(srv.requests)
         w2, _ = remote.read_window(100, 140, 50, 90)
         np.testing.assert_array_equal(np.asarray(w_l), np.asarray(w2))

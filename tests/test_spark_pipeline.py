@@ -84,7 +84,7 @@ class TestDifferential:
     def test_compressed_fixtures_e2e(self, spark, points, compressed_raster_root):
         """Full distributed resolve over DEFLATE/LZW compressed + tiled
         rasters and a zipped-SRTM dataset — decode runs inside executor
-        Arrow UDFs through the block cache, values differential-checked
+        Arrow UDFs through the spill tier, values differential-checked
         against the oracle."""
         import os
 
